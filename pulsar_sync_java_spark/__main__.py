@@ -42,9 +42,6 @@ def _parser() -> argparse.ArgumentParser:
     p.add_argument("src", help="source cluster directory")
     p.add_argument("dst", help="destination cluster directory")
     p.add_argument(
-        "--subscription-name", default="pulsar-sync", help="replication subscription"
-    )
-    p.add_argument(
         "--no-tenant", dest="tenant", action="store_false",
         help="disable tenant auto-update (SyncConfig.autoUpdateTenant)",
     )
@@ -186,7 +183,6 @@ def main(argv: list[str] | None = None) -> int:
         args.src,
         args.dst,
         SyncEngineConfig(
-            subscription_name=args.subscription_name,
             auto_update_tenant=args.tenant,
             auto_update_namespace=args.namespace,
             auto_update_topic=args.topic,

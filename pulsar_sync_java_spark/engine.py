@@ -29,28 +29,25 @@ at-least-once replication (checkpoint commit), sampled mapping +
 floor/as-of cursor translation (replay-only error), create-once
 cursors.
 
-Scale notes: the catalog apply round-trips through the driver — the
-control plane is small by definition (the reference holds it in maps on
-a 10-thread JVM; `PulsarSync.java:44`) and parquet cannot be
-self-overwritten lazily.  The DATA plane never touches the driver: the
-replication stream and the mapping/cursor plans are pure
-DataFrame/Structured Streaming.
+Write policy: the reference only ever creates entities, so every
+create on dst is an append of the new rows, written by the executors;
+a converged tick writes nothing.  The one rewrite is the opt-in cursor
+advance, which replaces `subscriptions.parquet`.  The driver holds only
+rows bounded by `control_plane_max_rows`: the translated src cursors,
+collected once per tick so creates and advances share one scan of the
+replicated history, and the advance's merged subscriptions.  The DATA
+plane (replication stream, mapping plan) never touches the driver.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulsar_sync_java_spark.plans.catalog_diff import (
-    NAMESPACE_KEY,
-    TENANT_KEY,
-    TOPIC_KEY,
-    diff_catalogs,
-)
+from pulsar_sync_java_spark.plans.catalog_diff import diff_catalogs
 from pulsar_sync_java_spark.plans.cursor_translate import (
     pending_creates,
     sparse_sample,
@@ -63,11 +60,7 @@ from pulsar_sync_java_spark.streaming.replicate import (
 )
 
 CURSOR_KEY = ["topic", "partition", "cursor"]
-_CATALOGS: tuple[tuple[str, list[str]], ...] = (
-    ("tenants", TENANT_KEY),
-    ("namespaces", NAMESPACE_KEY),
-    ("topics", TOPIC_KEY),
-)
+_CATALOGS = ("tenants", "namespaces", "topics")
 
 
 @dataclass(frozen=True)
@@ -76,7 +69,6 @@ class SyncEngineConfig:
     declared there but never read — SURVEY.md §2 dead surface; partition
     discovery here is inherent to the streaming source)."""
 
-    subscription_name: str = "pulsar-sync"
     auto_update_tenant: bool = True
     auto_update_namespace: bool = True
     auto_update_topic: bool = True
@@ -87,16 +79,14 @@ class SyncEngineConfig:
     # `sync_cursors_once` also advances existing dst cursors forward
     # (never backward) as the src cursor progresses.
     advance_cursors: bool = False
-    # Fail-fast ceiling for the driver write-back paths (catalog
-    # overwrite, subscriptions merge): these collect() because parquet
-    # cannot lazily self-overwrite, which is only sane while the
-    # control plane is small — the same assumption the reference bakes
-    # in by holding catalogs/cursors in JVM maps (PulsarSync.java:44).
-    # A population beyond this bound needs the partitioned-merge path
-    # (sinks.writers.write_partitioned + idempotent_append), not a
-    # bigger driver.
+    # Fail-fast ceiling for the two driver collects: the translated src
+    # cursors and the advance's subscriptions merge (parquet cannot
+    # lazily self-overwrite).  Creates append and never pass through
+    # the driver.  Sane only while cursors are few — the reference holds
+    # them in JVM maps (PulsarSync.java:44).  Beyond this bound use a
+    # partitioned merge (sinks.writers.write_partitioned +
+    # idempotent_append), not a bigger driver.
     control_plane_max_rows: int = 1_000_000
-    extra: dict = field(default_factory=dict)
 
 
 class SyncEngine:
@@ -119,13 +109,22 @@ class SyncEngine:
         # idempotency signal)
         self.last_advanced = 0
 
-    # -- catalog plane ------------------------------------------------
-
     def _read(self, cluster: str, name: str) -> DataFrame:
         return self.spark.read.parquet(os.path.join(cluster, f"{name}.parquet"))
 
+    def _append(self, name: str, df: DataFrame) -> int:
+        """Append `df` to the dst table `name` and return its row count.
+        Nothing is written when there are no rows, so a converged tick
+        leaves dst untouched."""
+        n = df.count()
+        if n:
+            df.coalesce(1).write.mode("append").parquet(
+                os.path.join(self.dst, f"{name}.parquet")
+            )
+        return n
+
     def _collect_control_plane(self, df: DataFrame, what: str) -> list:
-        """Bounded driver-side collect for the write-back paths.  The
+        """Bounded driver-side collect for the cursor plane.  The
         limit(bound+1) means an over-bound table costs one extra row,
         not an OOM, before the diagnosis."""
         bound = self.config.control_plane_max_rows
@@ -133,57 +132,37 @@ class SyncEngine:
         if len(rows) > bound:
             raise ValueError(
                 f"{what} exceeds control_plane_max_rows={bound}: the "
-                "driver write-back path assumes a control-plane-small "
-                "table (the reference holds catalogs/cursors in JVM "
-                "maps — PulsarSync.java:44). For populations beyond "
-                "this bound, switch to a partitioned merge "
+                "driver-side cursor plane assumes a control-plane-small "
+                "table (the reference holds cursors in JVM maps — "
+                "PulsarSync.java:44). For populations beyond this "
+                "bound, switch to a partitioned merge "
                 "(sinks.writers.write_partitioned + idempotent_append) "
                 "or raise the bound explicitly in SyncEngineConfig."
             )
         return rows
 
-    def _overwrite_catalog(self, name: str, df: DataFrame) -> int:
-        """Write-back via the driver: a lazy parquet read cannot
-        overwrite its own path; catalogs are control-plane-small
-        (bounded by `control_plane_max_rows`, fail-fast).  Returns the
-        written row count (saves a re-read job)."""
-        rows = self._collect_control_plane(df, f"catalog {name!r}")
-        out = self.spark.createDataFrame(rows, df.schema)
-        out.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.dst, f"{name}.parquet")
-        )
-        return len(rows)
+    # -- catalog plane ------------------------------------------------
 
     def sync_catalog_once(self) -> dict[str, int]:
         """One control-plane tick (the reference's 3-min rescan body):
-        leveled anti-join diff, additive idempotent apply.  Returns the
-        number of creates per level — all zero on a converged pair, and
-        on every re-run after (idempotency)."""
+        leveled anti-join diff, each level's missing rows appended to
+        dst.  Returns the number of creates per level — all zero on a
+        converged pair, and on every re-run after (idempotency)."""
         enabled = {
             "tenants": self.config.auto_update_tenant,
             "namespaces": self.config.auto_update_namespace,
             "topics": self.config.auto_update_topic,
         }
+        dst = {name: self._read(self.dst, name) for name in _CATALOGS}
         diff = diff_catalogs(
-            self._read(self.src, "tenants"),
-            self._read(self.src, "namespaces"),
-            self._read(self.src, "topics"),
-            self._read(self.dst, "tenants"),
-            self._read(self.dst, "namespaces"),
-            self._read(self.dst, "topics"),
+            *(self._read(self.src, name) for name in _CATALOGS), *dst.values()
         )
-        created: dict[str, int] = {}
-        for name, key in _CATALOGS:
-            inserts = getattr(diff, name)
-            if not enabled[name]:
-                created[name] = 0
-                continue
-            dst_df = self._read(self.dst, name)
-            safe = inserts.join(dst_df.select(*key), on=key, how="left_anti")
-            merged = dst_df.unionByName(safe.select(*dst_df.columns))
-            n_before = dst_df.count()
-            created[name] = self._overwrite_catalog(name, merged) - n_before
-        return created
+        return {
+            name: self._append(name, getattr(diff, name).select(*dst[name].columns))
+            if enabled[name]
+            else 0
+            for name in _CATALOGS
+        }
 
     # -- data plane ---------------------------------------------------
 
@@ -221,6 +200,27 @@ class SyncEngine:
 
     # -- cursor plane -------------------------------------------------
 
+    def _translated(self) -> DataFrame:
+        """R21: every src cursor floor-translated against the sampled
+        mapping, evaluated once through the bounded driver collect and
+        returned as a local relation, so a tick's creates and advance
+        share one scan of the replicated history.  A cursor with no floor
+        sample at-or-before it yet is skipped this tick (the reference's
+        findMessageId miss; a later tick resolves it)."""
+        src_subs = self._read(self.src, "subscriptions")
+        translated = (
+            translate(
+                src_subs.select("topic", "partition", "cursor", "ts", "event_id"),
+                self.build_mapping(),
+                key_cols=["topic", "partition"],
+                carry_cols=["cursor"],
+            )
+            .filter(F.col("translated_id").isNotNull())
+            .select(*CURSOR_KEY, "translated_ts", "translated_id")
+        )
+        rows = self._collect_control_plane(translated, "translated cursors")
+        return self.spark.createDataFrame(rows, translated.schema)
+
     def sync_cursors_once(self) -> int:
         """One `syncCursor` tick (R19-R23): src subscription snapshot ->
         as-of floor translation against the sampled mapping ->
@@ -229,31 +229,18 @@ class SyncEngine:
         existing cursors (`advance_cursors=True`) runs in the same tick
         but is reported separately by `run_once` so the idempotency
         signal stays unambiguous."""
-        src_subs = self._read(self.src, "subscriptions")
-        mapping = self.build_mapping()
-        translated = translate(
-            src_subs.select("topic", "partition", "cursor", "ts", "event_id"),
-            mapping,
-            key_cols=["topic", "partition"],
-            carry_cols=["cursor"],
+        translated = self._translated()
+        creates = pending_creates(
+            translated, self._read(self.dst, "subscriptions"), key_cols=CURSOR_KEY
         )
-        # no floor sample at-or-before the cursor yet -> skip this tick
-        # (the reference's findMessageId miss; replication will sample
-        # more of the mapping and a later tick resolves it)
-        translated = translated.filter(F.col("translated_id").isNotNull())
-        dst_path = os.path.join(self.dst, "subscriptions.parquet")
-        dst_subs = self.spark.read.parquet(dst_path)
-        creates = pending_creates(translated, dst_subs, key_cols=CURSOR_KEY)
-        out = creates.select(
-            "topic",
-            "partition",
-            "cursor",
-            F.col("translated_ts").alias("ts"),
-            F.col("translated_id").alias("event_id"),
+        n = self._append(
+            "subscriptions",
+            creates.select(
+                *CURSOR_KEY,
+                F.col("translated_ts").alias("ts"),
+                F.col("translated_id").alias("event_id"),
+            ),
         )
-        n = out.count()
-        if n:
-            out.write.mode("append").parquet(dst_path)
         self.last_advanced = (
             self.advance_cursors_once(translated)
             if self.config.advance_cursors
@@ -274,19 +261,11 @@ class SyncEngine:
         src cursor that moved backward, or a mapping floor behind the
         already-created position, never regresses dst — the
         replay-only safety property is preserved in both directions.
-        Control-plane-small write-back, same as the catalog applies.
+        The engine's only rewrite, through the bounded driver collect.
         """
         if translated is None:
-            src_subs = self._read(self.src, "subscriptions")
-            mapping = self.build_mapping()
-            translated = translate(
-                src_subs.select("topic", "partition", "cursor", "ts", "event_id"),
-                mapping,
-                key_cols=["topic", "partition"],
-                carry_cols=["cursor"],
-            ).filter(F.col("translated_id").isNotNull())
-        dst_path = os.path.join(self.dst, "subscriptions.parquet")
-        dst_subs = self.spark.read.parquet(dst_path)
+            translated = self._translated()
+        dst_subs = self._read(self.dst, "subscriptions")
         moved = (
             translated.alias("t")
             .join(dst_subs.alias("d"), on=CURSOR_KEY, how="inner")
@@ -303,7 +282,9 @@ class SyncEngine:
             merged = kept.unionByName(moved.select(*dst_subs.columns))
             rows = self._collect_control_plane(merged, "subscriptions merge")
             out = self.spark.createDataFrame(rows, merged.schema)
-            out.coalesce(1).write.mode("overwrite").parquet(dst_path)
+            out.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(self.dst, "subscriptions.parquet")
+            )
         return n
 
     # -- orchestration --------------------------------------------------
@@ -315,10 +296,13 @@ class SyncEngine:
         at 3 min / continuous / 10 s).  'cursors' counts CREATES only
         (all-zero dict = converged, idempotent pass); forward moves of
         existing cursors are reported under 'cursors_advanced' when
-        `advance_cursors` is enabled."""
+        `advance_cursors` is enabled.  A replication overrun stops the
+        stream and raises before the cursor tick."""
         created = self.sync_catalog_once()
         q = self.start_replication(available_now=True)
-        q.awaitTermination(600)
+        if not q.awaitTermination(600):
+            q.stop()
+            raise TimeoutError("replication did not finish within 600 s")
         created["cursors"] = self.sync_cursors_once()
         if self.config.advance_cursors:
             created["cursors_advanced"] = self.last_advanced

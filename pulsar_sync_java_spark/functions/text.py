@@ -69,13 +69,6 @@ def shingles(text_col: Column | str, n: int = 3) -> Column:
     return shingles_from_tokens(tokens(text_col), n)
 
 
-def hash64(col: Column, seed: int) -> Column:
-    """Deterministic 64-bit hash of a string column under a seed —
-    xxhash64 with the seed mixed into the input (xxhash64's own seed
-    argument is not exposed column-wise)."""
-    return F.xxhash64(F.concat(F.lit(f"{seed}|"), col))
-
-
 def portable_hash32(col: Column) -> Column:
     """ENGINE-PORTABLE 32-bit hash of a string: the first 8 hex digits
     of md5, parsed as an unsigned int in [0, 2^32).  Unlike xxhash64 /

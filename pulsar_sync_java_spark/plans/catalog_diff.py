@@ -12,7 +12,7 @@ Re-expressed relationally, every level is the same operator:
 
 - **Additive-only convergence**: the diff emits only inserts — no
   delete call exists anywhere in the reference (SURVEY.md §2 fine
-  print), so `apply_diff` unions and never subtracts.
+  print), so the engine appends them and never subtracts.
 - **Idempotency == conflict-tolerance**: applying a diff twice is a
   no-op because the second anti-join is empty — the relational
   equivalent of treating ConflictException as success
@@ -116,11 +116,3 @@ def diff_catalogs(
         topics=new_topics,
         partitions=expand_partitions(new_topics),
     )
-
-
-def apply_diff(dst: DataFrame, inserts: DataFrame, key: list[str]) -> DataFrame:
-    """Idempotent, additive-only apply: union the inserts whose key is
-    still absent (conflict-tolerance — a concurrent create wins and is
-    treated as success, `PulsarTenantSyncManager.java:79`)."""
-    safe = inserts.join(dst.select(*key), on=key, how="left_anti")
-    return dst.unionByName(safe.select(*dst.columns))

@@ -1315,7 +1315,7 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partitioned by node), a partial+final (node, label) count, and
     an argmax window keyed by node (high-cardinality partitions — no
     single-reducer stage).  The SYMMETRIC UNION is the persisted frame
-    (not the `_copurchase_pairs` pair set): this is the mod=7 slice —
+    (not the `_copurchase_edges` edge set): this is the mod=7 slice —
     no other query shares it — and each of the 3 LPA iterations probes
     the edge table once, so caching the union keeps one InMemoryScan
     per iteration where a union-over-pair-cache costs two (measured

@@ -1008,8 +1008,10 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ONE scan + one group-sized aggregate.  py4j transfers the
     collected doubles bit-exactly (the kmeans literal contract), so
     every downstream comparison sees the identical IEEE values."""
+    # a NULL event_type forms no group (an equi-join on the type drops
+    # it), and a None key could not be sorted among the CASE arms below
     v = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
+        F.col("value").isNotNull() & F.col("event_type").isNotNull()
     ).select("event_type", "value")
     by_t = Window.partitionBy("event_type")
 

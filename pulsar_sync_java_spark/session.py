@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g.  The local-mode JVM heap is
+    the whole engine, but it shares the host with the Python driver and
+    the Arrow workers; a heap as large as the host lets it grow until
+    the kernel's OOM killer takes the process."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "16g"
+    return f"{min(total // 2, 16 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "pulsar-sync-spark",
     shuffle_partitions: int | None = None,
@@ -45,7 +57,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.parquet carries TIMESTAMP(NANOS); Spark has no ns

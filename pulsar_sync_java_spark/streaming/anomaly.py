@@ -162,101 +162,3 @@ def stateful_ewma_monitor(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stateful_ewma_monitor_tws(
-    stream: DataFrame,
-    alpha: float = 0.25,
-    spike_mult: float = 1.5,
-) -> DataFrame:
-    """The SAME day-close monitor on Spark 4's
-    ``transformWithStateInPandas`` (StatefulProcessor + typed
-    ValueState) — the successor API, with explicit state variables
-    and lifecycle hooks.  Semantics are identical by construction
-    (the day-close loop is repeated verbatim rather than shared, so
-    the API differences stay visible — the
-    ``stateful_sparse_sampler_tws`` convention);
-    tests/test_anomaly_stream.py asserts both implementations emit
-    exactly the same rows, skipped where google.protobuf (TWS's
-    Python state-server protocol) is not installed."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    keep = 1.0 - alpha
-
-    class Monitor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("ewma", EWMA_STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            (event_type,) = key
-            if self._state.exists():
-                n_closed, ewma, pending_day, pending_cnt, late = (
-                    self._state.get()
-                )
-            else:
-                n_closed, ewma, pending_day, pending_cnt, late = (
-                    0,
-                    0.0,
-                    None,
-                    0,
-                    0,
-                )
-            counts: dict[str, int] = {}
-            for pdf in rows:
-                days = pdf["ts"].dt.strftime("%Y-%m-%d")
-                for d, c in days.value_counts().items():
-                    counts[d] = counts.get(d, 0) + int(c)
-            out: list[tuple] = []
-            for day in sorted(counts):
-                cnt = counts[day]
-                if pending_day is not None and day == pending_day:
-                    pending_cnt += cnt
-                    continue
-                if pending_day is not None and day < pending_day:
-                    late += cnt
-                    continue
-                if pending_day is not None:
-                    prev = ewma
-                    ewma = (
-                        float(pending_cnt)
-                        if n_closed == 0
-                        else ewma * keep + float(pending_cnt) * alpha
-                    )
-                    n_closed += 1
-                    out.append(
-                        (
-                            event_type,
-                            pending_day,
-                            pending_cnt,
-                            prev,
-                            ewma,
-                            n_closed > 1 and pending_cnt > spike_mult * prev,
-                            n_closed,
-                            late,
-                        )
-                    )
-                pending_day, pending_cnt = day, cnt
-            self._state.update(
-                (n_closed, ewma, pending_day, pending_cnt, late)
-            )
-            if out:
-                yield pd.DataFrame(
-                    out, columns=EWMA_OUTPUT_SCHEMA.fieldNames()
-                )
-
-        def close(self) -> None:
-            pass
-
-    return stream.select("event_type", "ts").groupBy(
-        "event_type"
-    ).transformWithStateInPandas(
-        Monitor(),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

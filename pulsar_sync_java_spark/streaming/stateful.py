@@ -134,75 +134,6 @@ def stateful_sparse_sampler(
     )
 
 
-def stateful_sparse_sampler_tws(
-    stream: DataFrame,
-    interval_s: int = 60,
-    ttl_s: int = 3600,
-) -> DataFrame:
-    """The SAME sampler on Spark 4's `transformWithStateInPandas`
-    (StatefulProcessor + typed ValueState) — the successor API to
-    applyInPandasWithState, with explicit state variables and
-    lifecycle hooks.  Semantics are identical by construction (one
-    shared inner accept/evict loop would hide the API differences this
-    module exists to demonstrate, so the loop is repeated verbatim);
-    tests/test_streaming.py asserts both implementations emit exactly
-    the same rows against the greedy oracle — skipped where
-    google.protobuf (TWS's Python state-server protocol) is not
-    installed, as in this container."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    interval_us, ttl_us = interval_s * _US, ttl_s * _US
-
-    class Sampler(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # last accepted ts; live samples as parallel arrays (typed
-            # ValueState structs hold the whole map in ONE value, like
-            # the GroupState tuple)
-            self._state = handle.getValueState("sampler", STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            topic, partition = key
-            if self._state.exists():
-                last_ts, live = self._state.get()
-                live = [tuple(s) for s in live]
-            else:
-                last_ts, live = None, []
-            out: list[tuple] = []
-            for pdf in rows:
-                pdf = pdf.sort_values(["event_time", "ledger_id", "entry_id"])
-                ts_us = pdf["event_time"].astype("int64") // 1000
-                for ts, ledger, entry in zip(
-                    ts_us, pdf["ledger_id"], pdf["entry_id"]
-                ):
-                    ts, ledger, entry = int(ts), int(ledger), int(entry)
-                    if last_ts is not None and ts - last_ts < interval_us:
-                        continue
-                    last_ts = ts
-                    live = [s for s in live if ts - s[0] <= ttl_us]
-                    live.append((ts, ledger, entry))
-                    out.append(
-                        (topic, partition, ts, ledger, entry, len(live))
-                    )
-            self._state.update((last_ts, live))
-            if out:
-                yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA])
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("topic", "partition").transformWithStateInPandas(
-        Sampler(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 # ------------------------------------------------------ grouped UDAF twin
 
 UDAF_OUTPUT_SCHEMA = StructType(

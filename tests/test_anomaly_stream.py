@@ -8,7 +8,6 @@ must be counted, never folded."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.sources.tables import load_table
@@ -142,37 +141,3 @@ def test_monitor_counts_late_rows_without_folding(spark, tmp_path):
     click_tail = [r for r in got2 if r[0] == "click"][-1]
     assert click_tail[1] == "2024-02-01"  # Feb 1 closed by Feb 2
     assert click_tail[7] == 3  # the 3 straggler rows counted as late
-
-
-def test_monitor_tws_twin_matches(spark, tmp_path):
-    """The transformWithStateInPandas twin must emit exactly the same
-    rows as the applyInPandasWithState monitor.  TWS's Python state
-    server speaks protobuf, which this container lacks — skipped there
-    (the API contract is still declared and import-checked)."""
-    pytest.importorskip("google.protobuf")
-    from pulsar_sync_java_spark.streaming.anomaly import (
-        stateful_ewma_monitor_tws,
-    )
-
-    pdf = _events_pdf(spark)
-    base = _run_files(spark, tmp_path, [pdf], "twsbase")
-
-    src = str(tmp_path / "tws_src")
-    sink = str(tmp_path / "tws_sink")
-    ckpt = str(tmp_path / "tws_ckpt")
-    sdf = spark.createDataFrame(pdf)
-    sdf.coalesce(1).write.mode("append").parquet(src)
-    q = (
-        stateful_ewma_monitor_tws(
-            spark.readStream.schema(sdf.schema).parquet(src)
-        )
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = _rows(spark.read.schema(EWMA_OUTPUT_SCHEMA).parquet(sink))
-    assert got == base

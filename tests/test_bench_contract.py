@@ -145,7 +145,7 @@ PERSIST_ALLOWLIST = {
     ("queries/extras.py", "_copurchase_edges"): 1,      # THE shared symmetric co-purchase edge table (mod=5 slice, plan-matched, FLAT — consumers derive views by filter/rename, never by stacking persists; serves q_triangle_count + q_bfs_khop + q_degree_assortativity)
     ("queries/extras.py", "q_label_prop"): 1,           # symmetric co-purchase edge table (mod=7 — unshared slice, so the family cache gains nothing; 3 LPA iterations probe it)
     ("queries/extras.py", "q_bfs_khop"): 1,             # per-level frontier (feeds next frontier AND the visited union; unpersisted the subtree doubles per level — 60 AQE jobs measured); the symmetric edge table is the shared _copurchase_edges entry
-    ("queries/extras.py", "q_degree_assortativity"): 1, # node-sized degree table (pair joins + global stats); the pair set is _copurchase_pairs
+    ("queries/extras.py", "q_degree_assortativity"): 1, # node-sized degree table (pair joins + global stats); the edge set is _copurchase_edges
     ("queries/extras.py", "q_hits"): 3,                 # edge table + per-iteration score frames (max agg + join-back each read them; uncut the subtree doubles per iteration)
     ("queries/pipeline.py", "_bpe_learn"): 1,          # char-split word-frequency vocab: ONE plan-matched cache entry shared by q_bpe_train/encode and both tokenizer-true budget queries; every merge iteration re-reads it
     ("queries/pipeline.py", "_bpe_doc_word_counts"): 1,  # (doc, lang, word, n_occ) counts — the one corpus-sized encode step, shared plan-matched by q_bpe_encode + q_pack_sequences_bpe + q_mix_budget_bpe (r14; flat cache, consumers project from it)

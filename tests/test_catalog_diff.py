@@ -10,10 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.plans.catalog_diff import (
-    NAMESPACE_KEY,
-    TENANT_KEY,
-    TOPIC_KEY,
-    apply_diff,
     diff_catalogs,
     expand_partitions,
     non_partitioned,
@@ -96,24 +92,30 @@ def test_partition_name_filter(spark):
 
 
 def test_apply_is_idempotent_and_additive(spark, catalogs):
-    """Conflict-tolerance analogue: applying the same diff twice is a
-    no-op; entities present only on dst are never removed."""
+    """Conflict-tolerance analogue: appending a diff's inserts to dst (the
+    engine's only create) makes the next diff empty, so a second apply is
+    a no-op; entities present only on dst are never removed."""
     src_tenants, src_ns, src_topics, dst_tenants, dst_ns, dst_topics = catalogs
     dst_extra = dst_tenants.union(spark.createDataFrame([("dst-only",)], ["tenant"]))
-    d = diff_catalogs(src_tenants, src_ns, src_topics, dst_extra, dst_ns, dst_topics)
 
-    once = apply_diff(dst_extra, d.tenants, TENANT_KEY)
-    twice = apply_diff(once, d.tenants, TENANT_KEY)
-    names_once = sorted(r.tenant for r in once.collect())
-    names_twice = sorted(r.tenant for r in twice.collect())
+    def apply_once(t, n, p):
+        d = diff_catalogs(src_tenants, src_ns, src_topics, t, n, p)
+        return (
+            t.unionByName(d.tenants.select(*t.columns)),
+            n.unionByName(d.namespaces.select(*n.columns)),
+            p.unionByName(d.topics.select(*p.columns)),
+        )
+
+    t_once, ns_once, top_once = apply_once(dst_extra, dst_ns, dst_topics)
+    t_twice, ns_twice, top_twice = apply_once(t_once, ns_once, top_once)
+    names_once = sorted(r.tenant for r in t_once.collect())
+    names_twice = sorted(r.tenant for r in t_twice.collect())
     assert names_once == names_twice == ["acme", "dst-only", "public", "test-tenant"]
-
-    ns_once = apply_diff(dst_ns, d.namespaces, NAMESPACE_KEY)
-    ns_twice = apply_diff(ns_once, d.namespaces, NAMESPACE_KEY)
     assert ns_once.count() == ns_twice.count() == 3
+    assert top_once.count() == top_twice.count() == 3
 
-    t_once = apply_diff(dst_topics, d.topics.select(*dst_topics.columns), TOPIC_KEY)
-    assert apply_diff(t_once, d.topics.select(*dst_topics.columns), TOPIC_KEY).count() == t_once.count() == 3
+    again = diff_catalogs(src_tenants, src_ns, src_topics, t_once, ns_once, top_once)
+    assert again.tenants.count() == again.namespaces.count() == again.topics.count() == 0
 
 
 def test_policies_payload_rides_along(spark, catalogs):

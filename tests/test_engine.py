@@ -81,9 +81,9 @@ def clusters(spark, tmp_path_factory):
             for r in latest.collect()
         ],
     )
-    # dst: partially-populated catalogs (one tenant already there),
-    # empty messages/subscriptions
-    _write_catalog(spark, dst, [("public",)], [], [], [])
+    # dst: partially-populated catalogs (one tenant already there, one
+    # that src lacks), empty messages/subscriptions
+    _write_catalog(spark, dst, [("public",), ("dst-only",)], [], [], [])
     os.makedirs(os.path.join(dst, "messages"), exist_ok=True)
     return src, dst
 
@@ -101,6 +101,10 @@ def test_engine_converges_and_is_idempotent(spark, clusters):
         assert s.join(d, s.columns[:2], "left_anti").count() == 0, name
     assert created["tenants"] == 1  # 'analytics' was missing
     assert created["namespaces"] == 2 and created["topics"] > 0
+    # additive only: the dst-only tenant survives, nothing is duplicated
+    tenants = os.path.join(dst, "tenants.parquet")
+    want_tenants = ["analytics", "dst-only", "public"]
+    assert sorted(r.tenant for r in spark.read.parquet(tenants).collect()) == want_tenants
 
     # message convergence: every src message replicated, none duplicated
     src_msgs = spark.read.parquet(os.path.join(src, "messages"))
@@ -125,6 +129,60 @@ def test_engine_converges_and_is_idempotent(spark, clusters):
         spark.read.parquet(os.path.join(dst, "messages")).count()
         == src_msgs.count()
     )
+    assert sorted(r.tenant for r in spark.read.parquet(tenants).collect()) == want_tenants
+
+
+def _files_under(root: str) -> dict[str, tuple[int, int]]:
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            st = os.stat(os.path.join(d, n))
+            out[os.path.join(d, n)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+@pytest.mark.slow
+def test_idle_tick_writes_nothing(spark, clusters):
+    """Every create is an append, so a tick on a converged pair writes
+    no file under any dst catalog or subscription directory — the
+    catalogs are not rewritten just to stay the same."""
+    src, dst = clusters
+    engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
+    engine.run_once()  # converged baseline
+    dirs = [
+        os.path.join(dst, f"{name}.parquet")
+        for name in ("tenants", "namespaces", "topics", "subscriptions")
+    ]
+    before = {d: _files_under(d) for d in dirs}
+    assert engine.run_once() == {
+        "tenants": 0, "namespaces": 0, "topics": 0, "cursors": 0,
+        "cursors_advanced": 0,
+    }
+    assert {d: _files_under(d) for d in dirs} == before
+
+
+def test_run_once_fails_on_replication_overrun(spark, tmp_path):
+    """A replication run that outlives its timeout is stopped and
+    raises; the cursor tick never translates against a partially
+    replicated history."""
+
+    class StuckQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout=None):  # noqa: N802 - pyspark API name
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    engine = SyncEngine(spark, str(tmp_path / "src"), str(tmp_path / "dst"))
+    q = StuckQuery()
+    engine.sync_catalog_once = lambda: {}
+    engine.start_replication = lambda available_now=True: q
+    engine.sync_cursors_once = lambda: pytest.fail("cursor tick ran after an overrun")
+    with pytest.raises(TimeoutError, match="replication did not finish"):
+        engine.run_once()
+    assert q.stopped
 
 
 @pytest.mark.slow
@@ -201,20 +259,21 @@ def test_deleted_dst_subscription_recreated_at_translated_position(
 
 
 def test_control_plane_write_back_is_bounded(spark, clusters):
-    """The driver write-back paths fail fast past control_plane_max_rows
-    with a pointer at the partitioned-merge alternative, instead of
-    collecting an unbounded table onto the driver."""
+    """The cursor plane's driver collect (one translated row per src
+    cursor) fails fast past control_plane_max_rows with a pointer at the
+    partitioned-merge alternative, instead of collecting an unbounded
+    table onto the driver."""
     src, dst = clusters
     engine = SyncEngine(
         spark, src, dst, SyncEngineConfig(control_plane_max_rows=2)
     )
-    with pytest.raises(ValueError, match="control_plane_max_rows"):
-        engine.sync_catalog_once()
+    # translation samples the replicated history (a no-op once the
+    # module's clusters have converged)
+    engine.start_replication(available_now=True).awaitTermination(600)
+    with pytest.raises(ValueError, match="control_plane_max_rows") as e:
+        engine.sync_cursors_once()
     # the bound names the escape hatch, not just the failure
-    try:
-        engine.sync_catalog_once()
-    except ValueError as e:
-        assert "write_partitioned" in str(e)
+    assert "write_partitioned" in str(e.value)
 
 
 @pytest.mark.slow

@@ -831,10 +831,9 @@ def test_label_prop_matches_python_lpa(spark):
     assert got == want
 
 
-def test_mad_outliers_matches_numpy(spark):
-    """Positional median/MAD vs an explicit order-statistic picker."""
-    edf = pd.read_parquet(f"{SF_DIR}/events.parquet")
-    edf = edf[edf["value"].notna()]
+def _assert_mad_outliers_match(spark, sf_dir):
+    edf = pd.read_parquet(f"{sf_dir}/events.parquet")
+    edf = edf[edf["value"].notna() & edf["event_type"].notna()]
 
     def posmed(vals):
         v = sorted(vals)
@@ -843,8 +842,9 @@ def test_mad_outliers_matches_numpy(spark):
 
     got = {
         r["event_type"]: r
-        for r in _QUERIES["q_mad_outliers"](spark, SF_DIR).collect()
+        for r in _QUERIES["q_mad_outliers"](spark, sf_dir).collect()
     }
+    assert set(got) == set(edf["event_type"])
     for etype, g in edf.groupby("event_type"):
         vals = g["value"].tolist()
         med = posmed(vals)
@@ -858,6 +858,29 @@ def test_mad_outliers_matches_numpy(spark):
             mad,
             n_out,
         ), etype
+
+
+def test_mad_outliers_matches_numpy(spark):
+    """Positional median/MAD vs an explicit order-statistic picker."""
+    _assert_mad_outliers_match(spark, SF_DIR)
+
+
+def test_mad_outliers_drops_null_event_type(spark, tmp_path):
+    """NULL event_type rows are dropped, not grouped: a None key among
+    the string keys would raise TypeError where the literal CASE arms
+    are sorted."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = t.schema.get_field_index("event_type")
+    types = t.column(i).to_pylist()
+    nulled = [None if k % 3 == 0 else et for k, et in enumerate(types)]
+    pq.write_table(
+        t.set_column(i, t.field(i), pa.array(nulled, t.field(i).type)),
+        str(tmp_path / "events.parquet"),
+    )
+    _assert_mad_outliers_match(spark, str(tmp_path))
 
 
 def test_char_diversity_matches_python_counter(spark, docs_pdf):

@@ -652,31 +652,6 @@ def test_stateful_sampler_matches_greedy_oracle(spark, message_dir):
     assert all(n <= 60 for *_, n in got)
 
 
-def test_stateful_sampler_tws_twin_matches(spark, message_dir):
-    """The transformWithStateInPandas twin (Spark 4 successor API) must
-    emit exactly the same accepted samples as the
-    applyInPandasWithState sampler.  TWS's Python state server speaks
-    protobuf, which this container lacks — skipped there (the API
-    contract is still declared and import-checked)."""
-    pytest.importorskip("google.protobuf")
-    from pulsar_sync_java_spark.streaming.stateful import (
-        stateful_sparse_sampler_tws,
-    )
-
-    base = stateful_sparse_sampler(
-        read_message_stream(spark, message_dir), interval_s=60, ttl_s=3600
-    )
-    tbl1 = run_to_memory(base, "stateful_samples_base")
-    want = {tuple(r) for r in spark.table(tbl1).collect()}
-
-    tws = stateful_sparse_sampler_tws(
-        read_message_stream(spark, message_dir), interval_s=60, ttl_s=3600
-    )
-    tbl2 = run_to_memory(tws, "stateful_samples_tws")
-    got_tws = {tuple(r) for r in spark.table(tbl2).collect()}
-    assert got_tws == want
-
-
 def test_dedup_stream_drops_duplicate_deliveries(spark, message_dir, tmp_path):
     """Effectively-once upgrade: duplicated (ledger, entry) deliveries
     collapse to one within the watermark horizon."""
