@@ -30,13 +30,17 @@ floor/as-of cursor translation (replay-only error), create-once
 cursors.
 
 Write policy: the reference only ever creates entities, so every
-create on dst is an append of the new rows, written by the executors;
-a converged tick writes nothing.  The one rewrite is the opt-in cursor
-advance, which replaces `subscriptions.parquet`.  The driver holds only
-rows bounded by `control_plane_max_rows`: the translated src cursors,
-collected once per tick so creates and advances share one scan of the
-replicated history, and the advance's merged subscriptions.  The DATA
-plane (replication stream, mapping plan) never touches the driver.
+create on dst is an append of the new rows; a converged tick writes
+nothing.  The one rewrite is the opt-in cursor advance, which replaces
+`subscriptions.parquet`.  A cursor tick translates the src cursors
+once, merges them with the dst subscriptions once, and writes
+`subscriptions.parquet` at most once: an overwrite when a cursor
+advanced (it carries the tick's creates too), else an append of the
+created cursors.  Both intermediate results are control-plane small, bounded by
+`control_plane_max_rows`, and are held as JVM local relations: their
+rows are collected into the driver JVM, never into Python, so later
+actions on them start no Python worker.  The DATA plane (replication
+stream, mapping plan) never touches the driver.
 """
 
 from __future__ import annotations
@@ -48,11 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.plans.catalog_diff import diff_catalogs
-from pulsar_sync_java_spark.plans.cursor_translate import (
-    pending_creates,
-    sparse_sample,
-    translate,
-)
+from pulsar_sync_java_spark.plans.cursor_translate import sparse_sample, translate
 from pulsar_sync_java_spark.sources.tables import ensure_session_confs
 from pulsar_sync_java_spark.streaming.replicate import (
     read_message_stream,
@@ -79,13 +79,13 @@ class SyncEngineConfig:
     # `sync_cursors_once` also advances existing dst cursors forward
     # (never backward) as the src cursor progresses.
     advance_cursors: bool = False
-    # Fail-fast ceiling for the two driver collects: the translated src
-    # cursors and the advance's subscriptions merge (parquet cannot
-    # lazily self-overwrite).  Creates append and never pass through
-    # the driver.  Sane only while cursors are few — the reference holds
-    # them in JVM maps (PulsarSync.java:44).  Beyond this bound use a
-    # partitioned merge (sinks.writers.write_partitioned +
-    # idempotent_append), not a bigger driver.
+    # Fail-fast ceiling for the two driver-JVM collects of a cursor
+    # tick: the translated src cursors and their merge with the dst
+    # subscriptions (parquet cannot lazily self-overwrite).  Sane only
+    # while cursors are few — the reference holds them in JVM maps
+    # (PulsarSync.java:44).  Beyond this bound use a partitioned merge
+    # (sinks.writers.write_partitioned + idempotent_append), not a
+    # bigger driver.
     control_plane_max_rows: int = 1_000_000
 
 
@@ -123,13 +123,19 @@ class SyncEngine:
             )
         return n
 
-    def _collect_control_plane(self, df: DataFrame, what: str) -> list:
-        """Bounded driver-side collect for the cursor plane.  The
+    def _collect_control_plane(self, df: DataFrame, what: str) -> tuple[DataFrame, int]:
+        """Bounded collect of a control-plane-small result into the
+        driver JVM, returned as a DataFrame over a `LocalRelation` with
+        its row count.  The rows never become Python objects, so later
+        actions on the result run no Python worker (a `createDataFrame`
+        over collected Python rows would give a Python-RDD scan).  The
         limit(bound+1) means an over-bound table costs one extra row,
         not an OOM, before the diagnosis."""
         bound = self.config.control_plane_max_rows
-        rows = df.limit(bound + 1).collect()
-        if len(rows) > bound:
+        jdf = df._jdf
+        rows = jdf.limit(bound + 1).collectAsList()
+        n = rows.size()
+        if n > bound:
             raise ValueError(
                 f"{what} exceeds control_plane_max_rows={bound}: the "
                 "driver-side cursor plane assumes a control-plane-small "
@@ -139,7 +145,8 @@ class SyncEngine:
                 "(sinks.writers.write_partitioned + idempotent_append) "
                 "or raise the bound explicitly in SyncEngineConfig."
             )
-        return rows
+        local = self.spark._jsparkSession.createDataFrame(rows, jdf.schema())
+        return DataFrame(local, self.spark), n
 
     # -- catalog plane ------------------------------------------------
 
@@ -202,11 +209,11 @@ class SyncEngine:
 
     def _translated(self) -> DataFrame:
         """R21: every src cursor floor-translated against the sampled
-        mapping, evaluated once through the bounded driver collect and
-        returned as a local relation, so a tick's creates and advance
-        share one scan of the replicated history.  A cursor with no floor
-        sample at-or-before it yet is skipped this tick (the reference's
-        findMessageId miss; a later tick resolves it)."""
+        mapping, evaluated once through the bounded collect and returned
+        as a JVM local relation, so one tick scans the replicated
+        history once.  A cursor with no floor sample at-or-before it yet
+        is skipped this tick (the reference's findMessageId miss; a
+        later tick resolves it)."""
         src_subs = self._read(self.src, "subscriptions")
         translated = (
             translate(
@@ -218,33 +225,67 @@ class SyncEngine:
             .filter(F.col("translated_id").isNotNull())
             .select(*CURSOR_KEY, "translated_ts", "translated_id")
         )
-        rows = self._collect_control_plane(translated, "translated cursors")
-        return self.spark.createDataFrame(rows, translated.schema)
+        return self._collect_control_plane(translated, "translated cursors")[0]
+
+    def _apply_cursors(
+        self, translated: DataFrame, create: bool, advance: bool
+    ) -> tuple[int, int]:
+        """The one cursor merge rule: a full-outer merge of the
+        translated cursors with the dst subscriptions on `CURSOR_KEY`.
+        A translated cursor missing on dst is created at its translated
+        position (R22, create-once) when `create`; an existing dst
+        cursor moves to it when `advance` and only forward
+        (`translated_ts > dst.ts`), so neither a src cursor that moved
+        backward nor a floor behind the created position regresses dst.
+        The merge is collected once and written at most once: an
+        overwrite when a cursor advanced, else an append of the created
+        rows, else nothing.  Returns (created, advanced)."""
+        dst_subs = self._read(self.dst, "subscriptions").select(
+            *CURSOR_KEY, "ts", "event_id", F.lit(True).alias("in_dst")
+        )
+        in_dst = F.col("in_dst").isNotNull()
+        created = ~in_dst & F.lit(create)
+        advanced = in_dst & F.lit(advance) & (F.col("translated_ts") > F.col("ts"))
+        moved = created | advanced
+        merged = (
+            translated.join(dst_subs, CURSOR_KEY, "full_outer")
+            .filter(in_dst | created)
+            .select(
+                *CURSOR_KEY,
+                F.when(moved, F.col("translated_ts")).otherwise(F.col("ts")).alias("ts"),
+                F.when(moved, F.col("translated_id"))
+                .otherwise(F.col("event_id"))
+                .alias("event_id"),
+                created.alias("created"),
+                advanced.alias("advanced"),
+            )
+        )
+        local, _ = self._collect_control_plane(merged, "subscriptions merge")
+
+        def count(flag: str) -> int:
+            # a filter over a local relation is folded into it by the
+            # optimizer, and collecting a local relation runs no job
+            return local.filter(F.col(flag))._jdf.collectAsList().size()
+
+        n_created, n_advanced = count("created"), count("advanced")
+        if n_advanced or n_created:
+            rows = local if n_advanced else local.filter(F.col("created"))
+            rows.select(*CURSOR_KEY, "ts", "event_id").coalesce(1).write.mode(
+                "overwrite" if n_advanced else "append"
+            ).parquet(os.path.join(self.dst, "subscriptions.parquet"))
+        return n_created, n_advanced
 
     def sync_cursors_once(self) -> int:
         """One `syncCursor` tick (R19-R23): src subscription snapshot ->
         as-of floor translation against the sampled mapping ->
-        create-once anti-join -> append creates to dst.  Returns the
-        number of cursors CREATED (0 when converged) — advancement of
-        existing cursors (`advance_cursors=True`) runs in the same tick
-        but is reported separately by `run_once` so the idempotency
-        signal stays unambiguous."""
-        translated = self._translated()
-        creates = pending_creates(
-            translated, self._read(self.dst, "subscriptions"), key_cols=CURSOR_KEY
-        )
-        n = self._append(
-            "subscriptions",
-            creates.select(
-                *CURSOR_KEY,
-                F.col("translated_ts").alias("ts"),
-                F.col("translated_id").alias("event_id"),
-            ),
-        )
-        self.last_advanced = (
-            self.advance_cursors_once(translated)
-            if self.config.advance_cursors
-            else 0
+        create-once merge with dst.  Returns the number of cursors
+        CREATED (0 when converged) — advancement of existing cursors
+        (`advance_cursors=True`) is applied by the same merge and write
+        but reported separately (`last_advanced`, and `run_once`'s
+        'cursors_advanced') so the idempotency signal stays
+        unambiguous."""
+        n, self.last_advanced = self._apply_cursors(
+            self._translated(), create=True, advance=self.config.advance_cursors
         )
         return n
 
@@ -255,37 +296,13 @@ class SyncEngine:
         subscription (`PulsarPartitionSyncWorker.java:190-192`), which
         it always does after create.  Here, an existing dst cursor
         moves FORWARD to the newest translated floor position when the
-        src cursor has progressed.
-
-        Monotone by construction (`translated_ts > dst.ts` guard): a
-        src cursor that moved backward, or a mapping floor behind the
-        already-created position, never regresses dst — the
-        replay-only safety property is preserved in both directions.
-        The engine's only rewrite, through the bounded driver collect.
-        """
+        src cursor has progressed; nothing is created.  Monotone by
+        construction (see `_apply_cursors`), so the replay-only safety
+        property holds in both directions.  Returns the number of
+        cursors advanced."""
         if translated is None:
             translated = self._translated()
-        dst_subs = self._read(self.dst, "subscriptions")
-        moved = (
-            translated.alias("t")
-            .join(dst_subs.alias("d"), on=CURSOR_KEY, how="inner")
-            .filter(F.col("t.translated_ts") > F.col("d.ts"))
-            .select(
-                *CURSOR_KEY,
-                F.col("t.translated_ts").alias("ts"),
-                F.col("t.translated_id").alias("event_id"),
-            )
-        )
-        n = moved.count()
-        if n:
-            kept = dst_subs.join(moved.select(*CURSOR_KEY), CURSOR_KEY, "left_anti")
-            merged = kept.unionByName(moved.select(*dst_subs.columns))
-            rows = self._collect_control_plane(merged, "subscriptions merge")
-            out = self.spark.createDataFrame(rows, merged.schema)
-            out.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.dst, "subscriptions.parquet")
-            )
-        return n
+        return self._apply_cursors(translated, create=False, advance=True)[1]
 
     # -- orchestration --------------------------------------------------
 

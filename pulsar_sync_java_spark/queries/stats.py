@@ -939,6 +939,10 @@ def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------- MAD outlier detection
 
 _MAD_K = 5  # exact-binary multiplier for the outlier fence
+# The largest number of event types q_mad_outliers inlines as literal
+# CASE arms (one arm per driver-collected row): the lookup is for a
+# handful of groups, not a join replacement for high-cardinality keys.
+_LITERAL_CASE_MAX_GROUPS = 256
 
 
 _MAD_SQL = f"""
@@ -1034,6 +1038,14 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 2
             ).alias("m")
         ).collect()
+        if len(rows) > _LITERAL_CASE_MAX_GROUPS:
+            raise ValueError(
+                f"q_mad_outliers: {len(rows)} event types exceed "
+                f"_LITERAL_CASE_MAX_GROUPS={_LITERAL_CASE_MAX_GROUPS}; the "
+                "literal CASE lookup is for a handful of groups — join the "
+                "per-type median/MAD table back with a broadcast join on "
+                "event_type instead"
+            )
         return {row["event_type"]: (int(row["n"]), float(row["m"])) for row in rows}
 
     def case_over_types(stats: dict, pick) -> F.Column:

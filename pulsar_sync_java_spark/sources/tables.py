@@ -65,7 +65,9 @@ def ensure_session_confs(spark: SparkSession) -> None:
 #: 100-400 ms per WARM call, py4j + driver-side inference), and almost
 #: every declared query pays it 1-3x per bench run — the single
 #: largest slice of the ~90-query long tail's fixed overhead.  Keyed
-#: by applicationId so a restarted session (tests) gets fresh handles;
+#: by applicationId so a restarted session (tests) gets fresh handles,
+#: and only one application is live per process, so an insert drops the
+#: handles of earlier ones (they would pin a stopped session's plans);
 #: the test data directories are immutable, so the file listing baked
 #: into a handle cannot go stale (self-generated corpora are written
 #: once before first read).
@@ -77,12 +79,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DATA here — the handle memo above caches only the logical plan)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
+    # the confs belong to the session, the memo to the application: a
+    # memo hit from another session of the same context still needs them
+    ensure_session_confs(spark)
     app = spark.sparkContext.applicationId
     key = (app, os.path.realpath(sf_dir), name)
     cached = _TABLE_HANDLES.get(key)
     if cached is not None:
         return cached
-    ensure_session_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as ns-since-epoch long (see session.py);
@@ -102,6 +106,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
+    for stale in [k for k in _TABLE_HANDLES if k[0] != app]:
+        del _TABLE_HANDLES[stale]
     _TABLE_HANDLES[key] = df
     return df
 

@@ -343,6 +343,148 @@ def test_cursor_advancement_opt_in(spark, clusters):
     assert engine.advance_cursors_once() == 0
 
 
+def _assert_jvm_local(df) -> None:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert "LogicalRDD" not in plan, plan
+
+
+def test_cursor_tick_results_stay_jvm_local(spark, clusters):
+    """The translated cursors and the subscriptions merge are held as
+    JVM local relations, not as a `createDataFrame` over collected
+    Python rows (a Python-RDD scan, so each later action on it would
+    start a Python worker to unpickle the rows)."""
+    src, dst = clusters
+    engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
+    engine.start_replication(available_now=True).awaitTermination(600)
+    _assert_jvm_local(engine._translated())
+    collect, collected = engine._collect_control_plane, []
+
+    def checked_collect(df, what):
+        local, n = collect(df, what)
+        _assert_jvm_local(local)
+        collected.append(what)
+        return local, n
+
+    engine._collect_control_plane = checked_collect
+    engine.sync_cursors_once()
+    assert collected == ["translated cursors", "subscriptions merge"]
+
+
+def _data_files(path: str) -> dict[str, tuple[int, int]]:
+    return {
+        name: stat
+        for name, stat in _files_under(path).items()
+        if os.path.basename(name).startswith("part-")
+    }
+
+
+@pytest.mark.slow
+def test_one_tick_creates_and_advances_with_one_write(spark, clusters, monkeypatch):
+    """A tick that both creates and advances merges once and writes
+    `subscriptions.parquet` once, by one overwrite; without
+    `advance_cursors` the same kind of tick only appends its creates and
+    leaves the existing rows and files as they were."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    src, dst = clusters
+    SyncEngine(spark, src, dst, SyncEngineConfig()).run_once()  # converged baseline
+
+    # every src partition gets newer messages (a day after all so far),
+    # replicated to dst
+    msgs_path = os.path.join(src, "messages")
+    msgs = spark.read.parquet(msgs_path)
+    msgs.withColumn(
+        "event_time", F.col("event_time") + F.expr("INTERVAL 1 DAY")
+    ).withColumn("entry_id", F.col("entry_id") + F.lit(10_000_000)).write.mode(
+        "append"
+    ).parquet(msgs_path)
+    SyncEngine(spark, src, dst).start_replication(available_now=True).awaitTermination(600)
+    head = {
+        (r.topic, r.partition): (r.s.ts, r.s.event_id)
+        for r in spark.read.parquet(msgs_path)
+        .groupBy("topic", "partition")
+        .agg(
+            F.max_by(
+                F.struct(F.col("event_time").alias("ts"), F.col("entry_id").alias("event_id")),
+                F.struct("event_time", "entry_id"),
+            ).alias("s")
+        )
+        .collect()
+    }
+
+    src_sub_path = os.path.join(src, "subscriptions.parquet")
+    dst_sub_path = os.path.join(dst, "subscriptions.parquet")
+    sub_schema = "topic string, partition int, cursor string, ts timestamp, event_id long"
+
+    def write_src_cursors(keys):
+        rows = [(t, p, c, *head[(t, p)]) for (t, p, c) in keys]
+        spark.createDataFrame(rows, sub_schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(src_sub_path)
+        return {(t, p, c): ts for (t, p, c, ts, _) in rows}
+
+    def dst_cursors():
+        return {
+            (r.topic, r.partition, r.cursor): (r.ts, r.event_id)
+            for r in spark.read.parquet(dst_sub_path).collect()
+        }
+
+    writes = []
+    mode, parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+    def recording_mode(self, save_mode):
+        self._recorded_mode = save_mode
+        return mode(self, save_mode)
+
+    def recording_parquet(self, path, *args, **kwargs):
+        writes.append((getattr(self, "_recorded_mode", None), path))
+        return parquet(self, path, *args, **kwargs)
+
+    # src cursors move to their partition heads and one cursor is new
+    before = dst_cursors()
+    (topic, part) = sorted(head)[0]
+    src_ts = write_src_cursors([*before, (topic, part, "sub-new")])
+
+    # advance_cursors=False: the new cursor is appended, nothing else moves
+    files_before = _data_files(dst_sub_path)
+    monkeypatch.setattr(DataFrameWriter, "mode", recording_mode)
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    frozen = SyncEngine(spark, src, dst, SyncEngineConfig())
+    assert frozen.sync_cursors_once() == 1
+    assert frozen.last_advanced == 0
+    assert writes == [("append", dst_sub_path)]
+    files_after = _data_files(dst_sub_path)
+    assert files_before.items() <= files_after.items()  # untouched
+    assert len(files_after) == len(files_before) + 1
+    after = dst_cursors()
+    assert {k: v for k, v in after.items() if k in before} == before
+    assert set(after) == set(before) | {(topic, part, "sub-new")}
+    assert after[(topic, part, "sub-new")][0] <= src_ts[(topic, part, "sub-new")]
+
+    # advance_cursors=True: one more new cursor and the pending advances,
+    # one tick, one overwrite
+    before = after
+    (topic, part) = sorted(head)[-1]
+    src_ts = write_src_cursors([*before, (topic, part, "sub-newer")])
+    writes.clear()
+    engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
+    assert engine.sync_cursors_once() == 1
+    assert writes == [("overwrite", dst_sub_path)]
+    assert len(_data_files(dst_sub_path)) == 1
+    after = dst_cursors()
+    assert set(after) == set(before) | {(topic, part, "sub-newer")}
+    assert after[(topic, part, "sub-newer")][0] <= src_ts[(topic, part, "sub-newer")]
+    for k, (ts, _) in before.items():
+        assert before[k][0] <= after[k][0] <= src_ts[k], k
+    advanced = sum(after[k][0] > ts for k, (ts, _) in before.items())
+    assert engine.last_advanced == advanced > 0
+    # converged: the next tick writes nothing
+    writes.clear()
+    assert engine.sync_cursors_once() == 0 and engine.last_advanced == 0
+    assert writes == []
+
+
 @pytest.mark.slow
 def test_full_system_catalog_then_data_plane_convergence(spark, tmp_path):
     """The reference's complete story in ONE test — the 3-minute

@@ -883,6 +883,18 @@ def test_mad_outliers_drops_null_event_type(spark, tmp_path):
     _assert_mad_outliers_match(spark, str(tmp_path))
 
 
+def test_mad_outliers_guards_literal_case_cardinality(spark, monkeypatch):
+    """More event types than the literal-CASE bound fail loudly and name
+    the broadcast-join alternative, instead of inlining one WHEN arm per
+    type without limit."""
+    from pulsar_sync_java_spark.queries import stats
+
+    monkeypatch.setattr(stats, "_LITERAL_CASE_MAX_GROUPS", 2)
+    with pytest.raises(ValueError, match="_LITERAL_CASE_MAX_GROUPS=2") as e:
+        _QUERIES["q_mad_outliers"](spark, SF_DIR)
+    assert "broadcast join" in str(e.value)
+
+
 def test_char_diversity_matches_python_counter(spark, docs_pdf):
     """Collision probability / Simpson index vs collections.Counter."""
     import re as _re
