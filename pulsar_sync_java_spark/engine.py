@@ -83,9 +83,8 @@ class SyncEngineConfig:
     # tick: the translated src cursors and their merge with the dst
     # subscriptions (parquet cannot lazily self-overwrite).  Sane only
     # while cursors are few — the reference holds them in JVM maps
-    # (PulsarSync.java:44).  Beyond this bound use a partitioned merge
-    # (sinks.writers.write_partitioned + idempotent_append), not a
-    # bigger driver.
+    # (PulsarSync.java:44).  A larger population needs this bound
+    # raised here, with a driver sized for the collect.
     control_plane_max_rows: int = 1_000_000
 
 
@@ -141,9 +140,8 @@ class SyncEngine:
                 "driver-side cursor plane assumes a control-plane-small "
                 "table (the reference holds cursors in JVM maps — "
                 "PulsarSync.java:44). For populations beyond this "
-                "bound, switch to a partitioned merge "
-                "(sinks.writers.write_partitioned + idempotent_append) "
-                "or raise the bound explicitly in SyncEngineConfig."
+                "bound, raise control_plane_max_rows in SyncEngineConfig "
+                "and size the driver for the collect."
             )
         local = self.spark._jsparkSession.createDataFrame(rows, jdf.schema())
         return DataFrame(local, self.spark), n

@@ -61,14 +61,6 @@ def positional_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def shingles(text_col: Column | str, n: int = 3) -> Column:
-    """Shingles straight from a text column — convenience form for
-    one-shot expressions.  Hot paths (operators/dedup.py) materialize
-    the tokens column first and use `shingles_from_tokens` (see its
-    docstring for why)."""
-    return shingles_from_tokens(tokens(text_col), n)
-
-
 def portable_hash32(col: Column) -> Column:
     """ENGINE-PORTABLE 32-bit hash of a string: the first 8 hex digits
     of md5, parsed as an unsigned int in [0, 2^32).  Unlike xxhash64 /

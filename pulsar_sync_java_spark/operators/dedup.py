@@ -435,9 +435,8 @@ def lsh_pairs_against_corpus(
     the corpus bucket aggregate: the corpus is never self-joined and
     never shuffled beyond its bucket aggregation.  Pair count is
     bounded by Σ |batch∩bucket|·|corpus∩bucket|, never |batch|·|corpus|.
-    For a STANDING corpus re-probed across many deltas, build the
-    bucket table once via `similarity.lsh_index_write`-style
-    materialization instead of re-aggregating per run.
+    For a STANDING corpus re-probed across many deltas, materialize the
+    corpus bucket table once instead of re-aggregating per run.
     """
     bsig = spread_by(batch_sigs, id_col)
     csig = spread_by(corpus_sigs, id_col)
@@ -882,10 +881,8 @@ def minhash_banding_audit(
       over the banded candidates (exact = 0 for band collisions) —
       the sketch-fidelity signal.
 
-    Shared verbatim by the in-stream calibration tick
-    (`streaming/neardup.py:sketch_calibration_batch`) and the unified
-    `operators/calibration.py:calibration_report`, so the two
-    monitors cannot diverge on what "miss" or "error" means.  ONE
+    `operators/calibration.py:calibration_report` reports these
+    columns as its MinHash arm.  ONE
     Spark action; input should be pre-bounded by the caller (a batch,
     or a deterministic corpus sample) — the pair frame is then
     Σ bucket²-bounded by `max_bucket`, never n²."""

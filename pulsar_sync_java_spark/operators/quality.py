@@ -1,7 +1,6 @@
 """Quality-classifier TRAIN/APPLY split — the fastText-style linear
 gate of q_classifier_score (queries/pipeline.py), factored out so the
-same frozen model serves both the declared query and the streaming
-ingestion gate (streaming/neardup.py, r9 verdict #6).
+model is trained once and applied as a frozen weight table.
 
 The model is a per-token integer weight table derived from corpus
 statistics (per-million token rate bucketed into {-4, 1, 2}); a
@@ -11,7 +10,7 @@ broadcast, the token stream is never hash-partitioned for the join.
 
 Determinism: weights and their sums are exact integers (rates via
 integer div); the score is ONE IEEE division, so the threshold compare
-is bit-exact across engines and across the batch/streaming twins.
+is bit-exact across engines.
 """
 
 from __future__ import annotations
@@ -37,8 +36,7 @@ def classifier_weights(docs: DataFrame, text_col: str = "text") -> DataFrame:
     under ANSI mode that fails loudly (see q_classifier_score's width
     note).  The result is vocab-sized: persist it next to the corpus
     and BROADCAST it at apply time — at ingest the model must be
-    FROZEN (training on each arriving batch would both drift the gate
-    and break batch/stream equivalence)."""
+    FROZEN (training on each arriving batch would drift the gate)."""
     toks = docs.select(F.explode(tokens(text_col)).alias("token"))
     vocab = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     tot = vocab.agg(F.sum("cnt").cast("long").alias("tok_total"))
@@ -92,28 +90,3 @@ def classifier_scores(
         )
     )
 
-
-def classifier_gate(
-    docs: DataFrame,
-    weights: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scores: DataFrame | None = None,
-) -> DataFrame:
-    """Filter `docs` to the rows the classifier keeps (score >=
-    CLS_KEEP_MIN), preserving all columns — the gate stage a corpus
-    ingestion pipeline runs in front of dedup.  Broadcast semi-join on
-    the keeper ids: the doc rows themselves are never shuffled.  Sized
-    for DELTA/batch inputs (the streaming ingest loop): keeper ids of
-    one micro-batch always broadcast.  A one-shot full-corpus gate
-    should instead materialize `classifier_scores` as a features table
-    and filter on the column (the q_corpus_materialize pattern).
-
-    `scores` accepts a precomputed `classifier_scores` frame so a
-    caller that also needs the scores (the monitored ingest, which
-    counts OOV and gate drops from them) pays ONE scoring pass while
-    the keep rule stays defined here and only here."""
-    if scores is None:
-        scores = classifier_scores(docs, weights, id_col, text_col)
-    keepers = scores.filter(F.col("keep")).select(id_col)
-    return docs.join(F.broadcast(keepers), id_col, "left_semi")

@@ -209,160 +209,6 @@ def lsh_topk_multi(
     return _multi_cosine_topk(scored, k, id_col)
 
 
-def _lsh_signed(
-    df: DataFrame,
-    dim: int,
-    vec_col: str,
-    num_planes: int,
-    prefix_bits: int,
-    seed: int,
-) -> DataFrame:
-    """Signature + partition-prefix projection shared by
-    `lsh_index_write` and `lsh_index_append` — ONE definition of the
-    Hive partition value, because the idempotent append's pruned
-    existence probe is only exact if a vector always lands in the same
-    prefix the write path produced ("pruned absence == global
-    absence")."""
-    from pulsar_sync_java_spark.operators.vectorized import (
-        hyperplane_signature_udf,
-    )
-
-    planes = _planes(dim, num_planes, seed)
-    sig = hyperplane_signature_udf(planes)(F.col(vec_col))
-    return spread(df).withColumn("__sig", sig).withColumn(
-        "sig_prefix",
-        F.shiftrightunsigned(F.col("__sig"), num_planes - prefix_bits)
-        .bitwiseAND(F.lit((1 << prefix_bits) - 1)),
-    )
-
-
-def lsh_index_write(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 16,
-    prefix_bits: int = 4,
-    seed: int = 42,
-) -> None:
-    """Materialize the layout `lsh_topk`'s docstring promises at scale:
-    precompute the H-bit hyperplane signature once and write the corpus
-    Hive-partitioned by its top `prefix_bits` bits (2^prefix_bits
-    directories).  A Hamming-ball probe then PRUNES partitions: a
-    prefix whose distance to the query's prefix already exceeds the
-    ball radius cannot contain candidates, so those directories are
-    never read (`lsh_topk_indexed`)."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None:
-        raise ValueError(
-            f"lsh_index_write: input has no rows — nothing to index "
-            f"(vec_col={vec_col!r})"
-        )
-    signed = _lsh_signed(
-        df, int(row["d"]), vec_col, num_planes, prefix_bits, seed
-    )
-    signed.repartition("sig_prefix").write.mode("overwrite").partitionBy(
-        "sig_prefix"
-    ).parquet(path)
-
-
-def lsh_index_append(
-    df_new: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 16,
-    prefix_bits: int = 4,
-    seed: int = 42,
-) -> int:
-    """Incrementally grow a materialized LSH index (`lsh_index_write`)
-    — signatures are a pure function of (planes, seed), so new vectors
-    hash into the same prefix partitions forever; no rebuild is ever
-    REQUIRED (unlike IVF, whose centroids can drift).  Keyed idempotent
-    append, partition-pruned by prefix: replays add nothing, each batch
-    probes only the prefixes it lands in.  Params must match the
-    original build (same planes ⇒ same layout).  Returns rows appended.
-    """
-    from pulsar_sync_java_spark.sinks.writers import idempotent_append
-
-    row = df_new.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None:
-        return 0
-    signed = _lsh_signed(
-        df_new, int(row["d"]), vec_col, num_planes, prefix_bits, seed
-    )
-    return idempotent_append(
-        signed, path, keys=[id_col], partition_col="sig_prefix"
-    )
-
-
-def lsh_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 16,
-    prefix_bits: int = 4,
-    max_hamming: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """ANN top-k over a materialized LSH index (`lsh_index_write`):
-    compute the query signature driver-side, keep only the prefixes
-    whose Hamming distance to the query's prefix is <= max_hamming
-    (bits that already disagree in the prefix count against the whole-
-    signature budget), scan just those partition directories, apply the
-    exact bit_count filter on the stored signature, and re-rank.  The
-    pruned fraction concentrates near
-    sum_{i<=r} C(prefix_bits,i)/2^prefix_bits of the corpus.
-
-    Partition pruning only exists while max_hamming < prefix_bits: a
-    radius >= prefix_bits admits every prefix and the probe degrades to
-    a full scan + filter (a warning is emitted).  max_hamming is the
-    recall/cost dial — raise it (accepting weaker pruning) when the
-    corpus is isotropic and neighbors sit at low cosine; on clustered
-    real-world embeddings small radii keep recall high AND prune."""
-    import numpy as np
-
-    from pulsar_sync_java_spark.operators.vectorized import hyperplane_sign_bits
-
-    row = spark.read.parquet(path).select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None:
-        raise ValueError(
-            f"lsh_topk_indexed: index at {path!r} is empty — "
-            "was lsh_index_write run on a non-empty corpus?"
-        )
-    planes = _planes(int(row["d"]), num_planes, seed)
-    q_sig = int(
-        hyperplane_sign_bits(
-            np.asarray([query_vec], dtype=np.float64), np.asarray(planes)
-        )[0]
-    )
-    q_prefix = (q_sig >> (num_planes - prefix_bits)) & ((1 << prefix_bits) - 1)
-    probe = [
-        p
-        for p in range(1 << prefix_bits)
-        if bin(p ^ q_prefix).count("1") <= max_hamming
-    ]
-    if len(probe) == (1 << prefix_bits):
-        import warnings
-
-        warnings.warn(
-            f"lsh_topk_indexed: max_hamming={max_hamming} >= "
-            f"prefix_bits={prefix_bits} admits every prefix — the probe "
-            "scans the whole index (no partition pruning). Lower "
-            "max_hamming or index with more prefix_bits.",
-            stacklevel=2,
-        )
-    cand = (
-        spark.read.parquet(path)
-        .where(F.col("sig_prefix").isin(probe))
-        .filter(F.bit_count(F.col("__sig").bitwiseXOR(F.lit(q_sig))) <= max_hamming)
-    )
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
 def assign_clusters(
     df: DataFrame, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
@@ -440,8 +286,8 @@ def kmeans_centroids(
     path on RAW rows; a caller mixing the two gets a quantizer in the
     wrong metric space.  The guard below only catches emptiness — the
     normalization choice is the caller's, stated here so both callers
-    (`ivf_pq_index_write`: normalized; `ivf_index_write`/`ivf_topk`:
-    raw) are auditable against it."""
+    (the IVF-PQ trainers: normalized; `ivf_topk`: raw) are auditable
+    against it."""
     if sample is not None and len(sample) == 0:
         raise ValueError(
             "kmeans_centroids: empty `sample` — cannot train a "
@@ -523,10 +369,9 @@ def ivf_topk_multi(
     (query_id, cell) probe table on the cell id -> broadcast the
     |Q|-row query-vector frame onto the candidates -> exact cosine ->
     per-query window top-k.  The probe table and the vector frame stay
-    separate so the cell join carries no d-double payload (the r10
-    probe_queries_pq payload discipline); the candidate rows must
-    carry the query vector regardless — exact cosine per candidate IS
-    the in-cell re-rank."""
+    separate so the cell join carries no d-double payload; the
+    candidate rows must carry the query vector regardless — exact
+    cosine per candidate IS the in-cell re-rank."""
     if not queries:
         raise ValueError("ivf_topk_multi: empty probe batch")
     probe_rows = []
@@ -572,206 +417,6 @@ def ivf_topk_multi(
         )
     )
     return _multi_cosine_topk(scored, k, id_col)
-
-
-def ivf_index_write(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    iters: int = 2,
-    seed: int = 42,
-) -> list[list[float]]:
-    """Materialize the IVF layout `ivf_topk`'s docstring promises at
-    100 TB: assign every vector to its coarse cell and write the corpus
-    Hive-partitioned BY CELL, so a probe becomes partition PRUNING at
-    the parquet scan — the nprobe/n_centroids cost model enforced by
-    the storage layout instead of a runtime filter.  Returns the
-    centroids (the tiny model artifact a deployment stores next to the
-    index; re-derivable deterministically from the data + seed).
-
-    Routed through one repartition on the cell id before the write
-    (write_partitioned's file-count discipline: files per cell ~= 1,
-    not tasks x cells)."""
-    cents = kmeans_centroids(df, id_col, vec_col, n_centroids, iters, seed)
-    assigned = assign_clusters(spread(df), vec_col, cents).withColumnRenamed(
-        "__cluster", "ivf_cell"
-    )
-    assigned.repartition("ivf_cell").write.mode("overwrite").partitionBy(
-        "ivf_cell"
-    ).parquet(path)
-    # sidecar metadata for the staleness contract (ivf_index_staleness):
-    # underscore-prefixed, so every parquet scan of `path` ignores it
-    # (Hadoop hidden-file convention) — works on object stores too
-    spark = df.sparkSession
-    trained = int(spark.read.parquet(path).count())  # footer-count only
-    spark.createDataFrame(
-        [(trained, int(n_centroids), int(iters), int(seed))],
-        "trained_rows long, n_centroids int, iters int, seed int",
-    ).write.mode("overwrite").parquet(f"{path}/_ivf_meta")
-    return cents
-
-
-def ivf_index_append(
-    df_new: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assigned: DataFrame | None = None,
-) -> int:
-    """Incrementally grow a materialized IVF index (`ivf_index_write`)
-    with new vectors — the index LIFECYCLE step a streaming corpus
-    needs: assign against the STORED centroids (a coarse quantizer is
-    deliberately never retrained per batch; its residual error is
-    corrected by the exact re-rank inside every probe) and append via
-    the keyed idempotent sink, partition-pruned by cell.
-
-    Replay-safe: re-delivering a batch appends nothing (vec_id keyed,
-    and a vector always lands in the same cell under fixed centroids,
-    so the pruned existence probe is exact).  Each batch's probe scans
-    only the cells present in the batch, not the index history.
-    Returns rows appended.  Retrain/rebalance (centroid drift after
-    the corpus grows far past the training sample) is a full
-    `ivf_index_write` rebuild — the standard IVF maintenance model.
-
-    `assigned` lets a caller that already ran `assign_clusters` over
-    this exact batch (the refresh pipeline's drift check) hand the
-    (rows + __cluster) frame in, skipping the second assignment pass
-    — the per-row k x d distance kernel is the expensive half of an
-    append.
-    """
-    from pulsar_sync_java_spark.sinks.writers import idempotent_append
-
-    if assigned is None:
-        assigned = assign_clusters(spread(df_new), vec_col, centroids)
-    assigned = assigned.withColumnRenamed("__cluster", "ivf_cell")
-    return idempotent_append(
-        assigned, path, keys=[id_col], partition_col="ivf_cell"
-    )
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 4,
-) -> DataFrame:
-    """ANN top-k over a materialized IVF index (`ivf_index_write`):
-    rank the stored centroids against the query driver-side (k x d
-    floats — no Spark job), then scan ONLY the nprobe matching
-    partition directories (`ivf_cell IN (...)` becomes
-    PartitionFilters; plan-asserted in tests) and exact-re-rank inside
-    them.  This is the scale path where `ivf_topk`'s per-query
-    assignment projection is replaced by the layout: probing 4 of 1024
-    cells reads ~0.4% of a 100 TB corpus."""
-    order = sorted(
-        range(len(centroids)),
-        key=lambda i: sum((a - b) ** 2 for a, b in zip(query_vec, centroids[i])),
-    )
-    probe = [int(i) for i in order[:nprobe]]
-    cand = spark.read.parquet(path).where(F.col("ivf_cell").isin(probe))
-    return cosine_topk(cand, query_vec, k, id_col, vec_col)
-
-
-class IvfStaleness:
-    """Health report for a materialized IVF index (SCALE.md §5b
-    staleness contract; r6 verdict #6).  The coarse quantizer is
-    trained ONCE at `ivf_index_write` time; appends never retrain it
-    (residual error is absorbed by each probe's exact re-rank), so two
-    things decay as the corpus grows past the training snapshot:
-    probe COST (cells fill up — every probe scans more rows) and, if
-    the data distribution drifted, probe RECALL (new vectors crowd
-    into cells the query ranking then under-probes).  Both show up in
-    the two numbers here: total growth and worst-cell share."""
-
-    def __init__(
-        self,
-        trained_rows: int,
-        current_rows: int,
-        n_centroids: int,
-        occupied_cells: int,
-        max_cell_rows: int,
-    ):
-        self.trained_rows = trained_rows
-        self.current_rows = current_rows
-        self.n_centroids = n_centroids
-        self.occupied_cells = occupied_cells
-        self.max_cell_rows = max_cell_rows
-
-    @property
-    def growth(self) -> float:
-        return (
-            self.current_rows / self.trained_rows if self.trained_rows else 0.0
-        )
-
-    @property
-    def max_cell_share(self) -> float:
-        return (
-            self.max_cell_rows / self.current_rows if self.current_rows else 0.0
-        )
-
-    def should_rebuild(
-        self, growth_factor: float = 2.0, cell_share_factor: float = 4.0
-    ) -> bool:
-        """Rebuild (full `ivf_index_write` retrain) when the corpus
-        has grown past `growth_factor` x the training snapshot, or any
-        single cell holds more than `cell_share_factor` x the uniform
-        share (1/n_centroids) — the quantizer-misfit signal that makes
-        fixed-nprobe probes both slow (that cell dominates scan cost)
-        and recall-lossy (its residual radius outgrew the re-rank's
-        candidate budget).  Same decide-from-a-bounded-report pattern
-        as operators/skew.py:maybe_salt."""
-        return (
-            self.growth >= growth_factor
-            or self.max_cell_share >= cell_share_factor / self.n_centroids
-        )
-
-    def __repr__(self) -> str:  # pragma: no cover - debugging aid
-        return (
-            f"IvfStaleness(trained={self.trained_rows}, "
-            f"current={self.current_rows}, growth={self.growth:.2f}, "
-            f"max_cell_share={self.max_cell_share:.3f})"
-        )
-
-
-def ivf_index_staleness(spark, path: str) -> IvfStaleness:
-    """Probe a materialized IVF index's staleness: reads the sidecar
-    `_ivf_meta` written at build time plus ONE footer-level aggregate
-    over the index (per-cell row counts — partition-column groupBy,
-    no vector bytes deserialized).  The maintenance loop a standing
-    100 TB ANN index runs between batches:
-
-        report = ivf_index_staleness(spark, path)
-        if report.should_rebuild():
-            cents = ivf_index_write(full_corpus, path, ...)   # retrain
-        else:
-            ivf_index_append(new_batch, path, cents)          # grow
-    """
-    meta = spark.read.parquet(f"{path}/_ivf_meta").collect()[0]
-    cells = (
-        spark.read.parquet(path)
-        .groupBy("ivf_cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("occupied"),
-            F.sum("n").alias("total"),
-            F.max("n").alias("max_n"),
-        )
-        .collect()[0]
-    )
-    return IvfStaleness(
-        trained_rows=int(meta["trained_rows"]),
-        current_rows=int(cells["total"] or 0),
-        n_centroids=int(meta["n_centroids"]),
-        occupied_cells=int(cells["occupied"]),
-        max_cell_rows=int(cells["max_n"] or 0),
-    )
 
 
 def embedding_near_pairs(
@@ -1016,166 +661,6 @@ def knn_join(
     )
 
 
-def ivf_delta_drift(
-    spark,
-    path: str,
-    delta_assigned: DataFrame,
-) -> float:
-    """Total-variation distance between the standing index's
-    cell-occupancy distribution and an incoming delta's assignment
-    distribution UNDER THE SAME stored centroids — the q_drift_tv
-    machinery (queries/stats.py) pointed at the quantizer: cells are
-    the buckets, the index vs the delta are the two slices.
-
-    This is the RECALL-side staleness signal `IvfStaleness`'s two size
-    ratios cannot see: a small delta (growth barely moves) whose
-    vectors crowd into cells the training snapshot left sparse means
-    the data distribution moved — fixed-nprobe probes will under-probe
-    exactly the cells that now matter.  TV = 0.5 * Σ|p_cell - q_cell|
-    over the union of cells, computed from exact integer counts
-    (Fraction arithmetic; one partition-column aggregate per side, no
-    vector bytes deserialized) — deterministic, like every drift
-    number in the engine.
-    """
-    from fractions import Fraction
-
-    idx = {
-        int(r["ivf_cell"]): int(r["n"])
-        for r in spark.read.parquet(path)
-        .groupBy("ivf_cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    new = {
-        int(r["__cluster"]): int(r["n"])
-        for r in delta_assigned.groupBy("__cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    ti, tn = sum(idx.values()), sum(new.values())
-    if not ti or not tn:
-        return 0.0
-    tv = Fraction(0)
-    for cell in set(idx) | set(new):
-        tv += abs(
-            Fraction(idx.get(cell, 0), ti) - Fraction(new.get(cell, 0), tn)
-        )
-    return float(tv / 2)
-
-
-def ivf_index_refresh(
-    spark,
-    path: str,
-    df_new: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rebuild_path: str | None = None,
-    growth_factor: float = 2.0,
-    cell_share_factor: float = 4.0,
-    drift_tv_threshold: float = 0.25,
-    n_centroids: int | None = None,
-    iters: int = 2,
-    seed: int = 42,
-) -> dict:
-    """One maintenance step of a standing IVF index (r7 verdict #5 —
-    the refresh pipeline composed from the lifecycle parts): decide
-    append-vs-rebuild from the staleness report AND the delta's cell
-    drift, then do it.
-
-    - **append** (the cheap steady-state path): the delta is assigned
-      against the STORED centroids and idempotently appended,
-      partition-pruned by cell (`ivf_index_append`) — delta-sized
-      cost, the index history never rewrites.
-    - **rebuild** (the periodic re-quantize): triggered when the size
-      ratios trip (`IvfStaleness.should_rebuild`: growth past
-      `growth_factor`, or a cell past `cell_share_factor`/n of the
-      corpus) OR the delta's assignment distribution sits TV >=
-      `drift_tv_threshold` away from the index's (`ivf_delta_drift`)
-      — the distribution-moved signal that degrades recall before it
-      degrades size.  The quantizer retrains over index ∪ delta into
-      `rebuild_path` (a NEW directory — never overwrite the directory
-      being read; the caller swaps the active pointer, the standard
-      versioned-index deployment), and the decision record carries the
-      fresh centroids.
-
-    Returns a decision record dict: action ('append'|'rebuild'),
-    the trigger flags, the measured numbers (growth, max_cell_share,
-    drift_tv), rows appended (append path), and active path +
-    centroids.  Deterministic end to end: deterministic quantizer
-    (seeded init), exact-integer TV, idempotent append.
-    """
-    delta_assigned = assign_clusters(spread(df_new), vec_col, centroids)
-    drift_tv = ivf_delta_drift(spark, path, delta_assigned)
-    report = ivf_index_staleness(spark, path)
-    size_stale = report.should_rebuild(growth_factor, cell_share_factor)
-    drifted = drift_tv >= drift_tv_threshold
-    record = {
-        "growth": report.growth,
-        "max_cell_share": report.max_cell_share,
-        "drift_tv": drift_tv,
-        "size_stale": size_stale,
-        "drifted": drifted,
-    }
-    if not (size_stale or drifted):
-        # the drift check already paid the delta's assignment pass —
-        # hand it to the append rather than re-running the k x d kernel
-        appended = ivf_index_append(
-            df_new, path, centroids, id_col, vec_col, assigned=delta_assigned
-        )
-        return {
-            **record,
-            "action": "append",
-            "appended": appended,
-            "path": path,
-            "centroids": centroids,
-        }
-    target = rebuild_path or f"{path}_rebuilt"
-    # DELTA WINS, deterministically: a delta row updating an existing
-    # id replaces the stored row (anti-join drops the stored copy), and
-    # ids duplicated INSIDE the delta collapse to their array-minimum
-    # embedding (arrays are orderable) — dropDuplicates([id]) here
-    # would keep an arbitrary copy and break the documented
-    # deterministic-rebuild contract.
-    delta_u = (
-        df_new.select(id_col, vec_col)
-        .groupBy(id_col)
-        .agg(F.min(vec_col).alias(vec_col))
-    )
-    full = (
-        spark.read.parquet(path)
-        .select(id_col, vec_col)
-        .join(delta_u.select(id_col), id_col, "left_anti")
-        .unionByName(delta_u)
-    )
-    # Counted BEFORE the write, independently of it: the sidecar
-    # trained_rows is counted from the WRITTEN files, so a write that
-    # dropped rows would report a self-consistent (wrong) number —
-    # this pre-write expectation is what the swap gate
-    # (`calibrated_swap`) checks the rebuilt layout against (r11
-    # advice: a botched write passed balance + all PQ flags).
-    # |full| = stored + genuinely-new delta ids, computed as an
-    # id-column-pruned anti-join count instead of full.count() — the
-    # latter re-scans every vector byte a second time per rebuild
-    # (review catch); the staleness report already holds stored rows.
-    new_ids = int(
-        delta_u.select(id_col)
-        .join(spark.read.parquet(path).select(id_col), id_col, "left_anti")
-        .count()
-    )
-    expected = report.current_rows + new_ids
-    k = n_centroids if n_centroids is not None else report.n_centroids
-    cents = ivf_index_write(full, target, id_col, vec_col, k, iters, seed)
-    return {
-        **record,
-        "action": "rebuild",
-        "appended": 0,
-        "path": target,
-        "centroids": cents,
-        "expected_rows": expected,
-    }
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ: product-quantization ADC scan + exact re-rank inside probed cells
 # (Jegou, Douze, Schmid — "Product Quantization for Nearest Neighbor
@@ -1316,9 +801,9 @@ def adc_lut_fold(
 ) -> Column:
     """THE ADC lookup-table fold — sum of per-subspace LUT entries
     selected by the 0-based codes (element_at is 1-based, hence the
-    +1).  One definition for every consumer (_pq_adc_topc, the serving
-    probe in streaming/ann_serve.py, ann_calibration's audit): a fix
-    to the fold — indexing, or a codegen workaround — lands once.
+    +1).  One definition for every consumer (_pq_adc_topc,
+    ann_calibration's audit): a fix to the fold — indexing, or a
+    codegen workaround — lands once.
     Bounded use only: LUT folds run on candidate/audit frames of m
     lookups per row; a corpus-scale pair fold belongs in the Arrow
     kernel (vectorized.py:pq_gram_dot_udf — HOFs are CodegenFallback,
@@ -1457,20 +942,18 @@ def ivf_pq_topk_multi(
     rerank: int = 64,
 ) -> DataFrame:
     """Batch `ivf_pq_topk` against a supplied model: ONE Arrow encode
-    pass over the corpus serves every probe — the in-query twin of
-    `streaming/ann_serve.py:probe_queries_pq` (which routes batches
-    against a MATERIALIZED codes parquet; this routes them against a
-    DataFrame that must be coded in-plan).  Per-query results match
-    `ivf_pq_topk(..., centroids=..., codebooks=...)` exactly: same
+    pass over the corpus serves every probe, coding the DataFrame
+    in-plan.  Per-query results match `ivf_pq_topk(..., centroids=...,
+    codebooks=...)` exactly: same
     normalized probe order, same LUT math (`_pq_lut_rows` +
     `adc_lut_fold`), same (ADC ASC, id ASC) rerank cut and
     (cosine DESC, id ASC) final tie-breaks.
 
-    Payload discipline (the r10 probe_queries_pq contract): the
-    broadcast LUT frame carries ONLY (query_id, cell, lut); the ADC
-    candidate rows carry ONLY (query_id, id, adc); the d-double query
-    vectors live in a separate |Q|-row frame broadcast onto the
-    `rerank` SURVIVORS at the exact re-rank.  The encode projection
+    Payload discipline: the broadcast LUT frame carries ONLY
+    (query_id, cell, lut); the ADC candidate rows carry ONLY
+    (query_id, id, adc); the d-double query vectors live in a separate
+    |Q|-row frame broadcast onto the `rerank` SURVIVORS at the exact
+    re-rank.  The encode projection
     keeps the single-query path's pushdown barrier (one
     ArrowEvalPython stage — plan-asserted by the equivalence tests'
     plan check)."""
@@ -1541,243 +1024,6 @@ def ivf_pq_topk_multi(
     return _multi_cosine_topk(scored_exact, k, id_col)
 
 
-def ivf_pq_index_write(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    m: int = 8,
-    k_sub: int = 256,
-    iters: int = 2,
-    pq_iters: int = 3,
-    seed: int = 42,
-):
-    """Materialize an IVF-PQ index: the `ivf_index_write` layout
-    (Hive-partitioned by coarse cell -> probes are partition PRUNING)
-    plus a `pq_codes array<int>` column, so the ADC candidate scan
-    reads only (id, codes) via parquet column pruning — the full
-    embedding column is touched only by the re-rank fetch.  Returns
-    (centroids, codebooks): the tiny model artifact stored beside the
-    index, re-derivable deterministically from data + seed.
-
-    Cells are assigned on NORMALIZED vectors (the PQ metric contract
-    above), so this is a self-contained layout, not a column bolted
-    onto an `ivf_index_write` directory."""
-    from pulsar_sync_java_spark.operators.vectorized import pq_encode_udf
-
-    X = _l2_normalize(
-        _seeded_sample(df, id_col, vec_col, 256 * n_centroids, seed,
-                       caller="ivf_pq_index_write")
-    )
-    cents = kmeans_centroids(
-        df, id_col, vec_col, n_centroids, iters, seed, sample=X
-    )
-    books = pq_train(
-        df, cents, id_col, vec_col, m, k_sub, pq_iters, seed, sample=X
-    )
-    enc = pq_encode_udf(cents, books)(F.col(vec_col))
-    assigned = (
-        spread(df)
-        .withColumn("__enc", enc)
-        .withColumn("ivf_cell", F.element_at("__enc", 1))
-        .withColumn("pq_codes", F.slice("__enc", 2, m))
-        .drop("__enc")
-    )
-    assigned.repartition("ivf_cell").write.mode("overwrite").partitionBy(
-        "ivf_cell"
-    ).parquet(path)
-    spark = df.sparkSession
-    trained = int(spark.read.parquet(path).count())  # footer-count only
-    spark.createDataFrame(
-        [(trained, int(n_centroids), int(iters), int(seed), int(m), int(k_sub))],
-        "trained_rows long, n_centroids int, iters int, seed int, "
-        "pq_m int, pq_k_sub int",
-    ).write.mode("overwrite").parquet(f"{path}/_ivf_meta")
-    return cents, books
-
-
-def ivf_pq_topk_indexed(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    codebooks,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 4,
-    rerank: int = 64,
-) -> DataFrame:
-    """ANN top-k over a materialized IVF-PQ index
-    (`ivf_pq_index_write`): rank cells driver-side, scan ONLY the
-    nprobe matching partition directories AND only the (id, codes)
-    columns (partition pruning x column pruning — the two axes that
-    make the candidate scan ~0.1% of a 100 TB corpus), ADC-rank via
-    broadcast LUTs, then fetch the full vectors for just the `rerank`
-    survivors (broadcast semi-join, still partition-pruned) for the
-    exact cosine re-rank."""
-    order, q_norm = _pq_probe_order(query_vec, centroids)
-    probe = order[:nprobe]
-    codes_scan = (
-        spark.read.parquet(path)
-        .where(F.col("ivf_cell").isin(probe))
-        .select(
-            F.col(id_col),
-            F.col("ivf_cell").cast("int").alias("__cell"),
-            F.col("pq_codes").alias("__codes"),
-        )
-    )
-    topc = _pq_adc_topc(
-        codes_scan,
-        _pq_lut_rows(q_norm, centroids, codebooks, probe),
-        rerank,
-        id_col,
-    )
-    fetch = (
-        spark.read.parquet(path)
-        .where(F.col("ivf_cell").isin(probe))
-        .select(id_col, vec_col)
-        .join(F.broadcast(topc.select(id_col)), id_col)
-    )
-    return cosine_topk(fetch, query_vec, k, id_col, vec_col)
-
-
-def ivf_pq_index_refresh(
-    spark,
-    path: str,
-    df_new: DataFrame,
-    centroids: list[list[float]],
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rebuild_path: str | None = None,
-    growth_factor: float = 2.0,
-    cell_share_factor: float = 4.0,
-    drift_tv_threshold: float = 0.25,
-    n_centroids: int | None = None,
-    m: int | None = None,
-    k_sub: int | None = None,
-    iters: int = 2,
-    pq_iters: int = 3,
-    seed: int = 42,
-) -> dict:
-    """One maintenance step of a standing IVF-PQ index — the
-    `ivf_index_refresh` decision model (size staleness OR delta cell
-    drift => rebuild; else append) carried over to the coded layout:
-
-    - **append**: the delta is encoded against the STORED quantizers
-      (one Arrow kernel pass computes cell + codes; a coarse/PQ model
-      is deliberately never retrained per batch — ADC error is
-      corrected by the exact re-rank) and idempotently appended,
-      partition-pruned by cell.
-    - **rebuild**: retrains BOTH quantizer levels (coarse centroids
-      and the residual codebooks — residuals move when centroids
-      move, so the codebooks can never be kept across a coarse
-      retrain) over index ∪ delta into a NEW directory via
-      `ivf_pq_index_write`; the caller swaps the active pointer.
-
-    The drift signal reuses `ivf_delta_drift` over the coded
-    assignment (cell occupancy is layout-level — identical machinery
-    whether cells carry raw vectors or codes).  Returns the
-    `ivf_index_refresh`-shaped decision record plus `codebooks`.
-    """
-    from pulsar_sync_java_spark.operators.vectorized import pq_encode_udf
-
-    mm = len(codebooks)
-    enc = pq_encode_udf(centroids, codebooks)(F.col(vec_col))
-    # persist: the drift check (groupBy collect) and the append's
-    # existence probe + write are separate ACTIONS — passing the
-    # DataFrame shares only the lineage, so without a cache the
-    # encode kernel (the expensive half of an append) would run twice
-    delta_coded = (
-        spread(df_new)
-        .withColumn("__enc", enc)
-        .withColumn("__cluster", F.element_at("__enc", 1))
-        .withColumn("pq_codes", F.slice("__enc", 2, mm))
-        .drop("__enc")
-    ).persist()
-    try:
-        drift_tv = ivf_delta_drift(spark, path, delta_coded)
-        report = ivf_index_staleness(spark, path)
-        size_stale = report.should_rebuild(growth_factor, cell_share_factor)
-        drifted = drift_tv >= drift_tv_threshold
-        record = {
-            "growth": report.growth,
-            "max_cell_share": report.max_cell_share,
-            "drift_tv": drift_tv,
-            "size_stale": size_stale,
-            "drifted": drifted,
-            # observability (r10 advice): the meta the decision was
-            # judged against plus the coded dials actually in force,
-            # so an operator auditing refresh decisions sees the full
-            # picture — on append these are the STORED model's (the
-            # meta is deliberately not rewritten by appends: staleness
-            # measures growth since the last TRAIN)
-            "trained_rows": report.trained_rows,
-            "n_centroids": report.n_centroids,
-        }
-        if not (size_stale or drifted):
-            appended = ivf_index_append(
-                df_new, path, centroids, id_col, vec_col,
-                assigned=delta_coded,
-            )
-            return {
-                **record,
-                "action": "append",
-                "appended": appended,
-                "path": path,
-                "centroids": centroids,
-                "codebooks": codebooks,
-                "pq_m": mm,
-                "pq_k_sub": len(codebooks[0]),
-            }
-    finally:
-        delta_coded.unpersist()
-    target = rebuild_path or f"{path}_rebuilt"
-    # delta wins deterministically — the ivf_index_refresh contract
-    delta_u = (
-        df_new.select(id_col, vec_col)
-        .groupBy(id_col)
-        .agg(F.min(vec_col).alias(vec_col))
-    )
-    full = (
-        spark.read.parquet(path)
-        .select(id_col, vec_col)
-        .join(delta_u.select(id_col), id_col, "left_anti")
-        .unionByName(delta_u)
-    )
-    # the staleness report already collected _ivf_meta — no second read
-    k = n_centroids if n_centroids is not None else report.n_centroids
-    new_m = m if m is not None else mm
-    new_ks = k_sub if k_sub is not None else len(codebooks[0])
-    # independent pre-write expectation for the swap gate's row-count
-    # check — id-pruned anti-join count, see ivf_index_refresh's
-    # rebuild branch for the rationale
-    new_ids = int(
-        delta_u.select(id_col)
-        .join(spark.read.parquet(path).select(id_col), id_col, "left_anti")
-        .count()
-    )
-    expected = report.current_rows + new_ids
-    cents, books = ivf_pq_index_write(
-        full, target, id_col, vec_col, k, new_m, new_ks, iters, pq_iters, seed
-    )
-    return {
-        **record,
-        "action": "rebuild",
-        "appended": 0,
-        "path": target,
-        "expected_rows": expected,
-        "centroids": cents,
-        "codebooks": books,
-        # the rebuild's n_centroids supersedes the stored meta's
-        "n_centroids": k,
-        "pq_m": new_m,
-        "pq_k_sub": new_ks,
-    }
-
-
 # ---------------------------------------------------------------------------
 # ANN calibration harness (r10 verdict #3): the ANN twin of
 # q_sketch_calibration.  The r10 lesson — partial oracles (in-plan
@@ -1812,7 +1058,6 @@ def ann_calibration(
     centroids: list[list[float]] | None = None,
     codebooks=None,
     paths: tuple = ("lsh", "ivf", "pq"),
-    coded_path: str | None = None,
 ) -> DataFrame:
     """Per-query ANN quality monitoring over a batch of probe vectors:
     one row per query with the EXACT top-k anchor (top-1 id + id sum —
@@ -1859,32 +1104,15 @@ def ann_calibration(
 
     `paths` selects which approximate arms to audit (subset of
     ("lsh", "ivf", "pq")); omitted arms skip their corpus pass AND
-    their flag columns.  The refresh gate
-    (`streaming/ann_serve.py:calibrated_swap`) audits a candidate
-    model with paths=("pq",) — the LSH arm is model-independent and
-    the IVF arm trains its own raw-space quantizer, so neither judges
-    the model under test.  The rank/ADC audit requires "pq".
-
-    `coded_path` points the PQ arm at a MATERIALIZED codes layout
-    (`ivf_pq_index_write`): the recall probe routes through
-    `probe_queries_pq` and the rank/ADC audit reads the STORED
-    (ivf_cell, pq_codes) columns instead of re-encoding in-plan — so
-    the audit judges exactly the bytes production serves (a write-path
-    divergence between the supplied model and the codes on disk FAILS
-    the gate rather than passing unseen) and a gated rebuild pays
-    partition-pruned code scans, not a second full-corpus encode.
-    Requires centroids+codebooks (the stored model)."""
+    their flag columns.  To judge a supplied model alone, audit it
+    with paths=("pq",): the LSH arm is model-independent and the IVF
+    arm trains its own raw-space quantizer.  The rank/ADC audit
+    requires "pq"."""
     from pyspark.sql.window import Window
 
     from pulsar_sync_java_spark.functions.numeric import dec_arr_sum
     from pulsar_sync_java_spark.operators.vectorized import pq_encode_udf
 
-    if coded_path is not None and centroids is None:
-        raise ValueError(
-            "ann_calibration: coded_path requires centroids+codebooks "
-            "— the stored layout can only be audited against the model "
-            "that claims to have written it"
-        )
     if not query_ids:
         # catch the misconfigured monitor at the harness boundary —
         # an empty pinned-probe set would otherwise surface as a bare
@@ -2047,20 +1275,12 @@ def ann_calibration(
         )
     else:
         cents, books = centroids, codebooks
-    if coded_path is not None:
-        from pulsar_sync_java_spark.streaming.ann_serve import (
-            probe_queries_pq,
-        )
-
-        pq_probe = probe_queries_pq(
-            df.sparkSession, coded_path, cents, books, probes, k,
-            nprobe, rerank, id_col, vec_col,
-        )
-    else:
-        pq_probe = ivf_pq_topk_multi(
+    r_pq = recall_flag(
+        ivf_pq_topk_multi(
             df, probes, cents, books, k, id_col, vec_col, nprobe, rerank
-        )
-    r_pq = recall_flag(pq_probe, "recall_pq_ok")
+        ),
+        "recall_pq_ok",
+    )
 
     # ADC audit set: exact top-k ∪ deterministic background rows (ids
     # ≡ 7 mod 41, smallest k — fetched by a pushed-down id filter, one
@@ -2109,54 +1329,19 @@ def ann_calibration(
         lut_rows, "query_id long, __cell int, __lut array<array<double>>",
         verifySchema=False,
     )
-    if coded_path is not None:
-        # judge the STORED codes — the bytes production probes read.
-        # The audit join is INNER on id, so a stored layout MISSING
-        # audit rows (a rebuild that silently lost vectors) would
-        # otherwise drop them from the rank/ADC audit and pass unseen
-        # (r11 advice, medium) — count both sides (|Q| x ~2k rows,
-        # audit derives from the persisted exact anchor) and raise on
-        # any mismatch; a duplicate-id layout inflates the join and
-        # fails the same check.  Deliberately NOT persisted: the
-        # final lazy plan re-derives the join once more, but a
-        # per-rebuild gate that cached these frames would accumulate
-        # storage memory for the application lifetime with no release
-        # point (the returned frame outlives this function).
-        coded = (
-            df.sparkSession.read.parquet(coded_path)
-            .select(
-                id_col,
-                F.col("ivf_cell").cast("int").alias("__cell"),
-                F.col("pq_codes").alias("__codes"),
-            )
-            .join(F.broadcast(audit), id_col)
-            .select("query_id", id_col, "__cos", "__cell", "__codes")
+    enc = pq_encode_udf(cents, books).asNondeterministic()(F.col(vec_col))
+    coded = (
+        df.select(id_col, vec_col)
+        .join(F.broadcast(audit), id_col)
+        .select("query_id", id_col, "__cos", enc.alias("__enc"))
+        .select(
+            "query_id",
+            id_col,
+            "__cos",
+            F.element_at("__enc", 1).alias("__cell"),
+            F.slice("__enc", 2, len(books)).alias("__codes"),
         )
-        n_audit, n_coded = audit.count(), coded.count()
-        if n_coded != n_audit:
-            raise ValueError(
-                "ann_calibration: stored layout at "
-                f"{coded_path} joined {n_coded} of {n_audit} audit "
-                "rows — the index is missing (or duplicating) vectors "
-                "the audit set expects; refusing to certify a lossy "
-                "write"
-            )
-    else:
-        enc = pq_encode_udf(cents, books).asNondeterministic()(
-            F.col(vec_col)
-        )
-        coded = (
-            df.select(id_col, vec_col)
-            .join(F.broadcast(audit), id_col)
-            .select("query_id", id_col, "__cos", enc.alias("__enc"))
-            .select(
-                "query_id",
-                id_col,
-                "__cos",
-                F.element_at("__enc", 1).alias("__cell"),
-                F.slice("__enc", 2, len(books)).alias("__codes"),
-            )
-        )
+    )
     adc = adc_lut_fold("__lut", "__codes")
     we2 = Window.partitionBy("query_id").orderBy(
         F.col("__cos").desc(), F.col(id_col).asc()

@@ -19,126 +19,8 @@ prefer broadcast when it simply fits.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass(frozen=True)
-class SkewReport:
-    """Driver-side summary of a join key's group-size distribution —
-    the decision input for `maybe_salt` (the same numbers
-    q_skew_report publishes as a diagnostic table, queries/stats.py).
-
-    All fields come from ONE aggregate over |keys| rows collected as
-    ONE row — a planning-time probe, bounded at any corpus size."""
-
-    n_keys: int
-    n_rows: int
-    p50: float
-    p99: float
-    max_n: int
-
-    @property
-    def skew_ratio(self) -> float:
-        # group counts are >= 1, so p50 == 0 only for an EMPTY input —
-        # report no skew, not infinity
-        return self.p99 / self.p50 if self.p50 else 0.0
-
-    @property
-    def top1_share(self) -> float:
-        return self.max_n / self.n_rows if self.n_rows else 0.0
-
-    def should_salt(
-        self,
-        skew_ratio_threshold: float = 4.0,
-        top1_share_threshold: float = 0.01,
-    ) -> bool:
-        """Salt when the tail is disproportionate (p99 >= threshold x
-        the median — many moderately hot keys) OR one key alone is
-        both disproportionate (max >= threshold x the MEAN group size
-        — relative, so a uniform small-key-count table whose top key
-        naturally owns 1/n_keys of the rows does not trip) and owns
-        more than `top1_share_threshold` of all rows (absolute — 1% of
-        a 100 TB table in one task is the pathology).  Defaults mirror
-        AQE's skew factor (5x,
-        spark.sql.adaptive.skewJoin.skewedPartitionFactor) scaled to
-        per-key granularity."""
-        mean = self.n_rows / self.n_keys if self.n_keys else 0.0
-        return self.skew_ratio >= skew_ratio_threshold or (
-            self.top1_share >= top1_share_threshold
-            and self.max_n >= skew_ratio_threshold * mean
-        )
-
-
-def skew_report(df: DataFrame, on: list[str] | str) -> SkewReport:
-    """Compute a `SkewReport` for `df` grouped by `on`.
-
-    One partial+final count aggregate (shuffle carries count rows, not
-    data rows) + one single-row summary over the |keys|-row size table
-    — the exact shape of q_skew_report (queries/stats.py:501) minus
-    the hot-key top-5, collected to the driver as ONE row."""
-    on = [on] if isinstance(on, str) else list(on)
-    row = (
-        df.groupBy(*[F.col(c) for c in on])
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("__n").alias("n_rows"),
-            F.expr("percentile(__n, 0.5)").alias("p50"),
-            F.expr("percentile(__n, 0.99)").alias("p99"),
-            F.max("__n").alias("max_n"),
-        )
-        .collect()[0]
-    )
-    if row["n_keys"] == 0:
-        return SkewReport(0, 0, 0.0, 0.0, 0)
-    return SkewReport(
-        n_keys=int(row["n_keys"]),
-        n_rows=int(row["n_rows"]),
-        p50=float(row["p50"]),
-        p99=float(row["p99"]),
-        max_n=int(row["max_n"]),
-    )
-
-
-def maybe_salt(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str] | str,
-    report: SkewReport | None = None,
-    n_salts: int = 8,
-    how: str = "inner",
-    skew_ratio_threshold: float = 4.0,
-    top1_share_threshold: float = 0.01,
-) -> DataFrame:
-    """Plain-or-salted equi join, decided from a `SkewReport` — the
-    wiring that turns q_skew_report's diagnostic into the planning
-    decision (r6 verdict #4).
-
-    When the report says the key is well-behaved, returns the plain
-    `left.join(right, on, how)` and Catalyst/AQE handle everything;
-    when it is skewed, routes through `salted_join` in TARGETED mode
-    with the hot threshold set at the report's p99 — only keys in the
-    top percentile pay the salting replication, everything below rides
-    the plain join.  Result is IDENTICAL either way (property-tested
-    result-equal in tests/test_dedup_ops.py).
-
-    `report` defaults to computing `skew_report(left, on)` — one
-    bounded probe job.  Pass a precomputed one to reuse across joins
-    of the same key (the 100 TB usage: one report per fact-table key
-    per pipeline, consulted by every join against it)."""
-    if report is None:
-        report = skew_report(left, on)
-    if not report.should_salt(skew_ratio_threshold, top1_share_threshold):
-        return left.join(right, on, how)
-    # p99 from the report IS the targeted-mode cutoff: ~1% of keys go
-    # through the salted path, bounded-broadcastable by construction
-    hot_threshold = max(int(report.p99), 2)
-    return salted_join(
-        left, right, on, n_salts=n_salts, how=how, hot_threshold=hot_threshold
-    )
 
 
 def salted_join(

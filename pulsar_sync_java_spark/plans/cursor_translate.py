@@ -2,8 +2,9 @@
 batch plan components (SURVEY.md §3.3).
 
 Pipeline: sparse sampling of the message-id mapping (R17) ->
-cursor snapshot -> floor/as-of resolution (R21) -> anti-join against
-destination subscriptions (R22/R23) -> create-at-position actions.
+cursor snapshot -> floor/as-of resolution (R21).  Creating and
+advancing the translated cursors on the destination (R22/R23) is the
+engine's merge step (`engine.py:_apply_cursors`).
 
 The flagship declared query q_cursor_translate
 (queries/reference.py) is this module applied to the `events` table;
@@ -91,14 +92,3 @@ def translate(
     )
     return asof_join(c, m, on=ts_col, by=key_cols, right_tiebreak=["translated_id"])
 
-
-def pending_creates(
-    translated: DataFrame, dst_subscriptions: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """R22: cursors to create on dst = translated positions whose key
-    has no destination subscription yet (the reference skips whenever
-    dst already has the cursor, `PulsarPartitionSyncWorker.java:190-192`
-    — create-once semantics)."""
-    return translated.join(
-        dst_subscriptions.select(*key_cols), on=key_cols, how="left_anti"
-    )

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.functions.numeric import dec_arr_sum
 from pulsar_sync_java_spark.operators.graph import connected_components
-from pulsar_sync_java_spark.queries import query
+from pulsar_sync_java_spark.queries import query, stats
 from pulsar_sync_java_spark.sources.tables import load_table
 
 _K = 8
@@ -402,13 +402,22 @@ def kmeans_assignments(
     tests/test_new_query_props.py."""
     from pulsar_sync_java_spark.operators.util import spread
 
+    use_expr = (impl == "expr") or (impl == "auto" and k <= _EXPR_MAX_K)
+    # the expr path's size map is one literal CASE arm per cluster
+    if use_expr and k > stats._LITERAL_CASE_MAX_GROUPS:
+        raise ValueError(
+            f"kmeans_assignments: k={k} exceeds "
+            f"_LITERAL_CASE_MAX_GROUPS={stats._LITERAL_CASE_MAX_GROUPS}; the "
+            "literal CASE size map is for a handful of clusters — use "
+            "impl='df', which joins the cluster sizes back with a "
+            "broadcast join"
+        )
     # Every Lloyd pass is a CPU-bound per-row projection (K decimal-
     # exact distance folds per vector); a single-split scan would run
     # them all on one task (spread is gated away when the scan already
     # has enough splits — the 100 TB case).  Measured at sf0.1: the
     # K=8 argmin pass drops 1.18s -> 0.45s under the spread exchange.
     e = spread(e)
-    use_expr = (impl == "expr") or (impl == "auto" and k <= _EXPR_MAX_K)
     if use_expr:
         return _kmeans_assignments_expr(e, sample_pct, seed_salt, k, init)
     if init == "k_smallest":
@@ -712,10 +721,10 @@ _SEM_PAIR_BLOCKS = 8
 
 # the flat-PQ prefilter model, memoized per corpus path: the artifact
 # is TINY (d x 16 x 1 codewords), deterministic (seeded sample + fixed
-# Lloyd iterations — re-derivable from data + seed, the
-# ivf_pq_index_write model contract), and a production deployment
-# stores it beside the corpus rather than retraining per query — the
-# session-lifetime analogue of the persisted shingle projection.
+# Lloyd iterations — re-derivable from data + seed), and a production
+# deployment stores it beside the corpus rather than retraining per
+# query — the session-lifetime analogue of the persisted shingle
+# projection.
 # Correctness never depends on it: the prefilter bound is lossless, so
 # even a stale model only changes how much is pruned, never the answer.
 _SEM_PQ_CACHE: dict[str, tuple[int, list]] = {}

@@ -563,8 +563,7 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counts) keep the weight table scale-free: the same model text works
 # at sf0.001 and at 100 TB.  Integer div (`div` / `//`) throughout —
 # no float enters until the final per-doc mean.  The model itself
-# (train + apply) lives in operators/quality.py since r10, shared with
-# the streaming ingest gate (streaming/neardup.py); the constants are
+# (train + apply) lives in operators/quality.py; the constants are
 # re-exported here for the oracle SQL.
 from pulsar_sync_java_spark.operators.quality import (  # noqa: E402
     CLS_KEEP_MIN as _CLS_KEEP_MIN,

@@ -1,17 +1,15 @@
 """Streaming query progress readout — the engine-side half of the
 observability story.
 
-`streaming/stateful.py`'s metric rows cover what CUSTOM kernels hold
-(round-8 state snapshots); this module reads what SPARK ITSELF tracks
-per micro-batch — watermark position, state-store row counts and
-memory, input rates, and the `numRowsDroppedByWatermark` counter
-(SPARK-24634).  Late-data loss is the silent failure mode of every
-watermarked operator: the batch result is simply missing rows, nothing
-raises.  At 100 TB the difference between "the feed is clean" and
-"0.3% of events fall behind the watermark every hour" lives on this
-page — the reference has no analogue because it never reorders
-(per-partition push listener), but any Spark deployment of the engine
-needs it on a dashboard.
+This module reads what SPARK ITSELF tracks per micro-batch —
+watermark position, state-store row counts and memory, input rates,
+and the `numRowsDroppedByWatermark` counter (SPARK-24634).  Late-data
+loss is the silent failure mode of every watermarked operator: the
+batch result is simply missing rows, nothing raises.  At 100 TB the
+difference between "the feed is clean" and "0.3% of events fall behind
+the watermark every hour" lives on this page — the reference has no
+analogue because it never reorders (per-partition push listener), but
+any Spark deployment of the engine needs it on a dashboard.
 
 Source of truth: `StreamingQuery.lastProgress` / `recentProgress`
 (public PySpark API) — dicts mirroring `StreamingQueryProgress`.

@@ -131,7 +131,7 @@ PERSIST_ALLOWLIST = {
     ("operators/graph.py", "tree_roots"): 4,            # pointer-doubling states; released in-loop / on finish
     ("operators/heavy_hitters.py", "heavy_hitters"): 1, # MG summaries (tiny: P*(k+1) rows, session-lifetime)
     ("operators/similarity.py", "embedding_near_pairs"): 1,  # signature projection (session-lifetime)
-    ("operators/similarity.py", "ann_calibration"): 1,  # exact top-k anchor (|Q| x k rows; 6 consumers); the coded_path audit counts deliberately do NOT persist (no release point for a frame the return value outlives)
+    ("operators/similarity.py", "ann_calibration"): 1,  # exact top-k anchor (|Q| x k rows; 6 consumers)
     ("operators/dedup.py", "simhash_calibration"): 2,  # fingerprints (3 consumers: pigeonhole pairing + both pair lookups) and token counts (3: norms + both dot sides) — without them the Arrow simhash kernel runs 3x and the tokenize 4x
     ("queries/clustering.py", "_semantic_dedup_pipeline"): 1,  # (vec_id, cluster) assignment table (narrow, 3 consumers); shared by q_semantic_dedup and the auto-K semantic_dedup helper
     ("queries/clustering.py", "_kmeans_assignments_expr"): 1,  # final (vec_id, cluster) assignment (narrow): the eager size collect and the returned plan otherwise EACH evaluate the K-fold argmin over the corpus — one full extra pass (r14, r13 verdict #2)
@@ -139,7 +139,6 @@ PERSIST_ALLOWLIST = {
     ("queries/dedup_scale.py", "q_sketch_calibration"): 1,   # portable sigs (banded subtree + 2 lookups; plan-matched with q_minhash_lsh)
     ("queries/dedup_scale.py", "q_incremental_dedup"): 1,    # minhash sigs (plan-matched with the other sig users)
     ("queries/dedup_scale.py", "q_minhash_lsh"): 1,
-    ("operators/similarity.py", "ivf_pq_index_refresh"): 1,  # coded delta (drift collect + append are separate actions); unpersists in finally
     ("queries/aggregates.py", "q_hll_intersect"): 1,    # distinct (type, key) set (sketch agg + exact joins share it)
     ("queries/behavior.py", "q_assoc_rules"): 1,        # per-basket sorted item arrays, guarded BEFORE collect (pair explode + supports explode + basket count)
     ("queries/extras.py", "_copurchase_edges"): 1,      # THE shared symmetric co-purchase edge table (mod=5 slice, plan-matched, FLAT — consumers derive views by filter/rename, never by stacking persists; serves q_triangle_count + q_bfs_khop + q_degree_assortativity)
@@ -158,8 +157,6 @@ PERSIST_ALLOWLIST = {
     ("queries/training.py", "q_corpus_materialize"): 1, # feature table = pushdown barrier (measured 13x)
     ("queries/training.py", "q_dedup_keepers"): 1,      # minhash sigs (plan-matched)
     ("sinks/writers.py", "idempotent_append"): 2,       # released: both unpersist in finally-shaped flow
-    ("streaming/neardup.py", "ingest_batch"): 2,        # batch sigs + drop-id set (feeds both left_anti joins); both released per micro-batch
-    ("streaming/neardup.py", "gated_ingest_batch_monitored"): 1,  # per-batch classifier scores feed the gate AND the health counters; released in the finally
 }
 
 

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from pulsar_sync_java_spark.operators.asof import asof_join
 from pulsar_sync_java_spark.plans.cursor_translate import (
     latest_cursor,
-    pending_creates,
     sparse_sample,
     translate,
 )
@@ -98,18 +97,6 @@ def test_asof_tiebreak_deterministic(spark):
     )
     [r] = asof_join(left, right, on="t", by="k", right_tiebreak=["vid"]).collect()
     assert r.vid == 9  # greatest tiebreak wins
-
-
-def test_pending_creates_skips_existing_subscriptions(spark, events):
-    """R22 create-once: keys already subscribed on dst are skipped
-    (PulsarPartitionSyncWorker.java:190-192)."""
-    mapping = sparse_sample(events, ["user_id"])
-    cursors = latest_cursor(events, ["user_id"])
-    translated = translate(cursors, mapping, ["user_id"])
-    existing = spark.createDataFrame([(0,), (1,)], ["user_id"])
-    pend = pending_creates(translated, existing, ["user_id"])
-    assert pend.count() == translated.count() - 2
-    assert {r.user_id for r in pend.select("user_id").collect()}.isdisjoint({0, 1})
 
 
 def test_asof_join_forward_matches_brute_force(spark):

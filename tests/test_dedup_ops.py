@@ -145,162 +145,21 @@ def test_ivf_topk_recall_vs_exact(spark, embeddings):
     assert recall >= 0.5, f"recall {recall}: exact={exact} approx={approx}"
 
 
-def test_ivf_indexed_prunes_partitions_and_matches_runtime_path(
-    spark, embeddings, tmp_path
-):
-    """The materialized IVF layout: the indexed probe must (a) return
-    exactly what the runtime-assignment path returns for the same
-    centroids/nprobe, and (b) physically scan ONLY the probed cells'
-    partition directories (plan PartitionFilters + numFiles metric)."""
-    import glob
-    import os
-
-    from pulsar_sync_java_spark.operators.similarity import (
-        ivf_index_write,
-        ivf_topk_indexed,
-    )
-
-    path = str(tmp_path / "ivf_index")
-    cents = ivf_index_write(embeddings, path, n_centroids=8, iters=1)
-    row = embeddings.filter(F.col("vec_id") == 0).first()
-    qv = [float(x) for x in row.embedding]
-
-    out = ivf_topk_indexed(spark, path, cents, qv, k=10, nprobe=2)
-    got = [(r.vec_id, r.cos_sim) for r in out.collect()]
-    want = [
-        (r.vec_id, r.cos_sim)
-        for r in ivf_topk(
-            embeddings, qv, k=10, n_centroids=8, nprobe=2, iters=1
-        ).collect()
-    ]
-    assert got == want
-
-    # pruning evidence: probe scan reads only the 2 matching cells
-    order = sorted(
-        range(len(cents)),
-        key=lambda i: sum((a - b) ** 2 for a, b in zip(qv, cents[i])),
-    )
-    probed = {order[0], order[1]}
-    cand = spark.read.parquet(path).where(F.col("ivf_cell").isin([int(c) for c in probed]))
-    rows = cand.collect()
-    assert len(rows) > 0
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "ivf_cell" in plan
-    all_files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    ]
-    match_files = [
-        f for f in all_files if any(f"ivf_cell={c}" in f for c in probed)
-    ]
-    leaves = cand._jdf.queryExecution().executedPlan().collectLeaves()
-    num_files = int(leaves.apply(0).metrics().apply("numFiles").value())
-    assert num_files == len(match_files) < len(all_files)
-
-
-def test_lsh_indexed_prunes_partitions_and_matches_runtime_path(
-    spark, embeddings, tmp_path
-):
-    """The materialized signature-prefix layout: a Hamming-ball probe
-    with radius < prefix_bits must skip the out-of-ball prefix
-    directories (numFiles metric) and return exactly the runtime
-    lsh_topk answer for the same planes/radius."""
-    import glob
-    import os
-
-    from pulsar_sync_java_spark.operators.similarity import (
-        lsh_index_write,
-        lsh_topk_indexed,
-    )
-
-    path = str(tmp_path / "lsh_index")
-    lsh_index_write(embeddings, path, num_planes=16, prefix_bits=4)
-    row = embeddings.filter(F.col("vec_id") == 0).first()
-    qv = [float(x) for x in row.embedding]
-
-    out = lsh_topk_indexed(
-        spark, path, qv, k=10, num_planes=16, prefix_bits=4, max_hamming=2
-    )
-    got = [(r.vec_id, r.cos_sim) for r in out.collect()]
-    want = [
-        (r.vec_id, r.cos_sim)
-        for r in lsh_topk(
-            embeddings, qv, k=10, num_planes=16, max_hamming=2
-        ).collect()
-    ]
-    assert got == want and 0 in {v for v, _ in got}
-
-    # radius 2 over 4 prefix bits -> 11 of 16 prefixes qualify; the
-    # probe scan must read no files from the other 5 directories
-    import numpy as np
-
-    from pulsar_sync_java_spark.operators.similarity import _planes
-    from pulsar_sync_java_spark.operators.vectorized import hyperplane_sign_bits
-
-    planes = _planes(len(qv), 16, 42)
-    q_sig = int(
-        hyperplane_sign_bits(np.asarray([qv]), np.asarray(planes))[0]
-    )
-    q_prefix = (q_sig >> 12) & 0xF
-    probe = [p for p in range(16) if bin(p ^ q_prefix).count("1") <= 2]
-    cand = spark.read.parquet(path).where(F.col("sig_prefix").isin(probe))
-    cand.collect()
-    all_files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    match_files = [
-        f
-        for f in all_files
-        if any(f"sig_prefix={p}" + os.sep in f or f.endswith(f"sig_prefix={p}") or f"sig_prefix={p}/" in f for p in probe)
-    ]
-    leaves = cand._jdf.queryExecution().executedPlan().collectLeaves()
-    num_files = int(leaves.apply(0).metrics().apply("numFiles").value())
-    assert num_files == len(match_files) < len(all_files)
-
-
-def test_ann_empty_input_raises_clear_errors(spark, tmp_path):
-    """Empty corpus / empty index must fail loudly (ValueError naming
-    the call), not with a TypeError from a None .first() subscript."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        kmeans_centroids,
-        lsh_index_write,
-        lsh_topk_indexed,
-    )
+def test_ann_empty_input_raises_clear_errors(spark):
+    """An empty corpus must fail loudly (ValueError naming the call),
+    not with a TypeError from a None .first() subscript."""
+    from pulsar_sync_java_spark.operators.similarity import kmeans_centroids
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="lsh_index_write"):
-        lsh_index_write(empty, str(tmp_path / "empty_idx"))
     with pytest.raises(ValueError, match="kmeans_centroids"):
         kmeans_centroids(empty)
-    # an index directory written by something else but holding no rows
-    empty.write.parquet(str(tmp_path / "hollow_idx"))
-    with pytest.raises(ValueError, match="lsh_topk_indexed"):
-        lsh_topk_indexed(spark, str(tmp_path / "hollow_idx"), [0.0] * 4)
-
-
-def test_lsh_indexed_warns_when_probe_covers_every_prefix(
-    spark, embeddings, tmp_path
-):
-    """max_hamming >= prefix_bits admits every prefix — the probe
-    degrades to a full scan and must say so."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        lsh_index_write,
-        lsh_topk_indexed,
-    )
-
-    path = str(tmp_path / "lsh_warn_idx")
-    lsh_index_write(embeddings, path, num_planes=16, prefix_bits=4)
-    qv = [float(x) for x in embeddings.first().embedding]
-    with pytest.warns(UserWarning, match="no partition pruning"):
-        lsh_topk_indexed(
-            spark, path, qv, k=5, prefix_bits=4, max_hamming=4
-        ).collect()
 
 
 @pytest.mark.slow
-def test_ann_recall_at_10_meets_gate_sf01(spark, tmp_path):
+def test_ann_recall_at_10_meets_gate_sf01(spark):
     """Quantified quality bar for the two rows-only ANN queries: mean
     recall@10 vs exact cosine_topk over 8 queries at sf0.1 must be
-    >= 0.9 on all four paths (LSH / IVF, runtime and materialized-index
-    variants).
+    >= 0.9 on both paths (LSH and IVF).
 
     Settings note: this corpus is ISOTROPIC (synthetic near-orthogonal
     vectors; true neighbors sit at cos ~0.6 where a plane disagrees
@@ -310,16 +169,10 @@ def test_ann_recall_at_10_meets_gate_sf01(spark, tmp_path):
     On clustered real-world embeddings the same recall comes at much
     smaller radii; the dials are the contract, this test pins what
     they buy on the worst-case (structureless) corpus."""
-    import warnings
-
     from pulsar_sync_java_spark.operators.similarity import (
         assign_clusters,
-        ivf_index_write,
-        ivf_topk_indexed,
         kmeans_centroids,
         knn_join,
-        lsh_index_write,
-        lsh_topk_indexed,
     )
     from pulsar_sync_java_spark.sources.tables import load_table
 
@@ -347,20 +200,6 @@ def test_ann_recall_at_10_meets_gate_sf01(spark, tmp_path):
         )
         assert r_lsh >= 0.9, f"lsh_topk recall@10 {r_lsh}"
 
-        # --- LSH, materialized index (same radius -> full probe: the
-        # isotropic-corpus price; the degradation warning is expected)
-        lsh_path = str(tmp_path / "recall_lsh_idx")
-        lsh_index_write(e, lsh_path, num_planes=16, prefix_bits=4)
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", UserWarning)
-            r_lsh_idx = avg_recall(
-                lambda qv: lsh_topk_indexed(
-                    spark, lsh_path, qv, k=10, num_planes=16,
-                    prefix_bits=4, max_hamming=8,
-                )
-            )
-        assert r_lsh_idx >= 0.9, f"lsh_topk_indexed recall@10 {r_lsh_idx}"
-
         # --- IVF, runtime path (quantizer trained once, not per query)
         cents = kmeans_centroids(e, k=16, iters=1)
         assigned = assign_clusters(e, "embedding", cents).persist()
@@ -382,83 +221,6 @@ def test_ann_recall_at_10_meets_gate_sf01(spark, tmp_path):
         finally:
             assigned.unpersist()
         assert r_ivf >= 0.9, f"ivf recall@10 {r_ivf}"
-
-        # --- IVF, materialized index
-        ivf_path = str(tmp_path / "recall_ivf_idx")
-        icents = ivf_index_write(e, ivf_path, n_centroids=16, iters=1)
-        r_ivf_idx = avg_recall(
-            lambda qv: ivf_topk_indexed(
-                spark, ivf_path, icents, qv, k=10, nprobe=10
-            )
-        )
-        assert r_ivf_idx >= 0.9, f"ivf_topk_indexed recall@10 {r_ivf_idx}"
-    finally:
-        e.unpersist()
-
-
-def test_ivf_index_lifecycle_sf01(spark, tmp_path):
-    """r6 verdict #6 — the standing-index lifecycle at sf0.1: build on
-    HALF the corpus, grow to full size via ivf_index_append against
-    the stored (never retrained) quantizer, and check the contract's
-    two promises: (a) probe recall@10 over the grown index still meets
-    the 0.9 gate — append-without-retrain is safe while the
-    distribution holds; (b) ivf_index_staleness flags the 2x growth
-    for rebuild, while the freshly-built index is not flagged."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        ivf_index_append,
-        ivf_index_staleness,
-        ivf_index_write,
-        ivf_topk_indexed,
-        knn_join,
-    )
-    from pulsar_sync_java_spark.sources.tables import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.1", "embeddings").persist()
-    path = str(tmp_path / "ivf_lifecycle")
-    try:
-        half = e.filter(F.col("vec_id") % 2 == 0)
-        rest = e.filter(F.col("vec_id") % 2 == 1)
-        cents = ivf_index_write(half, path, n_centroids=16, iters=1)
-
-        fresh = ivf_index_staleness(spark, path)
-        assert fresh.growth == 1.0
-        assert not fresh.should_rebuild(), fresh
-
-        appended = ivf_index_append(rest, path, cents)
-        assert appended == rest.count()
-        # replay safety: re-delivering the same batch appends nothing
-        assert ivf_index_append(rest, path, cents) == 0
-
-        qdf = e.filter(F.col("vec_id") < 8)
-        queries = {
-            r.vec_id: [float(x) for x in r.embedding] for r in qdf.collect()
-        }
-        exact: dict[int, set[int]] = {}
-        for r in knn_join(e, qdf, k=10).collect():
-            exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-        # nprobe 12 (vs 10 for the full-trained gate above): the
-        # half-snapshot quantizer carries more residual error on this
-        # worst-case isotropic corpus (measured 0.84 at nprobe=10,
-        # i.e. ~0.06 recall cost of 2x growth) — exactly the decay
-        # should_rebuild exists to bound; widening the probe is the
-        # between-rebuilds mitigation the contract names
-        recs = []
-        for qid, qv in queries.items():
-            got = {
-                r.vec_id
-                for r in ivf_topk_indexed(
-                    spark, path, cents, qv, k=10, nprobe=12
-                ).collect()
-            }
-            recs.append(len(exact[qid] & got) / 10)
-        avg = sum(recs) / len(recs)
-        assert avg >= 0.9, f"grown-index recall@10 {avg}"
-
-        grown = ivf_index_staleness(spark, path)
-        assert grown.current_rows == e.count()
-        assert abs(grown.growth - 2.0) < 0.05
-        assert grown.should_rebuild(), grown  # 2x growth trips the gate
-        assert not grown.should_rebuild(growth_factor=3.0)
     finally:
         e.unpersist()
 
@@ -501,81 +263,6 @@ def test_salted_join_equivalence(spark):
                 )
             )
             assert got == want, (how, hot)
-
-
-def test_maybe_salt_decision_and_equivalence(spark):
-    """r6 verdict #4: maybe_salt turns q_skew_report's numbers into
-    the plain-vs-salted decision — and MUST be result-identical to the
-    plain join on BOTH sides of the decision."""
-    from pulsar_sync_java_spark.operators.skew import (
-        SkewReport,
-        maybe_salt,
-        skew_report,
-    )
-
-    hot = spark.createDataFrame(
-        [(1, i) for i in range(500)] + [(k, 0) for k in range(2, 30)],
-        "k long, payload long",
-    )
-    uniform = spark.createDataFrame(
-        [(k, i) for k in range(20) for i in range(5)],
-        "k long, payload long",
-    )
-    right = spark.createDataFrame(
-        [(1, "hot"), (2, "a"), (3, "b"), (99, "unmatched")], "k long, v string"
-    )
-
-    # the report reads the distribution correctly on both datasets
-    r_hot, r_uni = skew_report(hot, "k"), skew_report(uniform, "k")
-    assert r_hot.max_n == 500 and r_hot.n_rows == 528
-    assert r_hot.should_salt()  # top1_share = 500/528
-    assert r_uni.p50 == r_uni.p99 == 5.0
-    assert not r_uni.should_salt()
-
-    # result-identical to the plain join on BOTH decision branches,
-    # for inner and left-outer alike
-    for df, rep in ((hot, r_hot), (uniform, r_uni)):
-        for how in ("inner", "left"):
-            want = sorted(map(tuple, df.join(right, "k", how).collect()))
-            got = sorted(
-                map(tuple, maybe_salt(df, right, "k", rep, how=how).collect())
-            )
-            assert got == want, (rep, how)
-
-    # report=None computes its own probe; same answer
-    assert sorted(
-        map(tuple, maybe_salt(hot, right, "k").collect())
-    ) == sorted(map(tuple, hot.join(right, "k", "inner").collect()))
-
-    # threshold knobs are honored (force the uniform key to salt)
-    forced = maybe_salt(
-        uniform, right, "k", r_uni, skew_ratio_threshold=0.5
-    )
-    assert sorted(map(tuple, forced.collect())) == sorted(
-        map(tuple, uniform.join(right, "k", "inner").collect())
-    )
-
-    # empty input degenerates gracefully
-    empty = skew_report(hot.filter("k < 0"), "k")
-    assert empty == SkewReport(0, 0, 0.0, 0.0, 0)
-    assert not empty.should_salt()
-
-    # plan-shape: the decision is visible in the physical plan — the
-    # salted branch carries the __salt machinery (pmod over xxhash64 +
-    # the right side's explode replication), the plain branch must not
-    import io
-    from contextlib import redirect_stdout
-
-    def plan_of(df):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    salted_plan = plan_of(maybe_salt(hot, right, "k", r_hot))
-    plain_plan = plan_of(maybe_salt(uniform, right, "k", r_uni))
-    assert "pmod" in salted_plan and "xxhash64" in salted_plan
-    assert "pmod" not in plain_plan and "xxhash64" not in plain_plan
 
 
 def test_portable_hash_columns_match_kernel_definition(spark):
@@ -778,82 +465,6 @@ def test_hashed_shingle_index_matches_raw_strings(spark, documents):
         ).collect()
     }
     assert hashed == raw
-
-
-def test_ivf_index_append_is_idempotent_and_probed(spark, embeddings, tmp_path):
-    """Index lifecycle: build on a prefix of the corpus, append the rest
-    in two batches (one replayed) — the index must equal a fresh full
-    build cell-for-cell, and the replay must append nothing."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        ivf_index_append,
-        ivf_index_write,
-        ivf_topk_indexed,
-    )
-
-    base = embeddings.where(F.col("vec_id") % 3 != 0)
-    rest = embeddings.where(F.col("vec_id") % 3 == 0)
-    idx = str(tmp_path / "ivf")
-    cents = ivf_index_write(base, idx, n_centroids=8)
-
-    n1 = ivf_index_append(rest, idx, cents)
-    assert n1 == rest.count()
-    n2 = ivf_index_append(rest, idx, cents)  # replay
-    assert n2 == 0
-
-    # incremental index == fresh full build under the same centroids
-    full = str(tmp_path / "ivf_full")
-    from pulsar_sync_java_spark.operators.similarity import assign_clusters
-    from pulsar_sync_java_spark.operators.util import spread
-
-    assigned = assign_clusters(spread(embeddings), "embedding", cents)
-    got = {
-        (r.vec_id, r.ivf_cell)
-        for r in spark.read.parquet(idx).select("vec_id", "ivf_cell").collect()
-    }
-    expected = {
-        (r.vec_id, r["__cluster"]) for r in assigned.select("vec_id", "__cluster").collect()
-    }
-    assert got == expected
-
-    # probes over the incrementally-built index return exact top-k
-    q = embeddings.where("vec_id = 0").select("embedding").first()[0]
-    res = ivf_topk_indexed(spark, idx, cents, list(q), k=5, nprobe=8)
-    assert res.count() == 5
-
-
-def test_lsh_index_append_is_idempotent_and_matches_full_build(
-    spark, embeddings, tmp_path
-):
-    """LSH signatures are pure functions of (planes, seed), so an
-    incrementally-grown index must be row-identical to a full build,
-    and replays must append nothing."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        lsh_index_append,
-        lsh_index_write,
-        lsh_topk_indexed,
-    )
-
-    base = embeddings.where(F.col("vec_id") % 4 != 0)
-    rest = embeddings.where(F.col("vec_id") % 4 == 0)
-    idx = str(tmp_path / "lsh")
-    lsh_index_write(base, idx)
-    assert lsh_index_append(rest, idx) == rest.count()
-    assert lsh_index_append(rest, idx) == 0  # replay
-
-    full = str(tmp_path / "lsh_full")
-    lsh_index_write(embeddings, full)
-    got = {
-        (r.vec_id, r.sig_prefix)
-        for r in spark.read.parquet(idx).select("vec_id", "sig_prefix").collect()
-    }
-    expected = {
-        (r.vec_id, r.sig_prefix)
-        for r in spark.read.parquet(full).select("vec_id", "sig_prefix").collect()
-    }
-    assert got == expected
-
-    q = embeddings.where("vec_id = 0").select("embedding").first()[0]
-    assert lsh_topk_indexed(spark, idx, list(q), k=5).count() == 5
 
 
 def test_containment_catches_planted_superset(spark):
@@ -1189,127 +800,6 @@ def test_repeated_spans_within_doc_repeat_does_not_mark(spark):
     assert repeated_spans(docs, n=4, min_df=2).count() == 0
 
 
-def test_ivf_refresh_pipeline_append_then_rebuild(spark, tmp_path):
-    """r7 verdict #5 — the composed IVF maintenance step, end to end
-    and deterministic: (1) a same-distribution delta drifts ~0 TV and
-    takes the cheap append path (idempotently: a replayed step appends
-    nothing); (2) a planted distribution shift (constant offset on the
-    embedding axis) crowds the delta into few cells — the TV trigger
-    trips BEFORE the size ratios would — and the step re-quantizes
-    into a NEW versioned directory with fresh centroids; (3) recall@10
-    over the rebuilt index meets the 0.9 gate against exact cosine
-    over the grown corpus, restoring what fixed old centroids would
-    have degraded."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        ivf_index_refresh,
-        ivf_index_write,
-        ivf_topk_indexed,
-        knn_join,
-    )
-    from pulsar_sync_java_spark.sources.tables import load_table
-
-    e = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "ivf")
-    cents = ivf_index_write(e, path, n_centroids=8, iters=1)
-
-    # (1) clean delta: same vectors under fresh ids — TV ~ 0, append
-    clean = e.select(
-        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
-    ).filter(F.col("vec_id") % 5 == 0)
-    step1 = ivf_index_refresh(spark, path, clean, cents)
-    assert step1["action"] == "append", step1
-    assert step1["appended"] == clean.count()
-    assert step1["drift_tv"] < 0.25 and not step1["size_stale"]
-    replay = ivf_index_refresh(spark, path, clean, cents)
-    assert replay["action"] == "append" and replay["appended"] == 0
-
-    # (2) drifted delta: shift every component by +3 — lands far from
-    # every trained centroid, concentrating into few cells
-    drifted = e.select(
-        (F.col("vec_id") + 200_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(3.0)).alias("embedding"),
-    ).filter(F.col("vec_id") % 3 == 0)
-    step2 = ivf_index_refresh(spark, path, drifted, cents)
-    assert step2["action"] == "rebuild", step2
-    assert step2["drifted"] and step2["drift_tv"] >= 0.25
-    assert step2["path"] != path and step2["centroids"] != cents
-
-    # (3) recall@10 on the rebuilt index vs exact over the grown corpus
-    corpus = spark.read.parquet(step2["path"]).select("vec_id", "embedding")
-    assert corpus.count() == e.count() + clean.count() + drifted.count()
-    qdf = corpus.filter(
-        (F.col("vec_id") < 4) | (F.col("vec_id").between(200_000, 200_012))
-    )
-    exact: dict[int, set[int]] = {}
-    for r in knn_join(corpus, qdf, k=10).collect():
-        exact.setdefault(r.query_id, set()).add(r.neighbor_id)
-    recs = []
-    for r in qdf.collect():
-        got = {
-            x.vec_id
-            for x in ivf_topk_indexed(
-                spark, step2["path"], step2["centroids"],
-                [float(v) for v in r.embedding], k=10, nprobe=6,
-            ).collect()
-        }
-        recs.append(len(exact[r.vec_id] & got) / 10)
-    avg = sum(recs) / len(recs)
-    assert avg >= 0.9, f"post-rebuild recall@10 {avg}"
-
-    # determinism: the same refresh decision re-derives identical
-    # centroids (seeded quantizer + exact-integer TV)
-    step2b = ivf_index_refresh(
-        spark, path, drifted, cents,
-        rebuild_path=str(tmp_path / "ivf_v2"),
-    )
-    assert step2b["action"] == "rebuild"
-    assert step2b["centroids"] == step2["centroids"]
-    assert abs(step2b["drift_tv"] - step2["drift_tv"]) == 0.0
-
-
-def test_ivf_refresh_rebuild_update_rows_delta_wins(spark, tmp_path):
-    """A rebuild whose delta UPDATES an existing vec_id must replace
-    the stored row deterministically (delta wins) — dropDuplicates on
-    the union kept an arbitrary copy, so the retrained centroids could
-    differ run to run."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        ivf_index_refresh,
-        ivf_index_write,
-    )
-    from pulsar_sync_java_spark.sources.tables import load_table
-
-    e = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "ivf")
-    cents = ivf_index_write(e, path, n_centroids=8, iters=1)
-
-    # delta: UPDATED embeddings for existing ids (shifted so the drift
-    # trigger forces the rebuild path)
-    delta = e.filter(F.col("vec_id") < 50).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x + F.lit(3.0)).alias("embedding"),
-    )
-    step = ivf_index_refresh(
-        spark, path, delta, cents, rebuild_path=str(tmp_path / "v2")
-    )
-    assert step["action"] == "rebuild", step
-    rebuilt = spark.read.parquet(step["path"])
-    # no duplicated ids, corpus size unchanged (updates, not inserts)
-    assert rebuilt.count() == e.count()
-    assert rebuilt.select("vec_id").distinct().count() == e.count()
-    # the updated ids carry the DELTA embedding, bit-for-bit
-    want = {r.vec_id: list(r.embedding) for r in delta.collect()}
-    got = {
-        r.vec_id: list(r.embedding)
-        for r in rebuilt.filter(F.col("vec_id") < 50).collect()
-    }
-    assert got == want
-    # and the rebuild re-derives identically on a second run
-    step2 = ivf_index_refresh(
-        spark, path, delta, cents, rebuild_path=str(tmp_path / "v3")
-    )
-    assert step2["centroids"] == step["centroids"]
-
-
 def test_scrub_repeated_spans_semantics(spark):
     """Removal-half semantics: the shared 6-token run is scrubbed from
     BOTH hosting docs (both-copies policy), a short (< min_span) match
@@ -1425,146 +915,6 @@ def test_ivf_pq_topk_recall_vs_exact(spark, embeddings):
     ]
     recall = len(set(exact) & set(approx)) / 10
     assert recall >= 0.9, f"recall {recall}: exact={exact} approx={approx}"
-
-
-def test_ivf_pq_indexed_round_trip(spark, embeddings, tmp_path):
-    """The materialized IVF-PQ index (r9 verdict #4 'index round-trip'):
-
-    (a) the indexed probe returns exactly what the in-memory path
-        returns for the same seeds/dials (same training sample ->
-        same quantizers -> same codes -> same ADC ranking);
-    (b) the ADC candidate scan is partition-pruned AND column-pruned —
-        its parquet ReadSchema must NOT carry the embedding column
-        (the M-bytes-per-vector payload story, asserted in the plan);
-    (c) the index grows through ivf_index_append (codes ride along as
-        an ordinary column), replays append nothing, and the appended
-        vector is immediately findable as its own nearest neighbor.
-    """
-    from pulsar_sync_java_spark.operators.similarity import (
-        ivf_index_append,
-        ivf_pq_index_write,
-        ivf_pq_topk,
-        ivf_pq_topk_indexed,
-    )
-    from pulsar_sync_java_spark.operators.vectorized import pq_encode_udf
-
-    path = str(tmp_path / "ivfpq_index")
-    cents, books = ivf_pq_index_write(
-        embeddings, path, n_centroids=8, m=16, k_sub=64, iters=1
-    )
-    assert len(cents) == 8 and len(books) == 16 and len(books[0]) == 64
-
-    row = embeddings.filter(F.col("vec_id") == 0).first()
-    qv = [float(x) for x in row.embedding]
-    got = [
-        (r.vec_id, r.cos_sim)
-        for r in ivf_pq_topk_indexed(
-            spark, path, cents, books, qv, k=10, nprobe=3, rerank=32
-        ).collect()
-    ]
-    want = [
-        (r.vec_id, r.cos_sim)
-        for r in ivf_pq_topk(
-            embeddings, qv, k=10, n_centroids=8, nprobe=3, m=16,
-            k_sub=64, rerank=32, iters=1,
-        ).collect()
-    ]
-    assert got == want
-
-    # (b) codes scan: pruned to the probed cells, embedding never read
-    probe = [0, 1]
-    codes_scan = (
-        spark.read.parquet(path)
-        .where(F.col("ivf_cell").isin(probe))
-        .select("vec_id", "pq_codes")
-    )
-    plan = codes_scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "ivf_cell" in plan
-    read_schema = [
-        ln for ln in plan.splitlines() if "ReadSchema" in ln
-    ]
-    assert read_schema and all("embedding" not in ln for ln in read_schema)
-
-    # (c) append a fresh vector, coded against the STORED quantizers
-    new_vec = [float(x) * -1.0 for x in row.embedding]  # antipode: unique
-    delta = spark.createDataFrame(
-        [(999_999, new_vec, 0)],
-        "vec_id long, embedding array<float>, label int",
-    )
-    enc = pq_encode_udf(cents, books)(F.col("embedding"))
-    assigned = (
-        delta.withColumn("__enc", enc)
-        .withColumn("__cluster", F.element_at("__enc", 1))
-        .withColumn("pq_codes", F.slice("__enc", 2, 16))
-        .drop("__enc")
-    )
-    appended = ivf_index_append(delta, path, cents, assigned=assigned)
-    assert appended == 1
-    assert ivf_index_append(delta, path, cents, assigned=assigned) == 0
-    top1 = ivf_pq_topk_indexed(
-        spark, path, cents, books, new_vec, k=1, nprobe=3, rerank=32
-    ).collect()
-    assert [r.vec_id for r in top1] == [999_999]
-
-
-@pytest.mark.slow
-def test_ivf_pq_refresh_append_then_rebuild(spark, tmp_path):
-    """The IVF-PQ maintenance twin of the ivf_index_refresh pipeline:
-    a same-distribution delta appends (encoded against the STORED
-    quantizers, idempotently — codes ride the append), a planted
-    distribution shift trips the TV trigger and retrains BOTH
-    quantizer levels into a new versioned directory, and the rebuilt
-    index clears the recall gate for a drifted-region query."""
-    from pulsar_sync_java_spark.operators.similarity import (
-        cosine_topk,
-        ivf_pq_index_refresh,
-        ivf_pq_index_write,
-        ivf_pq_topk_indexed,
-    )
-    from pulsar_sync_java_spark.sources.tables import load_table
-
-    e = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    path = str(tmp_path / "ivfpq")
-    cents, books = ivf_pq_index_write(
-        e, path, n_centroids=8, m=16, k_sub=64, iters=1
-    )
-
-    clean = e.select(
-        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
-    ).filter(F.col("vec_id") % 5 == 0)
-    step1 = ivf_pq_index_refresh(spark, path, clean, cents, books)
-    assert step1["action"] == "append", step1
-    assert step1["appended"] == clean.count()
-    # appended rows carry codes: the coded scan sees the new ids
-    coded = spark.read.parquet(path).filter(F.col("vec_id") >= 100_000)
-    assert coded.count() == clean.count()
-    assert coded.filter(F.size("pq_codes") != 16).count() == 0
-    replay = ivf_pq_index_refresh(spark, path, clean, cents, books)
-    assert replay["action"] == "append" and replay["appended"] == 0
-
-    drifted = e.select(
-        (F.col("vec_id") + 200_000).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.lit(3.0)).alias("embedding"),
-    ).filter(F.col("vec_id") % 3 == 0)
-    step2 = ivf_pq_index_refresh(spark, path, drifted, cents, books)
-    assert step2["action"] == "rebuild", step2
-    assert step2["drifted"] and step2["path"] != path
-    assert step2["centroids"] != cents and step2["codebooks"] != books
-
-    # recall on the rebuilt coded index for a drifted-region query
-    corpus = spark.read.parquet(step2["path"]).select("vec_id", "embedding")
-    assert corpus.count() == e.count() + clean.count() + drifted.count()
-    qrow = corpus.filter(F.col("vec_id") >= 200_000).orderBy("vec_id").first()
-    qv = [float(x) for x in qrow.embedding]
-    exact = {r.vec_id for r in cosine_topk(corpus, qv, k=10).collect()}
-    got = {
-        r.vec_id
-        for r in ivf_pq_topk_indexed(
-            spark, step2["path"], step2["centroids"], step2["codebooks"],
-            qv, k=10, nprobe=6, rerank=64,
-        ).collect()
-    }
-    assert len(exact & got) / 10 >= 0.9, (exact, got)
 
 
 def test_pq_adc_distance_law_bit_exact(spark):

@@ -261,8 +261,7 @@ def test_deleted_dst_subscription_recreated_at_translated_position(
 def test_control_plane_write_back_is_bounded(spark, clusters):
     """The cursor plane's driver collect (one translated row per src
     cursor) fails fast past control_plane_max_rows with a pointer at the
-    partitioned-merge alternative, instead of collecting an unbounded
-    table onto the driver."""
+    remedy, instead of collecting an unbounded table onto the driver."""
     src, dst = clusters
     engine = SyncEngine(
         spark, src, dst, SyncEngineConfig(control_plane_max_rows=2)
@@ -272,8 +271,8 @@ def test_control_plane_write_back_is_bounded(spark, clusters):
     engine.start_replication(available_now=True).awaitTermination(600)
     with pytest.raises(ValueError, match="control_plane_max_rows") as e:
         engine.sync_cursors_once()
-    # the bound names the escape hatch, not just the failure
-    assert "write_partitioned" in str(e.value)
+    # the bound names the remedy, not just the failure
+    assert "raise control_plane_max_rows in SyncEngineConfig" in str(e.value)
 
 
 @pytest.mark.slow

@@ -895,6 +895,26 @@ def test_mad_outliers_guards_literal_case_cardinality(spark, monkeypatch):
     assert "broadcast join" in str(e.value)
 
 
+def test_kmeans_size_map_guards_literal_case_cardinality(spark, monkeypatch):
+    """More clusters than the literal-CASE bound fail loudly on the expr
+    path before any Spark job runs, and name the broadcast-join path."""
+    from pulsar_sync_java_spark.queries import stats
+
+    monkeypatch.setattr(stats, "_LITERAL_CASE_MAX_GROUPS", 4)
+    sc = spark.sparkContext
+    sc.setJobGroup("kmeans-case-guard", "guard must not run jobs")
+    try:
+        with pytest.raises(
+            ValueError, match="_LITERAL_CASE_MAX_GROUPS=4"
+        ) as e:
+            _QUERIES["q_kmeans_assign"](spark, SF_DIR)
+    finally:
+        sc.setJobGroup(None, None)
+    assert "broadcast join" in str(e.value)
+    jobs = sc.statusTracker().getJobIdsForGroup("kmeans-case-guard")
+    assert list(jobs) == [], jobs
+
+
 def test_char_diversity_matches_python_counter(spark, docs_pdf):
     """Collision probability / Simpson index vs collections.Counter."""
     import re as _re
