@@ -5,15 +5,22 @@ Reference API (`PulsarSync.java:37-51`): construct with src/dst
 `PulsarConfig` + `SyncConfig`, call `start()`; the object then keeps
 catalogs, messages and cursors converging src -> dst.  The engine
 equivalent replaces broker endpoints with a *cluster directory*
-convention (what a Pulsar connector would bind to at deploy time):
+convention (what a Pulsar connector would bind to at deploy time).
+Every table is read with the schema declared here (`SCHEMAS`; messages
+use `MESSAGE_SCHEMA`), never an inferred one:
 
-    <cluster>/tenants.parquet        tenant catalog
-    <cluster>/namespaces.parquet     (tenant, namespace, policies)
-    <cluster>/topics.parquet         (tenant, namespace, topic,
-                                      partitions, properties)
-    <cluster>/messages/              data plane, MESSAGE_SCHEMA parquet
-    <cluster>/subscriptions.parquet  cursors: (topic, partition, cursor,
-                                      ts, event_id)
+    <cluster>/tenants.parquet        tenant string
+    <cluster>/namespaces.parquet     tenant string, namespace string,
+                                     policies string
+    <cluster>/topics.parquet         tenant string, namespace string,
+                                     topic string, partitions int,
+                                     properties map<string,string>
+    <cluster>/messages/              MESSAGE_SCHEMA (dst: the file
+                                     sink's `_spark_metadata` log decides
+                                     which files are read)
+    <cluster>/subscriptions.parquet  topic string, partition int,
+                                     cursor string, ts timestamp,
+                                     event_id long
 
 and the three reference loops become three engine methods:
 
@@ -29,38 +36,78 @@ at-least-once replication (checkpoint commit), sampled mapping +
 floor/as-of cursor translation (replay-only error), create-once
 cursors.
 
+Schema drift: a declared schema makes a drifted src table fail loudly
+instead of being re-inferred into a different plan.
+- A column of the wrong type raises when the column is read (Spark
+  refuses to convert, e.g., an `int` column read as `string`).
+- A missing key column reads as all-NULL keys, which the catalog tick's
+  NULL-key guard rejects (`ValueError`) before anything is written.
+- A missing payload column (policies, properties, partitions) reads
+  as NULL and is copied as NULL.
+
 Write policy: the reference only ever creates entities, so every
 create on dst is an append of the new rows; a converged tick writes
-nothing.  The one rewrite is the opt-in cursor advance, which replaces
-`subscriptions.parquet`.  A cursor tick translates the src cursors
-once, merges them with the dst subscriptions once, and writes
-`subscriptions.parquet` at most once: an overwrite when a cursor
-advanced (it carries the tick's creates too), else an append of the
-created cursors.  Both intermediate results are control-plane small, bounded by
-`control_plane_max_rows`, and are held as JVM local relations: their
-rows are collected into the driver JVM, never into Python, so later
-actions on them start no Python worker.  The DATA plane (replication
-stream, mapping plan) never touches the driver.
+nothing.  A catalog tick counts the missing rows of all three levels
+in one job (a tagged union of the key-only anti-joins, grouped by
+level) and appends only the non-empty levels.  The one rewrite is the
+opt-in cursor advance, which replaces `subscriptions.parquet`.  A
+cursor tick translates the src cursors once, merges them with the dst
+subscriptions once, and writes `subscriptions.parquet` at most once:
+an overwrite when a cursor advanced (it carries the tick's creates
+too), else an append of the created cursors.  Both intermediate
+results are control-plane small, bounded by `control_plane_max_rows`,
+and are held as JVM local relations: their rows are collected into
+the driver JVM, never into Python, so later actions on them start no
+Python worker.  The DATA plane (replication stream, mapping plan)
+never touches the driver.
+
+Overlap: like the reference, which runs its catalog managers and its
+message workers side by side on one scheduled pool
+(`PulsarSync.java:44`), `run_once` runs the catalog tick while the
+replication stream copies the delta.  The cursor tick waits for the
+stream, because the mapping must point at replicated rows.
 """
 
 from __future__ import annotations
 
+import operator
 import os
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pulsar_sync_java_spark.plans.catalog_diff import diff_catalogs
+from pulsar_sync_java_spark.plans.catalog_diff import (
+    NAMESPACE_KEY,
+    TENANT_KEY,
+    TOPIC_KEY,
+    diff_catalogs,
+)
 from pulsar_sync_java_spark.plans.cursor_translate import sparse_sample, translate
 from pulsar_sync_java_spark.sources.tables import ensure_session_confs
 from pulsar_sync_java_spark.streaming.replicate import (
+    MESSAGE_SCHEMA,
     read_message_stream,
     replicate,
 )
 
 CURSOR_KEY = ["topic", "partition", "cursor"]
-_CATALOGS = ("tenants", "namespaces", "topics")
+# Declared read schemas of the cluster directory's tables (see the
+# module docstring).
+SCHEMAS = {
+    "tenants": "tenant string",
+    "namespaces": "tenant string, namespace string, policies string",
+    "topics": (
+        "tenant string, namespace string, topic string, partitions int, "
+        "properties map<string,string>"
+    ),
+    "subscriptions": (
+        "topic string, partition int, cursor string, ts timestamp, event_id long"
+    ),
+}
+# catalog levels in create order, with their keys
+_CATALOGS = {"tenants": TENANT_KEY, "namespaces": NAMESPACE_KEY, "topics": TOPIC_KEY}
 
 
 @dataclass(frozen=True)
@@ -109,18 +156,9 @@ class SyncEngine:
         self.last_advanced = 0
 
     def _read(self, cluster: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(cluster, f"{name}.parquet"))
-
-    def _append(self, name: str, df: DataFrame) -> int:
-        """Append `df` to the dst table `name` and return its row count.
-        Nothing is written when there are no rows, so a converged tick
-        leaves dst untouched."""
-        n = df.count()
-        if n:
-            df.coalesce(1).write.mode("append").parquet(
-                os.path.join(self.dst, f"{name}.parquet")
-            )
-        return n
+        return self.spark.read.schema(SCHEMAS[name]).parquet(
+            os.path.join(cluster, f"{name}.parquet")
+        )
 
     def _collect_control_plane(self, df: DataFrame, what: str) -> tuple[DataFrame, int]:
         """Bounded collect of a control-plane-small result into the
@@ -152,22 +190,60 @@ class SyncEngine:
         """One control-plane tick (the reference's 3-min rescan body):
         leveled anti-join diff, each level's missing rows appended to
         dst.  Returns the number of creates per level — all zero on a
-        converged pair, and on every re-run after (idempotency)."""
+        converged pair, and on every re-run after (idempotency).
+
+        One job counts the missing rows, and those with a NULL key, of
+        every enabled level: a tagged union of the key-only anti-joins,
+        grouped by level.  Only the non-empty levels are then appended,
+        so a converged tick writes nothing.  A NULL-key src row never
+        matches in the anti-join and would be re-appended on every
+        tick, so any such row raises before anything is written."""
         enabled = {
             "tenants": self.config.auto_update_tenant,
             "namespaces": self.config.auto_update_namespace,
             "topics": self.config.auto_update_topic,
         }
-        dst = {name: self._read(self.dst, name) for name in _CATALOGS}
         diff = diff_catalogs(
-            *(self._read(self.src, name) for name in _CATALOGS), *dst.values()
+            *(self._read(self.src, name) for name in _CATALOGS),
+            *(self._read(self.dst, name) for name in _CATALOGS),
         )
-        return {
-            name: self._append(name, getattr(diff, name).select(*dst[name].columns))
-            if enabled[name]
-            else 0
-            for name in _CATALOGS
-        }
+        levels = [name for name in _CATALOGS if enabled[name]]
+        created = dict.fromkeys(_CATALOGS, 0)
+        if not levels:
+            return created
+        tagged = reduce(
+            DataFrame.unionAll,
+            (
+                getattr(diff, name).select(
+                    F.lit(name).alias("level"),
+                    reduce(
+                        operator.or_, (F.col(k).isNull() for k in _CATALOGS[name])
+                    ).alias("null_key"),
+                )
+                for name in levels
+            ),
+        )
+        counts = tagged.groupBy("level").agg(
+            F.count(F.lit(1)).alias("rows"), F.count_if("null_key").alias("null_keys")
+        )
+        null_keys = {}
+        for row in counts.collect():
+            created[row.level] = row.rows
+            if row.null_keys:
+                null_keys[row.level] = row.null_keys
+        if null_keys:
+            raise ValueError(
+                "src catalog rows with a NULL key (they never match dst, so "
+                "each tick would append them again): "
+                + ", ".join(f"{name}: {n} row(s)" for name, n in null_keys.items())
+            )
+        # the anti-join keeps the src columns, which are the declared ones
+        for name in levels:
+            if created[name]:
+                getattr(diff, name).coalesce(1).write.mode("append").parquet(
+                    os.path.join(self.dst, f"{name}.parquet")
+                )
+        return created
 
     # -- data plane ---------------------------------------------------
 
@@ -191,7 +267,9 @@ class SyncEngine:
         """R17: the sampled MessageId mapping, from the REPLICATED
         messages (a mapping entry must point at a position that exists
         on dst).  One sample per (topic, partition) per interval."""
-        msgs = self.spark.read.parquet(os.path.join(self.dst, "messages"))
+        msgs = self.spark.read.schema(MESSAGE_SCHEMA).parquet(
+            os.path.join(self.dst, "messages")
+        )
         return sparse_sample(
             msgs.select(
                 "topic",
@@ -305,16 +383,23 @@ class SyncEngine:
     # -- orchestration --------------------------------------------------
 
     def run_once(self) -> dict[str, int]:
-        """One full availableNow convergence pass: catalog tick,
-        replication to completion, cursor tick — the test-mode analogue
-        of `PulsarSync.start()` (which schedules the same three bodies
-        at 3 min / continuous / 10 s).  'cursors' counts CREATES only
-        (all-zero dict = converged, idempotent pass); forward moves of
-        existing cursors are reported under 'cursors_advanced' when
-        `advance_cursors` is enabled.  A replication overrun stops the
-        stream and raises before the cursor tick."""
-        created = self.sync_catalog_once()
+        """One full availableNow convergence pass — the test-mode
+        analogue of `PulsarSync.start()` (which schedules the same three
+        bodies at 3 min / continuous / 10 s).  The replication stream
+        starts first and copies the delta while the catalog tick runs;
+        the cursor tick runs only after the stream finished, so the
+        mapping points at replicated rows.  'cursors' counts CREATES
+        only (all-zero dict = converged, idempotent pass); forward moves
+        of existing cursors are reported under 'cursors_advanced' when
+        `advance_cursors` is enabled.  If the catalog tick raises, the
+        stream is stopped and the error re-raised.  A replication
+        overrun stops the stream and raises before the cursor tick."""
         q = self.start_replication(available_now=True)
+        try:
+            created = self.sync_catalog_once()
+        except BaseException:
+            q.stop()
+            raise
         if not q.awaitTermination(600):
             q.stop()
             raise TimeoutError("replication did not finish within 600 s")

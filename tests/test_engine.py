@@ -7,6 +7,7 @@ place of dual embedded brokers + Awaitility.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -183,6 +184,119 @@ def test_run_once_fails_on_replication_overrun(spark, tmp_path):
     with pytest.raises(TimeoutError, match="replication did not finish"):
         engine.run_once()
     assert q.stopped
+
+
+def _jobs_of(spark, fn) -> int:
+    """Number of Spark jobs `fn` runs, read from the status tracker
+    under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.slow
+def test_idle_ticks_run_few_jobs(spark, clusters):
+    """Reads with declared schemas run no inference job, and an idle
+    catalog tick counts all three levels in one job (plus the broadcast
+    builds of its anti-joins), so neither plane pays for scheduling
+    work it does not do."""
+    src, dst = clusters
+    engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
+    engine.run_once()  # converged baseline
+    assert _jobs_of(spark, engine.sync_catalog_once) <= 4
+    assert _jobs_of(spark, engine.sync_cursors_once) <= 6
+
+
+def test_run_once_stops_stream_when_catalog_tick_raises(spark, clusters):
+    """The catalog tick runs while the replication stream copies the
+    delta; if it raises, the stream is stopped and the error re-raised,
+    so no query outlives `run_once`."""
+    src, dst = clusters
+    engine = SyncEngine(spark, src, dst)
+    order, queries = [], []
+    start_replication = engine.start_replication
+
+    def recording_start(available_now=True):
+        order.append("replication")
+        queries.append(start_replication(available_now))
+        return queries[-1]
+
+    def failing_catalog():
+        order.append("catalog")
+        raise RuntimeError("catalog tick failed")
+
+    engine.start_replication = recording_start
+    engine.sync_catalog_once = failing_catalog
+    engine.sync_cursors_once = lambda: pytest.fail("cursor tick ran after a failure")
+    with pytest.raises(RuntimeError, match="catalog tick failed"):
+        engine.run_once()
+    assert order == ["replication", "catalog"]
+    assert not queries[0].isActive
+    assert spark.streams.active == []
+
+
+def _tiny_pair(spark, root: str):
+    src, dst = os.path.join(root, "src"), os.path.join(root, "dst")
+    _write_catalog(
+        spark,
+        src,
+        [("public",), ("analytics",)],
+        [("public", "default", "{}"), ("analytics", "raw", "{}")],
+        [("public", "default", "view", 2, {"owner": "sync"})],
+        [],
+    )
+    _write_catalog(spark, dst, [("public",)], [], [], [])
+    return src, dst
+
+
+@pytest.mark.parametrize("drift", ["null_key", "missing_key_column"])
+def test_null_catalog_key_raises_before_any_write(spark, tmp_path, drift):
+    """A src catalog row with a NULL key never matches dst in the
+    anti-join, so it would be appended again on every tick; a src table
+    without a key column reads as all-NULL keys under the declared
+    schema.  Either way the tick raises, naming the level and the row
+    count, and writes nothing."""
+    src, dst = _tiny_pair(spark, str(tmp_path))
+    path = os.path.join(src, "namespaces.parquet")
+    if drift == "null_key":
+        rows = [("public", "default", "{}"), (None, "orphan", "{}")]
+        schema = "tenant string, namespace string, policies string"
+        want = "namespaces: 1 row"
+    else:
+        rows = [("default", "{}"), ("raw", "{}"), ("extra", "{}")]
+        schema = "namespace string, policies string"
+        want = "namespaces: 3 row"
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(path)
+    before = _files_under(dst)
+    with pytest.raises(ValueError, match=want):
+        SyncEngine(spark, src, dst).sync_catalog_once()
+    assert _files_under(dst) == before
+
+
+def test_src_column_of_wrong_type_raises(spark, tmp_path):
+    """A src catalog column whose type drifted from the declared schema
+    fails the tick at read time instead of being re-inferred and
+    copied to dst under the drifted type."""
+    src, dst = _tiny_pair(spark, str(tmp_path))
+    spark.createDataFrame([(1,), (2,)], "tenant int").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(src, "tenants.parquet"))
+    # an empty dst level: an inferred read would copy both rows as ints
+    spark.createDataFrame([], "tenant string").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(dst, "tenants.parquet"))
+    before = _files_under(dst)
+    with pytest.raises(Exception, match=r"PARQUET_COLUMN_DATA_TYPE_MISMATCH.*\[tenant\]"):
+        SyncEngine(spark, src, dst).sync_catalog_once()
+    assert _files_under(dst) == before
 
 
 @pytest.mark.slow

@@ -8,7 +8,6 @@ import math
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.operators.heavy_hitters import (
     _compress,

@@ -1058,10 +1058,9 @@ def test_hits_matches_python_power_iterations(spark):
 
 def test_benford_matches_python_counter(spark):
     """Digit counts from string math in Python, expected shares from
-    math.log10 directly, chi-square re-summed with exact fractions."""
+    math.log10 directly, chi-square re-summed in Python floats."""
     import math
     from collections import Counter
-    from fractions import Fraction
 
     odf = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     vals = odf.loc[odf["o_totalprice"] >= 1, "o_totalprice"]
