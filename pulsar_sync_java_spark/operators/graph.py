@@ -579,8 +579,11 @@ def count_triangles(
 
     `pre_normalized=True` declares the input ALREADY a simple-graph
     edge set — distinct rows with src < dst (src != dst implied) — and
-    skips the normalize+persist stage here.  The caller owns both the
-    invariant and the caching posture: pass a PERSISTED frame (the
+    skips the normalize+persist stage here.  Orientation is checked
+    inside the projection: a row with src >= dst (or a null endpoint)
+    fails the query at execution, with no extra Spark job.
+    Distinctness is not checked; it stays the caller's contract, as
+    does the caching posture: pass a PERSISTED frame (the
     normalized table is consumed five times), e.g. an a<b filter over the
     family-shared persisted symmetric edge table
     (queries/extras.py:_copurchase_edges), so the operator reads one
@@ -590,7 +593,16 @@ def count_triangles(
     Returns one row: (n_nodes, n_edges, n_triangles).
     """
     if pre_normalized:
-        e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        e = edges.select(
+            F.col("src").alias("a"),
+            F.when(F.col("src") < F.col("dst"), F.col("dst"))
+            .otherwise(
+                F.raise_error(
+                    F.lit("count_triangles: pre_normalized edge with src >= dst")
+                )
+            )
+            .alias("b"),
+        )
     else:
         # the normalized edge table is consumed FIVE times (degrees,
         # orientation, closing check, node/edge census) — persist it, or

@@ -502,8 +502,7 @@ def q_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOPPING window (each event lands in ceil(60/15) = 4 overlapping
     windows), the streaming-analytics shape q_window_tumbling does not
     cover.  Batch analogue of `groupBy(window(ts, '1 hour',
-    '15 minutes'))`; the streaming twin is
-    streaming/replicate.py:tumbling_counts_stream with slide set.
+    '15 minutes'))`.
 
     The oracle expands each event into its 4 epoch-aligned window
     starts explicitly — same grouping, engine-independently."""
@@ -1003,6 +1002,72 @@ _COMPACT_UNDER = 32  # rows below which a file is compaction-eligible (~median)
 _COMPACT_TARGET = 128  # rows per compaction output group (~4-5 small files)
 _COMPACT_RANGE = 16  # files per prefix-sum leaf bucket
 
+
+def plan_compaction(
+    files: DataFrame,
+    target_rows: int,
+    under_rows: int,
+    bucket_range: int = 16,
+) -> DataFrame:
+    """Per-file compaction assignments over a FILE-STATS table with
+    columns (file_id, n_rows, min_key, max_key): files at/above
+    `under_rows` are right-sized and stay untouched (absent from the
+    output); undersized files are bin-packed IN KEY ORDER into
+    ~`target_rows`-row groups, so merged files stay range-prunable.
+
+    group id = exclusive-prefix-sum(n_rows) div target, computed as a
+    TWO-LEVEL distributed prefix sum (`bucket_range` files per leaf
+    bucket, per-bucket totals cumulated over the tiny bucket table,
+    broadcast offsets, per-bucket parallel windows) — at 100 TB the
+    planner's input is itself big (~10^6 files at a 128 MB target) and
+    a naive `SUM() OVER (ORDER BY file_id)` over it is the single-task
+    window this engine never emits.  Returns (file_id, n_rows,
+    min_key, max_key, group_id)."""
+    under = files.filter(F.col("n_rows") < under_rows).withColumn(
+        "bucket", F.expr(f"file_id div {int(bucket_range)}")
+    )
+    totals = under.groupBy("bucket").agg(F.sum("n_rows").alias("bucket_rows"))
+    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
+    offsets = totals.select(
+        "bucket",
+        (F.sum("bucket_rows").over(wb) - F.col("bucket_rows")).alias("offset"),
+    )
+    ww = (
+        Window.partitionBy("bucket")
+        .orderBy("file_id")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return (
+        under.join(F.broadcast(offsets), "bucket")
+        .withColumn(
+            "start",
+            F.col("offset") + F.sum("n_rows").over(ww) - F.col("n_rows"),
+        )
+        .withColumn(
+            "group_id",
+            F.expr(f"start div {int(target_rows)}").cast("bigint"),
+        )
+        .select("file_id", "n_rows", "min_key", "max_key", "group_id")
+    )
+
+
+def compaction_groups(assign: DataFrame, target_rows: int) -> DataFrame:
+    """Group summary of a `plan_compaction` assignment — file count,
+    merged key range, fill ratio per compaction group (what
+    q_compaction_plan reports).  Integer discipline; fill_ratio is the
+    single final division."""
+    return assign.groupBy("group_id").agg(
+        F.count(F.lit(1)).alias("n_files"),
+        F.sum("n_rows").cast("long").alias("total_rows"),
+        F.min("min_key").alias("min_key"),
+        F.max("max_key").alias("max_key"),
+        (
+            F.sum("n_rows").cast("long").cast("double")
+            / F.lit(int(target_rows))
+        ).alias("fill_ratio"),
+    )
+
+
 _COMPACTION_SQL = f"""
 WITH files AS (
   SELECT l_orderkey // {_COMPACT_FILE_KEYS} AS file_id,
@@ -1055,16 +1120,9 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is metadata-sized.  Integer discipline
     throughout; fill_ratio is the single final division.
 
-    Since r10 the planner machinery lives in sinks/writers.py
-    (`plan_compaction` per-file assignments -> `compaction_groups`
-    summary) and the plan EXECUTES: `apply_compaction_plan` rewrites
-    one key-sorted file per group and verifies plan == landed files
-    (tests/test_sinks.py)."""
-    from pulsar_sync_java_spark.sinks.writers import (
-        compaction_groups,
-        plan_compaction,
-    )
-
+    The planner sits beside this query: `plan_compaction` gives the
+    per-file assignments and `compaction_groups` the group summary.
+    The package plans compaction and does not execute it."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
     files = li.groupBy(
         F.expr(f"l_orderkey div {_COMPACT_FILE_KEYS}").alias("file_id")

@@ -10,8 +10,7 @@ Reference data plane (`PulsarPartitionSyncWorker.java`):
 - produce to dst, then ack src only on success (:231-244) == Spark's
   write-sink-then-commit-checkpoint contract per micro-batch
   (`replicate`): a crash between produce and commit replays the batch —
-  the same at-least-once floor, upgradeable to effectively-once with
-  `dedup_stream`;
+  the same at-least-once floor;
 - sample one MessageId pair per 60 s into a 1 h-TTL sparse map
   (:236-239, `SparseMap.java:36-53`) == windowed `min(struct)` with a
   watermark evicting window state (`sparse_mapping_stream`).
@@ -21,11 +20,9 @@ is a deploy-time `format("pulsar")` swap — same plan).  On a cluster
 each source partition maps to a Spark task, preserving the reference's
 per-partition ordering unit (R13).
 
-Scale: stateful operators (windows, dedup) are keyed by
-(key, window) — state size is bounded by watermark horizon, exactly the
-reference's TTL-bounded maps; shuffle partitioning is by grouping key, so
-hot topics rely on AQE-less streaming repartitioning — choose key
-granularity (topic, partition) fine enough to spread load.
+Scale: the sparse-map window state is keyed by (key, window), so its
+size is bounded by the watermark horizon, exactly the reference's
+TTL-bounded maps.
 """
 
 from __future__ import annotations
@@ -109,47 +106,6 @@ def replicate(
 MESSAGE_KEY = ["topic", "partition", "ledger_id", "entry_id", "batch_idx"]
 
 
-def replicate_exactly_once(
-    stream: DataFrame,
-    sink_dir: str,
-    checkpoint_dir: str,
-    keys: list[str] | None = None,
-    partition_col: str | None = None,
-) -> DataStreamWriter:
-    """Replication with a TABLE-level exactly-once guarantee:
-    `foreachBatch` + keyed idempotent append (sinks/writers.py).
-
-    `replicate` (append sink + checkpoint) is at-least-once: a crash
-    between sink write and offset commit — or a lost/rebuilt
-    checkpoint — replays batches into duplicates, and
-    `dedup_stream` only guards within its watermark horizon.  Here
-    every micro-batch anti-joins the sink on message identity before
-    appending, so replays of ANY age are no-ops: an at-least-once
-    transport becomes an exactly-once table.  Cost: one keys-only scan
-    of the sink per micro-batch (column-pruned).
-
-    At 100 TB pass `partition_col` (a deterministic function of message
-    identity — e.g. a publish date column, or `topic`): the sink is
-    written Hive-partitioned on it and each micro-batch's probe prunes
-    to the partition values present in that batch, so the per-batch
-    scan covers the replay horizon, not the whole sink history
-    (sinks/writers.py:idempotent_append).
-    """
-    from pulsar_sync_java_spark.sinks.writers import idempotent_append
-
-    keys = keys or MESSAGE_KEY
-    proj = message_projection(stream)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(batch_df, sink_dir, keys, partition_col=partition_col)
-
-    return (
-        proj.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def sparse_mapping_stream(
     stream: DataFrame,
     key_cols: list[str],
@@ -182,138 +138,4 @@ def sparse_mapping_stream(
         F.col("w.start").alias("bucket"),
         F.col(f"s.{ts_col}").alias("sample_ts"),
         *[F.col(f"s.{c}").alias(c) for c in id_cols],
-    )
-
-
-def tumbling_counts_stream(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "event_time",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    slide: str | None = None,
-) -> DataFrame:
-    """Streaming twin of q_window_tumbling / q_window_sliding:
-    watermarked tumbling (or, with `slide`, hopping) window counts;
-    late rows beyond the watermark are dropped (the reference has no
-    late-data story at all — its TTL maps silently forget; the
-    watermark makes the bound explicit)."""
-    win = (
-        F.window(F.col(ts_col), window, slide)
-        if slide
-        else F.window(F.col(ts_col), window)
-    )
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols, win.alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(*key_cols, F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
-def sessionize_stream(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "event_time",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming sessionization with the native session_window operator
-    (merging-window state); q_window_session is the oracle-checkable
-    batch twin of this exact grouping."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols, F.session_window(F.col(ts_col), gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            *key_cols,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def dedup_stream(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "event_time",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Effectively-once upgrade path (SURVEY.md §2 fine print): drop
-    duplicate deliveries within the watermark horizon — bounded state,
-    unlike a naive global dropDuplicates whose state grows forever."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
-def attribution_stream(
-    stream: DataFrame,
-    within: str = "1 hour",
-    view_topic: str = "view",
-    click_topic: str = "click",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join: every click attributed to every view
-    by the same user within `within` before it — the canonical
-    Structured Streaming two-sided stateful join (both sides buffered in
-    the state store, watermarks bounding how long).
-
-    Scale posture: state per side is bounded by (watermark horizon x
-    arrival rate) — the interval condition lets Spark evict a buffered
-    view as soon as the click-side watermark passes view_time + within,
-    so state never grows with total history.  The join itself shuffles
-    both sides by user_id only (hash partitioning), exactly like the
-    batch formulation; event payloads cross the shuffle once.
-
-    Equivalence contract: for data whose event-time disorder stays
-    within the watermark delay, the streaming result equals the batch
-    interval join on the same rows — asserted in
-    tests/test_streaming.py over a bounded source.  Rows arriving more
-    than `within` behind the stream's max event time are LATE by
-    definition and dropped before the join state (that bound is what
-    makes the state finite); a pipeline needing those pairs too widens
-    the watermark delay, trading state for lateness tolerance.
-
-    `how="left_outer"` additionally emits every UNMATCHED view with a
-    null click — but only once the click-side watermark proves no
-    in-horizon click can still arrive, so outer rows trail the inner
-    ones by up to the watermark delay (the Structured Streaming outer-
-    join contract; a bounded source's tail views, which the final
-    watermark never passes, stay unemitted)."""
-    v = (
-        stream.where(F.col("topic") == view_topic)
-        .select(
-            F.col("ledger_id").alias("user_id"),
-            F.col("event_time").alias("view_time"),
-            F.col("entry_id").alias("view_event"),
-        )
-        .withWatermark("view_time", within)
-    )
-    c = (
-        stream.where(F.col("topic") == click_topic)
-        .select(
-            F.col("ledger_id").alias("c_user_id"),
-            F.col("event_time").alias("click_time"),
-            F.col("entry_id").alias("click_event"),
-        )
-        .withWatermark("click_time", within)
-    )
-    joined = v.join(
-        c,
-        F.expr(
-            f"""
-            user_id = c_user_id
-            AND click_time > view_time
-            AND click_time <= view_time + INTERVAL {within}
-            """
-        ),
-        how,
-    )
-    return joined.select(
-        "user_id",
-        "view_event",
-        "click_event",
-        (F.unix_micros("click_time") - F.unix_micros("view_time")).alias("lag_us"),
     )

@@ -156,7 +156,6 @@ PERSIST_ALLOWLIST = {
     ("queries/stats.py", "q_skew_report"): 1,           # per-key size aggregate (tiny)
     ("queries/training.py", "q_corpus_materialize"): 1, # feature table = pushdown barrier (measured 13x)
     ("queries/training.py", "q_dedup_keepers"): 1,      # minhash sigs (plan-matched)
-    ("sinks/writers.py", "idempotent_append"): 2,       # released: both unpersist in finally-shaped flow
 }
 
 

@@ -465,6 +465,41 @@ def test_compaction_plan_greedy_pack_invariants(spark):
     assert rows[-1]["total_rows"] < target + under_cap
 
 
+def test_compaction_plan_skips_right_sized_files(spark):
+    """A right-sized file stays out of the plan even when its key range
+    sits inside a group's merged span, and a plan with every file
+    right-sized is empty."""
+    from pyspark.sql import functions as F
+
+    from pulsar_sync_java_spark.queries.training import (
+        compaction_groups,
+        plan_compaction,
+    )
+
+    # keys 0..959 in 8-key files; file 5 (keys 40..47) is made
+    # right-sized by repetition, so its range sits between undersized
+    # files 4 and 6 that a group will merge across.
+    base = spark.range(0, 960).select(F.col("id").alias("k"))
+    fat = spark.range(0, 960).select(
+        (F.lit(40) + F.pmod(F.col("id"), F.lit(8))).alias("k")
+    )
+    files = (
+        base.unionByName(fat)
+        .groupBy(F.expr("k div 8").alias("file_id"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("k").alias("min_key"),
+            F.max("k").alias("max_key"),
+        )
+    )
+    assign = plan_compaction(files, target_rows=64, under_rows=32)
+    groups = compaction_groups(assign, 64).collect()
+    assert len(groups) > 1
+    assert 5 not in {r.file_id for r in assign.collect()}
+    assert any(g.min_key < 40 and g.max_key > 47 for g in groups)
+    assert plan_compaction(files, target_rows=64, under_rows=1).count() == 0
+
+
 def test_phash_matches_python_reimplementation(spark, docs_pdf):
     """Independent Python dHash + naive all-pairs Hamming, compared to
     the engine's bucketed pair set."""

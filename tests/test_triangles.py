@@ -1,9 +1,11 @@
 """count_triangles: exactness on known graphs, orientation invariance,
-hub tripwire, and input normalization."""
+hub tripwire, input normalization, and the pre_normalized
+orientation guard."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 
 from pulsar_sync_java_spark.operators.graph import count_triangles
 
@@ -49,3 +51,13 @@ def test_max_degree_tripwire(spark):
     with pytest.raises(ValueError, match="max_degree"):
         run(spark, k4, max_degree=1)
     assert run(spark, k4, max_degree=16) == (4, 6, 4)
+
+
+def test_pre_normalized_rejects_unoriented_edges(spark):
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    assert run(spark, k4, pre_normalized=True) == (4, 6, 4)
+    # both directions of every edge, still distinct rows: trusting it
+    # would count each triangle more than once
+    symmetric = k4 + [(b, a) for a, b in k4]
+    with pytest.raises(SparkRuntimeException, match="src >= dst"):
+        run(spark, symmetric, pre_normalized=True)
