@@ -47,34 +47,40 @@ instead of being re-inferred into a different plan.
 
 Write policy: the reference only ever creates entities, so every
 create on dst is an append of the new rows; a converged tick writes
-nothing.  A catalog tick counts the missing rows of all three levels
-in one job (a tagged union of the key-only anti-joins, grouped by
-level) and appends only the non-empty levels.  The one rewrite is the
-opt-in cursor advance, which replaces `subscriptions.parquet`.  A
-cursor tick translates the src cursors once, merges them with the dst
-subscriptions once, and writes `subscriptions.parquet` at most once:
-an overwrite when a cursor advanced (it carries the tick's creates
-too), else an append of the created cursors.  Both intermediate
-results are control-plane small, bounded by `control_plane_max_rows`,
-and are held as JVM local relations: their rows are collected into
-the driver JVM, never into Python, so later actions on them start no
-Python worker.  The DATA plane (replication stream, mapping plan)
-never touches the driver.
+nothing.  A catalog tick collects the missing rows of all three levels
+once (a tagged union of the anti-joins) and appends only the non-empty
+levels from them.  The one rewrite is the opt-in cursor advance, which
+replaces `subscriptions.parquet`.  A cursor tick merges the translated
+src cursors with the dst subscriptions in one collect and writes
+`subscriptions.parquet` at most once: an overwrite when a cursor
+advanced (it carries the tick's creates too), else an append of the
+created cursors.  Both collected results are control-plane small,
+bounded by `control_plane_max_rows`, and are held as JVM local
+relations: their rows are collected into the driver JVM, never into
+Python, so later actions on them start no Python worker.  The DATA
+plane (replication stream, mapping plan) never touches the driver.
 
-Overlap: like the reference, which runs its catalog managers and its
-message workers side by side on one scheduled pool
-(`PulsarSync.java:44`), `run_once` runs the catalog tick while the
-replication stream copies the delta.  The cursor tick waits for the
-stream, because the mapping must point at replicated rows.
+Overlap: like the reference, which runs its catalog managers, its
+message workers and `syncCursor` side by side on one scheduled pool
+(`PulsarSync.java:44`), `run_once` runs the catalog tick on a second
+driver thread for the whole pass: beside the replication stream, and
+then beside the cursor tick, which reads no catalog table.  The cursor
+tick waits for the stream, because the mapping must point at
+replicated rows.  So a pass costs max(catalog, replicate + cursor),
+not their sum.  The catalog thread is joined on every path; a catalog
+failure stops the stream, and `run_once` re-raises it (see there).
 """
 
 from __future__ import annotations
 
 import operator
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -110,6 +116,13 @@ SCHEMAS = {
 _CATALOGS = {"tenants": TENANT_KEY, "namespaces": NAMESPACE_KEY, "topics": TOPIC_KEY}
 
 
+def _local_count(df: DataFrame) -> int:
+    """Row count of a filter over a local relation, with no job: the
+    optimizer folds the filter into the relation, and collecting a
+    local relation runs no job."""
+    return df._jdf.collectAsList().size()
+
+
 @dataclass(frozen=True)
 class SyncEngineConfig:
     """`SyncConfig.java:29-41` equivalent (`autoUpdatePartition` is
@@ -126,12 +139,13 @@ class SyncEngineConfig:
     # `sync_cursors_once` also advances existing dst cursors forward
     # (never backward) as the src cursor progresses.
     advance_cursors: bool = False
-    # Fail-fast ceiling for the two driver-JVM collects of a cursor
-    # tick: the translated src cursors and their merge with the dst
-    # subscriptions (parquet cannot lazily self-overwrite).  Sane only
-    # while cursors are few — the reference holds them in JVM maps
-    # (PulsarSync.java:44).  A larger population needs this bound
-    # raised here, with a driver sized for the collect.
+    # Fail-fast ceiling for the driver-JVM collects of the control
+    # plane: a catalog tick's diff and a cursor tick's merge of the
+    # translated src cursors with the dst subscriptions (parquet cannot
+    # lazily self-overwrite).  Sane only while both are few — the
+    # reference holds them in JVM maps (PulsarSync.java:44).  A larger
+    # population needs this bound raised here, with a driver sized for
+    # the collect.
     control_plane_max_rows: int = 1_000_000
 
 
@@ -175,7 +189,7 @@ class SyncEngine:
         if n > bound:
             raise ValueError(
                 f"{what} exceeds control_plane_max_rows={bound}: the "
-                "driver-side cursor plane assumes a control-plane-small "
+                "driver-side control plane assumes a control-plane-small "
                 "table (the reference holds cursors in JVM maps — "
                 "PulsarSync.java:44). For populations beyond this "
                 "bound, raise control_plane_max_rows in SyncEngineConfig "
@@ -192,12 +206,16 @@ class SyncEngine:
         dst.  Returns the number of creates per level — all zero on a
         converged pair, and on every re-run after (idempotency).
 
-        One job counts the missing rows, and those with a NULL key, of
-        every enabled level: a tagged union of the key-only anti-joins,
-        grouped by level.  Only the non-empty levels are then appended,
-        so a converged tick writes nothing.  A NULL-key src row never
-        matches in the anti-join and would be re-appended on every
-        tick, so any such row raises before anything is written."""
+        The missing rows of every enabled level are collected once: a
+        union of the level diffs, tagged with the level and a NULL-key
+        flag, held as a JVM local relation (`_collect_control_plane`),
+        so a diff above `control_plane_max_rows` raises.  The counts
+        and the NULL-key check are read from the local rows with no
+        job, and each non-empty level is appended from its own rows,
+        so the anti-joins run once and a converged tick writes nothing.
+        A NULL-key src row never matches in the anti-join and would be
+        re-appended on every tick, so any such row raises before
+        anything is written."""
         enabled = {
             "tenants": self.config.auto_update_tenant,
             "namespaces": self.config.auto_update_namespace,
@@ -212,9 +230,10 @@ class SyncEngine:
         if not levels:
             return created
         tagged = reduce(
-            DataFrame.unionAll,
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
             (
                 getattr(diff, name).select(
+                    "*",
                     F.lit(name).alias("level"),
                     reduce(
                         operator.or_, (F.col(k).isNull() for k in _CATALOGS[name])
@@ -223,14 +242,19 @@ class SyncEngine:
                 for name in levels
             ),
         )
-        counts = tagged.groupBy("level").agg(
-            F.count(F.lit(1)).alias("rows"), F.count_if("null_key").alias("null_keys")
-        )
+        # one partition, so the bounded collect takes it in one job (a
+        # take over several partitions runs one job per round)
+        local, _ = self._collect_control_plane(tagged.coalesce(1), "catalog diff")
+
+        def rows(name: str) -> DataFrame:
+            return local.filter(F.col("level") == name)
+
         null_keys = {}
-        for row in counts.collect():
-            created[row.level] = row.rows
-            if row.null_keys:
-                null_keys[row.level] = row.null_keys
+        for name in levels:
+            created[name] = _local_count(rows(name))
+            n_null = _local_count(rows(name).filter(F.col("null_key")))
+            if n_null:
+                null_keys[name] = n_null
         if null_keys:
             raise ValueError(
                 "src catalog rows with a NULL key (they never match dst, so "
@@ -240,9 +264,9 @@ class SyncEngine:
         # the anti-join keeps the src columns, which are the declared ones
         for name in levels:
             if created[name]:
-                getattr(diff, name).coalesce(1).write.mode("append").parquet(
-                    os.path.join(self.dst, f"{name}.parquet")
-                )
+                rows(name).select(*getattr(diff, name).columns).coalesce(
+                    1
+                ).write.mode("append").parquet(os.path.join(self.dst, f"{name}.parquet"))
         return created
 
     # -- data plane ---------------------------------------------------
@@ -285,13 +309,13 @@ class SyncEngine:
 
     def _translated(self) -> DataFrame:
         """R21: every src cursor floor-translated against the sampled
-        mapping, evaluated once through the bounded collect and returned
-        as a JVM local relation, so one tick scans the replicated
-        history once.  A cursor with no floor sample at-or-before it yet
-        is skipped this tick (the reference's findMessageId miss; a
-        later tick resolves it)."""
+        mapping.  Lazy: `_apply_cursors` evaluates it inside its one
+        bounded collect, so one tick scans the replicated history once.
+        A cursor with no floor sample at-or-before it yet is skipped
+        this tick (the reference's findMessageId miss; a later tick
+        resolves it)."""
         src_subs = self._read(self.src, "subscriptions")
-        translated = (
+        return (
             translate(
                 src_subs.select("topic", "partition", "cursor", "ts", "event_id"),
                 self.build_mapping(),
@@ -301,7 +325,6 @@ class SyncEngine:
             .filter(F.col("translated_id").isNotNull())
             .select(*CURSOR_KEY, "translated_ts", "translated_id")
         )
-        return self._collect_control_plane(translated, "translated cursors")[0]
 
     def _apply_cursors(
         self, translated: DataFrame, create: bool, advance: bool
@@ -337,13 +360,8 @@ class SyncEngine:
             )
         )
         local, _ = self._collect_control_plane(merged, "subscriptions merge")
-
-        def count(flag: str) -> int:
-            # a filter over a local relation is folded into it by the
-            # optimizer, and collecting a local relation runs no job
-            return local.filter(F.col(flag))._jdf.collectAsList().size()
-
-        n_created, n_advanced = count("created"), count("advanced")
+        n_created = _local_count(local.filter(F.col("created")))
+        n_advanced = _local_count(local.filter(F.col("advanced")))
         if n_advanced or n_created:
             rows = local if n_advanced else local.filter(F.col("created"))
             rows.select(*CURSOR_KEY, "ts", "event_id").coalesce(1).write.mode(
@@ -385,25 +403,53 @@ class SyncEngine:
     def run_once(self) -> dict[str, int]:
         """One full availableNow convergence pass — the test-mode
         analogue of `PulsarSync.start()` (which schedules the same three
-        bodies at 3 min / continuous / 10 s).  The replication stream
-        starts first and copies the delta while the catalog tick runs;
-        the cursor tick runs only after the stream finished, so the
-        mapping points at replicated rows.  'cursors' counts CREATES
-        only (all-zero dict = converged, idempotent pass); forward moves
-        of existing cursors are reported under 'cursors_advanced' when
-        `advance_cursors` is enabled.  If the catalog tick raises, the
-        stream is stopped and the error re-raised.  A replication
-        overrun stops the stream and raises before the cursor tick."""
+        bodies at 3 min / continuous / 10 s on one shared pool).  The
+        replication stream starts first; the catalog tick runs on a
+        second driver thread for the whole pass, beside the stream and
+        then beside the cursor tick, which reads no catalog table.  The
+        cursor tick runs only after the stream finished, so the mapping
+        points at replicated rows.  'cursors' counts CREATES only
+        (all-zero dict = converged, idempotent pass); forward moves of
+        existing cursors are reported under 'cursors_advanced' when
+        `advance_cursors` is enabled.
+
+        Failures: the catalog thread is joined on every path, so no
+        catalog job and no stream outlives the call.  A catalog tick
+        that raises stops the stream; if it raised before the stream
+        finished, the cursor tick does not start and the catalog error
+        is re-raised, and if it raised while the cursor tick ran, its
+        error is re-raised after the cursor tick.  A replication
+        overrun stops the stream and raises `TimeoutError` before the
+        cursor tick.  An error of the stream or of the cursor tick
+        propagates once the catalog thread has been joined."""
         q = self.start_replication(available_now=True)
-        try:
-            created = self.sync_catalog_once()
-        except BaseException:
-            q.stop()
-            raise
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("replication did not finish within 600 s")
-        created["cursors"] = self.sync_cursors_once()
+        catalog_failed = threading.Event()
+
+        def catalog_tick() -> dict[str, int]:
+            try:
+                return self.sync_catalog_once()
+            except BaseException:
+                # set before the stop, so the stream wait below always
+                # sees why a stream stopped by a catalog failure ended
+                catalog_failed.set()
+                q.stop()
+                raise
+
+        # leaving the block joins the catalog thread, on every path
+        with ThreadPoolExecutor(1, thread_name_prefix="sync-catalog-tick") as pool:
+            # the thread inherits the caller's Spark local properties
+            # (job group, scheduler pool)
+            catalog = pool.submit(inheritable_thread_target(self.spark)(catalog_tick))
+            finished = q.awaitTermination(600)
+            if catalog_failed.is_set():
+                cursors = None  # `result` below re-raises the catalog error
+            elif not finished:
+                q.stop()
+                raise TimeoutError("replication did not finish within 600 s")
+            else:
+                cursors = self.sync_cursors_once()
+        created = catalog.result()
+        created["cursors"] = cursors
         if self.config.advance_cursors:
             created["cursors_advanced"] = self.last_advanced
         return created

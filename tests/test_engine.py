@@ -7,6 +7,8 @@ place of dual embedded brokers + Awaitility.
 from __future__ import annotations
 
 import os
+import threading
+import time
 import uuid
 
 import pytest
@@ -204,15 +206,40 @@ def _jobs_of(spark, fn) -> int:
 
 @pytest.mark.slow
 def test_idle_ticks_run_few_jobs(spark, clusters):
-    """Reads with declared schemas run no inference job, and an idle
-    catalog tick counts all three levels in one job (plus the broadcast
-    builds of its anti-joins), so neither plane pays for scheduling
-    work it does not do."""
+    """Reads with declared schemas run no inference job, an idle catalog
+    tick collects the missing rows of all three levels in one job (plus
+    the broadcast builds of its anti-joins), and a cursor tick collects
+    once, so neither plane pays for scheduling work it does not do."""
     src, dst = clusters
     engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
     engine.run_once()  # converged baseline
     assert _jobs_of(spark, engine.sync_catalog_once) <= 4
-    assert _jobs_of(spark, engine.sync_cursors_once) <= 6
+    assert _jobs_of(spark, engine.sync_cursors_once) <= 5
+
+
+def test_catalog_tick_with_creates_runs_few_jobs(spark, tmp_path):
+    """A catalog tick that creates at all three levels runs each
+    anti-join once: the one collect of the missing rows (with the
+    broadcast builds of its anti-joins) and one append per level, so
+    no append re-plans its level's anti-join."""
+    src, dst = _tiny_pair(spark, str(tmp_path))
+    engine = SyncEngine(spark, src, dst)
+    created = {}
+    jobs = _jobs_of(spark, lambda: created.update(engine.sync_catalog_once()))
+    assert created == {"tenants": 1, "namespaces": 2, "topics": 1}
+    assert jobs <= 4 + 3
+    assert engine.sync_catalog_once() == {"tenants": 0, "namespaces": 0, "topics": 0}
+
+
+def test_catalog_diff_is_bounded(spark, tmp_path):
+    """The catalog tick's collect of the missing rows fails fast past
+    control_plane_max_rows, naming the remedy, and writes nothing."""
+    src, dst = _tiny_pair(spark, str(tmp_path))  # 4 missing rows
+    engine = SyncEngine(spark, src, dst, SyncEngineConfig(control_plane_max_rows=2))
+    before = _files_under(dst)
+    with pytest.raises(ValueError, match="catalog diff exceeds control_plane_max_rows=2"):
+        engine.sync_catalog_once()
+    assert _files_under(dst) == before
 
 
 def test_run_once_stops_stream_when_catalog_tick_raises(spark, clusters):
@@ -240,6 +267,141 @@ def test_run_once_stops_stream_when_catalog_tick_raises(spark, clusters):
         engine.run_once()
     assert order == ["replication", "catalog"]
     assert not queries[0].isActive
+    assert spark.streams.active == []
+
+
+class _FinishedQuery:
+    """A replication run that has already finished."""
+
+    def awaitTermination(self, timeout=None):  # noqa: N802 - pyspark API name
+        return True
+
+    def stop(self):
+        pass
+
+
+_NO_CATALOG_CREATES = {"tenants": 0, "namespaces": 0, "topics": 0}
+
+
+def _stub_ticks(engine, catalog, cursors, query=None):
+    """Replace the engine's two ticks (and, given `query`, its stream)
+    with test doubles."""
+    engine.sync_catalog_once = catalog
+    engine.sync_cursors_once = cursors
+    if query is not None:
+        engine.start_replication = lambda available_now=True: query
+
+
+def test_run_once_overlaps_catalog_and_cursor_ticks(spark, tmp_path):
+    """The catalog tick runs beside the cursor tick: a catalog tick that
+    waits for the cursor tick to start sees it start."""
+    engine = SyncEngine(spark, str(tmp_path / "src"), str(tmp_path / "dst"))
+    cursor_started, seen = threading.Event(), []
+
+    def catalog():
+        seen.append(cursor_started.wait(30))
+        return dict(_NO_CATALOG_CREATES)
+
+    def cursors():
+        cursor_started.set()
+        return 0
+
+    _stub_ticks(engine, catalog, cursors, _FinishedQuery())
+    assert engine.run_once() == {**_NO_CATALOG_CREATES, "cursors": 0}
+    assert seen == [True], "the catalog tick timed out waiting for the cursor tick"
+
+
+def test_catalog_failure_during_cursor_tick_raises_after_it(spark, tmp_path):
+    """The planes are independent: a catalog tick that fails while the
+    cursor tick runs does not cut the cursor tick short; its error is
+    re-raised once the cursor tick has finished."""
+    engine = SyncEngine(spark, str(tmp_path / "src"), str(tmp_path / "dst"))
+    cursor_started, catalog_failed, order = threading.Event(), threading.Event(), []
+
+    def catalog():
+        cursor_started.wait(30)
+        order.append("catalog failed")
+        catalog_failed.set()
+        raise RuntimeError("catalog tick failed")
+
+    def cursors():
+        cursor_started.set()
+        catalog_failed.wait(30)
+        order.append("cursor tick finished")
+        return 0
+
+    _stub_ticks(engine, catalog, cursors, _FinishedQuery())
+    with pytest.raises(RuntimeError, match="catalog tick failed"):
+        engine.run_once()
+    assert order == ["catalog failed", "cursor tick finished"]
+
+
+class _Overrun:
+    """A real replication run whose wait reports an overrun."""
+
+    def __init__(self, query, waited: threading.Event) -> None:
+        self._query, self._waited = query, waited
+
+    def awaitTermination(self, timeout=None):  # noqa: N802 - pyspark API name
+        self._query.awaitTermination(timeout)
+        self._waited.set()
+        return False
+
+    def stop(self):
+        self._query.stop()
+
+
+@pytest.mark.parametrize(
+    "path",
+    ["converges", "catalog_raises", "catalog_raises_late", "cursor_raises", "overrun"],
+)
+def test_run_once_leaves_no_thread_or_stream(spark, clusters, path):
+    """On every path `run_once` takes, normal or raising, the thread
+    that ran the catalog tick has ended and no stream is active when it
+    returns.  The catalog tick outlasts the stream wait on every path
+    but the early failure, so joining it is what is tested."""
+    src, dst = clusters
+    engine = SyncEngine(spark, src, dst)
+    stream_waited, catalog_threads = threading.Event(), []
+
+    def catalog():
+        catalog_threads.append(threading.current_thread())
+        if path == "catalog_raises":
+            raise RuntimeError("catalog tick failed")
+        stream_waited.wait(30)
+        time.sleep(0.5)
+        if path == "catalog_raises_late":
+            raise RuntimeError("catalog tick failed")
+        return dict(_NO_CATALOG_CREATES)
+
+    def cursors():
+        stream_waited.set()
+        if path == "cursor_raises":
+            raise RuntimeError("cursor tick failed")
+        return 0
+
+    _stub_ticks(engine, catalog, cursors)
+    if path == "overrun":
+        start_replication = engine.start_replication
+        engine.start_replication = lambda available_now=True: _Overrun(
+            start_replication(available_now), stream_waited
+        )
+    before = set(threading.enumerate())
+    want = {
+        "converges": None,
+        "catalog_raises": "catalog tick failed",
+        "catalog_raises_late": "catalog tick failed",
+        "cursor_raises": "cursor tick failed",
+        "overrun": "replication did not finish",
+    }[path]
+    if want is None:
+        assert engine.run_once() == {**_NO_CATALOG_CREATES, "cursors": 0}
+    else:
+        with pytest.raises((RuntimeError, TimeoutError), match=want):
+            engine.run_once()
+    assert len(catalog_threads) == 1
+    assert not catalog_threads[0].is_alive()
+    assert set(threading.enumerate()) <= before
     assert spark.streams.active == []
 
 
@@ -463,14 +625,14 @@ def _assert_jvm_local(df) -> None:
 
 
 def test_cursor_tick_results_stay_jvm_local(spark, clusters):
-    """The translated cursors and the subscriptions merge are held as
-    JVM local relations, not as a `createDataFrame` over collected
-    Python rows (a Python-RDD scan, so each later action on it would
-    start a Python worker to unpickle the rows)."""
+    """A cursor tick collects once: the subscriptions merge, with the
+    translation built lazily inside it.  The merge is held as a JVM
+    local relation, not as a `createDataFrame` over collected Python
+    rows (a Python-RDD scan, so each later action on it would start a
+    Python worker to unpickle the rows)."""
     src, dst = clusters
     engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
     engine.start_replication(available_now=True).awaitTermination(600)
-    _assert_jvm_local(engine._translated())
     collect, collected = engine._collect_control_plane, []
 
     def checked_collect(df, what):
@@ -481,7 +643,7 @@ def test_cursor_tick_results_stay_jvm_local(spark, clusters):
 
     engine._collect_control_plane = checked_collect
     engine.sync_cursors_once()
-    assert collected == ["translated cursors", "subscriptions merge"]
+    assert collected == ["subscriptions merge"]
 
 
 def _data_files(path: str) -> dict[str, tuple[int, int]]:
