@@ -123,6 +123,16 @@ def _local_count(df: DataFrame) -> int:
     return df._jdf.collectAsList().size()
 
 
+def _inheriting(spark: SparkSession, target):
+    """`target` as a thread target that carries the calling thread's
+    Spark local properties (job group, scheduler pool).  Without
+    pinned threads (`PYSPARK_PIN_THREAD=false`) local properties are
+    not per Python thread, and pyspark's wrapper factory is the session
+    itself, so `target` runs as it is."""
+    wrap = inheritable_thread_target(spark)
+    return target if wrap is spark else wrap(target)
+
+
 @dataclass(frozen=True)
 class SyncEngineConfig:
     """`SyncConfig.java:29-41` equivalent (`autoUpdatePartition` is
@@ -144,8 +154,9 @@ class SyncEngineConfig:
     # translated src cursors with the dst subscriptions (parquet cannot
     # lazily self-overwrite).  Sane only while both are few — the
     # reference holds them in JVM maps (PulsarSync.java:44).  A larger
-    # population needs this bound raised here, with a driver sized for
-    # the collect.
+    # population, such as a first sync of a big catalog onto an empty
+    # dst, needs this bound raised here, with a driver sized for the
+    # collect.
     control_plane_max_rows: int = 1_000_000
 
 
@@ -420,9 +431,10 @@ class SyncEngine:
         is re-raised, and if it raised while the cursor tick ran, its
         error is re-raised after the cursor tick.  A replication
         overrun stops the stream and raises `TimeoutError` before the
-        cursor tick.  An error of the stream or of the cursor tick
-        propagates once the catalog thread has been joined."""
-        q = self.start_replication(available_now=True)
+        cursor tick.  Any error on the calling thread (the overrun, a
+        stream or cursor-tick error) stops the stream and propagates
+        once the catalog thread has been joined, with a catalog error
+        of the same pass chained to it as its cause."""
         catalog_failed = threading.Event()
 
         def catalog_tick() -> dict[str, int]:
@@ -435,19 +447,30 @@ class SyncEngine:
                 q.stop()
                 raise
 
-        # leaving the block joins the catalog thread, on every path
-        with ThreadPoolExecutor(1, thread_name_prefix="sync-catalog-tick") as pool:
-            # the thread inherits the caller's Spark local properties
-            # (job group, scheduler pool)
-            catalog = pool.submit(inheritable_thread_target(self.spark)(catalog_tick))
-            finished = q.awaitTermination(600)
-            if catalog_failed.is_set():
-                cursors = None  # `result` below re-raises the catalog error
-            elif not finished:
-                q.stop()
-                raise TimeoutError("replication did not finish within 600 s")
-            else:
-                cursors = self.sync_cursors_once()
+        # built before the stream starts: the thread inherits the
+        # caller's Spark local properties (job group, scheduler pool)
+        target = _inheriting(self.spark, catalog_tick)
+        q = self.start_replication(available_now=True)
+        catalog = None
+        try:
+            # leaving the block joins the catalog thread, on every path
+            with ThreadPoolExecutor(1, thread_name_prefix="sync-catalog-tick") as pool:
+                try:
+                    catalog = pool.submit(target)
+                    finished = q.awaitTermination(600)
+                    if not (finished or catalog_failed.is_set()):
+                        raise TimeoutError("replication did not finish within 600 s")
+                    # after a catalog failure `result` below re-raises it
+                    cursors = None if catalog_failed.is_set() else self.sync_cursors_once()
+                except BaseException:
+                    q.stop()
+                    raise
+        except BaseException as err:
+            # a catalog error of the same pass rides along, not dropped
+            lost = catalog.exception() if catalog is not None else None
+            if lost is None:
+                raise
+            raise err from lost
         created = catalog.result()
         created["cursors"] = cursors
         if self.config.advance_cursors:

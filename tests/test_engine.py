@@ -10,10 +10,12 @@ import os
 import threading
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
 
+from pulsar_sync_java_spark import engine as engine_module
 from pulsar_sync_java_spark.engine import SyncEngine, SyncEngineConfig
 from tests.test_streaming import build_messages
 
@@ -271,13 +273,24 @@ def test_run_once_stops_stream_when_catalog_tick_raises(spark, clusters):
 
 
 class _FinishedQuery:
-    """A replication run that has already finished."""
+    """A replication run that has already finished; `stopped` is set
+    once it is stopped."""
+
+    def __init__(self) -> None:
+        self.stopped = threading.Event()
 
     def awaitTermination(self, timeout=None):  # noqa: N802 - pyspark API name
         return True
 
     def stop(self):
-        pass
+        self.stopped.set()
+
+
+class _OverrunQuery(_FinishedQuery):
+    """A replication run whose wait reports an overrun."""
+
+    def awaitTermination(self, timeout=None):  # noqa: N802 - pyspark API name
+        return False
 
 
 _NO_CATALOG_CREATES = {"tenants": 0, "namespaces": 0, "topics": 0}
@@ -355,12 +368,18 @@ class _Overrun:
     "path",
     ["converges", "catalog_raises", "catalog_raises_late", "cursor_raises", "overrun"],
 )
-def test_run_once_leaves_no_thread_or_stream(spark, clusters, path):
+def test_run_once_leaves_no_thread_or_stream(spark, request, tmp_path, path):
     """On every path `run_once` takes, normal or raising, the thread
     that ran the catalog tick has ended and no stream is active when it
     returns.  The catalog tick outlasts the stream wait on every path
-    but the early failure, so joining it is what is tested."""
-    src, dst = clusters
+    but the early failure, so joining it is what is tested.  Only the
+    two paths that stop the stream run a real one; the others run on a
+    finished stand-in."""
+    real_stream = path in ("catalog_raises", "overrun")
+    if real_stream:
+        src, dst = request.getfixturevalue("clusters")
+    else:
+        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     engine = SyncEngine(spark, src, dst)
     stream_waited, catalog_threads = threading.Event(), []
 
@@ -380,7 +399,7 @@ def test_run_once_leaves_no_thread_or_stream(spark, clusters, path):
             raise RuntimeError("cursor tick failed")
         return 0
 
-    _stub_ticks(engine, catalog, cursors)
+    _stub_ticks(engine, catalog, cursors, None if real_stream else _FinishedQuery())
     if path == "overrun":
         start_replication = engine.start_replication
         engine.start_replication = lambda available_now=True: _Overrun(
@@ -404,6 +423,64 @@ def test_run_once_leaves_no_thread_or_stream(spark, clusters, path):
     assert set(threading.enumerate()) <= before
     assert spark.streams.active == []
 
+
+
+@pytest.mark.parametrize("path", ["cursor_raises", "overrun"])
+def test_catalog_error_is_chained_to_a_calling_thread_error(spark, tmp_path, path):
+    """A catalog tick that fails after the calling thread has failed is
+    not dropped: the calling thread's error propagates with the catalog
+    error as its cause."""
+    engine = SyncEngine(spark, str(tmp_path / "src"), str(tmp_path / "dst"))
+    query = _OverrunQuery() if path == "overrun" else _FinishedQuery()
+    cursor_failed = threading.Event()
+
+    def catalog():
+        # the overrun stops the stream before it raises
+        (query.stopped if path == "overrun" else cursor_failed).wait(30)
+        raise RuntimeError("catalog tick failed")
+
+    def cursors():
+        cursor_failed.set()
+        raise RuntimeError("cursor tick failed")
+
+    _stub_ticks(engine, catalog, cursors, query)
+    want = {"cursor_raises": "cursor tick failed", "overrun": "replication did not finish"}
+    with pytest.raises((RuntimeError, TimeoutError), match=want[path]) as raised:
+        engine.run_once()
+    assert isinstance(raised.value.__cause__, RuntimeError)
+    assert str(raised.value.__cause__) == "catalog tick failed"
+
+
+def test_run_once_stops_stream_when_setup_raises(spark, tmp_path, monkeypatch):
+    """Nothing that raises between the stream's start and its wait
+    leaves the stream running: here the catalog thread cannot start."""
+
+    class _NoThread(ThreadPoolExecutor):
+        def submit(self, *args, **kwargs):
+            raise RuntimeError("cannot start the catalog thread")
+
+    monkeypatch.setattr(engine_module, "ThreadPoolExecutor", _NoThread)
+    engine = SyncEngine(spark, str(tmp_path / "src"), str(tmp_path / "dst"))
+    query = _FinishedQuery()
+    _stub_ticks(
+        engine,
+        lambda: pytest.fail("catalog tick ran"),
+        lambda: pytest.fail("cursor tick ran"),
+        query,
+    )
+    with pytest.raises(RuntimeError, match="cannot start the catalog thread"):
+        engine.run_once()
+    assert query.stopped.is_set()
+
+
+def test_run_once_without_pinned_threads(spark, tmp_path, monkeypatch):
+    """With pinned threads off, pyspark's `inheritable_thread_target`
+    returns the session it is given instead of a wrapper factory; the
+    catalog tick then runs as it is."""
+    monkeypatch.setattr(engine_module, "inheritable_thread_target", lambda f=None: f)
+    engine = SyncEngine(spark, str(tmp_path / "src"), str(tmp_path / "dst"))
+    _stub_ticks(engine, lambda: dict(_NO_CATALOG_CREATES), lambda: 0, _FinishedQuery())
+    assert engine.run_once() == {**_NO_CATALOG_CREATES, "cursors": 0}
 
 def _tiny_pair(spark, root: str):
     src, dst = os.path.join(root, "src"), os.path.join(root, "dst")
