@@ -41,7 +41,9 @@ def main() -> None:
     qs["q_cursor_translate"](spark, sf_dir).count()
     from pyspark.sql import functions as F
 
-    from pulsar_sync_java_spark.operators.vectorized import minhash_signature_udf
+    from pulsar_sync_java_spark.operators.vectorized import (
+        portable_minhash_signature_udf,
+    )
     from pulsar_sync_java_spark.sources.tables import TABLES, load_table
 
     # One count per input table: parquet footers + OS page cache, so the
@@ -52,7 +54,9 @@ def main() -> None:
     # pool exists before any timed sketch query asks for it.
     par = spark.sparkContext.defaultParallelism
     spark.range(par * 64, numPartitions=par).select(
-        minhash_signature_udf(4)(F.array(F.col("id"))).alias("s")
+        portable_minhash_signature_udf(4)(
+            F.array(F.col("id").cast("string"))
+        ).alias("s")
     ).count()
 
     # Best of 3 runs per query (standard steady-state methodology, cf.

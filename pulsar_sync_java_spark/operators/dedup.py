@@ -264,17 +264,16 @@ def minhash_signatures(
     text_col: str = "text",
     num_hashes: int = 64,
     n: int = 3,
-    portable: bool = False,
 ) -> DataFrame:
     """MinHash sketch: signature[i] = min over shingles of hash_i(shingle).
 
-    Entirely per-row, ZERO shuffle.  Tokenize -> shingle -> xxhash64
-    runs as one codegen'd JVM projection; the num_hashes x shingles
-    min-hash matrix then runs as an Arrow-vectorized numpy kernel
-    (operators/vectorized.py) — that inner loop is 10^6-10^8 multiply-
-    adds per batch, which Spark's higher-order functions would evaluate
-    interpreted (CodegenFallback) at ~100x the cost; measured 3.2s ->
-    ~0.3s at sf0.1.  The explode + num_hashes-column groupBy
+    Entirely per-row, ZERO shuffle.  Tokenize -> shingle runs as one
+    codegen'd JVM projection; the md5 base hash and the num_hashes x
+    shingles min-hash matrix then run as an Arrow-vectorized numpy
+    kernel (operators/vectorized.py) — that inner loop is 10^6-10^8
+    multiply-adds per batch, which Spark's higher-order functions would
+    evaluate interpreted (CodegenFallback) at ~100x the cost; measured
+    3.2s -> ~0.3s at sf0.1.  The explode + num_hashes-column groupBy
     formulation both replace would shuffle every shingle row (~9x
     slower again).  E[signature agreement] = Jaccard similarity
     (Broder).
@@ -286,35 +285,25 @@ def minhash_signatures(
     60x: the duplicated expression also kicks the stage out of
     whole-stage codegen).
 
-    `portable=True` swaps the xxhash64 shingle hash + mod-2^64 family
-    for md5-based 32-bit base hashes and the affine mod-(2^31-1) family
-    — bit-replayable by a DuckDB oracle (the driver's hash gate).  The
-    md5 runs inside the Arrow kernel (hashlib's C digest), because as a
-    column expression inside `transform` it evaluates interpreted
-    (CodegenFallback) — measured ~10x slower.  Production-scale callers
-    keep the default fast family (xxhash64 stays fully JVM-side).
+    The family is md5-based 32-bit base hashes under the affine
+    mod-(2^31-1) family — bit-replayable by a DuckDB oracle (the
+    value-hash gate), so every caller, oracle-gated or not, shares one
+    signature space.  The md5 runs inside the Arrow kernel
+    (hashlib's C digest), because as a column expression inside
+    `transform` it evaluates interpreted (CodegenFallback) — measured
+    ~10x slower.
     """
     from pulsar_sync_java_spark.operators.vectorized import (
-        minhash_signature_udf,
         portable_minhash_signature_udf,
     )
 
     base = spread(df.filter(F.size(tokens(text_col)) >= n))
     toks = base.select(F.col(id_col), tokens(text_col).alias("__toks"))
-    if portable:
-        sh = toks.select(
-            F.col(id_col), shingles_from_tokens(F.col("__toks"), n).alias("__sh")
-        )
-        sig = portable_minhash_signature_udf(num_hashes)(F.col("__sh"))
-        return sh.select(F.col(id_col), sig.alias("signature"))
-    hs = toks.select(
-        F.col(id_col),
-        F.transform(
-            shingles_from_tokens(F.col("__toks"), n), lambda s: F.xxhash64(s)
-        ).alias("__hs"),
+    sh = toks.select(
+        F.col(id_col), shingles_from_tokens(F.col("__toks"), n).alias("__sh")
     )
-    sig = minhash_signature_udf(num_hashes)(F.col("__hs"))
-    return hs.select(F.col(id_col), sig.alias("signature"))
+    sig = portable_minhash_signature_udf(num_hashes)(F.col("__sh"))
+    return sh.select(F.col(id_col), sig.alias("signature"))
 
 
 def _banded(sig: DataFrame, id_col: str, bands: int, num_hashes: int) -> DataFrame:
@@ -477,42 +466,33 @@ def simhash64(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = False,
 ) -> DataFrame:
     """64-bit SimHash: per token hash, each bit votes +1/-1; the
     fingerprint takes the majority sign per bit.  Near-duplicates have
     small Hamming distance (Charikar).
 
-    Entirely per-row, ZERO shuffle: hash the token array once (codegen
-    JVM projection), then take the 64 per-bit majority votes in one
-    Arrow-vectorized numpy kernel (operators/vectorized.py).  Replaces
-    both the explode + 64-column groupBy formulation (a full shuffle of
-    every token row) and a 64-term bitwiseOR reduce over higher-order
-    filters (seconds of Janino compile, interpreted evaluation).
-    Empty docs -> fingerprint 0.
+    Entirely per-row, ZERO shuffle: tokenize once (codegen JVM
+    projection), then hash the tokens and take the 64 per-bit majority
+    votes in one Arrow-vectorized numpy kernel
+    (operators/vectorized.py).  Replaces both the explode + 64-column
+    groupBy formulation (a full shuffle of every token row) and a
+    64-term bitwiseOR reduce over higher-order filters (seconds of
+    Janino compile, interpreted evaluation).  Empty docs -> fingerprint
+    0.
 
-    `portable=True` hashes tokens with the md5-based 64-bit base hash
+    Tokens hash with the md5-based 64-bit base hash
     (= functions/text.py:portable_hash64, computed inside the Arrow
-    kernel to dodge CodegenFallback) instead of xxhash64, making the
-    whole fingerprint bit-replayable by a DuckDB oracle.
+    kernel to dodge CodegenFallback), making the whole fingerprint
+    bit-replayable by a DuckDB oracle.
     """
     from pulsar_sync_java_spark.operators.vectorized import (
         portable_simhash64_udf,
-        simhash64_udf,
     )
 
-    if portable:
-        toks_df = spread(df).select(
-            F.col(id_col), tokens(text_col).alias("__toks")
-        )
-        return toks_df.select(
-            F.col(id_col), portable_simhash64_udf()(F.col("__toks")).alias("simhash")
-        )
-    hs_df = spread(df).select(
-        F.col(id_col),
-        F.transform(tokens(text_col), lambda t: F.xxhash64(t)).alias("__hs"),
+    toks_df = spread(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
+    return toks_df.select(
+        F.col(id_col), portable_simhash64_udf()(F.col("__toks")).alias("simhash")
     )
-    return hs_df.select(F.col(id_col), simhash64_udf()(F.col("__hs")).alias("simhash"))
 
 
 def simhash_near_pairs(
@@ -623,7 +603,7 @@ def simhash_calibration(
     sims = (
         fingerprints
         if fingerprints is not None
-        else simhash64(df, id_col, text_col, portable=True)
+        else simhash64(df, id_col, text_col)
     ).persist()
     if cache_handles is not None:
         cache_handles.append(sims)
@@ -892,7 +872,7 @@ def minhash_banding_audit(
     # phantom misses on a healthy corpus)
     sigs = minhash_signatures(
         df, id_col=id_col, text_col=text_col,
-        num_hashes=num_hashes, n=shingle_n, portable=True,
+        num_hashes=num_hashes, n=shingle_n,
     )
     cand = lsh_candidate_pairs(
         sigs, id_col=id_col, bands=bands, num_hashes=num_hashes,

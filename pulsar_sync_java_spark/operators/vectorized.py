@@ -13,13 +13,13 @@ hyperplane signature similarly ~10x.
 Scale story is unchanged from the HOF formulation: these are per-row
 projections with NO shuffle; Arrow batches the transfer (linear, off
 the JVM heap) and `spark.python.worker.reuse` amortizes worker
-startup.  Everything around them (tokenize/shingle/xxhash64 feeding
-MinHash; banding, bucketing, joins consuming the signatures) stays in
+startup.  Everything around them (tokenize/shingle feeding MinHash and
+SimHash; banding, bucketing, joins consuming the signatures) stays in
 codegen'd JVM expressions.
 
-Determinism: all randomness comes from `numpy.random.RandomState`
-(MT19937 — frozen by numpy's compatibility policy) under a fixed seed,
-so signatures are stable across runs, machines and Python versions.
+Determinism: every constant is either md5-derived (the MinHash family)
+or passed in by the caller (planes, centroids, codebooks), so
+signatures are stable across runs, machines and Python versions.
 """
 
 from __future__ import annotations
@@ -28,16 +28,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
-
-
-def minhash_family(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
-    """The (a, b) multiply-add hash family over Z_2^64: h_i(x) =
-    a_i*x + b_i with a_i odd.  Inputs are already xxhash64-mixed, so
-    multiply-add is a sufficient (and cheap) family for min-hashing."""
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, 2**62, size=num_hashes).astype(np.uint64) * 2 + 1
-    b = rng.randint(0, 2**62, size=num_hashes).astype(np.uint64)
-    return a, b
 
 
 _PORTABLE_P = 2147483647  # 2^31 - 1 (Mersenne prime)
@@ -98,27 +88,6 @@ def portable_family_sql_values(num_hashes: int) -> str:
     )
 
 
-def minhash_signature_udf(num_hashes: int = 64, seed: int = 42):
-    """array<long> shingle-hashes -> array<long> MinHash signature:
-    signature[i] = min over shingles of (a_i*h + b_i  mod 2^64)."""
-    a, b = minhash_family(num_hashes, seed)
-    empty = np.full(num_hashes, np.iinfo(np.int64).max)
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig(hs: pd.Series) -> pd.Series:
-        out = []
-        for arr in hs:
-            h = np.asarray(arr, dtype=np.int64).view(np.uint64)
-            if h.size == 0:
-                out.append(empty)
-                continue
-            m = (np.multiply.outer(h, a) + b).min(axis=0)
-            out.append(m.view(np.int64))
-        return pd.Series(out)
-
-    return sig
-
-
 def portable_minhash_signature_udf(num_hashes: int = 64):
     """array<string> SHINGLES -> array<long> MinHash signature in the
     SQL-replayable family: base = first 4 md5 bytes big-endian (= the
@@ -161,10 +130,13 @@ def portable_minhash_signature_udf(num_hashes: int = 64):
 def portable_simhash64_udf():
     """array<string> TOKENS -> long SimHash fingerprint over md5-based
     64-bit token hashes (first 8 md5 bytes big-endian — identical to
-    functions/text.py:portable_hash64 and the _SIMHASH_SQL oracle).
-    Same strict-majority vote as simhash64_udf; md5 runs in the kernel
-    for the same CodegenFallback reason as
-    portable_minhash_signature_udf."""
+    functions/text.py:portable_hash64 and the _SIMHASH_SQL oracle):
+    bit i is set iff more than half the token hashes have bit i set
+    (the +1/-1 per-bit vote of Charikar's construction).  Empty token
+    lists -> 0.  md5 runs in the kernel for the same CodegenFallback
+    reason as portable_minhash_signature_udf; the vote replaces a
+    64-term bitwiseOR reduce over 64 higher-order filters, whose Janino
+    compile alone took seconds per query."""
     from hashlib import md5
 
     shifts = np.arange(64, dtype=np.uint64)
@@ -184,32 +156,6 @@ def portable_simhash64_udf():
                 dtype=np.uint64,
                 count=len(arr),
             )
-            ones = ((h[:, None] >> shifts[None, :]) & np.uint64(1)).sum(axis=0)
-            out[j] = powers[ones * 2 > h.size].sum()
-        return pd.Series(out)
-
-    return fp
-
-
-def simhash64_udf():
-    """array<long> token-hashes -> long 64-bit SimHash fingerprint:
-    bit i is set iff more than half the token hashes have bit i set
-    (the +1/-1 per-bit vote of Charikar's construction).  Empty token
-    lists -> 0.
-
-    Replaces a 64-term bitwiseOR reduce over 64 higher-order filters —
-    an expression whose Janino compile alone took seconds per query and
-    whose evaluation was interpreted anyway (CodegenFallback)."""
-    shifts = np.arange(64, dtype=np.uint64)
-    powers = (np.uint64(1) << shifts).view(np.int64)
-
-    @pandas_udf(LongType())
-    def fp(hs: pd.Series) -> pd.Series:
-        out = np.zeros(len(hs), dtype=np.int64)
-        for j, arr in enumerate(hs):
-            h = np.asarray(arr, dtype=np.int64).view(np.uint64)
-            if h.size == 0:
-                continue
             ones = ((h[:, None] >> shifts[None, :]) & np.uint64(1)).sum(axis=0)
             out[j] = powers[ones * 2 > h.size].sum()
         return pd.Series(out)

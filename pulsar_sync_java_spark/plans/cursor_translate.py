@@ -31,9 +31,9 @@ def sparse_sample(
     (`PulsarPartitionSyncWorker.java:236-239`), bounding mapping state
     to interval_count entries instead of message_count.
 
-    Batch formulation: first row per (key, time bucket); the streaming
-    twin is a windowed `first` with watermark eviction reproducing the
-    1 h TTL (`SparseMap.java:36-53`) — streaming/replicate.py.
+    Batch formulation: first row per (key, time bucket), rebuilt by
+    each cursor tick over the replicated history, so the reference's
+    1 h TTL eviction (`SparseMap.java:36-53`) has nothing to evict.
     """
     w = Window.partitionBy(*key_cols, "bucket").orderBy(
         F.col(ts_col).asc(), F.col(id_col).asc()

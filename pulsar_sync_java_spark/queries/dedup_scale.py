@@ -207,7 +207,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lsh_candidate_pairs docstring) — caching runs the md5 kernel once
     # instead of three times; Spark's plan-matching cache dedupes
     # repeated invocations.
-    sigs = minhash_signatures(d, num_hashes=64, portable=True).persist()
+    sigs = minhash_signatures(d, num_hashes=64).persist()
     return lsh_candidate_pairs(sigs, bands=16).filter(F.col("est_jaccard") >= 0.5)
 
 
@@ -284,7 +284,7 @@ def q_sketch_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the banded subtree + both signature lookups re-run the
     # md5 kernel otherwise — the q_minhash_lsh discipline (measured
     # 'once instead of three times' there); plan-matched with its cache
-    sigs = minhash_signatures(d, num_hashes=64, portable=True).persist()
+    sigs = minhash_signatures(d, num_hashes=64).persist()
     pairs = lsh_candidate_pairs(sigs, bands=16).select(
         "doc_a",
         "doc_b",
@@ -478,7 +478,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-based token hashes and verifies the pair set against a
     brute-force all-pairs Hamming join."""
     d = load_table(spark, sf_dir, "documents")
-    return simhash_near_pairs(simhash64(d, portable=True), max_hamming=3)
+    return simhash_near_pairs(simhash64(d), max_hamming=3)
 
 
 _EMB_NEARDUP_SQL = """
@@ -830,7 +830,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (or a pre-materialized index), delta cost is
     delta-sized and broadcastable."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d, num_hashes=64, portable=True).persist()
+    sigs = minhash_signatures(d, num_hashes=64).persist()
     batch = sigs.filter(F.col("doc_id") % 10 == 7)
     corpus = sigs.filter(F.col("doc_id") % 10 != 7)
     return lsh_pairs_against_corpus(batch, corpus).filter(
@@ -967,7 +967,7 @@ def q_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     languages x 64, so the shuffle carries signature entries, never
     shingles."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d, num_hashes=64, portable=True).join(
+    sigs = minhash_signatures(d, num_hashes=64).join(
         d.select("doc_id", "lang"), "doc_id"
     )
     return (

@@ -599,7 +599,7 @@ def q_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) and the closure runs on the contracted forest
     (operators/graph.py scale posture)."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d, num_hashes=64, portable=True).persist()
+    sigs = minhash_signatures(d, num_hashes=64).persist()
     pairs = lsh_candidate_pairs(sigs, bands=16).filter(
         F.col("est_jaccard") >= 0.5
     )

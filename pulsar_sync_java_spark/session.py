@@ -1,10 +1,11 @@
 """SparkSession factory with deterministic, scale-aware defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the same
-configs are what we would set on a real cluster: AQE on (runtime join
-re-planning + skew splitting), shuffle partitions sized to the
-parallelism at hand, UTC session timezone so timestamp semantics match
-the DuckDB oracle, Arrow enabled for the Pandas-UDF slow path.
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM; unset,
+the cores this process may run on); the same configs are what we would
+set on a real cluster: AQE on (runtime join re-planning + skew
+splitting), shuffle partitions sized to the parallelism at hand, UTC
+session timezone so timestamp semantics match the DuckDB oracle, Arrow
+enabled for the Pandas-UDF slow path.
 """
 
 from __future__ import annotations
@@ -26,6 +27,13 @@ def _default_driver_memory() -> str:
     return f"{min(total // 2, 16 << 30) >> 20}m"
 
 
+def _default_cpus() -> str:
+    """The cores this process may run on.  A local-mode master wider
+    than that only adds scheduling: tiny jobs wait on threads that
+    cannot run."""
+    return str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "pulsar-sync-spark",
     shuffle_partitions: int | None = None,
@@ -45,7 +53,7 @@ def get_spark(
     - shuffle partitions default to local core count here, but on a
       cluster AQE coalesces from a high initial number.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (

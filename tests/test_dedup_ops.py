@@ -67,7 +67,7 @@ def test_lsh_max_bucket_drops_oversized_buckets_whole(spark):
     rows += [(100, "completely different words here entirely"),
              (101, "completely different words here entirely")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(df, num_hashes=64, portable=True)
+    sigs = minhash_signatures(df, num_hashes=64)
     capped = lsh_candidate_pairs(sigs, bands=16, max_bucket=10).filter(
         F.col("est_jaccard") >= 0.5
     )
@@ -517,7 +517,7 @@ def test_incremental_lsh_matches_symmetric_pairs_restricted(spark, documents):
     nothing vs re-running the full pairwise pass."""
     from pulsar_sync_java_spark.operators.dedup import lsh_pairs_against_corpus
 
-    sigs = minhash_signatures(documents, num_hashes=64, portable=True).persist()
+    sigs = minhash_signatures(documents, num_hashes=64).persist()
     try:
         batch = sigs.filter(F.col("doc_id") % 10 == 7)
         corpus = sigs.filter(F.col("doc_id") % 10 != 7)

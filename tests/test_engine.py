@@ -838,102 +838,6 @@ def test_one_tick_creates_and_advances_with_one_write(spark, clusters, monkeypat
 
 
 @pytest.mark.slow
-def test_full_system_catalog_then_data_plane_convergence(spark, tmp_path):
-    """The reference's complete story in ONE test — the 3-minute
-    catalog rescan (PulsarPartitionTopicSyncManager) followed by
-    per-topic message replication (PulsarMessageSyncTest.java:38-64) —
-    with the data plane running through the LIVE format("pulsar")
-    binding against fake brokers: after one catalog tick plus one
-    replication sweep of every topic the converged catalog owns, the
-    dst broker holds exactly the src broker's messages, per topic."""
-    from pulsar_sync_java_spark.streaming.fake_pulsar import (
-        STORAGE_ROOT_OPTION,
-        register_fake_pulsar,
-        topic_dir,
-    )
-    from pulsar_sync_java_spark.streaming.pulsar_connector import (
-        PulsarEndpoint,
-        read_pulsar_stream,
-        write_pulsar_stream,
-    )
-    from pulsar_sync_java_spark.streaming.replicate import (
-        message_projection,
-    )
-
-    register_fake_pulsar(spark)
-    src_cat, dst_cat = str(tmp_path / "src-cat"), str(tmp_path / "dst-cat")
-    src_broker, dst_broker = str(tmp_path / "src-b"), str(tmp_path / "dst-b")
-    os.makedirs(src_broker)
-    os.makedirs(dst_broker)
-
-    # control plane: src knows both topics, dst starts empty-but-valid
-    topic_rows = [
-        ("public", "default", t, 4, {"owner": "sync"})
-        for t in ("view", "click")
-    ]
-    _write_catalog(
-        spark,
-        src_cat,
-        [("public",)],
-        [("public", "default", "{}")],
-        topic_rows,
-        [],
-    )
-    _write_catalog(spark, dst_cat, [("public",)], [], [], [])
-
-    # data plane: src broker holds each topic's messages
-    msgs = build_messages(spark)
-    for t in ("view", "click"):
-        msgs.filter(F.col("topic") == t).coalesce(1).write.parquet(
-            topic_dir(src_broker, f"persistent://public/default/{t}")
-        )
-
-    engine = SyncEngine(spark, src_cat, dst_cat)
-    created = engine.sync_catalog_once()
-    assert created["topics"] == 2  # catalog converged additively
-
-    # replicate every topic the CONVERGED DST CATALOG now owns — the
-    # catalog is the work list, exactly the reference's fan-out (R26)
-    dst_topics = [
-        f"persistent://{r.tenant}/{r.namespace}/{r.topic}"
-        for r in spark.read.parquet(
-            os.path.join(dst_cat, "topics.parquet")
-        ).collect()
-    ]
-    assert len(dst_topics) == 2
-    for i, full_topic in enumerate(sorted(dst_topics)):
-        stream = read_pulsar_stream(
-            spark,
-            PulsarEndpoint("src-broker"),
-            subscription_name="pulsar-sync",
-            topics=full_topic,
-            extra_options={STORAGE_ROOT_OPTION: src_broker},
-        )
-        q = (
-            write_pulsar_stream(
-                message_projection(stream),
-                PulsarEndpoint("dst-broker"),
-                full_topic,
-                str(tmp_path / f"ckpt{i}"),
-                extra_options={STORAGE_ROOT_OPTION: dst_broker},
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    # dual-plane convergence: per topic, dst broker == src broker
-    for t in ("view", "click"):
-        full_topic = f"persistent://public/default/{t}"
-        want = msgs.filter(F.col("topic") == t).count()
-        got = spark.read.parquet(topic_dir(dst_broker, full_topic))
-        assert got.count() == want, t
-        assert (
-            got.select("ledger_id", "entry_id").distinct().count() == want
-        ), t
-
-
-@pytest.mark.slow
 def test_cli_main_ticks_and_converges(spark, tmp_path, capsys):
     """`python -m pulsar_sync_java_spark SRC DST --ticks 2` — the
     working CLI the reference's broken `PulsarSyncStarter.main` never
