@@ -819,26 +819,68 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     learned merge table (iter, left, right, merged symbol, pair count)
     — the artifact a tokenizer ships.
 
-    Scale shape (why this trains on 100 TB): the corpus collapses to
-    the word-frequency VOCABULARY first (one tokenize + count
-    aggregate — the only corpus-sized step), and every merge iteration
-    then runs on vocab-sized data: one pair-count aggregate (map-side
-    partials over (x, y) keys) + a 1-row argmax broadcast back.  The
-    merge itself stays in JVM codegen via the canonical-string device:
-    symbol arrays render with double-space separators so the greedy
-    non-overlapping merge is a plain `replace()` (alignment proof in
-    the oracle comment — symbols contain no spaces, so every pattern
-    occurrence is exactly an adjacent pair), identical left-to-right
-    semantics in both engines.  Iterations are plan-unrolled (the
-    q_kmeans_assign Lloyd discipline); everything is exact integer
-    arithmetic, so the whole merge table hash-gates with no partial
-    oracle."""
+    Scale shape: the corpus collapses to the word-frequency VOCABULARY
+    first (one tokenize + count aggregate — the only corpus-sized
+    step), which is collected once; the merge loop then runs on the
+    driver over the in-memory word-count table, as Sennrich et al.
+    (ACL 2016) train BPE (see ``_bpe_learn``).  The final vocabulary
+    stays a Spark plan via the canonical-string device: symbol arrays
+    render with double-space separators so the greedy non-overlapping
+    merge is a plain `replace()` (alignment proof in the oracle
+    comment — symbols contain no spaces, so every pattern occurrence
+    is exactly an adjacent pair), identical left-to-right semantics in
+    both engines.  Everything is exact integer arithmetic, so the
+    whole merge table hash-gates with no partial oracle."""
     rules, _ = _bpe_learn(load_table(spark, sf_dir, "documents"))
     return spark.createDataFrame(
         rules,
         "iter int, left_sym string, right_sym string, "
         "merged string, cnt long",
     )
+
+
+# The most words the BPE vocabulary collect brings to the driver: the
+# merge loop holds every word's symbol list in memory, which is meant
+# for a tokenizer vocabulary, not for an unbounded key space.
+_BPE_VOCAB_MAX_WORDS = 1_000_000
+
+
+def _bpe_merges(
+    vocab: list[tuple[list[str], int]],
+) -> tuple[list[tuple[int, str, str, str, int]], list[list[str]]]:
+    """The BPE merge loop over an in-memory vocabulary of (symbols,
+    weight) rows: returns the merge rules (iter, left, right, merged,
+    cnt) and every row's symbol list after them, in input order.
+
+    Each step picks the pair with the highest weighted count, ties
+    broken as Spark and DuckDB order strings (x, then y, by UTF-8
+    bytes), and merges it greedily left to right — the rule the
+    canonical-string replace() applies to the Spark vocabulary."""
+    syms = [list(arr) for arr, _ in vocab]
+    rules: list[tuple[int, str, str, str, int]] = []
+    for k in range(1, _BPE_ITERS + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for arr, (_, w) in zip(syms, vocab):
+            for pair in zip(arr, arr[1:]):
+                counts[pair] = counts.get(pair, 0) + w
+        if not counts:
+            break  # no adjacent pairs left
+        (x, y), cnt = min(
+            counts.items(),
+            key=lambda kv: (-kv[1], kv[0][0].encode(), kv[0][1].encode()),
+        )
+        rules.append((k, x, y, x + y, cnt))
+        for i, arr in enumerate(syms):
+            out, j = [], 0
+            while j < len(arr):
+                if j + 1 < len(arr) and arr[j] == x and arr[j + 1] == y:
+                    out.append(x + y)
+                    j += 2
+                else:
+                    out.append(arr[j])
+                    j += 1
+            syms[i] = out
+    return rules, syms
 
 
 def _bpe_learn(
@@ -849,45 +891,34 @@ def _bpe_learn(
     (iter, left, right, merged, cnt), final vocabulary (word, w, arr)
     with all ``_BPE_ITERS`` merges applied).
 
-    r13 shape: the corpus collapses ONCE to the persisted character-
-    split word-frequency vocabulary (plan-matched across all four BPE
+    The corpus collapses ONCE to the persisted character-split
+    word-frequency vocabulary (plan-matched across all four BPE
     queries — one cache entry serves train, encode, and both budget
-    queries), and each iteration's 1-row argmax is COLLECTED to the
-    driver and re-attached as string literals in the canonical-string
-    replace merge.  The prior lazy form crossJoined a broadcast 1-row
-    argmax per iteration — 2 AQE jobs per merge just to move one row
-    (profiled: 16 jobs / 36 one-task stages per BPE query); the merge
-    rule IS driver-state between iterations, exactly like the Lloyd
-    centroids (queries/clustering.py).  Iteration k's collect re-runs
-    only the k-1 vocab-sized replace projections above the cache,
-    never the corpus tokenize."""
+    queries).  Its (arr, w) rows are collected in ONE job and the
+    argmax steps run on the driver (``_bpe_merges``) — BPE training
+    as Sennrich et al. (ACL 2016) describe it, a merge loop over an
+    in-memory word-count table, not a Spark job per merge.  The
+    returned vocabulary is the lazy replace() chain over the cached
+    vocab, one projection per rule, so the encode plans and their
+    plan-matched caches never see Python rows."""
     words = d.select(F.explode(_spark_tokens()).alias("word"))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("w"))
     cur = vocab.select(
         "word", "w", F.regexp_extract_all("word", F.lit("."), 0).alias("arr")
     ).persist()
-    rules: list[tuple[int, str, str, str, int]] = []
-    for k in range(1, _BPE_ITERS + 1):
-        pairs = cur.select(
-            "w",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("arr", 1, F.size("arr") - 1).alias("x"),
-                    F.slice("arr", 2, F.size("arr") - 1).alias("y"),
-                )
-            ).alias("p"),
-        ).select("w", F.col("p.x").alias("x"), F.col("p.y").alias("y"))
-        best = (
-            pairs.groupBy("x", "y")
-            .agg(F.sum("w").cast("long").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("x").asc(), F.col("y").asc())
-            .limit(1)
-            .collect()
+    # one partition, so the bounded collect is one job however many
+    # partitions the cache has
+    rows = cur.select("arr", "w").coalesce(1).limit(
+        _BPE_VOCAB_MAX_WORDS + 1
+    ).collect()
+    if len(rows) > _BPE_VOCAB_MAX_WORDS:
+        raise ValueError(
+            f"_bpe_learn: the vocabulary exceeds _BPE_VOCAB_MAX_WORDS="
+            f"{_BPE_VOCAB_MAX_WORDS} words; the merge loop holds every "
+            "word on the driver"
         )
-        if not best:
-            break  # no adjacent pairs left (the lazy form's empty rule)
-        x, y, cnt = best[0]["x"], best[0]["y"], int(best[0]["cnt"])
-        rules.append((k, x, y, x + y, cnt))
+    rules, _ = _bpe_merges([(r["arr"], r["w"]) for r in rows])
+    for _, x, y, _, _ in rules:
         canon = F.concat(F.lit("  "), F.array_join("arr", "  "), F.lit("  "))
         merged = F.replace(
             canon,

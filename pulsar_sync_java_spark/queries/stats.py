@@ -940,10 +940,9 @@ def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MAD_K = 5  # exact-binary multiplier for the outlier fence
 # The largest number of groups a query inlines as literal CASE arms
-# (one arm per driver-collected row) — q_mad_outliers' event types and
-# the kmeans size map's clusters (queries/clustering.py): the lookup is
-# for a handful of groups, not a join replacement for high-cardinality
-# keys.
+# (one arm per driver-collected row) — the kmeans size map's clusters
+# (queries/clustering.py): the lookup is for a handful of groups, not a
+# join replacement for high-cardinality keys.
 _LITERAL_CASE_MAX_GROUPS = 256
 
 
@@ -997,105 +996,66 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; order statistics cannot.  dev = |x - median| and the
     ``_MAD_K``*MAD fence compare identical doubles.
 
-    Scale: two sort-windows per type (median, then MAD) plus one
-    aggregate — the exact-selection twin of the production path
-    (approx_percentile's one-pass sketch); the exact version exists
-    to gate it, the plan shape is the cost of exactness and is
-    documented as such.
-
-    EAGER since r14 (the Lloyd-centroid / BPE-argmax discipline): med
-    and mad are GROUP-sized (one row per event type), so each is
-    collected at construction and re-attached as a literal CASE —
-    previously they rode broadcast joins and, because the dev frame
-    feeds both the MAD window and the final aggregate, the whole
-    median pipeline re-evaluated once per consumer (profiled r14:
-    ~5 corpus scans + 2 window sorts, 1.6 s at sf0.1).  Now the two
-    construction jobs pay one window sort each and the returned plan
-    is ONE scan + one group-sized aggregate.  py4j transfers the
-    collected doubles bit-exactly (the kmeans literal contract), so
-    every downstream comparison sees the identical IEEE values."""
-    # a NULL event_type forms no group (an equi-join on the type drops
-    # it), and a None key could not be sorted among the CASE arms below
+    Scale: ONE lazy plan with one shuffle — the exact-selection twin of
+    the production path (approx_percentile's one-pass sketch); the
+    exact version exists to gate it, so its plan shape is the cost of
+    exactness and is documented as such.  The events are read once and
+    hash-partitioned on event_type; inside that one exchange a
+    row_number + count window ordered by value ranks each type, a
+    max(when(r == lo/hi)) window over the type's whole (unbounded)
+    frame picks the median, dev = |value - median| feeds the same
+    window pair ordered by dev for the MAD, and the final per-type
+    aggregate reuses the exchange's partitioning.  No second Exchange
+    and no join, so no consumer re-evaluates the median pipeline and
+    construction runs no job.  Each type sits in one spillable sort
+    task; no array buffers a group's values (the
+    sort_array(collect_list) alternative would)."""
+    # a NULL event_type forms no group, as the oracle's equi-join on
+    # the type drops it
     v = load_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull() & F.col("event_type").isNotNull()
     ).select("event_type", "value")
     by_t = Window.partitionBy("event_type")
 
-    def positional_median_rows(
-        df: DataFrame, col: str
-    ) -> dict[str, tuple[int, float]]:
-        r = F.row_number().over(by_t.orderBy(col))
-        n = F.count(F.lit(1)).over(by_t)
-        ranked = df.select(
-            "event_type", F.col(col), r.alias("r"), n.alias("n")
+    def positional_median(df: DataFrame, col: str, out: str) -> DataFrame:
+        # ranks (n+1)//2 and (n+2)//2 of the type's sorted values,
+        # averaged by the oracle's (lo + hi) / 2 expression
+        ranked = df.withColumn(
+            "r", F.row_number().over(by_t.orderBy(col))
         )
         lo = F.floor((F.col("n") + 1) / 2)
         hi = F.floor((F.col("n") + 2) / 2)
-        rows = ranked.groupBy("event_type", "n").agg(
+        return ranked.withColumn(
+            out,
             (
-                (
-                    F.max(F.when(F.col("r") == lo, F.col(col)))
-                    + F.max(F.when(F.col("r") == hi, F.col(col)))
-                )
-                / 2
-            ).alias("m")
-        ).collect()
-        if len(rows) > _LITERAL_CASE_MAX_GROUPS:
-            raise ValueError(
-                f"q_mad_outliers: {len(rows)} event types exceed "
-                f"_LITERAL_CASE_MAX_GROUPS={_LITERAL_CASE_MAX_GROUPS}; the "
-                "literal CASE lookup is for a handful of groups — join the "
-                "per-type median/MAD table back with a broadcast join on "
-                "event_type instead"
+                F.max(F.when(F.col("r") == lo, F.col(col))).over(by_t)
+                + F.max(F.when(F.col("r") == hi, F.col(col))).over(by_t)
             )
-        return {row["event_type"]: (int(row["n"]), float(row["m"])) for row in rows}
+            / 2,
+        ).drop("r")
 
-    def case_over_types(stats: dict, pick) -> F.Column:
-        # literal lookup keyed by event_type: a handful of WHEN arms
-        # (one per type), exact doubles via F.lit — no join, no
-        # broadcast build, and crucially no re-evaluation of the
-        # upstream median pipeline per consumer
-        expr = None
-        for et in sorted(stats):
-            arm = F.when(F.col("event_type") == et, F.lit(pick(stats[et])))
-            expr = arm if expr is None else expr.when(
-                F.col("event_type") == et, F.lit(pick(stats[et]))
-            )
-        return expr
-
-    med = positional_median_rows(v, "value")
-    if not med:
-        # empty input: an empty result with the declared schema (the
-        # lazy form's behavior), not a None-CASE AnalysisException
-        return v.select(
-            "event_type",
-            F.lit(0).cast("long").alias("n"),
-            F.lit(0.0).alias("median"),
-            F.lit(0.0).alias("mad"),
-            F.lit(0).cast("long").alias("n_outliers"),
-        ).limit(0)
-    med_lit = case_over_types(med, lambda t: t[1])
-    d = v.select(
-        "event_type",
-        F.abs(F.col("value") - med_lit).alias("dev"),
+    # the count shares the value-ordered window (whole-partition frame),
+    # so the type's size and ranks come from the one sort
+    whole = by_t.orderBy("value").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    mad = positional_median_rows(d, "dev")
-    mad_lit = case_over_types(mad, lambda t: t[1])
-    n_lit = case_over_types(med, lambda t: t[0]).cast("long")
-    return (
-        d.groupBy("event_type")
-        .agg(
-            F.sum(
-                (F.col("dev") > F.lit(_MAD_K) * mad_lit).cast("long")
-            ).alias("n_outliers")
-        )
-        .select(
-            "event_type",
-            n_lit.alias("n"),
-            med_lit.alias("median"),
-            mad_lit.alias("mad"),
-            "n_outliers",
-        )
+    med = positional_median(
+        v.withColumn("n", F.count(F.lit(1)).over(whole)), "value", "median"
+    )
+    d = med.select(
+        "event_type", "n", "median",
+        F.abs(F.col("value") - F.col("median")).alias("dev"),
+    )
+    mad = positional_median(d, "dev", "mad")
+    # n, median and mad are constant per type: max() returns them
+    # bit-exactly, where grouping on the doubles would normalize -0.0
+    return mad.groupBy("event_type").agg(
+        F.max("n").alias("n"),
+        F.max("median").alias("median"),
+        F.max("mad").alias("mad"),
+        F.sum(
+            (F.col("dev") > F.lit(_MAD_K) * F.col("mad")).cast("long")
+        ).alias("n_outliers"),
     )
 
 

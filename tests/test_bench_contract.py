@@ -146,7 +146,7 @@ PERSIST_ALLOWLIST = {
     ("queries/extras.py", "q_bfs_khop"): 1,             # per-level frontier (feeds next frontier AND the visited union; unpersisted the subtree doubles per level — 60 AQE jobs measured); the symmetric edge table is the shared _copurchase_edges entry
     ("queries/extras.py", "q_degree_assortativity"): 1, # node-sized degree table (pair joins + global stats); the edge set is _copurchase_edges
     ("queries/extras.py", "q_hits"): 3,                 # edge table + per-iteration score frames (max agg + join-back each read them; uncut the subtree doubles per iteration)
-    ("queries/pipeline.py", "_bpe_learn"): 1,          # char-split word-frequency vocab: ONE plan-matched cache entry shared by q_bpe_train/encode and both tokenizer-true budget queries; every merge iteration re-reads it
+    ("queries/pipeline.py", "_bpe_learn"): 1,          # char-split word-frequency vocab: ONE plan-matched cache entry shared by q_bpe_train/encode and both tokenizer-true budget queries; training collects it once and every final-vocab replace() chain reads it
     ("queries/pipeline.py", "_bpe_doc_word_counts"): 1,  # (doc, lang, word, n_occ) counts — the one corpus-sized encode step, shared plan-matched by q_bpe_encode + q_pack_sequences_bpe + q_mix_budget_bpe (r14; flat cache, consumers project from it)
     ("queries/pipeline.py", "q_char_diversity"): 1,     # (doc, char) count aggregate (diversity agg + argmax share it)
     ("queries/extras.py", "q_bm25_topk"): 1,            # (doc, term) tf aggregate = the inverted index (3 consumers)

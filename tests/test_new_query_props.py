@@ -673,6 +673,113 @@ def test_bpe_encode_matches_python_reference(spark, docs_pdf):
         assert r["compression"] == n_chars / n_bpe, doc_id
 
 
+def _textbook_bpe(vocab, iters):
+    """The textbook trainer of test_bpe_train_matches_python_reference
+    (greedy left-to-right merge, ties by (x, y) in code-point order,
+    which is UTF-8 byte order) over a {symbol tuple: weight} vocabulary:
+    returns the rules and each word's final symbol list."""
+    from collections import Counter
+
+    seg = {"".join(k): list(k) for k in vocab}
+    weights = {"".join(k): w for k, w in vocab.items()}
+    rules = []
+    for it in range(1, iters + 1):
+        pc = Counter()
+        for word, syms in seg.items():
+            for a, b in zip(syms, syms[1:]):
+                pc[(a, b)] += weights[word]
+        if not pc:
+            break
+        (x, y), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
+        rules.append((it, x, y, x + y, cnt))
+        for word, syms in seg.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == x and syms[i + 1] == y:
+                    out.append(x + y)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            seg[word] = out
+    return rules, seg
+
+
+def test_bpe_driver_merges_on_crafted_corpus(spark):
+    """Overlapping runs ('aaaa' merges to [aa, aa], 'aaa' to [aa, a]),
+    count ties, and symbols outside the BMP: U+1F600 sorts before
+    U+FB00 in UTF-16 but after it in UTF-8, so iteration 2's three-way
+    tie picks (U+FB00, 'z') — x, then y, by bytes — and iteration 3
+    (U+FB00, U+1F600).  The rules equal the textbook reference, and the
+    Spark replace() chain's final arr per word equals the driver loop's
+    symbol lists."""
+    from collections import Counter
+
+    from pulsar_sync_java_spark.queries.pipeline import (
+        _BPE_ITERS,
+        _bpe_learn,
+        _bpe_merges,
+    )
+
+    ff, smile = "\ufb00", "\U0001f600"
+    corpus = {
+        "aaaa": 3, "aaa": 2, f"{smile}b": 6, f"{ff}{smile}": 6, f"{ff}z": 6,
+    }
+    texts = [w for w, n in corpus.items() for _ in range(n)]
+    d = spark.createDataFrame(
+        [(k, f"{t} {t}" if k % 2 else t, "en") for k, t in enumerate(texts)],
+        "doc_id long, text string, lang string",
+    )
+    weights = Counter()
+    for k, t in enumerate(texts):
+        weights[t] += 2 if k % 2 else 1
+    rules, vocab = _bpe_learn(d)
+
+    want_rules, want_seg = _textbook_bpe(
+        Counter({tuple(w): n for w, n in weights.items()}), _BPE_ITERS
+    )
+    assert rules == want_rules
+    assert [r[1:3] for r in rules] == [("a", "a"), (ff, "z"), (ff, smile)]
+    got = {r["word"]: list(r["arr"]) for r in vocab.collect()}
+    assert got == want_seg
+    assert got["aaaa"] == ["aa", "aa"] and got["aaa"] == ["aa", "a"]
+    words = sorted(got)
+    drv_rules, drv_syms = _bpe_merges([(list(w), weights[w]) for w in words])
+    assert drv_rules == rules
+    assert dict(zip(words, drv_syms)) == got
+
+
+def test_bpe_learn_runs_one_job_for_all_merges(spark):
+    """Training collects the cached vocabulary once and runs every merge
+    step on the driver: one Spark job for all ``_BPE_ITERS`` merges (the
+    vocabulary cache is built by a first call, outside the group)."""
+    from pulsar_sync_java_spark.queries.pipeline import _BPE_ITERS, _bpe_learn
+    from pulsar_sync_java_spark.sources.tables import load_table
+
+    d = load_table(spark, SF_DIR, "documents")
+    _bpe_learn(d)
+    sc = spark.sparkContext
+    sc.setJobGroup("bpe-learn", "one vocabulary collect")
+    try:
+        rules, _ = _bpe_learn(d)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(rules) == _BPE_ITERS
+    jobs = sc.statusTracker().getJobIdsForGroup("bpe-learn")
+    assert len(jobs) == 1, jobs
+
+
+def test_bpe_learn_refuses_a_vocabulary_over_the_bound(spark, monkeypatch):
+    """A vocabulary larger than the driver-side bound fails loudly and
+    names the bound, instead of collecting every word."""
+    from pulsar_sync_java_spark.queries import pipeline
+    from pulsar_sync_java_spark.sources.tables import load_table
+
+    monkeypatch.setattr(pipeline, "_BPE_VOCAB_MAX_WORDS", 2)
+    with pytest.raises(ValueError, match="_BPE_VOCAB_MAX_WORDS=2"):
+        pipeline._bpe_learn(load_table(spark, SF_DIR, "documents"))
+
+
 # ------------------------------------------------ round-10 additions
 
 
@@ -901,9 +1008,8 @@ def test_mad_outliers_matches_numpy(spark):
 
 
 def test_mad_outliers_drops_null_event_type(spark, tmp_path):
-    """NULL event_type rows are dropped, not grouped: a None key among
-    the string keys would raise TypeError where the literal CASE arms
-    are sorted."""
+    """NULL event_type rows are dropped, not grouped, as the oracle's
+    equi-join on the type drops them."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -918,16 +1024,39 @@ def test_mad_outliers_drops_null_event_type(spark, tmp_path):
     _assert_mad_outliers_match(spark, str(tmp_path))
 
 
-def test_mad_outliers_guards_literal_case_cardinality(spark, monkeypatch):
-    """More event types than the literal-CASE bound fail loudly and name
-    the broadcast-join alternative, instead of inlining one WHEN arm per
-    type without limit."""
-    from pulsar_sync_java_spark.queries import stats
+def test_mad_outliers_runs_no_job_at_construction(spark):
+    """q_mad_outliers is one lazy plan: building it runs no Spark job
+    (the table handle is loaded by a first call, outside the group)."""
+    q = _QUERIES["q_mad_outliers"]
+    q(spark, SF_DIR)
+    sc = spark.sparkContext
+    sc.setJobGroup("mad-construct", "construction must not run jobs")
+    try:
+        q(spark, SF_DIR)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("mad-construct")
+    assert list(jobs) == [], jobs
 
-    monkeypatch.setattr(stats, "_LITERAL_CASE_MAX_GROUPS", 2)
-    with pytest.raises(ValueError, match="_LITERAL_CASE_MAX_GROUPS=2") as e:
-        _QUERIES["q_mad_outliers"](spark, SF_DIR)
-    assert "broadcast join" in str(e.value)
+
+def test_mad_outliers_many_event_types(spark, tmp_path):
+    """More event types than any literal lookup would hold (300, each
+    with a handful of values, some tied) still match the positional
+    reference: the per-type statistics are window columns, not
+    driver-collected arms."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = t.schema.get_field_index("event_type")
+    j = t.schema.get_field_index("value")
+    n = t.num_rows
+    types = [f"t{k % 300:03d}" for k in range(n)]
+    values = [((k * 7919) % 13) / 10 for k in range(n)]
+    t = t.set_column(i, t.field(i), pa.array(types, t.field(i).type))
+    t = t.set_column(j, t.field(j), pa.array(values, t.field(j).type))
+    pq.write_table(t, str(tmp_path / "events.parquet"))
+    _assert_mad_outliers_match(spark, str(tmp_path))
 
 
 def test_kmeans_size_map_guards_literal_case_cardinality(spark, monkeypatch):

@@ -775,6 +775,16 @@ def test_rolling_quantile_one_exchange_zero_join(spark, queries):
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
 
 
+def test_mad_outliers_one_exchange_zero_join(spark, queries):
+    """q_mad_outliers: ONE event_type shuffle; the median and MAD are
+    windows inside it (one sort by value, one by dev) and the per-type
+    aggregate reuses its partitioning — no join, no second exchange."""
+    plan = plan_of(queries["q_mad_outliers"](spark, SF_DIR))
+    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 1, plan
+    assert "Join" not in plan
+    assert len(re.findall(r"\(\d+\) Sort\b", plan)) == 2, plan
+
+
 def test_zorder_layout_bounds_broadcast_single_agg(spark, queries):
     """q_zorder_layout: the one-row domain-bounds aggregate broadcasts
     onto the fact scan (BroadcastNestedLoopJoin, never a shuffled

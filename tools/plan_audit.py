@@ -73,7 +73,7 @@ EXPECT = {
     "q_hll_merge": "sketch mergeability: 3 sketch aggregates + exact-distinct expand, ObjectHashAggregate carries <=4KiB sketches; final joins are group-sized broadcasts",
     "q_countmin_topk": "CM sketch: Generate (d=4 hash explode) into partial+final count aggregates — shuffle carries (slice,j,h) partials, never raw keys; sketch (128 rows) broadcast to the TakeOrdered heavy-key probe",
     "q_chi2_terms": "chi2 selection: ONE tokenize into the persisted (lang,token) aggregate; marginals/total broadcast back; top-3 window over aggregate rows only",
-    "q_bpe_train": "BPE training: corpus collapses to the word-frequency vocab ONCE; each unrolled iteration = vocab-sized pair-count aggregate + 1-row argmax broadcast + codegen replace() merge — no Python, no per-corpus iteration",
+    "q_bpe_train": "BPE training: corpus collapses to the persisted word-frequency vocab ONCE; its (arr, w) rows come back in ONE job and the merge loop runs on the driver over that in-memory table — the merge table is a local relation, no job per merge, no per-corpus iteration",
     "q_skyline": "2-D Pareto frontier: per-price aggregate + two-level exclusive prefix MAX + broadcast join-backs — never the oracle's quadratic dominance self-join (no NestedLoop/Cartesian)",
     "q_sample_merge": "mergeable bottom-k: (type, slice) rank window emits k rows/group, union, final window over slicesxk candidates — the heavy shuffle carries sample rows only",
     "q_percentiles": "exact percentiles via ObjectHashAggregate (percentile state), single agg pair",
@@ -168,7 +168,7 @@ EXPECT = {
     "q_join_cardinality": "estimator never materializes the join: two per-key count aggregates feed a key-sized equi-join (cnt_a x cnt_b products), cost independent of the predicted output size",
     "q_bfs_khop": "bounded frontier expansion in ONE lazy plan: per level an equi-join on the persisted symmetric edge table (InMemoryTableScan) + LeftAnti against visited; no iteration-to-fixpoint, no CartesianProduct",
     "q_chunk_overlap": "embarrassingly parallel chunker: one scan, one Generate (stride explode), zero-shuffle array slicing + md5 in the same stage — no exchanges at all",
-    "q_bpe_encode": "tokenizer APPLY: train's vocab aggregate IS the encoder; encode = (doc, word) count aggregate equi-joined to the vocab (AQE broadcast at this sf) — documents never replay merges",
+    "q_bpe_encode": "tokenizer APPLY: train's cached vocab + one codegen replace() projection per driver-learned rule IS the encoder; encode = (doc, word) count aggregate equi-joined to the vocab (AQE broadcast at this sf) — documents never replay merges",
     "q_cusum_changepoint": "corpus collapses to the (priority, month) aggregate in ONE partial+final pass; prefix windows + argmax run on calendar-sized rows; all integer cents",
     "q_ewma_smooth": "one (type, day) count aggregate; the EWMA fold is a zero-shuffle higher-order array expression over calendar-sized arrays",
     "q_autocorr": "month-grain aggregate first; the lag pairing is a within-priority equi-join on the tiny series frame (broadcast), moment sums partial+final",
@@ -177,7 +177,7 @@ EXPECT = {
     "q_attribution": "type filter pushed to parquet; reverse running-count + rank windows share the per-user partitioning; channel aggregate partial+final — no corpus join",
     "q_label_prop": "persisted symmetric edge table (InMemoryTableScan x3); per iteration ONE label join + (node,label) partial+final count + node-keyed argmax window — no fixpoint loop, no single-reducer stage",
     "q_hll_intersect": "persisted distinct (type,key) set feeds the 3-sketch aggregate AND the exact pair joins; hll_union is register algebra on broadcast-sized rows — intersection never rescans data",
-    "q_mad_outliers": "exact order-statistic twin: two per-type sort windows (median, MAD) + one aggregate; fence comparison in the same stage — production path is the approx_percentile sketch this gates",
+    "q_mad_outliers": "exact order-statistic twin in ONE lazy plan: one event_type Exchange; median and MAD are rank + whole-frame windows inside it (one sort by value, one by dev) and the fence aggregate reuses its partitioning — no join, no construction job; production path is the approx_percentile sketch this gates",
     "q_benford": "ONE 9-group count aggregate over the scan (digit from integer formatting, no log); literal digit frame broadcast; chi-square windows over 9 rows",
     "q_char_diversity": "char explode compresses in the map-side partial of the (doc,char) count aggregate — alphabet-sized rows cross the shuffle; diversity math + argmax over the persisted aggregate (InMemoryTableScan x2)",
     "q_ab_welch": "one partial+final moment aggregate to (type,variant) rows; the A/B pairing join and the Welch expression run on that tiny frame",
