@@ -282,21 +282,19 @@ class SyncEngine:
 
     # -- data plane ---------------------------------------------------
 
-    def start_replication(self, available_now: bool = True):
+    def start_replication(self):
         """The per-partition worker pipeline (R13-R16): src message
         stream -> projection -> dst sink, offsets committed to the
-        checkpoint only after the sink write — produce-then-ack.
-        Continuous deployments pass available_now=False and a
-        processingTime trigger upstream."""
+        checkpoint only after the sink write — produce-then-ack.  An
+        availableNow trigger: the query replicates every message present
+        at start, then stops."""
         stream = read_message_stream(self.spark, os.path.join(self.src, "messages"))
         writer = replicate(
             stream,
             os.path.join(self.dst, "messages"),
             os.path.join(self.dst, "_checkpoints", "replication"),
         )
-        if available_now:
-            return writer.trigger(availableNow=True).start()
-        return writer.start()
+        return writer.trigger(availableNow=True).start()
 
     def build_mapping(self) -> DataFrame:
         """R17: the sampled MessageId mapping, from the REPLICATED
@@ -394,7 +392,7 @@ class SyncEngine:
         )
         return n
 
-    def advance_cursors_once(self, translated: DataFrame | None = None) -> int:
+    def advance_cursors_once(self) -> int:
         """Opt-in continuous cursor advancement (SURVEY.md §2 fine
         print): the reference freezes a cursor at its creation position
         — its R23 reset path is skipped whenever dst already has the
@@ -405,9 +403,7 @@ class SyncEngine:
         construction (see `_apply_cursors`), so the replay-only safety
         property holds in both directions.  Returns the number of
         cursors advanced."""
-        if translated is None:
-            translated = self._translated()
-        return self._apply_cursors(translated, create=False, advance=True)[1]
+        return self._apply_cursors(self._translated(), create=False, advance=True)[1]
 
     # -- orchestration --------------------------------------------------
 
@@ -450,7 +446,7 @@ class SyncEngine:
         # built before the stream starts: the thread inherits the
         # caller's Spark local properties (job group, scheduler pool)
         target = _inheriting(self.spark, catalog_tick)
-        q = self.start_replication(available_now=True)
+        q = self.start_replication()
         catalog = None
         try:
             # leaving the block joins the catalog thread, on every path

@@ -61,17 +61,6 @@ def positional_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     )
 
 
-def portable_hash32(col: Column) -> Column:
-    """ENGINE-PORTABLE 32-bit hash of a string: the first 8 hex digits
-    of md5, parsed as an unsigned int in [0, 2^32).  Unlike xxhash64 /
-    DuckDB hash(), md5 is bit-identical everywhere, so sketches built on
-    this base can be replayed exactly by the SQL oracle:
-    DuckDB twin: ('0x' || substr(md5(t), 1, 8))::BIGINT."""
-    return F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 8), 16, 10).cast(
-        "long"
-    )
-
-
 def portable_hash64(col: Column) -> Column:
     """ENGINE-PORTABLE signed 64-bit hash of a string: the first 16 hex
     digits of md5 as two 32-bit halves, combined with bit ops (shiftleft

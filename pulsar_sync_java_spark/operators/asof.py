@@ -36,16 +36,14 @@ def asof_join(
     on: str,
     by: list[str] | str | None = None,
     right_tiebreak: list[str] | None = None,
-    suffix: str = "",
-    strict: bool = False,
     direction: str = "backward",
 ) -> DataFrame:
     """As-of join: for each left row, attach the right row with the
-    greatest ``on`` value <= (< if ``strict``) the left's ``on`` value
-    within the same ``by`` group — or, with ``direction="forward"``,
-    the SMALLEST ``on`` value >= (> if ``strict``): the next sampled
-    mapping at or after the probe (pandas merge_asof parity; same ONE
-    union-window shuffle, just sorted descending).
+    greatest ``on`` value <= the left's ``on`` value within the same
+    ``by`` group — or, with ``direction="forward"``, the SMALLEST ``on``
+    value >=: the next sampled mapping at or after the probe (pandas
+    merge_asof parity; same ONE union-window shuffle, just sorted
+    descending).
 
     Left rows with no floor match are kept with nulls (left-outer
     semantics) — `SparseMap.get` "not found" when the probe precedes
@@ -54,25 +52,24 @@ def asof_join(
 
     Equal-``on`` right rows are ordered by ``right_tiebreak`` (ascending;
     the last, i.e. greatest, wins) so results are deterministic.
-    Output columns: all left columns, then each non-key right column
-    (renamed with ``suffix`` on collision).
+    Output columns: all left columns, then each non-key right column;
+    a non-key right column whose name is also a left column is an error.
     """
     by = [by] if isinstance(by, str) else list(by or [])
     right_tiebreak = list(right_tiebreak or [])
 
     right_vals = [c for c in right.columns if c not in by and c != on]
-    out_names = {
-        c: f"{c}{suffix}" if (c in left.columns and suffix) else c for c in right_vals
-    }
-    clash = [c for c in right_vals if out_names[c] in left.columns]
+    clash = [c for c in right_vals if c in left.columns]
     if clash:
-        raise ValueError(f"right columns collide with left: {clash}; pass a suffix")
+        raise ValueError(
+            f"right columns collide with left: {clash}; rename them before the join"
+        )
 
     payload = F.struct(*[F.col(c) for c in right_vals]).alias(_PAYLOAD)
     r = right.select(
         *[F.col(c) for c in by],
         F.col(on),
-        F.lit(2 if strict else 0).alias(_TAG),
+        F.lit(0).alias(_TAG),
         payload,
     )
     payload_type = r.schema[_PAYLOAD].dataType
@@ -94,9 +91,8 @@ def asof_join(
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     on_sorted = F.col(on).asc() if direction == "backward" else F.col(on).desc()
-    # tag order is direction-independent: at equal `on`, right rows tagged
-    # 0 sort before left (non-strict: equality matches) and rows tagged 2
-    # after (strict: equality excluded)
+    # tag order is direction-independent: at equal `on`, right rows
+    # (tag 0) sort before left rows (tag 1), so equality matches
     order: list[Column] = [on_sorted, F.col(_TAG).asc()]
     order += [F.col(_PAYLOAD)[c].asc_nulls_first() for c in right_tiebreak]
     w = (
@@ -111,5 +107,5 @@ def asof_join(
         *left_extra,
         *by,
         on,
-        *[F.col(f"{_PAYLOAD}.{c}").alias(out_names[c]) for c in right_vals],
+        *[F.col(f"{_PAYLOAD}.{c}").alias(c) for c in right_vals],
     )

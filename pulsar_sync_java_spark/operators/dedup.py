@@ -63,23 +63,21 @@ def shingle_rows(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hashed: bool = False,
 ) -> DataFrame:
-    """Exploded distinct (id, shingle) rows — the inverted-index input.
+    """Exploded distinct (id, xxhash64(shingle)) rows — the
+    inverted-index input.
 
     Tokens are materialized in their own projection before the n-gram
     transform touches them (see shingles_from_tokens: lambdas get no
     subexpression sharing, so inlining the split is 20x slower).
 
-    `hashed=True` emits xxhash64(shingle) longs instead of strings —
-    for consumers that only count/join/group on shingle identity (df
-    counts, contamination probes), the downstream shuffle or broadcast
-    carries 8-byte keys instead of ~(5·n)-byte strings.  Same collision
-    argument as `jaccard_pairs(hash_shingles=True)`."""
+    Shingles are emitted as xxhash64 longs, not strings: the consumers
+    only count/join/group on shingle identity (df counts, contamination
+    probes), so the downstream shuffle or broadcast carries 8-byte keys
+    instead of ~(5·n)-byte strings.  Same collision argument as
+    `jaccard_pairs(hash_shingles=True)`."""
     toks = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
-    sh = shingles_from_tokens(F.col("__toks"), n)
-    if hashed:
-        sh = F.transform(sh, lambda s: F.xxhash64(s))
+    sh = F.transform(shingles_from_tokens(F.col("__toks"), n), lambda s: F.xxhash64(s))
     return toks.select(F.col(id_col), F.explode(sh).alias("shingle"))
 
 
@@ -117,7 +115,6 @@ def shingle_set_sizes(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """(id, set_size) — distinct-shingle set sizes per document, read
     from the SAME persisted projection the overlap metrics use (size
@@ -125,7 +122,7 @@ def shingle_set_sizes(
     runs an overlap metric pays ZERO extra corpus scans for sizes
     (the q_sketch_calibration review finding: its private unhashed
     sizes branch re-tokenized the whole corpus)."""
-    arr = _shingle_arrays(df, id_col, text_col, n, hash_shingles)
+    arr = _shingle_arrays(df, id_col, text_col, n, hash_shingles=True)
     return arr.select(F.col(id_col), F.size("__sh").alias("set_size"))
 
 
@@ -231,7 +228,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_bucket: int = 1000,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs: containment = |A∩B| / min(|A|,|B|)
     — the near-superset detector Jaccard structurally misses (a page
@@ -247,7 +243,7 @@ def containment_pairs(
     projection is plan-matched SHARED with jaccard_pairs over the same
     corpus (one cache entry serves both metrics)."""
     return _shingle_overlap(
-        df, id_col, text_col, n, max_bucket, hash_shingles
+        df, id_col, text_col, n, max_bucket, hash_shingles=True
     ).select(
         "doc_a",
         "doc_b",
@@ -752,7 +748,7 @@ def repeated_spans(
         # oracle needs no off-by-one shim)
         (F.col("__p0") + 1).alias("__p"),
         # 8-byte shuffle keys; collisions over a corpus-sized gram set
-        # are ~n²/2^64 (the shared hashed=True argument of shingle_rows)
+        # are ~n²/2^64 (the collision argument of shingle_rows)
         F.xxhash64("__g").alias("__gh"),
     )
     dfreq = (

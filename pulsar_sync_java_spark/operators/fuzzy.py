@@ -31,10 +31,9 @@ same discipline as the shingle index, operators/dedup.py), so the
 candidate exchange carries (long, id) instead of (string, id) — an
 xxhash64 collision can only ADD a candidate, and the exact levenshtein
 verify removes it.  Skew guard: a variant shared by many rows (short
-strings, heavy templates) creates a hot bucket — the `max_bucket` cap
-drops such buckets whole (``on_overflow='drop'``, the stop-shingle
-discipline) or fails the job loudly (``on_overflow='error'``, for
-callers whose oracle/contract cannot mirror the drop).
+strings, heavy templates) creates a hot bucket — a bucket over the
+`max_bucket` cap fails the job loudly, since dropping it would silently
+lose the pairs that share only hot variants.
 """
 
 from __future__ import annotations
@@ -93,20 +92,14 @@ def fuzzy_pairs(
     text_col: str,
     max_distance: int = 1,
     max_bucket: int = 1000,
-    on_overflow: str = "drop",
 ) -> DataFrame:
     """All pairs within ``max_distance`` (1 or 2) edit distance:
     (id_a, id_b, distance), id_a < id_b, exact-verified.
 
-    ``on_overflow``: what to do with a variant bucket holding more than
-    ``max_bucket`` ids — ``'drop'`` skips it whole (skew-safe, may miss
-    pairs that ONLY share hot variants), ``'error'`` raises at execution
-    time so a contract that promises the exact pair set fails loudly
-    instead of silently diverging when the guard first fires."""
+    A variant bucket holding more than ``max_bucket`` ids raises at
+    execution time, so the exact pair set is never silently cut."""
     if max_distance not in (1, 2):
         raise ValueError("deletion-neighborhood blocking ships max_distance in (1, 2)")
-    if on_overflow not in ("drop", "error"):
-        raise ValueError("on_overflow must be 'drop' or 'error'")
     variants = _variants if max_distance == 1 else _variants_k2
     base = df.select(F.col(id_col).alias("__fid"), F.col(text_col).alias("__ftxt"))
     # 64-bit variant keys: the shuffle carries (long, id), not the
@@ -122,19 +115,15 @@ def fuzzy_pairs(
             F.transform(variants(F.col("__ftxt")), lambda v: F.xxhash64(v))
         ).alias("__v"),
     )
-    if on_overflow == "error":
-        size_ok = F.assert_true(
-            F.size("__ids") <= max_bucket,
-            F.concat(
-                F.lit(f"fuzzy_pairs: variant bucket exceeds max_bucket={max_bucket} "
-                      f"(size="),
-                F.size("__ids").cast("string"),
-                F.lit(") — exact-pair contract violated; raise max_bucket or "
-                      "switch on_overflow='drop'"),
-            ),
-        ).isNull()
-    else:
-        size_ok = F.size("__ids") <= max_bucket
+    size_ok = F.assert_true(
+        F.size("__ids") <= max_bucket,
+        F.concat(
+            F.lit(f"fuzzy_pairs: variant bucket exceeds max_bucket={max_bucket} "
+                  f"(size="),
+            F.size("__ids").cast("string"),
+            F.lit(") — exact-pair contract violated; raise max_bucket"),
+        ),
+    ).isNull()
     buckets = (
         blocked.groupBy("__v")
         .agg(F.sort_array(F.collect_set("__fid")).alias("__ids"))

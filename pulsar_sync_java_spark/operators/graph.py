@@ -311,7 +311,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
-    release_cache: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list (src, dst) —
     the iterative-algorithm family member of the engine (authority /
@@ -389,15 +388,6 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
             ).alias("rank"),
         )
-    if release_cache:
-        # materialize the node-sized result (localCheckpoint severs the
-        # lineage that references the cached tables), then release both
-        # cache entries — the posture for repeated sweeps over DISTINCT
-        # graphs, where plan-matched cache reuse never kicks in and the
-        # entries would otherwise accumulate in executor memory
-        ranks = ranks.localCheckpoint()
-        nodes.unpersist()
-        ed.unpersist()
     return ranks
 
 
@@ -409,18 +399,13 @@ def tree_roots(
     node: str = "node",
     parent: str = "parent",
     max_depth: int | None = None,
-    release_cache: bool = False,
 ) -> DataFrame:
     """Root and depth of every node in a forest — the distributed
     answer to a recursive CTE (Spark has none).  Returns
-    (node, root, depth).
-
-    ``release_cache=True`` checkpoints the node-sized result and
-    releases the persisted parent/state tables (pagerank's posture for
-    sweeps over DISTINCT forests) — at the cost of EAGER evaluation, so
-    the default stays lazy: q_tree_ancestors keeps the single lazy
-    D-join plan (plan-asserted) and relies on plan-matched cache reuse
-    across repeated invocations over the same forest.
+    (node, root, depth).  The persisted parent/state tables stay cached:
+    q_tree_ancestors keeps the single lazy D-join plan (plan-asserted)
+    and relies on plan-matched cache reuse across repeated invocations
+    over the same forest.
 
     `parents` lists (node, parent) edges, one row per non-root node;
     roots are nodes never appearing as a child.  Two regimes, chosen by
@@ -493,20 +478,9 @@ def tree_roots(
                     seg_cache.unpersist()
                 seg_cache = state
                 joins_in_seg = 0
-        out = state.select(
+        return state.select(
             "node", F.col("anc").alias("root"), F.col("d").alias("depth")
         )
-        if release_cache:
-            # same posture as pagerank(release_cache=True): checkpoint
-            # the node-sized result (severing the lineage that refers
-            # to the cached parent table), then release the entry so
-            # repeated sweeps over DISTINCT forests don't accumulate
-            # cached tables in executor memory
-            out = out.localCheckpoint()
-            up.unpersist()
-            if seg_cache is not None:
-                seg_cache.unpersist()
-        return out
 
     state = state.persist()
     n = state.count()
@@ -542,16 +516,11 @@ def tree_roots(
             "tree_roots: no fixpoint after ceil(log2(n))+1 pointer-doubling "
             "rounds — the parent relation contains a cycle (not a forest)"
         )
-    out = state.select("node", F.col("anc").alias("root"), F.col("d").alias("depth"))
-    if release_cache:
-        out = out.localCheckpoint()
-        state.unpersist()
-    return out
+    return state.select("node", F.col("anc").alias("root"), F.col("d").alias("depth"))
 
 
 def count_triangles(
     edges: DataFrame,
-    max_degree: int | None = None,
     pre_normalized: bool = False,
 ) -> DataFrame:
     """Exact triangle count of an undirected simple graph, degree-
@@ -573,9 +542,7 @@ def count_triangles(
     equi-joins back onto the edges (node-sized — deliberately NOT
     broadcast-hinted; AQE converts them at small scale and they ride
     sort-merge at 10^9 nodes), the wedge self-join on the pivot node,
-    and the closing semi-check.  `max_degree` (optional) raises loudly if any
-    ORIENTED out-degree still exceeds the bound — the skew tripwire
-    idiom (operators/fuzzy.py max_bucket).
+    and the closing semi-check.
 
     `pre_normalized=True` declares the input ALREADY a simple-graph
     edge set — distinct rows with src < dst (src != dst implied) — and
@@ -635,21 +602,6 @@ def count_triangles(
         F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
     ).persist()
-    if max_degree is not None:
-        hot = (
-            oriented.groupBy("lo")
-            .agg(F.count(F.lit(1)).alias("od"))
-            .filter(F.col("od") > max_degree)
-            .limit(1)
-            .collect()
-        )
-        if hot:
-            raise ValueError(
-                f"count_triangles: oriented out-degree {hot[0]['od']} of node "
-                f"{hot[0]['lo']} exceeds max_degree={max_degree} — the graph "
-                "is denser than the declared bound; raise max_degree or "
-                "pre-filter hub nodes"
-            )
     # wedges (m, c) pivoting on lo: each unordered out-neighbor pair
     # once, via the m < c id order
     o1 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("m"))

@@ -18,9 +18,7 @@ Scale shape (100 TB base, CDC-batch-sized changes): the base is
 LEFT ANTI joined against the broadcast touched-key set and unioned
 with the upsert rows — the base never shuffles and never sorts; cost
 is one scan of the base plus a broadcast build of the (small) change
-batch.  With `broadcast_changes=False` (a backfill-sized change set)
-both sides hash-shuffle on the key instead — same result, one
-exchange per side.
+batch.
 """
 
 from __future__ import annotations
@@ -86,7 +84,6 @@ def merge_apply(
     changes: DataFrame,
     key_cols: list[str],
     op_col: str = "op",
-    broadcast_changes: bool = True,
     validate_ops: bool = True,
 ) -> DataFrame:
     """Apply a classified change feed to a keyed snapshot.
@@ -122,8 +119,6 @@ def merge_apply(
     touched = changes.filter(F.col(op_col) != "unchanged").select(
         *[F.col(k) for k in key_cols]
     )
-    if broadcast_changes:
-        touched = F.broadcast(touched)
-    kept = base.join(touched, key_cols, "left_anti")
+    kept = base.join(F.broadcast(touched), key_cols, "left_anti")
     upserts = changes.filter(F.col(op_col).isin("insert", "update")).select(*out_cols)
     return kept.select(*out_cols).unionByName(upserts)

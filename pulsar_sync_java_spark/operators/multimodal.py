@@ -3,10 +3,12 @@ columns with typed metadata, processed by Arrow-batched Pandas
 iterators.
 
 The Spark-side architecture here is REAL and tested — schema contract,
-mapInPandas batch shape, partitioning discipline; only the codec call
-itself is stubbed (`decode_image` raises NotImplementedError unless the
-deterministic fake is requested), since no image/audio library ships in
-this container.  Swapping the stub for PIL/ffmpeg changes one function.
+mapInPandas batch shape, partitioning discipline.  The codec itself is
+a deterministic stand-in: `decode_image` derives pseudo-metadata from
+the payload bytes, and an audio payload of n bytes reads as n // 8 ms,
+so every query built on it is replayable by the SQL oracle.  A real
+codec (PIL/ffmpeg) would replace `decode_image` and the audio duration
+expression.
 
 Scale notes: payloads ride as BinaryType so Parquet stores them inline
 with the row (no small-file side-channel); mapInPandas streams Arrow
@@ -25,11 +27,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, payload binary, "
-    "meta map<string,string>"
-)
 
 FEATURE_SCHEMA = (
     "doc_id long, media_type string, n_bytes long, "
@@ -51,36 +48,10 @@ def attach_payload(documents: DataFrame, media_type: str = "image") -> DataFrame
     )
 
 
-def decode_image(payload: bytes, *, fake: bool = False) -> dict[str, Any]:
-    """Codec boundary.
-
-    With ``fake=True`` (the oracle path), returns deterministic
-    pseudo-metadata derived only from the byte content (stable across
-    engines/runs), keeping the full pipeline testable end-to-end.
-
-    With ``fake=False``, decodes with Pillow when it is importable
-    (width/height from the real header, n_frames for multi-frame
-    formats like GIF); without an imaging library this raises — the
-    production hook point stays a one-function swap.
-    """
-    if not fake:
-        try:
-            import io
-
-            from PIL import Image
-        except ImportError as exc:  # no imaging library in this env
-            raise NotImplementedError(
-                "image decoding requires an imaging library (Pillow); "
-                "install one — the Spark plumbing around this function "
-                "is complete and tested via the deterministic fake"
-            ) from exc
-        with Image.open(io.BytesIO(payload)) as img:
-            return {
-                "n_bytes": len(payload),
-                "width": int(img.width),
-                "height": int(img.height),
-                "n_frames": int(getattr(img, "n_frames", 1)),
-            }
+def decode_image(payload: bytes) -> dict[str, Any]:
+    """Codec boundary: deterministic pseudo-metadata derived only from
+    the byte content (stable across engines and runs), so the whole
+    pipeline is testable end to end and its oracle can replay it."""
     n = len(payload)
     return {
         "n_bytes": n,
@@ -90,7 +61,7 @@ def decode_image(payload: bytes, *, fake: bool = False) -> dict[str, Any]:
     }
 
 
-def extract_media_features(media: DataFrame, fake_decode: bool = True) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: Arrow batches in, feature rows
     out.  The pandas code is the only Python in the pipeline (this is
     the sanctioned slow path — a codec cannot be a Catalyst expression).
@@ -106,7 +77,7 @@ def extract_media_features(media: DataFrame, fake_decode: bool = True) -> DataFr
         import hashlib
 
         for pdf in it:
-            feats = [decode_image(p, fake=fake_decode) for p in pdf["payload"]]
+            feats = [decode_image(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -147,7 +118,6 @@ def resize_images(
     media: DataFrame,
     target_width: int = 224,
     target_height: int = 224,
-    fake_decode: bool = True,
 ) -> DataFrame:
     """Aspect-preserving fit-to-box resize plumbing (the standard
     vision-model preprocessing step).  The pixel resample itself is the
@@ -172,7 +142,7 @@ def resize_images(
         }
         for pdf in it:
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = decode_image(payload, fake=fake_decode)
+                meta = decode_image(payload)
                 w, h = meta["width"], meta["height"]
                 nw, nh = fit_box(w, h, target_width, target_height)
                 rows["doc_id"].append(doc_id)
@@ -189,16 +159,7 @@ def resize_images(
     return media.mapInPandas(batches, schema=RESIZED_SCHEMA)
 
 
-AUDIO_WINDOW_SCHEMA = (
-    "doc_id long, duration_ms long, window_idx int, start_ms long"
-)
-
-_FAKE_SAMPLE_RATE = 16_000  # Hz; 2 pseudo-samples per payload byte
-
-
-def audio_windows(
-    media: DataFrame, window_ms: int = 250, fake_decode: bool = True
-) -> DataFrame:
+def audio_windows(media: DataFrame, window_ms: int = 250) -> DataFrame:
     """Fixed-length window explosion for audio-typed payloads — the
     audio twin of `frame_sample` (speech pipelines chunk waveforms into
     fixed windows before feature extraction).  The PCM decode is the
@@ -206,12 +167,6 @@ def audio_windows(
     so duration_ms = 2n*1000 // 16000 = n // 8 — integer math end to
     end, deterministic and oracle-checkable.  One output row per
     window; rows never shuffle (pure per-row explosion)."""
-    if not fake_decode:
-        raise NotImplementedError(
-            "audio decoding requires an audio library (soundfile/ffmpeg); "
-            "install one and replace this stub — the Spark plumbing "
-            "around it is complete"
-        )
     # 2n samples at 16 kHz -> n // 8 ms, as pure integer division
     # (`div`), so no floating point can creep into the geometry.
     duration_ms = F.expr("octet_length(payload) div 8").cast("long")
@@ -228,12 +183,12 @@ def audio_windows(
     ).select("doc_id", "duration_ms", F.col("window_idx").cast("int").alias("window_idx"), "start_ms")
 
 
-def frame_sample(media: DataFrame, every_nth: int = 4, fake_decode: bool = True) -> DataFrame:
+def frame_sample(media: DataFrame, every_nth: int = 4) -> DataFrame:
     """Frame-sampling plumbing for video-typed payloads: one output row
     per sampled frame index.  The decode is stubbed; the explode shape
     (row -> frames) and its partitioning cost model are the real
     architecture being exercised."""
-    feats = extract_media_features(media, fake_decode=fake_decode)
+    feats = extract_media_features(media)
     return feats.select(
         "doc_id",
         "checksum",

@@ -17,10 +17,10 @@ Re-expressed relationally, every level is the same operator:
   no-op because the second anti-join is empty — the relational
   equivalent of treating ConflictException as success
   (`PulsarTenantSyncManager.java:79`).
-- **Partition expansion** (R12): a partitioned topic with N partitions
-  materializes physical names `topic + '-partition-' + i`
-  (`PulsarPartitionedTopicSyncWorker.java:68-78`, suffix `Const.java:24`)
-  via explode(sequence()) — a generator, not a driver-side loop.
+- A topic row carries its partition count as payload; the engine
+  appends it as-is and derives no physical per-partition names (the
+  R12 `<topic>-partition-<i>` generator is the declared query
+  `q_partition_expand`, queries/reference.py).
 
 Scale: catalogs are small relative to data (millions of topics at
 most), but the same anti-join plan holds at any size — Spark picks
@@ -33,11 +33,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-# `Const.java:24` — the reserved suffix separating logical partitioned
-# topics from their physical per-partition topics.
-PARTITION_SUFFIX = "-partition-"
 
 TENANT_KEY = ["tenant"]
 NAMESPACE_KEY = ["tenant", "namespace"]
@@ -51,7 +46,6 @@ class CatalogDiff:
     tenants: DataFrame
     namespaces: DataFrame
     topics: DataFrame
-    partitions: DataFrame  # physical per-partition topic names
 
 
 def missing(src: DataFrame, dst: DataFrame, key: list[str]) -> DataFrame:
@@ -59,41 +53,6 @@ def missing(src: DataFrame, dst: DataFrame, key: list[str]) -> DataFrame:
     insert set).  Payload columns (policies, properties, partitions)
     ride along from src, mirroring create-with-payload (R6/R9)."""
     return src.join(dst.select(*key), on=key, how="left_anti")
-
-
-def expand_partitions(topics: DataFrame) -> DataFrame:
-    """R12: one row per physical partition of each partitioned topic.
-
-    `partitions <= 0` or null means non-partitioned -> no physical
-    expansion (the reference spawns a direct worker instead,
-    `PulsarTopicSyncManager.java:96-101`).
-    """
-    n = F.col("partitions")
-    return (
-        topics.filter(n.isNotNull() & (n > 0))
-        .select(
-            "tenant",
-            "namespace",
-            "topic",
-            F.explode(F.sequence(F.lit(0), n - 1)).alias("partition_idx"),
-        )
-        .select(
-            "tenant",
-            "namespace",
-            F.concat(
-                F.col("topic"), F.lit(PARTITION_SUFFIX), F.col("partition_idx")
-            ).alias("partition_topic"),
-            "partition_idx",
-        )
-    )
-
-
-def non_partitioned(topics: DataFrame) -> DataFrame:
-    """R10: the reference lists plain topics and *filters out* names
-    containing '-partition' so physical partitions of partitioned
-    topics are not re-created as plain topics
-    (`PulsarTopicSyncManager.java:67-74`)."""
-    return topics.filter(~F.col("topic").contains(PARTITION_SUFFIX.rstrip("-")))
 
 
 def diff_catalogs(
@@ -104,9 +63,9 @@ def diff_catalogs(
     dst_namespaces: DataFrame,
     dst_topics: DataFrame,
 ) -> CatalogDiff:
-    """The full control-plane tick: three leveled anti-joins plus
-    partition expansion — what the reference does with four manager
-    classes and a 10-thread pool, as one declarative plan."""
+    """The full control-plane tick: three leveled anti-joins — what the
+    reference does with four manager classes and a 10-thread pool, as
+    one declarative plan."""
     new_tenants = missing(src_tenants, dst_tenants, TENANT_KEY)
     new_namespaces = missing(src_namespaces, dst_namespaces, NAMESPACE_KEY)
     new_topics = missing(src_topics, dst_topics, TOPIC_KEY)
@@ -114,5 +73,4 @@ def diff_catalogs(
         tenants=new_tenants,
         namespaces=new_namespaces,
         topics=new_topics,
-        partitions=expand_partitions(new_topics),
     )

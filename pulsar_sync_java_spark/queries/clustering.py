@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.functions.numeric import dec_arr_sum
 from pulsar_sync_java_spark.operators.graph import connected_components
-from pulsar_sync_java_spark.queries import query, stats
+from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.sources.tables import load_table
 
 _K = 8
@@ -343,7 +343,6 @@ def derive_semdedup_dials(
 def kmeans_assignments(
     e: DataFrame,
     sample_pct: int = 100,
-    seed_salt: int = 0,
     k: int = _K,
     init: str = "id_lt_k",
     impl: str = "auto",
@@ -397,20 +396,20 @@ def kmeans_assignments(
       K x D literal plan would bloat Catalyst analysis, and the
       crossJoin formulation's shuffles amortize at that K.
 
-    `impl` forces a path ("expr" / "df"; default "auto" = the K rule)
-    — the equality of the two paths is property-pinned in
-    tests/test_new_query_props.py."""
+    `impl` forces a path ("expr" / "df"; default "auto" = the K rule;
+    a forced "expr" above `_EXPR_MAX_K` raises) — the equality of the
+    two paths is property-pinned in tests/test_new_query_props.py."""
     from pulsar_sync_java_spark.operators.util import spread
 
     use_expr = (impl == "expr") or (impl == "auto" and k <= _EXPR_MAX_K)
-    # the expr path's size map is one literal CASE arm per cluster
-    if use_expr and k > stats._LITERAL_CASE_MAX_GROUPS:
+    # the expr path inlines K centroid literals and one literal CASE
+    # size-map arm per cluster; `auto` never takes it above the bound
+    if use_expr and k > _EXPR_MAX_K:
         raise ValueError(
-            f"kmeans_assignments: k={k} exceeds "
-            f"_LITERAL_CASE_MAX_GROUPS={stats._LITERAL_CASE_MAX_GROUPS}; the "
-            "literal CASE size map is for a handful of clusters — use "
-            "impl='df', which joins the cluster sizes back with a "
-            "broadcast join"
+            f"kmeans_assignments: k={k} exceeds _EXPR_MAX_K={_EXPR_MAX_K}; "
+            "the literal centroid and CASE size map are for a handful of "
+            "clusters — use impl='df', which joins the cluster sizes back "
+            "with a broadcast join"
         )
     # Every Lloyd pass is a CPU-bound per-row projection (K decimal-
     # exact distance folds per vector); a single-split scan would run
@@ -419,7 +418,7 @@ def kmeans_assignments(
     # K=8 argmin pass drops 1.18s -> 0.45s under the spread exchange.
     e = spread(e)
     if use_expr:
-        return _kmeans_assignments_expr(e, sample_pct, seed_salt, k, init)
+        return _kmeans_assignments_expr(e, sample_pct, k, init)
     if init == "k_smallest":
         from pyspark.sql import Window
 
@@ -454,7 +453,7 @@ def kmeans_assignments(
             e
             if sample_pct >= 100
             else e.filter(
-                _mb_bucket(F.col("vec_id"), seed_salt + it) < sample_pct
+                _mb_bucket(F.col("vec_id"), it) < sample_pct
             )
         )
         assign = _assign(batch, cent)
@@ -469,7 +468,6 @@ def kmeans_assignments(
 def _kmeans_assignments_expr(
     e: DataFrame,
     sample_pct: int,
-    seed_salt: int,
     k: int,
     init: str,
 ) -> DataFrame:
@@ -507,7 +505,7 @@ def _kmeans_assignments_expr(
             e
             if sample_pct >= 100
             else e.filter(
-                _mb_bucket(F.col("vec_id"), seed_salt + it) < sample_pct
+                _mb_bucket(F.col("vec_id"), it) < sample_pct
             )
         )
         cent_rows = _update_rows(batch, cent_rows)

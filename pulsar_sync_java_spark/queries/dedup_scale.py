@@ -790,7 +790,7 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python path is oracle-checkable — the codec swap-in point is
     operators/multimodal.py:decode_image."""
     d = load_table(spark, sf_dir, "documents")
-    return extract_media_features(attach_payload(d), fake_decode=True)
+    return extract_media_features(attach_payload(d))
 
 
 # Incremental (batch-vs-corpus) dedup oracle: the same portable

@@ -567,9 +567,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cache posture: the persisted node/out-degree tables are REUSED by
     Spark's plan-matched cache across repeated runs over the same
     graph (one bounded entry pair per sf_dir — the declared
-    steady-state shape, like the signature caches).  Sweeps over many
-    DISTINCT graphs should call pagerank(..., release_cache=True),
-    which checkpoints the node-sized result and unpersists both."""
+    steady-state shape, like the signature caches).  A caller sweeping
+    many DISTINCT graphs owns their release (spark.catalog.clearCache,
+    or unpersist after materializing the ranks)."""
     li = load_table(spark, sf_dir, "lineitem")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
     fwd = pairs.select(
@@ -705,15 +705,14 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join instead of the all-pairs nested loop the levenshtein
     predicate would otherwise plan.  Exact verify makes false
     candidates impossible; at distance <= 1 the blocking provably
-    misses nothing.  The oracle is the plain quadratic join — it cannot
-    mirror the skew guard, so on_overflow='error' makes a first-ever
-    hot variant bucket fail THIS query loudly rather than silently
-    diverge from the oracle (the guard has never fired at tested SFs;
-    customer names are near-unique)."""
+    misses nothing.  A first-ever hot variant bucket fails THIS query
+    loudly (fuzzy_pairs raises over its max_bucket cap) rather than
+    silently diverge from the quadratic oracle (the guard has never
+    fired at tested SFs; customer names are near-unique)."""
     from pulsar_sync_java_spark.operators.fuzzy import fuzzy_pairs
 
     c = load_table(spark, sf_dir, "customer")
-    return fuzzy_pairs(c, "c_custkey", "c_name", on_overflow="error").select(
+    return fuzzy_pairs(c, "c_custkey", "c_name").select(
         "id_a", "id_b", F.col("distance").cast("int").alias("distance")
     )
 

@@ -104,7 +104,6 @@ def q_cursor_translate(spark: SparkSession, sf_dir: str) -> DataFrame:
         on="ts",
         by="user_id",
         right_tiebreak=["map_event_id"],
-        suffix="",
     )
     return resolved.select(
         "user_id",

@@ -939,11 +939,6 @@ def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------- MAD outlier detection
 
 _MAD_K = 5  # exact-binary multiplier for the outlier fence
-# The largest number of groups a query inlines as literal CASE arms
-# (one arm per driver-collected row) — the kmeans size map's clusters
-# (queries/clustering.py): the lookup is for a handful of groups, not a
-# join replacement for high-cardinality keys.
-_LITERAL_CASE_MAX_GROUPS = 256
 
 
 _MAD_SQL = f"""

@@ -131,10 +131,8 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     bench = d.filter(F.col("doc_id") % 19 == 0)
     train = d.filter(F.col("doc_id") % 19 != 0)
-    bsh = shingle_rows(bench, n=8, hashed=True).withColumnRenamed(
-        "doc_id", "bench_id"
-    )
-    tsh = shingle_rows(train, n=8, hashed=True)
+    bsh = shingle_rows(bench, n=8).withColumnRenamed("doc_id", "bench_id")
+    tsh = shingle_rows(train, n=8)
     return (
         tsh.join(F.broadcast(bsh), "shingle")
         .groupBy("doc_id")
@@ -452,7 +450,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc aggregate.  Same discipline as q_contamination: the corpus
     is shuffled once by shingle, never joined all-pairs."""
     d = load_table(spark, sf_dir, "documents")
-    sh = shingle_rows(d, n=5, hashed=True)
+    sh = shingle_rows(d, n=5)
     boiler = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__df"))

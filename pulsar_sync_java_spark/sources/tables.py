@@ -25,9 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def ensure_session_confs(spark: SparkSession) -> None:
     """Set the runtime SQL confs our semantics depend on, regardless of
     who built the session (the driver builds its own plain session).

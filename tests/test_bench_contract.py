@@ -127,8 +127,8 @@ PERSIST_ALLOWLIST = {
     ("operators/dedup.py", "_shingle_arrays"): 1,       # THE shared shingle-array projection (session-lifetime, plan-matched; serves overlap metrics + set sizes)
     ("operators/graph.py", "connected_components"): 2,  # forest iterates; intermediates released in-loop
     ("operators/graph.py", "count_triangles"): 2,       # edge + oriented-edge tables (session-lifetime)
-    ("operators/graph.py", "pagerank"): 2,              # edges + degree join (released: nodes/ed unpersist)
-    ("operators/graph.py", "tree_roots"): 4,            # pointer-doubling states; released in-loop / on finish
+    ("operators/graph.py", "pagerank"): 2,              # node table + degree join (session-lifetime, plan-matched)
+    ("operators/graph.py", "tree_roots"): 4,            # parent table + pointer-doubling states; superseded states released in-loop
     ("operators/heavy_hitters.py", "heavy_hitters"): 1, # MG summaries (tiny: P*(k+1) rows, session-lifetime)
     ("operators/similarity.py", "embedding_near_pairs"): 1,  # signature projection (session-lifetime)
     ("operators/similarity.py", "ann_calibration"): 1,  # exact top-k anchor (|Q| x k rows; 6 consumers)

@@ -1,19 +1,14 @@
 """Convergence tests for the catalog-diff plane — the reference's test
 strategy (arrange on src -> run -> assert dst converges; SURVEY.md §5)
 in batch form, plus the invariants its E2E tests leave untested:
-idempotency, additive-only, partition expansion fidelity.
+idempotency, additive-only, payload carry-over.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from pulsar_sync_java_spark.plans.catalog_diff import (
-    diff_catalogs,
-    expand_partitions,
-    non_partitioned,
-)
+from pulsar_sync_java_spark.plans.catalog_diff import diff_catalogs
 
 
 @pytest.fixture()
@@ -59,36 +54,6 @@ def test_diff_inserts_only_what_is_missing(spark, catalogs):
         ("acme", "prod"),
     }
     assert {r.topic for r in d.topics.collect()} == {"audit", "clicks"}
-
-
-def test_partition_expansion_matches_reference_naming(spark, catalogs):
-    """PulsarTopicSyncTest asserts physical partitions topic-partition-0/1
-    exist on dst (PulsarTopicSyncTest.java:52-59); same contract here."""
-    d = diff_catalogs(*catalogs)
-    parts = {(r.partition_topic, r.partition_idx) for r in d.partitions.collect()}
-    assert parts == {
-        ("clicks-partition-0", 0),
-        ("clicks-partition-1", 1),
-        ("clicks-partition-2", 2),
-    }
-    # non-partitioned topics expand to nothing
-    assert expand_partitions(
-        d.topics.filter(~F.col("partitioned"))
-    ).count() == 0
-
-
-def test_partition_name_filter(spark):
-    """R10: physical partition names never re-enter the plain-topic
-    plane (PulsarTopicSyncManager.java:72-74)."""
-    topics = spark.createDataFrame(
-        [
-            ("t", "ns", "plain", None, False),
-            ("t", "ns", "orders-partition-0", None, False),
-        ],
-        "tenant string, namespace string, topic string, partitions int, partitioned boolean",
-    )
-    kept = [r.topic for r in non_partitioned(topics).collect()]
-    assert kept == ["plain"]
 
 
 def test_apply_is_idempotent_and_additive(spark, catalogs):

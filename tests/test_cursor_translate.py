@@ -82,14 +82,6 @@ def test_empty_mapping_yields_null_not_error(spark):
     assert len(out) == 1 and out[0].translated_id is None
 
 
-def test_asof_strict_excludes_equal_key(spark):
-    left = spark.createDataFrame([(1, 10, "probe")], "k long, t long, tag string")
-    right = spark.createDataFrame([(1, 10, "exact"), (1, 9, "before")], "k long, t long, v string")
-    incl = asof_join(left, right, on="t", by="k").collect()[0]
-    strict = asof_join(left, right, on="t", by="k", strict=True).collect()[0]
-    assert incl.v == "exact" and strict.v == "before"
-
-
 def test_asof_tiebreak_deterministic(spark):
     left = spark.createDataFrame([(1, 10)], "k long, t long")
     right = spark.createDataFrame(
@@ -100,9 +92,9 @@ def test_asof_tiebreak_deterministic(spark):
 
 
 def test_asof_join_forward_matches_brute_force(spark):
-    """direction='forward' must attach the SMALLEST right `on` >= left's
-    (> when strict), per key — checked against a brute-force range-join
-    formulation on real event data."""
+    """direction='forward' must attach the SMALLEST right `on` >= left's,
+    per key — checked against a brute-force range-join formulation on
+    real event data."""
     ev = load_table(spark, SF_DIR, "events")
     left = ev.select(
         (F.col("user_id") % 5).alias("k"),
@@ -115,22 +107,19 @@ def test_asof_join_forward_matches_brute_force(spark):
         (F.unix_micros("ts") + 17).alias("t"),
     ).limit(200)
 
-    for strict in (False, True):
-        got = {
-            (r.k, r.lid): r.rid
-            for r in asof_join(
-                left, right, on="t", by="k",
-                right_tiebreak=["rid"], strict=strict,
-                direction="forward",
-            ).collect()
-        }
-        cmp = F.col("r.t") > F.col("l.t") if strict else F.col("r.t") >= F.col("l.t")
-        brute = (
-            left.alias("l")
-            .join(right.alias("r"), (F.col("l.k") == F.col("r.k")) & cmp, "left")
-            .groupBy("l.k", "l.lid")
-            .agg(F.min_by(F.col("r.rid"), F.struct(F.col("r.t"), -F.col("r.rid"))).alias("rid"))
-        )
-        expected = {(r.k, r.lid): r.rid for r in brute.collect()}
-        assert got == expected, f"strict={strict}"
-        assert any(v is not None for v in got.values())
+    got = {
+        (r.k, r.lid): r.rid
+        for r in asof_join(
+            left, right, on="t", by="k", right_tiebreak=["rid"], direction="forward"
+        ).collect()
+    }
+    cmp = F.col("r.t") >= F.col("l.t")
+    brute = (
+        left.alias("l")
+        .join(right.alias("r"), (F.col("l.k") == F.col("r.k")) & cmp, "left")
+        .groupBy("l.k", "l.lid")
+        .agg(F.min_by(F.col("r.rid"), F.struct(F.col("r.t"), -F.col("r.rid"))).alias("rid"))
+    )
+    expected = {(r.k, r.lid): r.rid for r in brute.collect()}
+    assert got == expected
+    assert any(v is not None for v in got.values())

@@ -183,7 +183,7 @@ def test_run_once_fails_on_replication_overrun(spark, tmp_path):
     engine = SyncEngine(spark, str(tmp_path / "src"), str(tmp_path / "dst"))
     q = StuckQuery()
     engine.sync_catalog_once = lambda: {}
-    engine.start_replication = lambda available_now=True: q
+    engine.start_replication = lambda: q
     engine.sync_cursors_once = lambda: pytest.fail("cursor tick ran after an overrun")
     with pytest.raises(TimeoutError, match="replication did not finish"):
         engine.run_once()
@@ -244,6 +244,23 @@ def test_catalog_diff_is_bounded(spark, tmp_path):
     assert _files_under(dst) == before
 
 
+class _StillRunning:
+    """A real replication run that is still running when the catalog
+    tick fails: its wait returns only once it has been stopped, however
+    fast the stream itself finishes."""
+
+    def __init__(self, query) -> None:
+        self._query, self._stopped = query, threading.Event()
+
+    def awaitTermination(self, timeout=None):  # noqa: N802 - pyspark API name
+        self._stopped.wait(timeout)
+        return self._query.awaitTermination(timeout)
+
+    def stop(self):
+        self._query.stop()
+        self._stopped.set()
+
+
 def test_run_once_stops_stream_when_catalog_tick_raises(spark, clusters):
     """The catalog tick runs while the replication stream copies the
     delta; if it raises, the stream is stopped and the error re-raised,
@@ -253,10 +270,10 @@ def test_run_once_stops_stream_when_catalog_tick_raises(spark, clusters):
     order, queries = [], []
     start_replication = engine.start_replication
 
-    def recording_start(available_now=True):
+    def recording_start():
         order.append("replication")
-        queries.append(start_replication(available_now))
-        return queries[-1]
+        queries.append(start_replication())
+        return _StillRunning(queries[-1])
 
     def failing_catalog():
         order.append("catalog")
@@ -302,7 +319,7 @@ def _stub_ticks(engine, catalog, cursors, query=None):
     engine.sync_catalog_once = catalog
     engine.sync_cursors_once = cursors
     if query is not None:
-        engine.start_replication = lambda available_now=True: query
+        engine.start_replication = lambda: query
 
 
 def test_run_once_overlaps_catalog_and_cursor_ticks(spark, tmp_path):
@@ -402,9 +419,7 @@ def test_run_once_leaves_no_thread_or_stream(spark, request, tmp_path, path):
     _stub_ticks(engine, catalog, cursors, None if real_stream else _FinishedQuery())
     if path == "overrun":
         start_replication = engine.start_replication
-        engine.start_replication = lambda available_now=True: _Overrun(
-            start_replication(available_now), stream_waited
-        )
+        engine.start_replication = lambda: _Overrun(start_replication(), stream_waited)
     before = set(threading.enumerate())
     want = {
         "converges": None,
@@ -621,7 +636,7 @@ def test_control_plane_write_back_is_bounded(spark, clusters):
     )
     # translation samples the replicated history (a no-op once the
     # module's clusters have converged)
-    engine.start_replication(available_now=True).awaitTermination(600)
+    engine.start_replication().awaitTermination(600)
     with pytest.raises(ValueError, match="control_plane_max_rows") as e:
         engine.sync_cursors_once()
     # the bound names the remedy, not just the failure
@@ -646,7 +661,7 @@ def test_cursor_advancement_opt_in(spark, clusters):
         "event_time", F.col("event_time") + F.expr("INTERVAL 2 HOURS")
     ).withColumn("entry_id", F.col("entry_id") + F.lit(1_000_000))
     newer.write.mode("append").parquet(msgs_path)
-    engine.start_replication(available_now=True).awaitTermination(600)
+    engine.start_replication().awaitTermination(600)
 
     # src cursors jump to each partition's new latest message
     sub_path = os.path.join(src, "subscriptions.parquet")
@@ -709,7 +724,7 @@ def test_cursor_tick_results_stay_jvm_local(spark, clusters):
     Python worker to unpickle the rows)."""
     src, dst = clusters
     engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
-    engine.start_replication(available_now=True).awaitTermination(600)
+    engine.start_replication().awaitTermination(600)
     collect, collected = engine._collect_control_plane, []
 
     def checked_collect(df, what):
@@ -751,7 +766,7 @@ def test_one_tick_creates_and_advances_with_one_write(spark, clusters, monkeypat
     ).withColumn("entry_id", F.col("entry_id") + F.lit(10_000_000)).write.mode(
         "append"
     ).parquet(msgs_path)
-    SyncEngine(spark, src, dst).start_replication(available_now=True).awaitTermination(600)
+    SyncEngine(spark, src, dst).start_replication().awaitTermination(600)
     head = {
         (r.topic, r.partition): (r.s.ts, r.s.event_id)
         for r in spark.read.parquet(msgs_path)

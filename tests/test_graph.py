@@ -199,33 +199,6 @@ def test_pagerank_empty_edges_returns_empty(spark):
     assert out.count() == 0
 
 
-def test_pagerank_release_cache_frees_persisted_tables(spark):
-    """release_cache=True must leave NO new cached relations behind
-    (the distinct-graph sweep posture) while returning the same ranks."""
-    from pulsar_sync_java_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
-    )
-    kept = {r["node"]: r["rank"] for r in pagerank(edges, iterations=3).collect()}
-
-    def n_cached() -> int:
-        # materialized cache entries visible to the storage layer (a
-        # checkpointed plan never mentions InMemory, so asserting on the
-        # RESULT plan would pass even if unpersist were deleted — count
-        # what is actually held instead)
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-
-    before = n_cached()
-    freed_df = pagerank(edges, iterations=3, release_cache=True)
-    freed = {r["node"]: r["rank"] for r in freed_df.collect()}
-    assert freed == pytest.approx(kept)
-    # the released run may leave only its localCheckpoint RDD behind;
-    # a broken release would also leave the nodes + out-degree caches
-    # (two more entries, both materialized by the collect)
-    assert n_cached() <= before + 1, (before, n_cached())
-
-
 def test_shard_pack_prefix_sum_matches_naive_cumsum(spark):
     """Property test for the two-level distributed prefix sum behind
     q_shard_pack (queries/training.py): on random integer sizes the

@@ -49,13 +49,15 @@ CASES = [
 
 
 @pytest.mark.parametrize("old_rows,new_rows", CASES)
-@pytest.mark.parametrize("bcast", [True, False])
-def test_roundtrip_identity(spark, old_rows, new_rows, bcast):
+@pytest.mark.parametrize("validate", [True, False])
+def test_roundtrip_identity(spark, old_rows, new_rows, validate):
+    """A keyed_diff feed applies back to the target, screened or not
+    (q_merge_apply applies it unscreened)."""
     schema = "k long, v string"
     old = spark.createDataFrame(old_rows, schema)
     new = spark.createDataFrame(new_rows, schema)
     diff = keyed_diff(old, new, ["k"])
-    applied = merge_apply(old, diff, ["k"], broadcast_changes=bcast)
+    applied = merge_apply(old, diff, ["k"], validate_ops=validate)
     assert rows(applied) == rows(new)
     assert applied.columns == old.columns
 
@@ -114,10 +116,9 @@ def test_unknown_or_null_op_refused(spark):
 
 
 def test_apply_plan_never_shuffles_base(spark, tmp_path):
-    """The 100 TB contract: with broadcast_changes=True the base side
-    reaches the anti join scan-direct — no Exchange, no Sort anywhere
-    in the apply plan (the union + broadcast anti preserve base
-    partitioning)."""
+    """The base side reaches the broadcast anti join scan-direct — no
+    Exchange, no Sort anywhere in the apply plan (the union + broadcast
+    anti preserve base partitioning)."""
     base = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     )

@@ -1060,18 +1060,19 @@ def test_mad_outliers_many_event_types(spark, tmp_path):
 
 
 def test_kmeans_size_map_guards_literal_case_cardinality(spark, monkeypatch):
-    """More clusters than the literal-CASE bound fail loudly on the expr
-    path before any Spark job runs, and name the broadcast-join path."""
-    from pulsar_sync_java_spark.queries import stats
+    """More clusters than the expr path's bound fail loudly when that
+    path is forced, before any Spark job runs, and name the
+    broadcast-join path."""
+    from pulsar_sync_java_spark.queries import clustering
+    from pulsar_sync_java_spark.sources.tables import load_table
 
-    monkeypatch.setattr(stats, "_LITERAL_CASE_MAX_GROUPS", 4)
+    monkeypatch.setattr(clustering, "_EXPR_MAX_K", 4)
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     sc = spark.sparkContext
     sc.setJobGroup("kmeans-case-guard", "guard must not run jobs")
     try:
-        with pytest.raises(
-            ValueError, match="_LITERAL_CASE_MAX_GROUPS=4"
-        ) as e:
-            _QUERIES["q_kmeans_assign"](spark, SF_DIR)
+        with pytest.raises(ValueError, match="_EXPR_MAX_K=4") as e:
+            clustering.kmeans_assignments(emb, k=8, impl="expr")
     finally:
         sc.setJobGroup(None, None)
     assert "broadcast join" in str(e.value)

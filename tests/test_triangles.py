@@ -1,6 +1,5 @@
 """count_triangles: exactness on known graphs, orientation invariance,
-hub tripwire, input normalization, and the pre_normalized
-orientation guard."""
+input normalization, and the pre_normalized orientation guard."""
 
 from __future__ import annotations
 
@@ -41,16 +40,6 @@ def test_k5_minus_edge(spark):
     k5.remove((0, 1))
     # K5 has 10 triangles; removing one edge kills the 3 through it
     assert run(spark, k5) == (5, 9, 7)
-
-
-def test_max_degree_tripwire(spark):
-    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
-    # K4 degrees tie at 3, so orientation falls back to id order:
-    # oriented out-degrees are 3,2,1,0 — a cap of 1 must trip, a
-    # generous cap must not.
-    with pytest.raises(ValueError, match="max_degree"):
-        run(spark, k4, max_degree=1)
-    assert run(spark, k4, max_degree=16) == (4, 6, 4)
 
 
 def test_pre_normalized_rejects_unoriented_edges(spark):

@@ -131,7 +131,7 @@ EXPECT = {
     "q_asof_forward": "forward as-of via the same union+window shape: ONE shuffle, no range-join explosion",
     "q_markov_transitions": "one (user,ts) window shuffle for the lag pairing; transition agg + normalization window run over pair-count rows",
     "q_tree_ancestors": "recursive-CTE class via bounded linear unroll: D chained left joins against the persisted parent table in ONE lazy plan",
-    "q_fuzzy_join": "deletion-variant Generate (variants xxhash64'd inside the fan-out, so the bucket shuffle carries (long, id) not strings) -> ONE bucket aggregate -> pair explosion; exact levenshtein verify is a post-join Filter; never NestedLoop; bucket overflow raises (on_overflow='error') instead of silently dropping, since the quadratic oracle cannot mirror a drop",
+    "q_fuzzy_join": "deletion-variant Generate (variants xxhash64'd inside the fan-out, so the bucket shuffle carries (long, id) not strings) -> ONE bucket aggregate -> pair explosion; exact levenshtein verify is a post-join Filter; never NestedLoop; bucket overflow raises at execution (the max_bucket cap), since the quadratic oracle cannot mirror a dropped bucket",
     "q_snapshot_diff": "CDC classification: one FullOuter sort-merge join on the key + a tiny per-class aggregate; both snapshot filters pushed to the scan",
     "q_trend_ols": "ONE partial+final moments aggregate (sums-row per type through the shuffle); OLS slope/intercept are per-group constant expressions",
     "q_kmeans_assign": "r13: joinless map-side argmin — Lloyd centroids collected per pass (MLlib shape) and re-attached as a literal least()/CASE projection; final plan = scan -> spread exchange -> project, zero Join nodes",
