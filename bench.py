@@ -24,6 +24,7 @@ import os
 import sys
 import time
 
+from pulsar_sync_java_spark.operators.util import census
 from pulsar_sync_java_spark.queries import all_queries
 from pulsar_sync_java_spark.session import get_spark
 
@@ -112,6 +113,8 @@ def main() -> None:
         "queries_median": medians,
         "runs_per_query": runs_per_query,
         "sf": sf_val,
+        # bytes each declared cache key holds after the whole suite
+        "cache": census(spark),
     }
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pulsar_sync_java_spark.operators.util import release
 from pulsar_sync_java_spark.sources.tables import load_table
 
 #: Gate bounds — each mirrors the margin its per-family test pins.
@@ -108,20 +109,13 @@ def calibration_report(
     # -- SimHash ------------------------------------------------------
     # materialize-and-release: the audit's two corpus-scale cached
     # frames must not outlive the collect in a long-lived scheduler
-    # session (r12 ADVICE)
-    sh_handles: list = []
+    # session, not even when the collect fails
     try:
         sh = simhash_calibration(
-            docs,
-            fingerprints=simhash_fingerprints,
-            cache_handles=sh_handles,
+            docs, fingerprints=simhash_fingerprints
         ).collect()
     finally:
-        # release even when the collect fails — a scheduler retrying
-        # past transient executor failures must not accumulate the
-        # very frames this mechanism exists to free
-        for h in sh_handles:
-            h.unpersist()
+        release("dedup.simhash_calibration")
     near = [r["exact_cos"] for r in sh if r["hamming"] <= 3]
     far = [r["exact_cos"] for r in sh if r["hamming"] > 3]
     sep = (

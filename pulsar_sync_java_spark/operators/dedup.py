@@ -33,6 +33,7 @@ from pulsar_sync_java_spark.functions.text import (
 )
 from pulsar_sync_java_spark.operators.util import (
     _spread_count,
+    cached,
     pair_structs,
     spread,
     spread_by,
@@ -88,26 +89,24 @@ def _shingle_arrays(
     n: int,
     hash_shingles: bool,
 ) -> DataFrame:
-    """The ONE persisted (id, __sh shingle-array) projection every
+    """The ONE cached (id, __sh shingle-array) projection every
     shingle consumer builds — byte-identical logical plan => ONE
     plan-matched cache entry shared across _shingle_overlap's two
     branches, both overlap metrics, `shingle_set_sizes`, and every
-    other query over the same corpus (q_dedup_cluster reuses it;
-    measured 2.6s -> 1.3s cold at sf0.1).  With `hash_shingles` the
-    xxhash64 runs INSIDE the persisted projection so the cache already
-    holds longs: explode, shuffle, and collect_list downstream never
-    touch a shingle string again.  Re-persisting an already-cached
-    plan is a CacheManager no-op (the 'already cached' warning), not a
-    second copy."""
+    other query over the same corpus (q_dedup_cluster reuses it).
+    With `hash_shingles` the xxhash64 runs INSIDE the cached
+    projection so the cache already holds longs: explode, shuffle, and
+    collect_list downstream never touch a shingle string again."""
     w = _shingle_width(df)
     ds = spread(df, width=w)
     toks = ds.select(F.col(id_col), tokens(text_col).alias("__toks"))
     sh_arr = shingles_from_tokens(F.col("__toks"), n)
     if hash_shingles:
         sh_arr = F.transform(sh_arr, lambda s: F.xxhash64(s))
-    return spread(
-        toks.select(F.col(id_col), sh_arr.alias("__sh")), width=w
-    ).persist()
+    return cached(
+        spread(toks.select(F.col(id_col), sh_arr.alias("__sh")), width=w),
+        "dedup.shingle_arrays",
+    )
 
 
 def shingle_set_sizes(
@@ -355,8 +354,8 @@ def lsh_candidate_pairs(
     in the two (column-pruned) lookup branches is cheaper at scale than
     amplifying the 64-long signature band-fold through the candidate
     shuffle.  A caller doing REPEATED lsh queries over one corpus
-    should `signatures.persist()` first — measured 1.7x on warm runs —
-    and owns the unpersist.
+    should cache `signatures` first (`operators/util.py:cached`, a
+    declared key) — measured 1.7x on warm runs.
 
     Shuffle discipline: the banded table carries ONLY (band, bucket,
     id) — exploding the full `num_hashes`-wide signature `bands` times
@@ -543,7 +542,6 @@ def simhash_calibration(
     max_hamming: int = 3,
     sample_k: int = 25,
     fingerprints: DataFrame | None = None,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Per-pair SimHash quality monitoring — the SimHash member of the
     calibration-twin family (q_sketch_calibration for MinHash,
@@ -580,29 +578,15 @@ def simhash_calibration(
     out by ONE document's token vocabulary (pairs x ~tokens/doc rows),
     never corpus x corpus.  One tokenize pass feeds counts and norms.
 
-    `cache_handles`, when a list, collects the two persisted frames so
-    a long-lived caller (calibration_report, which materializes the
-    result immediately) can `unpersist()` them after collection —
-    without it a session scheduling this audit per model-refresh
-    cadence accumulates executor storage memory indefinitely (r12
-    ADVICE).  The CLI/one-shot path may leave it None: session exit
-    releases the cache."""
-    # persist: the fingerprint frame feeds the pigeonhole pairing AND
-    # both per-pair signature lookups, the count frame feeds norms AND
-    # both sides of the dot join — without a cache the Arrow simhash
-    # kernel runs 3x and the tokenize 4x over the corpus (measured: 4
-    # ArrowEvalPython stages, 12 parquet scans -> 1 and ~4).  Both
-    # frames are corpus-row-scale (one long / token-count rows); at
-    # 100 TB the count frame is the posting-list index the engine
-    # already materializes to storage for BM25 — same artifact, same
-    # answer.
-    sims = (
+    A long-lived caller that materializes the result at once frees the
+    two cached frames with `release("dedup.simhash_calibration")`, as
+    calibration_report does."""
+    sims = cached(
         fingerprints
         if fingerprints is not None
-        else simhash64(df, id_col, text_col)
-    ).persist()
-    if cache_handles is not None:
-        cache_handles.append(sims)
+        else simhash64(df, id_col, text_col),
+        "dedup.simhash_calibration.fingerprints",
+    )
     near = simhash_near_pairs(sims, id_col, max_hamming).select(
         "doc_a", "doc_b"
     )
@@ -628,14 +612,13 @@ def simhash_calibration(
     )
     pairs = near.unionByName(bg).dropDuplicates(["doc_a", "doc_b"])
 
-    cnts = (
+    cnts = cached(
         spread(df)
         .select(F.col(id_col), F.explode(tokens(text_col)).alias("__t"))
         .groupBy(id_col, "__t")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    ).persist()
-    if cache_handles is not None:
-        cache_handles.append(cnts)
+        .agg(F.count(F.lit(1)).alias("__c")),
+        "dedup.simhash_calibration.token_counts",
+    )
     norms = cnts.groupBy(id_col).agg(
         F.sum(F.col("__c") * F.col("__c")).cast("long").alias("__n2")
     )

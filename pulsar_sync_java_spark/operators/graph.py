@@ -52,6 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pulsar_sync_java_spark.operators.util import cached
+
 _EDGE_SCHEMA = "src bigint, dst bigint"
 _LABEL_SCHEMA = "id bigint, label bigint"
 
@@ -275,17 +277,17 @@ def connected_components(
     for p in ladder:
         e = e.repartition(p).mapInPandas(_forest, schema=_EDGE_SCHEMA)
         last_p = p
-    # persist + count = the one evaluation of the upstream pair
-    # pipeline.  persist (not localCheckpoint) on purpose: Spark's cache
-    # manager matches logical plans, so repeated invocations of the same
-    # clustering reuse the materialized forest instead of re-running the
-    # pair pipeline, and identical plans share one cache entry.
-    e = e.persist()
+    # cache + count = the one evaluation of the upstream pair pipeline
+    # (a cache, not localCheckpoint: plan-matched, so repeat calls reuse it)
+    e = cached(e, "graph.connected_components.forest")
     cnt = e.count()
     # keep contracting while over budget and still shrinking materially
     p = max(last_p // 8, 1)
     while cnt > finish_budget and p > 1:
-        nxt = e.repartition(p).mapInPandas(_forest, schema=_EDGE_SCHEMA).persist()
+        nxt = cached(
+            e.repartition(p).mapInPandas(_forest, schema=_EDGE_SCHEMA),
+            "graph.connected_components.round",
+        )
         ncnt = nxt.count()
         if ncnt > 0.7 * cnt:  # at the forest floor (~nodes-1); stop
             nxt.unpersist()
@@ -321,12 +323,11 @@ def pagerank(
     onto the out-degree-annotated edges + ONE aggregate of the mass
     arriving at each destination — shuffle volume is edges then nodes,
     never rank-vector x rank-vector.  The out-degree edge table and the
-    node table are persisted (each feeds every iteration; uncached
-    they would re-derive from the source per iteration), but the rank
-    chain itself stays LAZY: each rank table is consumed exactly once
-    by the next iteration, so materializing it per iteration only adds
-    a Spark job — measured 3.2 s -> ~1 s at sf0.01 dropping the
-    per-iteration persist+count.  The whole run is ONE action over a
+    node table are cached, but the rank chain itself stays LAZY: each
+    rank table is consumed exactly once by the next iteration, so
+    materializing it per iteration only adds a Spark job — measured
+    3.2 s -> ~1 s at sf0.01 dropping the per-iteration persist+count.
+    The whole run is ONE action over a
     linear 5-join plan.  A caller unrolling many tens of iterations
     should localCheckpoint every ~10 to bound plan depth.
 
@@ -344,11 +345,11 @@ def pagerank(
     Dangling nodes (no out-edges) still receive mass but leak their
     own, matching the oracle's unrolled-CTE formulation.
     """
-    nodes = (
+    nodes = cached(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
+        .distinct(),
+        "graph.pagerank.nodes",
     )
     n = nodes.count()
     if n == 0:
@@ -358,14 +359,10 @@ def pagerank(
         nodes.unpersist()
         return out
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # nodes/ed stay persisted: the returned plan references them per
-    # iteration, and Spark's plan-matched cache REUSES these entries on
-    # repeated invocations over the same graph (bounded — one pair per
-    # distinct edge plan, not per call).  Callers sweeping many
-    # DISTINCT graphs own cache release (spark.catalog.clearCache or
-    # unpersist after materializing), same contract as the persisted
-    # signature tables in queries/dedup_scale.py.
-    ed = edges.join(deg, "src").persist()
+    # nodes/ed stay cached for the session: one pair per distinct edge
+    # plan, not per call.  Callers sweeping many DISTINCT graphs own
+    # the release (spark.catalog.clearCache after materializing).
+    ed = cached(edges.join(deg, "src"), "graph.pagerank.edges")
 
     base = (1.0 - damping) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
@@ -402,10 +399,7 @@ def tree_roots(
 ) -> DataFrame:
     """Root and depth of every node in a forest — the distributed
     answer to a recursive CTE (Spark has none).  Returns
-    (node, root, depth).  The persisted parent/state tables stay cached:
-    q_tree_ancestors keeps the single lazy D-join plan (plan-asserted)
-    and relies on plan-matched cache reuse across repeated invocations
-    over the same forest.
+    (node, root, depth).
 
     `parents` lists (node, parent) edges, one row per non-root node;
     roots are nodes never appearing as a child.  Two regimes, chosen by
@@ -414,7 +408,7 @@ def tree_roots(
     - ``max_depth`` given (org charts, category trees, heap-shaped ids
       — anything with a known shallow bound): LINEAR UNROLL.  Each of
       the D rounds advances every unresolved node one parent step via a
-      join against the persisted parent table.  For D <= 32 the state
+      join against the cached parent table.  For D <= 32 the state
       is referenced ONCE per round, so the whole walk is a single lazy
       D-join plan — no per-round caching, no extra actions (measured:
       the doubling variant spends ~5 s/round on cache+action overhead
@@ -431,10 +425,9 @@ def tree_roots(
       2^k-step ancestor; each round counts the rows that still moved
       and stops as soon as none did — ceil(log2(actual_depth)) rounds,
       not ceil(log2(n)): a billion-node forest of depth 10 converges
-      in 4 rounds instead of 30.  Each round's state is persisted
-      BEFORE the next references it twice, else the lazy plan doubles
-      per round.  Roots self-loop with distance 0, so both regimes
-      reach a fixed point instead of falling off the chain.  Input
+      in 4 rounds instead of 30; each round's state is cached.  Roots
+      self-loop with distance 0, so both regimes reach a fixed point
+      instead of falling off the chain.  Input
       containing a CYCLE (not a forest) cannot converge; the loop
       raises ``ValueError`` after the ceil(log2(n)) safety cap rather
       than returning garbage.
@@ -451,7 +444,10 @@ def tree_roots(
     )
 
     if max_depth is not None:
-        up = ch.select(F.col("node").alias("__p_node"), F.col("parent").alias("__p_parent")).persist()
+        up = cached(
+            ch.select(F.col("node").alias("__p_node"), F.col("parent").alias("__p_parent")),
+            "graph.tree_roots.parents",
+        )
         seg_cache: DataFrame | None = None
         joins_in_seg = 0
         total_rounds = max(0, max_depth - 1)
@@ -465,14 +461,11 @@ def tree_roots(
                 )
             )
             joins_in_seg += 1
-            # segment barrier: materialize the state so the NEXT join
-            # chain starts from an InMemoryRelation instead of nesting
-            # past the codegen recursion bound (StackOverflowError in
-            # the planning thread past ~130 chained joins, measured
-            # round 5).  Never fires for max_depth <= _UNROLL_MAX + 1,
-            # so the shallow path stays one lazy plan with no actions.
+            # segment barrier; never fires for max_depth <=
+            # _UNROLL_MAX + 1, so the shallow path stays one lazy plan
+            # with no actions
             if joins_in_seg >= _UNROLL_MAX and r < total_rounds - 1:
-                state = state.persist()
+                state = cached(state, "graph.tree_roots.segment")
                 state.count()
                 if seg_cache is not None:
                     seg_cache.unpersist()
@@ -482,7 +475,7 @@ def tree_roots(
             "node", F.col("anc").alias("root"), F.col("d").alias("depth")
         )
 
-    state = state.persist()
+    state = cached(state, "graph.tree_roots.state")
     n = state.count()
     # safety cap, NOT the iteration count: a forest converges (observes
     # a zero-moved round) within ceil(log2(n)) doubling rounds plus the
@@ -491,9 +484,8 @@ def tree_roots(
     converged = False
     for _ in range(cap):
         s, a = state.alias("s"), state.alias("a")
-        nxt = (
-            s.join(a, F.col("s.anc") == F.col("a.node"))
-            .select(
+        nxt = cached(
+            s.join(a, F.col("s.anc") == F.col("a.node")).select(
                 F.col("s.node").alias("node"),
                 F.col("a.anc").alias("anc"),
                 (F.col("s.d") + F.col("a.d")).alias("d"),
@@ -501,8 +493,8 @@ def tree_roots(
                 # self-loop; a round where NO row advances is the
                 # fixpoint — everyone's anc is already a root
                 (F.col("a.anc") != F.col("a.node")).alias("__moved"),
-            )
-            .persist()
+            ),
+            "graph.tree_roots.round",
         )
         moved = nxt.filter(F.col("__moved")).count()
         state.unpersist()
@@ -550,12 +542,9 @@ def count_triangles(
     inside the projection: a row with src >= dst (or a null endpoint)
     fails the query at execution, with no extra Spark job.
     Distinctness is not checked; it stays the caller's contract, as
-    does the caching posture: pass a PERSISTED frame (the
-    normalized table is consumed five times), e.g. an a<b filter over the
-    family-shared persisted symmetric edge table
-    (queries/extras.py:_copurchase_edges), so the operator reads one
-    shared cache entry instead of persisting a private duplicate of
-    the same pairs.
+    does caching: pass a cached frame, e.g. an a<b filter over the
+    shared edge table (queries/extras.py:_copurchase_edges), so the
+    operator reads one shared entry instead of a private duplicate.
 
     Returns one row: (n_nodes, n_edges, n_triangles).
     """
@@ -571,19 +560,14 @@ def count_triangles(
             .alias("b"),
         )
     else:
-        # the normalized edge table is consumed FIVE times (degrees,
-        # orientation, closing check, node/edge census) — persist it, or
-        # every consumer re-runs the upstream edge derivation (for the
-        # co-purchase graph, a fact-table self-join) from scratch; O(|E|)
-        # cache, the pagerank/dedup-cluster posture
-        e = (
+        e = cached(
             edges.select(
                 F.least("src", "dst").alias("a"),
                 F.greatest("src", "dst").alias("b"),
             )
             .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .persist()
+            .distinct(),
+            "graph.count_triangles.edges",
         )
     both = e.select(F.col("a").alias("node")).unionAll(
         e.select(F.col("b").alias("node"))
@@ -596,12 +580,13 @@ def count_triangles(
     lo_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    # both wedge legs read the oriented edges — persist so the degree
-    # join runs once, not per leg
-    oriented = ranked.select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).persist()
+    oriented = cached(
+        ranked.select(
+            F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
+            F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
+        ),
+        "graph.count_triangles.oriented",
+    )
     # wedges (m, c) pivoting on lo: each unordered out-neighbor pair
     # once, via the m < c id order
     o1 = oriented.select(F.col("lo").alias("w"), F.col("hi").alias("m"))

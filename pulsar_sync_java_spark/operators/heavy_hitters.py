@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from pulsar_sync_java_spark.operators.util import cached
+
 SUMMARY_SCHEMA = StructType(
     [
         StructField("k", LongType()),  # null on the per-partition meta row
@@ -116,22 +118,17 @@ def heavy_hitters(
     tightening.  Returns (key, n_occurrences, share) with exact
     counts; share is one IEEE division of two exact longs.
 
-    Cache posture (the pagerank precedent): the persisted summary
-    table is P*(k+1) rows and plan-matched across repeated calls on
-    the same input — one bounded entry per (input, k) is the declared
-    steady state; there is deliberately no unpersist, since dropping
-    it would re-run the corpus sketch pass on the returned plan's next
-    execution.
+    The cached summary table stays for the session (one entry per
+    input and k): releasing it would re-run the sketch pass on the
+    returned plan's next execution.
     """
     if not 0 < phi < 1:
         raise ValueError(f"phi must be in (0,1), got {phi}")
     if k is None:
         k = math.ceil(2.0 / phi)
-    # The P*(k+1)-row summary table is consumed twice (meta scalars
-    # now, candidate cut inside the returned plan) — persist it so the
-    # corpus sketch pass runs ONCE; the meta collect below materializes
-    # the cache, leaving execution with just the verify re-scan.
-    summaries = mg_summaries(df, key_col, k).persist()
+    # the meta collect below materializes the cache, leaving execution
+    # with just the verify re-scan
+    summaries = cached(mg_summaries(df, key_col, k), "heavy_hitters.heavy_hitters")
     meta = summaries.filter(F.col("k").isNull()).agg(
         F.sum("n").alias("total"), F.sum("err").alias("err_total")
     )

@@ -22,7 +22,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pulsar_sync_java_spark.operators.util import pair_structs, spread, spread_by
+from pulsar_sync_java_spark.operators.util import cached, pair_structs, spread, spread_by
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -498,12 +498,7 @@ def embedding_near_pairs(
     rows_per_band = max(num_planes // bands, 1)
     # Signature = one Arrow-vectorized kernel (centering + planes x dim
     # dot products fused in numpy; see operators/vectorized.py).  The
-    # repartition barrier keeps it parallel and un-inlined; the banded
-    # subtree and the two vector/norm lookups are three consumers AQE
-    # does not share, so persist the projection (n rows x (d+2) cols —
-    # the norms, interpreted HOF folds, then compute once instead of
-    # three times; measured 1.77s -> 1.21s cold at sf0.1, deduplicated
-    # across invocations by the plan-matched cache).
+    # repartition barrier keeps it parallel and un-inlined.
     sig = spread_by(
         spread(df).select(
             F.col(id_col),
@@ -512,7 +507,8 @@ def embedding_near_pairs(
             hyperplane_signature_udf(planes, mean)(F.col(vec_col)).alias("sig"),
         ),
         id_col,
-    ).persist()
+    )
+    sig = cached(sig, "similarity.embedding_near_pairs")
     band_mask = (1 << rows_per_band) - 1
     # Banded rows carry ONLY (band, bucket, id): the vectors are the
     # wide payload (d doubles/row) and must not be amplified bands-fold
@@ -1175,13 +1171,11 @@ def ann_calibration(
     we = Window.partitionBy("query_id").orderBy(
         cos.desc(), F.col(id_col).asc()
     )
-    # exact anchor feeds the per-query aggregate, three recall joins
-    # and the ADC audit — 6 consumers over |Q| x k rows
-    exact = (
+    exact = cached(
         scored.withColumn("__rk", F.row_number().over(we))
         .filter(F.col("__rk") <= k)
-        .select("query_id", id_col, cos.alias("__cos"), "__rk")
-        .persist()
+        .select("query_id", id_col, cos.alias("__cos"), "__rk"),
+        "similarity.ann_calibration",
     )
 
     # Each recall arm is the BATCH variant of its production path —

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.functions.numeric import davg, dsum, sql_davg, sql_dsum
+from pulsar_sync_java_spark.operators.util import cached
 from pulsar_sync_java_spark.operators.vectorized import md5_32
 from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.sources.tables import load_table
@@ -1107,7 +1108,7 @@ def q_hll_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         (F.col("user_id") * 64 + F.dayofmonth("ts")).alias("key"),
     ).distinct()
-    k = k.persist()
+    k = cached(k, "aggregates.q_hll_intersect")
     per_type = k.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.hll_sketch_agg("key").alias("sk"),

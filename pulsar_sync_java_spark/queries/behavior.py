@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pulsar_sync_java_spark.operators.util import cached
 from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.queries.reference import TS_FMT_DUCK, fmt_ts
 from pulsar_sync_java_spark.sources.tables import load_table
@@ -264,16 +265,15 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_k") <= _MAX_BASKET)
         .select("l_orderkey")
     )
-    # per-basket sorted item arrays: aggregate rows (one per basket,
-    # ≤ _MAX_BASKET items each), persisted for the three consumers
-    # below — the corpus-cardinality (orderkey, partkey) frame is
-    # never cached (SCALE.md §9 contract: aggregate rows only)
-    baskets = (
+    # one row per basket, ≤ _MAX_BASKET items each; the corpus-
+    # cardinality (orderkey, partkey) frame is never cached
+    baskets = cached(
         d.join(ok, "l_orderkey")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_list("l_partkey")).alias("items"))
-        .select("items")
-    ).persist()
+        .select("items"),
+        "behavior.q_assoc_rules",
+    )
     n_baskets = baskets.agg(
         F.count(F.lit(1)).cast("long").alias("n_baskets")
     )

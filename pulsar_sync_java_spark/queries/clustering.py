@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark.functions.numeric import dec_arr_sum
 from pulsar_sync_java_spark.operators.graph import connected_components
+from pulsar_sync_java_spark.operators.util import cached
 from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.sources.tables import load_table
 
@@ -509,18 +510,12 @@ def _kmeans_assignments_expr(
             )
         )
         cent_rows = _update_rows(batch, cent_rows)
-    # the final assignment is PERSISTED before the size collect: the
-    # eager sizes aggregate below and the returned output plan both
-    # evaluate the K-fold argmin projection over the full corpus —
-    # uncached, that projection (the expensive per-row work) runs
-    # TWICE per invocation, a full extra corpus pass at 100 TB (r13
-    # verdict "what's wrong" #2).  The cache is the narrow (vec_id,
-    # cluster) table — the q_semantic_dedup assignment-table posture —
-    # and the sizes collect doubles as its materializing action, so
-    # the returned plan is a cache read + literal-CASE projection.
-    final = e.select(
-        "vec_id", _assign_expr(cent_rows).alias("cluster")
-    ).persist()
+    # the sizes collect below materializes the cache, so the returned
+    # plan is a cache read + literal-CASE projection
+    final = cached(
+        e.select("vec_id", _assign_expr(cent_rows).alias("cluster")),
+        "clustering.kmeans_assignments_expr",
+    )
     # cluster sizes: K rows collected once, re-attached as a literal
     # CASE map — no join, no exchange (the size table is K rows; the
     # broadcast-join alternative costs a build + an AQE stage).  A
@@ -854,22 +849,14 @@ def _semantic_dedup_pipeline(
     )
 
     dim, books = _sem_pq_model(e, sf_dir)
-    # the (vec_id, cluster) assignment table feeds three consumers
-    # (both sides of the pair self-join + the final output join);
-    # without the persist each consumer re-runs the whole Lloyd chain
-    # (declared in tests/test_bench_contract.py PERSIST_ALLOWLIST —
-    # narrow 2-column rows, the SemDeDup working set a production run
-    # materializes anyway).  impl="df" on purpose (r13): the LAZY
-    # Lloyd chain keeps this persist plan-matched across repeated
-    # invocations (Spark's CacheManager reuses the materialized
-    # assignment), where the eager driver-centroid path would re-run
-    # its seed/update collect jobs on every call before ever reaching
-    # the cache.
-    assign = (
+    # impl="df" on purpose (r13): the LAZY Lloyd chain keeps this
+    # cache plan-matched across repeated invocations, where the eager
+    # driver-centroid path would re-run its seed/update collect jobs
+    # on every call before ever reaching the cache.
+    assign = cached(
         kmeans_assignments(e, sample_pct=sample_pct, k=k, init=init,
-                           impl="df")
-        .select("vec_id", "cluster")
-        .persist()
+                           impl="df").select("vec_id", "cluster"),
+        "clustering.semantic_dedup_pipeline",
     )
     enc = pq_flat_encode_udf(books).asNondeterministic()(F.col("embedding"))
     # two-step projection so the Arrow kernel is planned ONCE per row

@@ -45,6 +45,7 @@ from pulsar_sync_java_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
+from pulsar_sync_java_spark.operators.util import cached
 from pulsar_sync_java_spark.operators.vectorized import (
     portable_family_sql_values,
 )
@@ -202,12 +203,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall against exact Jaccard ground truth is separately
     property-tested in tests/test_dedup_ops.py."""
     d = load_table(spark, sf_dir, "documents")
-    # persist: the banded subtree + both signature lookups consume the
-    # signature kernel, and AQE does not share that exchange (see
-    # lsh_candidate_pairs docstring) — caching runs the md5 kernel once
-    # instead of three times; Spark's plan-matching cache dedupes
-    # repeated invocations.
-    sigs = minhash_signatures(d, num_hashes=64).persist()
+    sigs = cached(minhash_signatures(d, num_hashes=64), "dedup_scale.q_minhash_lsh")
     return lsh_candidate_pairs(sigs, bands=16).filter(F.col("est_jaccard") >= 0.5)
 
 
@@ -281,10 +277,9 @@ def q_sketch_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    # persist: the banded subtree + both signature lookups re-run the
-    # md5 kernel otherwise — the q_minhash_lsh discipline (measured
-    # 'once instead of three times' there); plan-matched with its cache
-    sigs = minhash_signatures(d, num_hashes=64).persist()
+    sigs = cached(
+        minhash_signatures(d, num_hashes=64), "dedup_scale.q_sketch_calibration"
+    )
     pairs = lsh_candidate_pairs(sigs, bands=16).select(
         "doc_a",
         "doc_b",
@@ -605,13 +600,13 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     row = e.filter(F.col("vec_id") == 0).select("embedding").first()
     qv = [float(x) for x in row.embedding]
-    # the 10-row approx result feeds BOTH the cardinality agg and the
-    # recall join — persist so the encode+ADC lineage runs once, not
-    # twice (measured ~0.4s at sf0.01; the k-row cache is trivial)
-    approx = ivf_pq_topk(
-        e, qv, k=10, n_centroids=16, nprobe=14, m=16, k_sub=256,
-        rerank=64, iters=1,
-    ).persist()
+    approx = cached(
+        ivf_pq_topk(
+            e, qv, k=10, n_centroids=16, nprobe=14, m=16, k_sub=256,
+            rerank=64, iters=1,
+        ),
+        "dedup_scale.q_ann_pq_topk",
+    )
     exact = cosine_topk(e, qv, k=10)
     hits = approx.join(exact.select("vec_id"), "vec_id", "inner")
     return (
@@ -830,7 +825,9 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation (or a pre-materialized index), delta cost is
     delta-sized and broadcastable."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d, num_hashes=64).persist()
+    sigs = cached(
+        minhash_signatures(d, num_hashes=64), "dedup_scale.q_incremental_dedup"
+    )
     batch = sigs.filter(F.col("doc_id") % 10 == 7)
     corpus = sigs.filter(F.col("doc_id") % 10 != 7)
     return lsh_pairs_against_corpus(batch, corpus).filter(

@@ -20,6 +20,7 @@ from pulsar_sync_java_spark.operators.dedup import jaccard_pairs
 from pulsar_sync_java_spark.operators.graph import connected_components, pagerank
 from pulsar_sync_java_spark.operators.similarity import knn_join
 from pulsar_sync_java_spark.operators.skew import salted_join
+from pulsar_sync_java_spark.operators.util import cached
 from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.sources.tables import load_table
 
@@ -292,14 +293,9 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc top-k."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(_spark_alpha_toks()).alias("token"))
-    # persist: the join branch and the df aggregate are two consumers of
-    # the same (doc, term) aggregate, and AQE does not share the
-    # exchange between them (same finding as jaccard_pairs) — without
-    # the cache the tokenize+explode+agg subtree runs twice
-    tf = (
-        toks.groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+    tf = cached(
+        toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
+        "extras.q_tfidf_topterms",
     )
     df_ = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -564,12 +560,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py:pagerank).  The pipeline analogue is authority
     weighting over a link/domain graph feeding quality scores.
 
-    Cache posture: the persisted node/out-degree tables are REUSED by
-    Spark's plan-matched cache across repeated runs over the same
-    graph (one bounded entry pair per sf_dir — the declared
-    steady-state shape, like the signature caches).  A caller sweeping
-    many DISTINCT graphs owns their release (spark.catalog.clearCache,
-    or unpersist after materializing the ranks)."""
+    The operator's cached node/out-degree tables are reused across
+    repeated runs over the same graph (one entry pair per sf_dir)."""
     li = load_table(spark, sf_dir, "lineitem")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
     fwd = pairs.select(
@@ -883,45 +875,29 @@ def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
-    """THE persisted symmetric co-purchase edge table of the 1/`mod`
+    """THE cached symmetric co-purchase edge table of the 1/`mod`
     order slice: distinct (a, b) part pairs, BOTH orientations, a != b,
     sharing an order — the quadratic within-basket self-join every
-    graph query starts from, as ONE plan-matched cache entry per slice
-    (the `_shingle_arrays` discipline).  q_triangle_count, q_bfs_khop
-    and q_degree_assortativity all probe the mod=5 slice, so the
-    self-join + distinct builds once per session instead of once per
-    query (r13 verdict #1 — each previously persisted its OWN shape of
-    the same pairs: normalized a<b, symmetric, and a<b).
-
-    Shape lessons (measured r14): the cache entry is the FLAT
-    symmetric table — the exact plan q_bfs_khop persisted in r13 —
-    and consumers DERIVE the a<b pair set as a filter over the cache,
-    never the other way around.  The first draft persisted the a<b
-    pair set and let consumers union-swap it back to symmetric; that
-    stacked persists (sym IMR over pairs IMR, deg IMR over that), and
-    nested InMemoryRelations re-inline their child plans into every
-    consumer's analyzed plan — q_bfs_khop's formatted plan grew to
-    862 InMemoryRelation mentions and its warm run went 1.1s -> 3.2s
-    on pure plan analysis.  Flat cache, filter-derived views: same
-    bytes, no nesting.  (q_label_prop stays on its own mod=7
-    symmetric persist: nothing shares that slice.)
-
-    Session-lifetime, edge-set-sized (never corpus rows);
-    re-persisting the already-cached plan is a CacheManager no-op."""
+    graph query starts from, as ONE plan-matched cache entry per slice.
+    q_triangle_count, q_bfs_khop and q_degree_assortativity all probe
+    the mod=5 slice, so the self-join + distinct builds once per
+    session instead of once per query.  The entry is the FLAT
+    symmetric table and consumers derive the a<b pair set as a filter
+    over it (the flat rule on `operators/util.py:CACHES`)."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") % mod == 0)
         .select("l_orderkey", "l_partkey")
     )
     x, y = li.alias("x"), li.alias("y")
-    return (
+    return cached(
         x.join(y, "l_orderkey")
         .filter(F.col("x.l_partkey") != F.col("y.l_partkey"))
         .select(
             F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b")
         )
-        .distinct()
-        .persist()
+        .distinct(),
+        "extras.copurchase_edges",
     )
 
 
@@ -1021,9 +997,8 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     BFS layering computes the same MIN-dist labels without state
     explosion).  Depth is a bound, not an iteration-to-fixpoint:
     unbounded reachability belongs to connected_components.  The
-    symmetric edge table IS the family-shared persisted projection
-    (`_copurchase_edges`, PERSIST_ALLOWLIST — the identical plan this
-    query persisted privately in r13), so the quadratic self-join
+    symmetric edge table IS the family-shared cached projection
+    (`_copurchase_edges`), so the quadratic self-join
     builds once per session, shared with q_triangle_count and
     q_degree_assortativity; all three expansion levels probe the one
     flat cache entry."""
@@ -1031,19 +1006,13 @@ def q_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited = sym.agg(F.min("a").alias("node")).withColumn("dist", F.lit(0))
     frontier = visited
     for k in range(1, 4):
-        nxt = (
+        nxt = cached(
             frontier.join(sym, frontier.node == sym.a)
             .select(F.col("b").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .withColumn("dist", F.lit(k))
-            # each level feeds BOTH the next frontier and the growing
-            # visited union; unpersisted, level k's subtree is planned
-            # ~2^(3-k) times and AQE materializes every copy (measured
-            # 60 jobs / 157 stages at sf0.1 — the r13 profile's worst
-            # stage-count offender).  Frontier-sized rows, lazy, the
-            # textbook BFS persist (GraphX does the same).
-            .persist()
+            .withColumn("dist", F.lit(k)),
+            "extras.q_bfs_khop",
         )
         visited = visited.unionByName(nxt)
         frontier = nxt
@@ -1113,10 +1082,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,6) accumulation (order-independent), and the top-20 cut
     orders by (score DESC, doc_id) — a total order.
 
-    Plan contract: ONE tokenize+explode scan feeds the (doc, term) tf
-    aggregate (persisted — three consumers: doc lengths, query-term
-    postings, corpus token total; without the cache the corpus is
-    rescanned per consumer); the query-term filter is a literal
+    Plan contract: ONE tokenize+explode scan feeds the cached (doc,
+    term) tf aggregate; the query-term filter is a literal
     IN-list evaluated ON the aggregate (the corpus is never rescanned
     per term — the r8 verdict's contract); df and the (N, avgdl)
     scalar are group-sized and broadcast back; the final cut is
@@ -1126,10 +1093,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(_spark_alpha_toks()).alias("token"))
-    tf = (
-        toks.groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+    tf = cached(
+        toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")),
+        "extras.q_bm25_topk",
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     n = d.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
@@ -1313,13 +1279,9 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per iteration: one join of the node-sized label frame onto edges
     (partitioned by node), a partial+final (node, label) count, and
     an argmax window keyed by node (high-cardinality partitions — no
-    single-reducer stage).  The SYMMETRIC UNION is the persisted frame
-    (not the `_copurchase_edges` edge set): this is the mod=7 slice —
-    no other query shares it — and each of the 3 LPA iterations probes
-    the edge table once, so caching the union keeps one InMemoryScan
-    per iteration where a union-over-pair-cache costs two (measured
-    r14: ~+0.4s at sf0.1 for zero byte savings — the scanned bytes are
-    identical either way).  Output is community-sized."""
+    single-reducer stage).  The cached SYMMETRIC UNION keeps one
+    InMemoryScan per iteration where a union over a cached pair set
+    costs two (~+0.4 s at sf0.1).  Output is community-sized."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 7 == 0
     )
@@ -1338,7 +1300,7 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e0.select(
         F.col("x").alias("src"), F.col("y").alias("dst")
     ).unionByName(e0.select(F.col("y").alias("src"), F.col("x").alias("dst")))
-    edges = edges.persist()
+    edges = cached(edges, "extras.q_label_prop")
     lab = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1524,7 +1486,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     e0 = li.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     ).distinct()
-    e0 = e0.persist()
+    e0 = cached(e0, "extras.q_hits.edges")
 
     def fp12(col: str) -> F.Column:
         return F.floor(F.col(col) * F.lit(1e12)).cast("long")
@@ -1534,15 +1496,10 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     auth = None
     for _ in range(_HITS_ITERS):
-        # persist each node-sized score frame: the 1-row max aggregate
-        # AND the normalized join-back both read it, and without the
-        # cut the duplicated subtree doubles per iteration (measured
-        # 6.5s -> 0.9s at sf0.1)
-        ar = (
-            e0.join(hub, "s")
-            .groupBy("p")
-            .agg(F.sum(fp12("hub")).alias("v"))
-        ).persist()
+        ar = cached(
+            e0.join(hub, "s").groupBy("p").agg(F.sum(fp12("hub")).alias("v")),
+            "extras.q_hits.authority",
+        )
         amax = ar.agg(F.max("v").alias("_m"))
         auth = ar.crossJoin(F.broadcast(amax)).select(
             "p",
@@ -1550,11 +1507,10 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "auth"
             ),
         )
-        hr = (
-            e0.join(auth, "p")
-            .groupBy("s")
-            .agg(F.sum(fp12("auth")).alias("v"))
-        ).persist()
+        hr = cached(
+            e0.join(auth, "p").groupBy("s").agg(F.sum(fp12("auth")).alias("v")),
+            "extras.q_hits.hub",
+        )
         hmax = hr.agg(F.max("v").alias("_m"))
         hub = hr.crossJoin(F.broadcast(hmax)).select(
             "s",
@@ -1650,27 +1606,21 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the degree pairs, one IEEE expression at the end.
 
     Scale: the PAIR SET builds once (distinct within-basket self-join,
-    co-partitioned on orderkey) and is persisted — the symmetrized
+    co-partitioned on orderkey) and is cached — the symmetrized
     union, the edge count and the degree aggregate are all
     projections/aggregates of that cache, so the quadratic join never
-    re-runs; the node-sized degree table is persisted for its three
-    consumers (both pair-join sides + the global stats aggregate);
-    the moment row is a 1-row aggregate.  Nothing after the pair
+    re-runs; the node-sized degree table is cached too; the moment row is a 1-row aggregate.  Nothing after the pair
     build exceeds edge cardinality."""
-    # the family-shared persisted symmetric edge table is the one
-    # evaluation of the quadratic within-basket self-join
-    # (_copurchase_edges — plan-matched with q_triangle_count and
-    # q_bfs_khop); the directed edge view is a rename and the a<b pair
-    # set (edge count) a filter over the flat cache, so every branch
-    # probes ONE unnested InMemoryRelation
+    # the directed edge view is a rename and the a<b pair set (edge
+    # count) a filter over the flat cache, so every branch probes ONE
+    # unnested InMemoryRelation
     sym = _copurchase_edges(spark, sf_dir, 5)
     e0 = sym.filter(F.col("a") < F.col("b"))
     edges = sym.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    # node-sized degree table: read by both pair-join sides AND the
-    # global min/max/count aggregate
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).persist()
+    deg = cached(
+        edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg")),
+        "extras.q_degree_assortativity",
+    )
     da = deg.select(F.col("node").alias("src"), F.col("deg").alias("x"))
     db = deg.select(F.col("node").alias("dst"), F.col("deg").alias("y"))
     pairs = edges.join(da, "src").join(db, "dst").select("x", "y")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pulsar_sync_java_spark.operators.util import cached
 from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.sources.tables import load_table
 
@@ -697,16 +698,14 @@ def q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed on per-shard counts and summed (chi2 is additive over
     disjoint strata), not by widening the arithmetic.
 
-    Plan: one tokenize scan -> (lang, token) aggregate (persisted —
-    marginal/total/score branches share it; AQE will not); marginals
+    Plan: one tokenize scan -> the cached (lang, token) aggregate; marginals
     are group-sized and BROADCAST back; the top-3 window runs over the
     aggregate table, never raw tokens."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select("lang", F.explode(_spark_tokens()).alias("token"))
-    tl = (
-        toks.groupBy("lang", "token")
-        .agg(F.count(F.lit(1)).alias("a"))
-        .persist()
+    tl = cached(
+        toks.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("a")),
+        "pipeline.q_chi2_terms",
     )
     tmarg = tl.groupBy("token").agg(F.sum("a").cast("long").alias("n_t"))
     lmarg = tl.groupBy("lang").agg(F.sum("a").cast("long").alias("n_l"))
@@ -903,9 +902,12 @@ def _bpe_learn(
     plan-matched caches never see Python rows."""
     words = d.select(F.explode(_spark_tokens()).alias("word"))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("w"))
-    cur = vocab.select(
-        "word", "w", F.regexp_extract_all("word", F.lit("."), 0).alias("arr")
-    ).persist()
+    cur = cached(
+        vocab.select(
+            "word", "w", F.regexp_extract_all("word", F.lit("."), 0).alias("arr")
+        ),
+        "pipeline.bpe_learn",
+    )
     # one partition, so the bounded collect is one job however many
     # partitions the cache has
     rows = cur.select("arr", "w").coalesce(1).limit(
@@ -1033,21 +1035,16 @@ BPE_DOC_TOKENS_CTES = (
 
 
 def _bpe_doc_word_counts(d: DataFrame) -> DataFrame:
-    """THE persisted (doc_id, lang, word, n_occ) count aggregate — the
-    one corpus-sized step of the BPE apply half, shared plan-matched
-    across q_bpe_encode, q_pack_sequences_bpe and q_mix_budget_bpe
-    (r13 verdict #3: each re-ran the tokenize scan + count shuffle per
-    invocation on top of the already-shared vocab).  FLAT cache (the
-    r14 _copurchase_edges lesson: one entry consumers project from —
-    never stack a persisted encode-join result on top of it); rows are
-    per-doc DISTINCT words with exact integer counts, far smaller than
-    the token stream, session-lifetime like the other count
-    aggregates (q_bm25_topk's tf table)."""
-    return (
+    """THE cached (doc_id, lang, word, n_occ) count aggregate, shared
+    plan-matched by the three BPE encode queries.  A FLAT entry:
+    consumers project from it and never cache an encode-join result on
+    top of it.  Rows are per-doc DISTINCT words with exact integer
+    counts, far smaller than the token stream."""
+    return cached(
         d.select("doc_id", "lang", F.explode(_spark_tokens()).alias("word"))
         .groupBy("doc_id", "lang", "word")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("n_occ")),
+        "pipeline.bpe_doc_word_counts",
     )
 
 
@@ -1141,7 +1138,7 @@ def q_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "ch")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    cc = cc.persist()
+    cc = cached(cc, "pipeline.q_char_diversity")
     agg = cc.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_chars_nows"),
         F.count(F.lit(1)).alias("distinct_chars"),

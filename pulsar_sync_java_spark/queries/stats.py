@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pulsar_sync_java_spark.operators.util import cached
 from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.sources.tables import load_table
 
@@ -518,7 +519,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = e.groupBy(F.col("user_id").alias("key")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    sizes = sizes.persist()
+    sizes = cached(sizes, "stats.q_skew_report")
     summary = sizes.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("n").alias("n_rows"),
@@ -695,11 +696,8 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "events")
     # g is the dedup'd (type, bucket, value) count table — the corpus
-    # reduced to its distinct-value histogram.  It feeds three branches
-    # (cumsums, bucket totals, slice totals); persisting it pins the
-    # corpus to ONE scan + ONE count shuffle instead of three
-    # (declared in tests/test_bench_contract.py PERSIST_ALLOWLIST).
-    g = (
+    # reduced to its distinct-value histogram
+    g = cached(
         e.select(
             "event_type",
             # clamp BOTH ends (r8 ADVICE): a negative value must land in
@@ -715,8 +713,8 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.when(F.col("slice") == 0, 1).otherwise(0)).alias("a_i"),
             F.sum(F.when(F.col("slice") == 1, 1).otherwise(0)).alias("b_i"),
-        )
-        .persist()
+        ),
+        "stats.q_ks_drift",
     )
     btot = g.groupBy("event_type", "bucket").agg(
         F.sum("a_i").alias("ba"), F.sum("b_i").alias("bb")

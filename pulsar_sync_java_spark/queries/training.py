@@ -22,7 +22,7 @@ from pulsar_sync_java_spark.operators.dedup import (
     shingle_rows,
 )
 from pulsar_sync_java_spark.operators.graph import connected_components
-from pulsar_sync_java_spark.operators.util import spread
+from pulsar_sync_java_spark.operators.util import cached, spread
 from pulsar_sync_java_spark.queries import query
 from pulsar_sync_java_spark.queries.reference import TS_FMT_DUCK, fmt_ts
 from pulsar_sync_java_spark.operators.vectorized import (
@@ -597,7 +597,7 @@ def q_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) and the closure runs on the contracted forest
     (operators/graph.py scale posture)."""
     d = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d, num_hashes=64).persist()
+    sigs = cached(minhash_signatures(d, num_hashes=64), "training.q_dedup_keepers")
     pairs = lsh_candidate_pairs(sigs, bands=16).filter(
         F.col("est_jaccard") >= 0.5
     )
@@ -648,14 +648,10 @@ def q_corpus_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE spread-parallelized projection computes every
     per-row feature (token count, distinct 3-grams, content hash),
-    drops the raw text, and is PERSISTED — the cache is the pushdown
-    barrier here, not an exchange: Catalyst pushes the gate predicate
-    through repartitions and both projection layers down to the scan,
-    re-evaluating the interpreted higher-order shingle expressions per
-    reference at single-file scan parallelism (measured: split()
-    appeared 9x in the physical plan and the query ran ~13x slower;
-    with the cached feature table the filter reads plain columns).
-    The cached rows are features + a 32-char hash, never document
+    drops the raw text, and is cached — the pushdown barrier, so the
+    gate filter reads plain columns instead of re-evaluating the
+    shingle expressions at the scan (split() appeared 9x in the
+    uncached plan).  The cached rows are features + a 32-char hash, never document
     bodies; at 100 TB the same projection is what a pipeline writes
     once as a features table.  The dedup min-per-fingerprint is then
     the only shuffle."""
@@ -664,12 +660,15 @@ def q_corpus_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars", "text",
         tokens("text").alias("__toks"),
     )
-    feats = toks.select(
-        "doc_id", "lang", "source", "n_chars",
-        F.size("__toks").alias("n_tokens"),
-        F.size(shingles_from_tokens(F.col("__toks"), 3)).alias("n3_distinct"),
-        F.md5(F.encode("text", "UTF-8")).alias("fp"),
-    ).persist()
+    feats = cached(
+        toks.select(
+            "doc_id", "lang", "source", "n_chars",
+            F.size("__toks").alias("n_tokens"),
+            F.size(shingles_from_tokens(F.col("__toks"), 3)).alias("n3_distinct"),
+            F.md5(F.encode("text", "UTF-8")).alias("fp"),
+        ),
+        "training.q_corpus_materialize",
+    )
     gated = feats.filter(
         (F.col("n_tokens") >= 5)
         & (F.col("n_chars") >= 30)

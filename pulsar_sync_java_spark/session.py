@@ -91,7 +91,7 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         # Cached plans keep their build-time partitioning by default,
-        # which exempts every .persist() subtree from AQE coalescing —
+        # which exempts every cached subtree from AQE coalescing —
         # a persisted 400-row label table then carries 32 shuffle
         # partitions through every iterative round (measured ~1.2s per
         # round of pure task-scheduling overhead in q_dedup_cluster).

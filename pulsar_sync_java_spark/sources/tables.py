@@ -47,7 +47,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
         "spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     )
-    # Let AQE coalesce shuffles under .persist() subtrees (see
+    # Let AQE coalesce shuffles under cached subtrees (see
     # session.py) — iterative operators cache tiny tables per round.
     spark.conf.set(
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"

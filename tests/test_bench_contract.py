@@ -112,99 +112,42 @@ def test_compact_line_pathological_key_still_fits():
     assert p["detail"] == "BENCH_DETAIL.json"
 
 
-# ----------------------------------------------- persisted-plan allowlist
+# ----------------------------------------------- declared cache population
 
-#: Every `.persist()` call site in the engine package, as
-#: (module-relative path, enclosing function) -> call count.  This is
-#: the cache population a full `queries()` session can accumulate
-#: (SCALE.md §9 documents each entry's justification and lifetime).
-#: A NEW operator must not silently join it: the round-7 bench-creep
-#: investigation had to rule the no-unpersist caches out as a suspect
-#: (SCALE.md §10), and that audit only stays cheap while the
-#: population is a declared, reviewed set.  If you add a persist, add
-#: it here AND to SCALE.md §9 with its release story.
-PERSIST_ALLOWLIST = {
-    ("operators/dedup.py", "_shingle_arrays"): 1,       # THE shared shingle-array projection (session-lifetime, plan-matched; serves overlap metrics + set sizes)
-    ("operators/graph.py", "connected_components"): 2,  # forest iterates; intermediates released in-loop
-    ("operators/graph.py", "count_triangles"): 2,       # edge + oriented-edge tables (session-lifetime)
-    ("operators/graph.py", "pagerank"): 2,              # node table + degree join (session-lifetime, plan-matched)
-    ("operators/graph.py", "tree_roots"): 4,            # parent table + pointer-doubling states; superseded states released in-loop
-    ("operators/heavy_hitters.py", "heavy_hitters"): 1, # MG summaries (tiny: P*(k+1) rows, session-lifetime)
-    ("operators/similarity.py", "embedding_near_pairs"): 1,  # signature projection (session-lifetime)
-    ("operators/similarity.py", "ann_calibration"): 1,  # exact top-k anchor (|Q| x k rows; 6 consumers)
-    ("operators/dedup.py", "simhash_calibration"): 2,  # fingerprints (3 consumers: pigeonhole pairing + both pair lookups) and token counts (3: norms + both dot sides) — without them the Arrow simhash kernel runs 3x and the tokenize 4x
-    ("queries/clustering.py", "_semantic_dedup_pipeline"): 1,  # (vec_id, cluster) assignment table (narrow, 3 consumers); shared by q_semantic_dedup and the auto-K semantic_dedup helper
-    ("queries/clustering.py", "_kmeans_assignments_expr"): 1,  # final (vec_id, cluster) assignment (narrow): the eager size collect and the returned plan otherwise EACH evaluate the K-fold argmin over the corpus — one full extra pass (r14, r13 verdict #2)
-    ("queries/dedup_scale.py", "q_ann_pq_topk"): 1,     # 10-row approx result (cardinality agg + recall join share the encode+ADC lineage)
-    ("queries/dedup_scale.py", "q_sketch_calibration"): 1,   # portable sigs (banded subtree + 2 lookups; plan-matched with q_minhash_lsh)
-    ("queries/dedup_scale.py", "q_incremental_dedup"): 1,    # minhash sigs (plan-matched with the other sig users)
-    ("queries/dedup_scale.py", "q_minhash_lsh"): 1,
-    ("queries/aggregates.py", "q_hll_intersect"): 1,    # distinct (type, key) set (sketch agg + exact joins share it)
-    ("queries/behavior.py", "q_assoc_rules"): 1,        # per-basket sorted item arrays, guarded BEFORE collect (pair explode + supports explode + basket count)
-    ("queries/extras.py", "_copurchase_edges"): 1,      # THE shared symmetric co-purchase edge table (mod=5 slice, plan-matched, FLAT — consumers derive views by filter/rename, never by stacking persists; serves q_triangle_count + q_bfs_khop + q_degree_assortativity)
-    ("queries/extras.py", "q_label_prop"): 1,           # symmetric co-purchase edge table (mod=7 — unshared slice, so the family cache gains nothing; 3 LPA iterations probe it)
-    ("queries/extras.py", "q_bfs_khop"): 1,             # per-level frontier (feeds next frontier AND the visited union; unpersisted the subtree doubles per level — 60 AQE jobs measured); the symmetric edge table is the shared _copurchase_edges entry
-    ("queries/extras.py", "q_degree_assortativity"): 1, # node-sized degree table (pair joins + global stats); the edge set is _copurchase_edges
-    ("queries/extras.py", "q_hits"): 3,                 # edge table + per-iteration score frames (max agg + join-back each read them; uncut the subtree doubles per iteration)
-    ("queries/pipeline.py", "_bpe_learn"): 1,          # char-split word-frequency vocab: ONE plan-matched cache entry shared by q_bpe_train/encode and both tokenizer-true budget queries; training collects it once and every final-vocab replace() chain reads it
-    ("queries/pipeline.py", "_bpe_doc_word_counts"): 1,  # (doc, lang, word, n_occ) counts — the one corpus-sized encode step, shared plan-matched by q_bpe_encode + q_pack_sequences_bpe + q_mix_budget_bpe (r14; flat cache, consumers project from it)
-    ("queries/pipeline.py", "q_char_diversity"): 1,     # (doc, char) count aggregate (diversity agg + argmax share it)
-    ("queries/extras.py", "q_bm25_topk"): 1,            # (doc, term) tf aggregate = the inverted index (3 consumers)
-    ("queries/pipeline.py", "q_chi2_terms"): 1,         # (lang, token) count aggregate (marginals + scoring share it)
-    ("queries/extras.py", "q_tfidf_topterms"): 1,       # (doc, term) tf aggregate
-    ("queries/stats.py", "q_ks_drift"): 1,              # distinct-value count table (aggregate-sized)
-    ("queries/stats.py", "q_skew_report"): 1,           # per-key size aggregate (tiny)
-    ("queries/training.py", "q_corpus_materialize"): 1, # feature table = pushdown barrier (measured 13x)
-    ("queries/training.py", "q_dedup_keepers"): 1,      # minhash sigs (plan-matched)
-}
-
-
-def test_persist_population_matches_declared_allowlist():
-    """AST census of `.persist()` calls across the package (immune to
-    comments/docstrings, unlike grep) must equal PERSIST_ALLOWLIST —
-    red on any undeclared persist OR any stale allowlist entry."""
+def test_cache_population_matches_declared_caches():
+    """AST census (immune to comments and docstrings): `.persist(` is
+    called only in `operators/util.py:cached`, and every `cached(...)`
+    names a literal key of `CACHES`, one call site per key, with no
+    declared key left unused."""
     import ast
+    import inspect
     import os
 
     import pulsar_sync_java_spark as pkg
+    from pulsar_sync_java_spark.operators import util
 
     root = os.path.dirname(os.path.abspath(pkg.__file__))
-    found: dict[tuple[str, str], int] = {}
+    persists, keys = [], []
     for dirpath, _dirs, files in os.walk(root):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
+        for fname in (f for f in files if f.endswith(".py")):
             path = os.path.join(dirpath, fname)
             rel = os.path.relpath(path, root).replace(os.sep, "/")
-            tree = ast.parse(open(path).read(), filename=path)
-
-            class V(ast.NodeVisitor):
-                def __init__(self) -> None:
-                    self.stack: list[str] = []
-
-                def visit_FunctionDef(self, n) -> None:
-                    self.stack.append(n.name)
-                    self.generic_visit(n)
-                    self.stack.pop()
-
-                visit_AsyncFunctionDef = visit_FunctionDef
-
-                def visit_Call(self, n) -> None:
-                    if (
-                        isinstance(n.func, ast.Attribute)
-                        and n.func.attr == "persist"
-                    ):
-                        key = (rel, self.stack[-1] if self.stack else "<module>")
-                        found[key] = found.get(key, 0) + 1
-                    self.generic_visit(n)
-
-            V().visit(tree)
-    assert found == PERSIST_ALLOWLIST, (
-        "persist() population changed — declare it in PERSIST_ALLOWLIST "
-        f"and SCALE.md §9 or release it.\nnew/changed: "
-        f"{ {k: v for k, v in found.items() if PERSIST_ALLOWLIST.get(k) != v} }\n"
-        f"stale: { {k: v for k, v in PERSIST_ALLOWLIST.items() if found.get(k) != v} }"
-    )
+            for n in ast.walk(ast.parse(open(path).read(), filename=path)):
+                f = getattr(n, "func", None)
+                name = getattr(f, "attr", None) or getattr(f, "id", None)
+                if name == "persist":
+                    persists.append((rel, n.lineno))
+                elif name == "cached":
+                    key = n.args[1]
+                    assert isinstance(key, ast.Constant), (rel, n.lineno)
+                    keys.append(key.value)
+    body, first = inspect.getsourcelines(util.cached)
+    assert [r for r, line in persists] == ["operators/util.py"], persists
+    assert first <= persists[0][1] < first + len(body), persists
+    assert not set(keys) - set(util.CACHES), f"undeclared: {set(keys) - set(util.CACHES)}"
+    assert not set(util.CACHES) - set(keys), f"unused: {set(util.CACHES) - set(keys)}"
+    reused = sorted({k for k in keys if keys.count(k) > 1})
+    assert not reused, f"one call site per key: {reused}"
 
 
 def test_detail_sidecar_name_suffixed_off_canonical_dir():

@@ -122,9 +122,9 @@ def test_calibration_report_releases_simhash_caches(spark):
     """r12 ADVICE: the SimHash audit's two persisted corpus-scale
     frames must not outlive the report in a long-lived scheduler
     session.  Measured as STEADY-STATE growth — the first run may
-    register the engine's documented session-lifetime caches (the
-    shingle projection, ann_calibration's exact anchor — both in
-    PERSIST_ALLOWLIST), so the property is that a SECOND scheduled
+    register the engine's declared session-lifetime caches (the
+    shingle projection, ann_calibration's exact anchor — both keys of
+    `operators/util.py:CACHES`), so the property is that a SECOND scheduled
     run adds nothing: per-run frames are released, only the declared
     session-lifetime set remains.  (Asserting on the absolute count
     made the test order-dependent — the review-pass catch.)"""
