@@ -36,7 +36,6 @@ from pulsar_sync_java_spark.operators.util import (
     cached,
     pair_structs,
     spread,
-    spread_by,
 )
 
 
@@ -49,9 +48,7 @@ def _shingle_width(df: DataFrame) -> int:
     sf0.1/local[32], the shingle quartet summed 6.4-7.0s at width 8 vs
     7.5-11.2s at 32 and 8.1-9.0s at 16, interleaved A/B; the r10
     4-task cliff (3.4s n-gram) is avoided by the 2x-size-scaled floor.
-    On a real cluster the spread gate skips the exchange entirely
-    (scans have enough splits), so this width only governs the
-    under-split local regime."""
+    With 8 task slots or fewer this equals `defaultParallelism`."""
     sc = df.sparkSession.sparkContext
     return min(
         sc.defaultParallelism,
@@ -97,15 +94,13 @@ def _shingle_arrays(
     With `hash_shingles` the xxhash64 runs INSIDE the cached
     projection so the cache already holds longs: explode, shuffle, and
     collect_list downstream never touch a shingle string again."""
-    w = _shingle_width(df)
-    ds = spread(df, width=w)
+    ds = spread(df, width=_shingle_width(df))
     toks = ds.select(F.col(id_col), tokens(text_col).alias("__toks"))
     sh_arr = shingles_from_tokens(F.col("__toks"), n)
     if hash_shingles:
         sh_arr = F.transform(sh_arr, lambda s: F.xxhash64(s))
     return cached(
-        spread(toks.select(F.col(id_col), sh_arr.alias("__sh")), width=w),
-        "dedup.shingle_arrays",
+        toks.select(F.col(id_col), sh_arr.alias("__sh")), "dedup.shingle_arrays"
     )
 
 
@@ -346,8 +341,11 @@ def lsh_candidate_pairs(
     data probe: sniffing it with .first() would cost an extra job).
 
     Signatures must be non-null (minhash_signatures guarantees this by
-    dropping shingle-less docs).  The signature projection feeds the
-    banded subtree plus both signature lookups; measured under AQE the
+    dropping shingle-less docs).  No exchange is added here: the
+    signatures arrive already spread (minhash_signatures' barrier, or a
+    cache of it), and that exchange keeps the kernel parallel and
+    un-inlined.  The signature projection feeds the banded subtree
+    plus both signature lookups; measured under AQE the
     three branches do NOT share one exchange (no ReusedExchange /
     stage-cache hit materializes), so the kernel runs once per branch.
     That is the deliberate trade: recomputing a linear per-row kernel
@@ -366,8 +364,7 @@ def lsh_candidate_pairs(
     only — a tiny set, so AQE broadcasts it against the signature
     exchange.
     """
-    sig = spread_by(signatures, id_col)
-    banded = _banded(sig, id_col, bands, num_hashes)
+    banded = _banded(signatures, id_col, bands, num_hashes)
 
     buckets = (
         banded.groupBy("band", "bucket")
@@ -379,8 +376,12 @@ def lsh_candidate_pairs(
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sa = sig.select(F.col(id_col).alias("doc_a"), F.col("signature").alias("sig_a"))
-    sb = sig.select(F.col(id_col).alias("doc_b"), F.col("signature").alias("sig_b"))
+    sa = signatures.select(
+        F.col(id_col).alias("doc_a"), F.col("signature").alias("sig_a")
+    )
+    sb = signatures.select(
+        F.col(id_col).alias("doc_b"), F.col("signature").alias("sig_b")
+    )
     agree = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
@@ -420,17 +421,17 @@ def lsh_pairs_against_corpus(
     never shuffled beyond its bucket aggregation.  Pair count is
     bounded by Σ |batch∩bucket|·|corpus∩bucket|, never |batch|·|corpus|.
     For a STANDING corpus re-probed across many deltas, materialize the
-    corpus bucket table once instead of re-aggregating per run.
+    corpus bucket table once instead of re-aggregating per run.  Both
+    signature inputs arrive spread (as in `lsh_candidate_pairs`), so no
+    exchange is added here.
     """
-    bsig = spread_by(batch_sigs, id_col)
-    csig = spread_by(corpus_sigs, id_col)
     cbuckets = (
-        _banded(csig, id_col, bands, num_hashes)
+        _banded(corpus_sigs, id_col, bands, num_hashes)
         .groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list(id_col)).alias("__ids"))
         .filter(F.size("__ids") <= max_bucket)
     )
-    bbanded = _banded(bsig, id_col, bands, num_hashes).select(
+    bbanded = _banded(batch_sigs, id_col, bands, num_hashes).select(
         F.col(id_col).alias("new_id"), "band", "bucket"
     )
     cand = (
@@ -439,8 +440,12 @@ def lsh_pairs_against_corpus(
         .filter(F.col("new_id") != F.col("dup_of"))
         .dropDuplicates(["new_id", "dup_of"])
     )
-    sa = bsig.select(F.col(id_col).alias("new_id"), F.col("signature").alias("sig_a"))
-    sb = csig.select(F.col(id_col).alias("dup_of"), F.col("signature").alias("sig_b"))
+    sa = batch_sigs.select(
+        F.col(id_col).alias("new_id"), F.col("signature").alias("sig_a")
+    )
+    sb = corpus_sigs.select(
+        F.col(id_col).alias("dup_of"), F.col("signature").alias("sig_b")
+    )
     agree = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
@@ -504,8 +509,10 @@ def simhash_near_pairs(
     inside the bucket (collect_list of (id, simhash) structs) costs 8
     bytes/row over the ids-only shuffle and saves the entire join-back
     stage: the whole operator is a single shuffle plus the pair dedup.
+    No exchange is added here: `simhash64` output arrives spread, and a
+    caller with another fingerprint source repartitions it first
+    (q_phash_neardup).
     """
-    sims = spread_by(sims, id_col)
     chunk = lambda i: F.shiftright(F.col("simhash"), i * 16).bitwiseAND(  # noqa: E731
         F.lit(0xFFFF)
     )

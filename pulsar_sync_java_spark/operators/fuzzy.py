@@ -105,10 +105,10 @@ def fuzzy_pairs(
     # 64-bit variant keys: the shuffle carries (long, id), not the
     # variant strings themselves.  spread(): the |text|+1 substring
     # variants + hashes per row are CPU-bound and a single-split scan
-    # runs them one-task (r13; gated off on many-split scans).  The
-    # per-(id, variant) dedup rides the bucket aggregate below as
-    # collect_set — a separate dropDuplicates here paid a second
-    # full shuffle of the exploded rows for the same answer.
+    # runs them one-task (r13).  The per-(id, variant) dedup rides the
+    # bucket aggregate below as collect_set — a separate dropDuplicates
+    # here paid a second full shuffle of the exploded rows for the same
+    # answer.
     blocked = spread(base).select(
         "__fid",
         F.explode(

@@ -69,9 +69,10 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     One task per input partition, zero shuffle.  Deliberately NOT
     spread to default parallelism here: spawning a Python worker per
     core costs more than it saves on small batches (measured 2x slower
-    on the test corpus), and at scale the source has enough splits —
-    callers with a single-split source and heavy codecs should
-    `spread()` before calling."""
+    on the test corpus), and at scale the source has enough splits.
+    A caller with a single-split source and a heavy codec spreads
+    first; `spread()` always adds its exchange, so a many-split
+    source should not."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib

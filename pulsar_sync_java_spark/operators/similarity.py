@@ -22,7 +22,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pulsar_sync_java_spark.operators.util import cached, pair_structs, spread, spread_by
+from pulsar_sync_java_spark.operators.util import cached, pair_structs, spread
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -60,10 +60,9 @@ def cosine_topk(
     row costs ~60 ms serial on the whole bench corpus, less than the
     exchange + extra AQE stages a spread adds — q_ann_pq_topk
     regressed ~1.5 s with a spread here (its candidate inputs are
-    already spread upstream, so the gate made it a no-op exactly
-    where it would have been free).  Multi-fold exact scans that DO
-    benefit carry their own spread (q_sim_topk, ann_calibration's
-    anchor)."""
+    already spread upstream, and spread always adds its exchange).
+    Multi-fold exact scans that DO benefit carry their own spread
+    (q_sim_topk, ann_calibration's anchor)."""
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     scored = df.select(
         F.col(id_col), cosine(F.col(vec_col), q).alias("cos_sim")
@@ -498,17 +497,16 @@ def embedding_near_pairs(
     rows_per_band = max(num_planes // bands, 1)
     # Signature = one Arrow-vectorized kernel (centering + planes x dim
     # dot products fused in numpy; see operators/vectorized.py).  The
-    # repartition barrier keeps it parallel and un-inlined.
-    sig = spread_by(
+    # spread barrier keeps it parallel and un-inlined.
+    sig = cached(
         spread(df).select(
             F.col(id_col),
             F.col(vec_col),
             _norm(F.col(vec_col)).alias("nrm"),
             hyperplane_signature_udf(planes, mean)(F.col(vec_col)).alias("sig"),
         ),
-        id_col,
+        "similarity.embedding_near_pairs",
     )
-    sig = cached(sig, "similarity.embedding_near_pairs")
     band_mask = (1 << rows_per_band) - 1
     # Banded rows carry ONLY (band, bucket, id): the vectors are the
     # wide payload (d doubles/row) and must not be amplified bands-fold
@@ -1152,8 +1150,7 @@ def ann_calibration(
     # (not |Q| times after it) — same values, 1/|Q| the fold work on
     # the anchor scan.  spread(): the anchor scan's |Q|+1 decimal
     # folds per corpus row are the exact arm's cost; a single-split
-    # scan would run them on one task (r13 profile; gated away on
-    # many-split scans)
+    # scan would run them on one task (r13 profile)
     corpus = spread(df).select(
         id_col, vec_col, dec_arr_sum(sq(F.col(vec_col))).alias("__nx")
     )

@@ -162,124 +162,14 @@ def _spread_count(df: DataFrame) -> int:
     (file-size based for parquet scans — no job is run); the byte
     target is sized so that even a Python-codec kernel gets enough
     rows per task to amortize its Arrow batch setup.  At 100 TB the
-    estimate saturates the cap immediately, so the scale behavior is
-    unchanged: every core gets work.  Leaf nodes without stats report
-    Long.Max-ish defaults and also saturate the cap — the safe side.
+    estimate saturates the cap immediately, so every core gets work.
+    Leaf nodes without stats report Long.Max-ish defaults and also
+    saturate the cap — the safe side.
     """
-    sc = df.sparkSession.sparkContext
-    cap = sc.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return cap
+    cap = df.sparkSession.sparkContext.defaultParallelism
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     want = -(-size // _TARGET_BYTES_PER_TASK)  # ceil
     return max(min(cap, want), min(_MIN_TASKS, cap))
-
-
-_SPREAD_MODE_CONF = "spark.pulsar_sync.spread.mode"  # auto | always | never
-
-
-# The probe toggles the session-global AQE flag; a query planned
-# concurrently on another thread during the window would be planned
-# (and executed) with AQE off.  Query BUILD is single-threaded in this
-# repo, but the lock makes the probe safe for external callers too.
-_PROBE_LOCK = threading.Lock()
-# (applicationId, semanticHash of the analyzed plan) -> probed count.
-# Semantic equivalence implies equal physical partitioning for the
-# static plans we accept (scans + REPARTITION_BY_NUM), so the cache is
-# sound as long as the underlying files don't change between calls of
-# the SAME logical plan — true for every in-repo call site (each query
-# builds its plan once).  Bounded; cleared wholesale on overflow.
-_PROBE_CACHE: dict[tuple[str, int], int | None] = {}
-_PROBE_CACHE_MAX = 4096
-
-
-def _existing_partitions(df: DataFrame) -> int | None:
-    """Physical partition count of `df` as planned, or ``None`` when
-    the count is unknowable or UNRELIABLE.  Runs the planner but NO
-    job, and only once per distinct logical plan (memoized on the
-    analyzed plan's semantic hash — the round-6 probe re-planned a
-    clone on EVERY call, which showed up as a uniform ~0.2-0.4 s
-    build-time creep across the sketch family).
-
-    Reliable counts: file splits for a scan-rooted plan, and the
-    explicit count of a REPARTITION_BY_NUM exchange (AQE never
-    coalesces those).  Any OTHER shuffle (ENSURE_REQUIREMENTS,
-    REPARTITION_BY_COL) reports its STATIC partition count here but
-    can be coalesced by AQE at runtime to far fewer — accepting
-    have=200 while the stage really runs ~1 task would revive exactly
-    the single-task pathology the explicit-count barrier exists to
-    prevent.  The probe therefore returns ``None`` for such plans and
-    the caller keeps its exchange.
-
-    With AQE on, `Dataset.rdd` MATERIALIZES shuffle query stages —
-    probing an exchange-containing input (e.g. `spread_by(signatures)`
-    where the signatures already crossed a `spread`) would eagerly
-    execute that shuffle and throw the result away.  So the probe plans
-    a fresh clone with adaptive execution off (serialized behind a
-    module lock — the flag is session-global): partition counts are
-    then static plan metadata and conversion submits zero jobs.
-    `None` when the plan cannot be converted (defensive)."""
-    sess = df.sparkSession
-    try:
-        key = (
-            sess.sparkContext.applicationId,
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-        )
-    except Exception:
-        key = None
-    if key is not None:
-        hit = _PROBE_CACHE.get(key, _PROBE_CACHE)  # sentinel: cache itself
-        if hit is not _PROBE_CACHE:
-            return hit
-    with _PROBE_LOCK:
-        if key is not None:
-            hit = _PROBE_CACHE.get(key, _PROBE_CACHE)
-            if hit is not _PROBE_CACHE:
-                return hit
-        got = _probe_partitions_unlocked(df)
-        if key is not None:
-            if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-                _PROBE_CACHE.clear()
-            _PROBE_CACHE[key] = got
-        return got
-
-
-def _probe_partitions_unlocked(df: DataFrame) -> int | None:
-    sess = df.sparkSession
-    try:
-        prev = sess.conf.get("spark.sql.adaptive.enabled", None)
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            clone = df.select("*")
-            # executedPlan, not sparkPlan: EnsureRequirements (which
-            # inserts the coalescible ENSURE_REQUIREMENTS shuffles this
-            # check exists to catch) runs in the preparation phase,
-            # AFTER sparkPlan.  With AQE off this is still pure plan
-            # metadata — no job.
-            plan = clone._jdf.queryExecution().executedPlan().toString()
-            for line in plan.split("\n"):
-                if (
-                    "Exchange" in line
-                    and "BroadcastExchange" not in line
-                    and "REPARTITION_BY_NUM" not in line
-                ):
-                    return None  # coalescible shuffle: static count lies
-            return int(clone._jdf.rdd().getNumPartitions())
-        finally:
-            if prev is None:
-                sess.conf.unset("spark.sql.adaptive.enabled")
-            else:
-                sess.conf.set("spark.sql.adaptive.enabled", prev)
-    except Exception:
-        return None
-
-
-def _spread_mode(df: DataFrame) -> str:
-    try:
-        return df.sparkSession.conf.get(_SPREAD_MODE_CONF, "auto")
-    except Exception:
-        return "auto"
 
 
 def spread(df: DataFrame, full: bool = False, width: int | None = None) -> DataFrame:
@@ -292,86 +182,31 @@ def spread(df: DataFrame, full: bool = False, width: int | None = None) -> DataF
     -> million-row groupBy), where the work above the exchange is many
     times the bytes below it and the size heuristic under-provisions
     (measured: n-gram Jaccard 3.4s at 4 tasks vs 2.2s at 32).
-
-    `width=n` (r14) pins an explicit partition count instead — for
-    call sites whose best width is BETWEEN the size heuristic and the
-    full parallelism (the shingle projection: many consumer stages
-    each schedule `width` tasks, so full width over-schedules;
-    measured in operators/dedup.py:_shingle_width).  Still gated and
-    mode-respecting like the other forms.
+    `width=n` pins an explicit count instead — for call sites whose
+    best width lies between the two (operators/dedup.py:_shingle_width).
 
     Why this exists: Spark's scan parallelism comes from input splits.
     A small parquet file (or one with a single row group) is ONE split,
     so an expensive projection downstream runs in one task no matter
     how many cores exist — measured 32x under-parallelism on the local
-    test tables.  On a 1000-executor cluster reading 100 TB the scan
-    has plenty of splits and this exchange is ~free relative to the
-    projection it feeds (raw rows cross the wire once, before any
-    explode amplification).  When the exchange is NOT gated away it
-    also acts as a per-branch materialization barrier: a computed
-    array column crosses the exchange as plain data, so explode/size
-    consumers above it cannot inline (and re-evaluate) the array
-    expression.  When the gate skips the exchange that barrier is
-    gone too — deterministic expressions may be re-evaluated by
-    multiple consumers (perf-only; `mode=always` is the recovery if
-    re-evaluation is ever measured to matter).  NOTE: it does NOT
+    test tables.  The count is explicit (REPARTITION_BY_NUM), so AQE
+    never coalesces the exchange back to one task.  The exchange is
+    also a per-branch materialization barrier: a computed array column
+    crosses it as plain data, so explode/size consumers above it
+    cannot inline (and re-evaluate) the array expression.  It does NOT
     deduplicate work across self-join branches — measured under AQE,
-    no ReusedExchange/stage-cache hit ever materializes for these
-    DAGs, each branch recomputes its (column-pruned) subtree; see
+    no ReusedExchange/stage-cache hit materializes for these DAGs, each
+    branch recomputes its (column-pruned) subtree; see
     lsh_candidate_pairs for why that trade is still right.
 
-    GATED on actual upstream parallelism (round-6): when the input is
-    ALREADY planned with at least the target partition count — the
-    normal state on a real cluster, where a 100 TB scan has ~10^5
-    splits — the exchange is skipped entirely and `df` is returned
-    unchanged, so the sketch family never re-pays a full raw-corpus
-    shuffle that buys nothing.  The check runs the planner (not a job)
-    once per call, at query-build time.  Escape hatch: session conf
-    `spark.pulsar_sync.spread.mode` = `auto` (default, gate as above) |
-    `always` (unconditional exchange, the pre-round-6 behavior) |
-    `never` (trust scan parallelism everywhere).
+    The exchange is added on every call, and building it runs no job.
+    On a many-split cluster scan it costs one shuffle of the raw rows,
+    below any explode amplification.
     """
-    mode = _spread_mode(df)
-    if mode == "never":
-        return df
     if width is not None:
-        want = width
+        n = width
     elif full:
-        want = df.sparkSession.sparkContext.defaultParallelism
+        n = df.sparkSession.sparkContext.defaultParallelism
     else:
-        want = _spread_count(df)
-    if mode != "always":
-        have = _existing_partitions(df)
-        if have is not None and have >= want:
-            return df
-    return df.repartition(want)
-
-
-def spread_by(df: DataFrame, *cols: str) -> DataFrame:
-    """Hash repartition on `cols` with an EXPLICIT partition count.
-
-    `repartition(col)` without a count is a REPARTITION_BY_COL shuffle,
-    which AQE freely coalesces by size — on small inputs it collapses
-    to ONE partition and serializes every downstream stage (measured:
-    the whole self-join pipeline ran single-task).  An explicit count
-    (REPARTITION_BY_NUM) is exempt from coalescing, so the barrier
-    keeps both its anti-inlining role and its parallelism.  The count
-    is size-scaled like `spread` (see `_spread_count`).
-
-    Gated like `spread`: every call site uses this for PARALLELISM
-    (plus the barrier), never for key co-location — the downstream
-    groupBy keys are (band, bucket)-shaped, not `cols` — so when the
-    input already has >= the target partition count (any real cluster
-    scan) the exchange is skipped.  Same `spark.pulsar_sync.spread.mode`
-    escape hatch."""
-    from pyspark.sql import functions as F
-
-    mode = _spread_mode(df)
-    if mode == "never":
-        return df
-    want = _spread_count(df)
-    if mode != "always":
-        have = _existing_partitions(df)
-        if have is not None and have >= want:
-            return df
-    return df.repartition(want, *[F.col(c) for c in cols])
+        n = _spread_count(df)
+    return df.repartition(n)

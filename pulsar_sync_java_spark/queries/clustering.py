@@ -414,9 +414,8 @@ def kmeans_assignments(
         )
     # Every Lloyd pass is a CPU-bound per-row projection (K decimal-
     # exact distance folds per vector); a single-split scan would run
-    # them all on one task (spread is gated away when the scan already
-    # has enough splits — the 100 TB case).  Measured at sf0.1: the
-    # K=8 argmin pass drops 1.18s -> 0.45s under the spread exchange.
+    # them all on one task.  Measured at sf0.1: the K=8 argmin pass
+    # drops 1.18s -> 0.45s under the spread exchange.
     e = spread(e)
     if use_expr:
         return _kmeans_assignments_expr(e, sample_pct, k, init)

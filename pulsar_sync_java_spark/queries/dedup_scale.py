@@ -45,7 +45,7 @@ from pulsar_sync_java_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
-from pulsar_sync_java_spark.operators.util import cached
+from pulsar_sync_java_spark.operators.util import _spread_count, cached
 from pulsar_sync_java_spark.operators.vectorized import (
     portable_family_sql_values,
 )
@@ -1043,9 +1043,14 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     real decoder this concern disappears entirely (both sides would
     hash pixels, not text)."""
     d = load_table(spark, sf_dir, "documents")
-    ph = phash64(attach_payload(d))
+    ph = phash64(attach_payload(d)).select(
+        "doc_id", F.col("phash").alias("simhash")
+    )
+    # hash the kernel's output over the pairing's tasks; the count is
+    # explicit (REPARTITION_BY_NUM) so that AQE does not coalesce the
+    # exchange
     pairs = simhash_near_pairs(
-        ph.select("doc_id", F.col("phash").alias("simhash")),
+        ph.repartition(_spread_count(ph), "doc_id"),
         max_hamming=_PHASH_MAX_HAMMING,
     )
     return pairs.select(

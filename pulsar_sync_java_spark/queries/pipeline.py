@@ -79,8 +79,8 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    # spread (gated on real scan parallelism): the three decimal folds
-    # per row are CPU-bound and a single-split scan runs them one-task
+    # spread: the three decimal folds per row are CPU-bound and a
+    # single-split scan runs them one-task
     joined = spread(e).crossJoin(F.broadcast(qv))
     prod = F.zip_with("embedding", "qv", lambda x, y: x.cast("double") * y.cast("double"))
     sq = lambda c: F.transform(c, lambda x: x.cast("double") * x.cast("double"))  # noqa: E731

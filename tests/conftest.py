@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -26,6 +28,22 @@ def duck():
         )
     yield con
     con.close()
+
+
+def jobs_of(spark, fn) -> int:
+    """Number of Spark jobs `fn` runs, read from the status tracker
+    under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def normalize_pandas(cols: list[str], pdf) -> list[tuple]:

@@ -9,7 +9,6 @@ from __future__ import annotations
 import os
 import threading
 import time
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pulsar_sync_java_spark import engine as engine_module
 from pulsar_sync_java_spark.engine import SyncEngine, SyncEngineConfig
+from tests.conftest import jobs_of
 from tests.test_streaming import build_messages
 
 
@@ -190,22 +190,6 @@ def test_run_once_fails_on_replication_overrun(spark, tmp_path):
     assert q.stopped
 
 
-def _jobs_of(spark, fn) -> int:
-    """Number of Spark jobs `fn` runs, read from the status tracker
-    under a job group of its own."""
-    sc = spark.sparkContext
-    group = f"jobs-of-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.slow
 def test_idle_ticks_run_few_jobs(spark, clusters):
     """Reads with declared schemas run no inference job, an idle catalog
@@ -215,8 +199,8 @@ def test_idle_ticks_run_few_jobs(spark, clusters):
     src, dst = clusters
     engine = SyncEngine(spark, src, dst, SyncEngineConfig(advance_cursors=True))
     engine.run_once()  # converged baseline
-    assert _jobs_of(spark, engine.sync_catalog_once) <= 4
-    assert _jobs_of(spark, engine.sync_cursors_once) <= 5
+    assert jobs_of(spark, engine.sync_catalog_once) <= 4
+    assert jobs_of(spark, engine.sync_cursors_once) <= 5
 
 
 def test_catalog_tick_with_creates_runs_few_jobs(spark, tmp_path):
@@ -227,7 +211,7 @@ def test_catalog_tick_with_creates_runs_few_jobs(spark, tmp_path):
     src, dst = _tiny_pair(spark, str(tmp_path))
     engine = SyncEngine(spark, src, dst)
     created = {}
-    jobs = _jobs_of(spark, lambda: created.update(engine.sync_catalog_once()))
+    jobs = jobs_of(spark, lambda: created.update(engine.sync_catalog_once()))
     assert created == {"tenants": 1, "namespaces": 2, "topics": 1}
     assert jobs <= 4 + 3
     assert engine.sync_catalog_once() == {"tenants": 0, "namespaces": 0, "topics": 0}

@@ -13,7 +13,8 @@ from contextlib import redirect_stdout
 import pytest
 
 from pulsar_sync_java_spark.queries import all_queries
-from tests.conftest import SF_DIR
+from pulsar_sync_java_spark.sources.tables import TABLES, load_table
+from tests.conftest import SF_DIR, jobs_of
 
 
 def plan_of(df) -> str:
@@ -447,7 +448,7 @@ def test_kmeans_final_plan_is_joinless_map(spark, queries):
             q,
             plan,
         )
-        # inside the cache build: the one gated spread exchange, shown
+        # inside the cache build: the one spread exchange, shown
         # at most twice (AQE Final + Initial plan variants)
         assert len(re.findall(r"\(\d+\) Exchange\b", plan)) <= 2, (q, plan)
 
@@ -540,160 +541,59 @@ def test_fk_integrity_ships_dimension_keys_only(spark, queries):
     assert part and all("p_name" not in l for l in part), part
 
 
-class TestSpreadGate:
-    """Round-6 `spread()` gate (VERDICT r5 #1): the round-robin
-    exchange must appear for a single-split local parquet scan (where
-    it is the only source of parallelism) and must DISAPPEAR when the
-    input is already planned with >= the target partition count — the
-    normal state on a cluster whose scan has thousands of splits.
-    Skipping it there removes the one full-raw-corpus shuffle the
-    sketch family would otherwise re-pay per self-join branch."""
+SPREAD_INPUTS = {
+    "single_split_scan": lambda df: df,
+    "repartitioned": lambda df: df.repartition(16),
+    # over 8 partitions the groupBy plans an ENSURE_REQUIREMENTS shuffle
+    # that AQE may coalesce; over the 1-split scan it would plan none
+    "coalescible_shuffle": lambda df: df.repartition(8).groupBy("doc_id").count(),
+    "unmaterialized_cache": lambda df: df.repartition(4).cache(),
+}
 
-    def test_exchange_appears_for_single_split_scan(self, spark):
-        from pulsar_sync_java_spark.operators.util import spread
 
-        df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        out = spread(df)
-        assert out is not df
-        # explain BEFORE touching .rdd: under AQE the RDD conversion
-        # finalizes the adaptive plan and hides the Exchange node
-        assert "RoundRobinPartitioning" in plan_of(out)
-        assert df.rdd.getNumPartitions() == 1  # premise: one split
-        assert out.rdd.getNumPartitions() > 1
+@pytest.mark.parametrize("shape", list(SPREAD_INPUTS))
+def test_spread_adds_one_exchange_and_runs_no_job(spark, shape):
+    """`spread` adds exactly one explicit-count round-robin exchange
+    over any input — whatever its partitioning, and over a cache no
+    action has materialized yet — and building it submits no job."""
+    from pulsar_sync_java_spark.operators.util import spread
 
-    def test_exchange_disappears_for_prepartitioned_input(self, spark):
-        from pulsar_sync_java_spark.operators.util import (
-            _spread_count,
-            spread,
-            spread_by,
-        )
+    df = SPREAD_INPUTS[shape](spark.read.parquet(f"{SF_DIR}/documents.parquet"))
+    got = {}
+    try:
+        assert jobs_of(spark, lambda: got.update(out=spread(df))) == 0
+        before, after = plan_of(df), plan_of(got["out"])
+    finally:
+        df.unpersist()
+    root = got["out"]._jdf.queryExecution().analyzed()
+    assert root.nodeName() == "Repartition" and root.shuffle()
+    assert root.child().fastEquals(df._jdf.queryExecution().analyzed())
+    assert f"RoundRobinPartitioning({root.numPartitions()}), REPARTITION_BY_NUM" in after
+    # Catalyst collapses a repartition directly below spread's into it
+    added = 0 if shape == "repartitioned" else 1
+    exchanges = lambda plan: len(re.findall(r"\(\d+\) Exchange\b", plan))  # noqa: E731
+    assert exchanges(after) == exchanges(before) + added, after
 
-        df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        wide = df.repartition(
-            max(_spread_count(df), spark.sparkContext.defaultParallelism)
-        )
-        assert spread(wide) is wide
-        assert spread(wide, full=True) is wide
-        assert spread_by(wide, "doc_id") is wide
 
-    def test_mode_conf_escape_hatch(self, spark):
-        from pulsar_sync_java_spark.operators.util import (
-            _SPREAD_MODE_CONF,
-            spread,
-        )
-
-        df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        wide = df.repartition(64)
-        try:
-            spark.conf.set(_SPREAD_MODE_CONF, "always")
-            assert spread(wide) is not wide  # forced exchange
-            spark.conf.set(_SPREAD_MODE_CONF, "never")
-            assert spread(df) is df  # trusted scan parallelism
-        finally:
-            spark.conf.unset(_SPREAD_MODE_CONF)
-
-    def test_probe_unreliable_for_coalescible_shuffle(self, spark):
-        """Round-7 (ADVICE r6): a non-REPARTITION_BY_NUM exchange
-        (here ENSURE_REQUIREMENTS under a groupBy) reports its STATIC
-        shuffle-partition count in the plan, but AQE can coalesce it
-        to ~1 partition at runtime — so the probe must refuse
-        (return None) and the caller must KEEP its exchange, instead
-        of trusting have=200 and reviving the single-task pathology."""
-        from pulsar_sync_java_spark.operators.util import (
-            _existing_partitions,
-            spread,
-        )
-
-        df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        # widen first: over a 1-split scan Catalyst elides the agg
-        # exchange entirely (single partition satisfies any
-        # distribution); over 8 partitions EnsureRequirements inserts
-        # the coalescible hashpartitioning shuffle this test targets
-        grouped = df.repartition(8).groupBy("doc_id").count()
-        assert _existing_partitions(grouped) is None
-        assert spread(grouped) is not grouped  # exchange kept
-
-    def test_probe_memoized_per_logical_plan(self, spark):
-        """Round-7 (VERDICT r6 #3): the planner probe runs at most
-        once per distinct logical plan — the round-6 version re-planned
-        a clone on EVERY spread()/spread_by() call, a uniform build-time
-        creep across the sketch family."""
-        from pulsar_sync_java_spark.operators import util
-
-        calls = []
-        orig = util._probe_partitions_unlocked
-        util._probe_partitions_unlocked = (
-            lambda d: (calls.append(1), orig(d))[1]
-        )
-        try:
-            util._PROBE_CACHE.clear()
-            df = spark.read.parquet(
-                f"{SF_DIR}/documents.parquet"
-            ).repartition(16)
-            assert util._existing_partitions(df) == 16
-            assert util._existing_partitions(df) == 16
-            assert len(calls) == 1, calls
-            # a REBUILT semantically-identical plan also hits the cache
-            df2 = spark.read.parquet(
-                f"{SF_DIR}/documents.parquet"
-            ).repartition(16)
-            assert util._existing_partitions(df2) == 16
-            assert len(calls) == 1, calls
-        finally:
-            util._probe_partitions_unlocked = orig
-            util._PROBE_CACHE.clear()
-
-    def test_sketch_results_invariant_across_spread_modes(self, spark, queries):
-        """The gate must be a pure PERFORMANCE decision: every
-        spread-fed sketch query returns byte-identical rows whether
-        the exchange always fires, never fires, or the gate decides
-        (auto) — i.e. on a 1-split laptop scan and a 10^5-split
-        cluster scan alike.  This is the cluster-shape equivalence
-        claim behind skipping the exchange at 100 TB."""
-        from pulsar_sync_java_spark.operators.util import _SPREAD_MODE_CONF
-
-        fam = [
-            "q_minhash_lsh",
-            "q_ngram_jaccard",
-            "q_simhash",
-            "q_containment_dedup",
-            "q_embedding_neardup",
-        ]
-        results: dict[str, dict[str, list]] = {}
-        try:
-            for mode in ("auto", "always", "never"):
-                spark.conf.set(_SPREAD_MODE_CONF, mode)
-                for name in fam:
-                    rows = sorted(
-                        map(tuple, queries[name](spark, SF_DIR).collect())
-                    )
-                    results.setdefault(name, {})[mode] = rows
-        finally:
-            spark.conf.unset(_SPREAD_MODE_CONF)
-        for name, by_mode in results.items():
-            assert by_mode["auto"] == by_mode["always"] == by_mode["never"], name
-            # non-vacuous — except q_embedding_neardup, whose exact
-            # answer at this SF is empty BY DESIGN (near-orthogonal
-            # corpus pins the no-false-positive side; see its docstring)
-            if name != "q_embedding_neardup":
-                assert len(by_mode["auto"]) > 0, name
-
-    def test_probe_submits_no_jobs_on_exchange_input(self, spark):
-        """The parallelism probe must be plan-metadata only: under AQE
-        a naive Dataset.rdd would EXECUTE the upstream shuffle of an
-        exchange-containing input at query-build time."""
-        from pulsar_sync_java_spark.operators.util import _existing_partitions
-
-        df = spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(16)
-        sc = spark.sparkContext
-        sc.setJobGroup("spread-probe-guard", "probe must not run jobs")
-        try:
-            n = _existing_partitions(df)
-        finally:
-            sc.setJobGroup(None, None)
-        assert n == 16
-        jobs = sc.statusTracker().getJobIdsForGroup("spread-probe-guard")
-        assert list(jobs) == [], jobs
+def test_sketch_queries_build_without_jobs(spark, queries):
+    """With the table handles loaded, building the sketch queries
+    whose operators spread cached signatures or fingerprints runs no
+    Spark job: the caches stay unmaterialized until the query runs."""
+    for t in TABLES:
+        load_table(spark, SF_DIR, t)
+    names = (
+        "q_minhash_lsh",
+        "q_sketch_calibration",
+        "q_incremental_dedup",
+        "q_simhash_calibration",
+    )
+    jobs = {}
+    for q in names:
+        # the MinHash queries share one plan-matched signature cache:
+        # each starts from caches no action has materialized yet
+        spark.catalog.clearCache()
+        jobs[q] = jobs_of(spark, lambda: queries[q](spark, SF_DIR))
+    assert jobs == dict.fromkeys(names, 0), jobs
 
 
 def test_span_dedup_no_occurrence_lists_and_marked_only_doc_shuffle(
